@@ -1,11 +1,11 @@
-"""Seeded input generator for the benchmark.
+"""Input generator for the benchmark.
 
-Writes the star-schema tables the query registry reads (one parquet
-file per table, the column sets of ``levi_spark.sources.registry.
-TABLE_DDL``) from a numpy generator seeded by the caller, so the same
-seed always gives byte-identical inputs. Sizes follow TPC-H ratios:
-``sf`` 1.0 would be 1.5M orders; the benchmark runs at a few
-thousandths of that.
+Writes the tables the benchmark reads (one parquet file per table, the
+column sets of ``levi_spark.sources.registry.TABLE_DDL``) from a numpy
+generator with a fixed seed, so every run reads byte-identical inputs
+and the run's own seed only picks op arguments and query order. Row
+counts follow the ratios of the repository's synthetic TPC-H-ish data:
+``sf`` 0.01 gives 15,000 orders and about 60,000 lineitem rows.
 """
 
 from __future__ import annotations
@@ -17,10 +17,8 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-REGIONS = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
+DATA_SEED = 42
 SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
-PART_TYPES = ["ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL", "STANDARD"]
-PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 LANGS = ["en", "de", "es", "fr", "zh"]
 VOCAB = (
@@ -28,30 +26,24 @@ VOCAB = (
     "spark line sort window data column join small big customer query "
     "order filter group vector stream"
 ).split()
-ADJECTIVES = ["small", "large", "red", "blue", "steel", "brass", "green"]
-NOUNS = ["ring", "bolt", "gear", "valve", "plate", "screw", "spring"]
 
 ORDER_START = np.datetime64("1995-01-01", "D")
 ORDER_DAYS = 2404  # 1995-01-01 .. 2001-08-01
 EVENT_START = np.datetime64("2024-01-01T00:00:00", "us")
 EVENT_SPAN_US = 30 * 24 * 3600 * 1_000_000
+N_PART, N_SUPP = 2000, 100
 
 
 def money(rng: np.random.Generator, lo: float, hi: float, n: int) -> np.ndarray:
     return np.round(rng.uniform(lo, hi, n), 2)
 
 
-def lineitem_for_orders(
-    rng: np.random.Generator,
-    orderkeys: np.ndarray,
-    orderdates: np.ndarray,
-    n_part: int,
-    n_supp: int,
-) -> pa.Table:
+def lineitem_for_orders(rng: np.random.Generator, orderkeys: np.ndarray) -> pa.Table:
     """1-7 lines per order with unique (l_orderkey, l_linenumber)."""
+    odate = ORDER_START + rng.integers(0, ORDER_DAYS, len(orderkeys)).astype("timedelta64[D]")
     per = rng.integers(1, 8, len(orderkeys))
     okey = np.repeat(orderkeys, per)
-    odate = np.repeat(orderdates, per)
+    odate = np.repeat(odate, per)
     starts = np.repeat(np.cumsum(per) - per, per)
     linenumber = (np.arange(len(okey)) - starts + 1).astype(np.int32)
     n = len(okey)
@@ -59,8 +51,8 @@ def lineitem_for_orders(
     ship = odate + rng.integers(1, 122, n).astype("timedelta64[D]")
     return pa.table({
         "l_orderkey": pa.array(okey, pa.int64()),
-        "l_partkey": pa.array(rng.integers(0, n_part, n), pa.int64()),
-        "l_suppkey": pa.array(rng.integers(0, n_supp, n), pa.int64()),
+        "l_partkey": pa.array(rng.integers(0, N_PART, n), pa.int64()),
+        "l_suppkey": pa.array(rng.integers(0, N_SUPP, n), pa.int64()),
         "l_linenumber": pa.array(linenumber, pa.int32()),
         "l_quantity": pa.array(qty),
         "l_extendedprice": pa.array(np.round(qty * rng.uniform(900, 2100, n), 2)),
@@ -72,27 +64,11 @@ def lineitem_for_orders(
     })
 
 
-def orders_table(rng: np.random.Generator, keys: np.ndarray, n_cust: int) -> pa.Table:
-    n = len(keys)
-    dates = ORDER_START + rng.integers(0, ORDER_DAYS, n).astype("timedelta64[D]")
+def _customer(rng: np.random.Generator, n: int) -> pa.Table:
     return pa.table({
-        "o_orderkey": pa.array(keys, pa.int64()),
-        "o_custkey": pa.array(rng.integers(0, n_cust, n), pa.int64()),
-        "o_orderstatus": pa.array(rng.choice(["F", "O", "P"], n)),
-        "o_totalprice": pa.array(money(rng, 900, 450_000, n)),
-        "o_orderdate": pa.array(dates.astype("datetime64[us]"), pa.timestamp("us")),
-        "o_orderpriority": pa.array(rng.choice(PRIORITIES, n)),
-    })
-
-
-def customer_table(rng: np.random.Generator, keys: np.ndarray) -> pa.Table:
-    n = len(keys)
-    return pa.table({
-        "c_custkey": pa.array(keys, pa.int64()),
-        "c_name": pa.array([f"Customer#{k:09d}" for k in keys]),
-        "c_nationkey": pa.array(rng.integers(0, 25, n), pa.int32()),
-        "c_acctbal": pa.array(money(rng, -999.99, 9999.99, n)),
+        "c_custkey": pa.array(np.arange(n), pa.int64()),
         "c_mktsegment": pa.array(rng.choice(SEGMENTS, n)),
+        "c_acctbal": pa.array(money(rng, -999.99, 9999.99, n)),
     })
 
 
@@ -147,70 +123,32 @@ def _events(rng: np.random.Generator, n: int) -> pa.Table:
     })
 
 
-def star_schema(seed: int, sf: float) -> dict[str, pa.Table]:
-    """Every table the registry queries read, at scale ``sf``."""
-    rng = np.random.default_rng(seed)
+def tables(sf: float, names: tuple[str, ...]) -> dict[str, pa.Table]:
+    """The named tables at scale ``sf``, each from its own stream of the
+    fixed seed, so a table does not depend on which others are made."""
     n_orders = max(200, int(1_500_000 * sf))
-    n_cust = max(50, n_orders // 10)
-    n_supp = max(10, n_orders // 150)
-    n_part = max(50, n_orders // 7)
-    orders = orders_table(rng, np.arange(n_orders), n_cust)
+    make = {
+        "lineitem": lambda rng: lineitem_for_orders(rng, np.arange(n_orders)),
+        "customer": lambda rng: _customer(rng, max(50, n_orders // 10)),
+        "events": lambda rng: _events(rng, max(500, n_orders * 2 // 3)),
+        "documents": lambda rng: _documents(rng, max(100, n_orders // 30)),
+        "embeddings": lambda rng: _embeddings(rng, max(100, n_orders // 30)),
+    }
     return {
-        "region": pa.table({
-            "r_regionkey": pa.array(range(5), pa.int32()),
-            "r_name": pa.array(REGIONS),
-        }),
-        "nation": pa.table({
-            "n_nationkey": pa.array(range(25), pa.int32()),
-            "n_name": pa.array([f"NATION_{i}" for i in range(25)]),
-            "n_regionkey": pa.array([i % 5 for i in range(25)], pa.int32()),
-        }),
-        "customer": customer_table(rng, np.arange(n_cust)),
-        "supplier": pa.table({
-            "s_suppkey": pa.array(np.arange(n_supp), pa.int64()),
-            "s_name": pa.array([f"Supplier#{i:09d}" for i in range(n_supp)]),
-            "s_nationkey": pa.array(rng.integers(0, 25, n_supp), pa.int32()),
-            "s_acctbal": pa.array(money(rng, -999.99, 9999.99, n_supp)),
-        }),
-        "part": pa.table({
-            "p_partkey": pa.array(np.arange(n_part), pa.int64()),
-            "p_name": pa.array([
-                f"{ADJECTIVES[a]} {NOUNS[b]}"
-                for a, b in rng.integers(0, 7, (n_part, 2))
-            ]),
-            "p_brand": pa.array([f"Brand#{k}" for k in rng.integers(1, 6, n_part)]),
-            "p_type": pa.array(rng.choice(PART_TYPES, n_part)),
-            "p_size": pa.array(rng.integers(1, 51, n_part), pa.int32()),
-            "p_retailprice": pa.array(money(rng, 900, 2100, n_part)),
-        }),
-        "orders": orders,
-        "lineitem": lineitem_for_orders(
-            rng,
-            orders.column("o_orderkey").to_numpy(),
-            orders.column("o_orderdate").to_numpy().astype("datetime64[D]"),
-            n_part,
-            n_supp,
-        ),
-        "events": _events(rng, max(500, n_orders // 2)),
-        "documents": _documents(rng, max(100, n_orders // 30)),
-        "embeddings": _embeddings(rng, max(100, n_orders // 30)),
+        name: make[name](np.random.default_rng([DATA_SEED, k]))
+        for k, name in enumerate(sorted(make))
+        if name in names
     }
 
 
-def write_tables(tables: dict[str, pa.Table], out_dir: str) -> None:
+def write_tables(tabs: dict[str, pa.Table], out_dir: str) -> str:
+    """Write one parquet file per table; returns a hash of the files'
+    bytes (the input fingerprint)."""
     os.makedirs(out_dir, exist_ok=True)
-    for name, t in tables.items():
-        pq.write_table(t, os.path.join(out_dir, f"{name}.parquet"))
-
-
-def fingerprint(tables: dict[str, pa.Table]) -> str:
-    """Content hash of the generated inputs (row data, not file bytes)."""
     h = hashlib.sha256()
-    for name in sorted(tables):
-        t = tables[name]
-        h.update(name.encode())
-        h.update(str(t.schema).encode())
-        for col in t.columns:
-            h.update(str(col.to_pylist()).encode())
+    for name in sorted(tabs):
+        path = os.path.join(out_dir, f"{name}.parquet")
+        pq.write_table(tabs[name], path)
+        with open(path, "rb") as f:
+            h.update(name.encode() + f.read())
     return h.hexdigest()[:16]
-

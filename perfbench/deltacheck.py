@@ -122,16 +122,18 @@ def expected_file_sizes(table: str) -> dict:
     }
 
 
-def expected_updated_partitions(table: str, start_ms: int, end_ms: int) -> dict:
+def expected_updated_partitions(table: str, start_ms: int, end_ms: int | None) -> dict:
     """Partition tuple -> (first commit version, first modification
-    time) over files modified in ``[start_ms, end_ms)``; the engine
-    lists partitions in that order (ties in any order)."""
+    time) over files modified in ``[start_ms, end_ms)`` (no upper end
+    when ``end_ms`` is None); the engine lists partitions in that order
+    (ties in any order)."""
     first: dict[tuple, tuple] = {}
     for add in live_files(table).values():
-        if start_ms <= add["modificationTime"] < end_ms:
+        t = add["modificationTime"]
+        if start_ms <= t and (end_ms is None or t < end_ms):
             key = tuple(sorted(add["partitionValues"].items()))
-            v, t = first.get(key, (add["version"], add["modificationTime"]))
-            first[key] = (min(v, add["version"]), min(t, add["modificationTime"]))
+            v0, t0 = first.get(key, (add["version"], t))
+            first[key] = (min(v0, add["version"]), min(t0, t))
     return first
 
 

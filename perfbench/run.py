@@ -3,9 +3,11 @@
     python3 perfbench/run.py --workload NAME --seed N --seconds S --trace 0|1
 
 Run from the repository root. Starts one Spark session on
-``local[<usable cores>]``, builds the workload's inputs from the seed,
-runs its ops in a closed loop until ``S`` seconds of op time have been
-measured, checks every output, and prints one JSON line as the last
+``local[<usable cores>]``, builds the workload's inputs (the same in
+every run; the seed picks op arguments and order), runs one warm-up
+op, then runs ops in a closed loop until ``S`` seconds of op time have
+been measured (at least two ops, three when traced), checks every
+output outside the timed region, and prints one JSON line as the last
 line of stdout: ``{"correct", "attempted", "failed", "metrics"}``.
 With ``--trace 0`` the metrics are the end-to-end ones; with
 ``--trace 1`` wrappers are installed around the engine's layer entry
@@ -64,19 +66,27 @@ def _shutdown(spark) -> None:
 
 
 def end_to_end(ops: list[dict], setup_s: float) -> dict:
+    """``round_ms`` is the time of one op built from its steps: the sum
+    over the steps of each step's median over the run's ops that ran."""
+    ran = [r["steps"] for r in ops if r["steps"]]
     return {
         "setup_s": (setup_s, "s"),
-        "op_p50_ms": (_median(r["s"] * 1000.0 for r in ops), "ms"),
-        "ops_per_s": (len(ops) / sum(r["s"] for r in ops), "1/s"),
+        "round_ms": (sum(_median(st[k] for st in ran) for k in ran[0]) * 1000.0
+                     if ran else 0.0, "ms"),
     }
 
 
-def per_layer(tracer, ops: list[dict], wl, queries: tuple, peak_kb: int) -> dict:
+def per_layer(tracer, ledger, clock: float, ops: list[dict], wl, queries: tuple,
+              peak_kb: int) -> dict:
+    """``clock`` turns a span's perf_counter time into the epoch time
+    the ledger's jobs carry."""
     import tracing as tr
 
     spans = tracer.spans
     traced = [r for r in ops if r["traced"]]
-    plain = [r for r in ops if not r["traced"]]
+    # the first op still runs slow after the warm-up op: the overhead
+    # compares the traced ops with the plain ops after it
+    plain = [r for r in ops[1:] if not r["traced"]]
     in_ops = [
         s for s in spans
         if any(r["t0"] <= s["t0"] <= r["t1"] for r in traced)
@@ -84,10 +94,16 @@ def per_layer(tracer, ops: list[dict], wl, queries: tuple, peak_kb: int) -> dict
 
     def med_ms(name: str, exclude_under: str = "") -> float:
         """Median span duration in the traced ops; set-up spans only
-        for a layer the ops never call (the metadata table's writes)."""
+        for a layer the ops never call (session start)."""
         found = tr.outermost(in_ops, name, exclude_under) or tr.outermost(
             spans, name, exclude_under)
         return _median((s["t1"] - s["t0"]) * 1000.0 for s in found)
+
+    def med_jobs(name: str, exclude_under: str = "") -> float:
+        """Median number of Spark jobs submitted during one call."""
+        return _median(
+            ledger.window(s["t0"] + clock, s["t1"] + clock)["jobs"]
+            for s in tr.outermost(in_ops, name, exclude_under))
 
     def attr(name: str, key: str) -> list:
         return [s["attrs"][key] for s in spans if s["name"] == name and key in s["attrs"]]
@@ -128,9 +144,16 @@ def per_layer(tracer, ops: list[dict], wl, queries: tuple, peak_kb: int) -> dict
         "operators.merge.files_rewritten_ratio": (
             _mean(w["merge_rewritten_ratio"] for w in writes), "ratio"),
     })
-    times = getattr(wl, "query_times", {})
+    scd = "operators.scd.type_2_scd_upsert"
+    for name in ("operators.metadata.skipped_stats", "operators.metadata.delta_file_sizes",
+                 "operators.metadata.updated_partitions", "operators.metadata.pruned_scan",
+                 "delta.writer.write_delta", "operators.dedup.drop_duplicates", scd,
+                 "operators.merge.execute"):
+        m[f"{name}_jobs"] = (med_jobs(name, scd if name == "operators.merge.execute" else ""),
+                             "count")
     for q in queries:
-        m[f"queries.{q}_s"] = (_median(times.get(q, [])), "s")
+        m[f"queries.{q}_s"] = (med_ms(q) / 1000.0, "s")
+        m[f"queries.{q}_jobs"] = (med_jobs(q), "count")
     m.update({
         "spark.jobs": (per_op(r["jobs"] for r in traced), "count/op"),
         "spark.tasks": (per_op(r["tasks"] for r in traced), "count/op"),
@@ -183,18 +206,23 @@ def run(args, work: str, nproc: int) -> dict:
             wl.build()
             build_s = time.perf_counter() - t1
             wl.expected_answers()
+            wl.before(-1)
             t2 = time.perf_counter()
             warm = wl.warmup()
             warm_s = time.perf_counter() - t2
-            attempted += len(warm)
-            failed += warm.count(False)
+            attempted += 1
+            failed += not wl.check(-1, warm)
             setup_s = session_s + build_s + warm_s
 
             ledger = tr.SparkLedger(spark) if args.trace else None
+            clock = time.time() - time.perf_counter()
+            # The traced run traces every other op, starting with the
+            # second, and needs a plain op after a traced one.
+            min_ops = 3 if args.trace else 2
             busy, i = 0.0, 0
-            while busy < args.seconds or len(ops) < 2:
+            while busy < args.seconds or len(ops) < min_ops:
                 wl.before(i)
-                traced = bool(args.trace) and i % 2 == 0
+                traced = bool(args.trace) and i % 2 == 1
                 tracer.enabled = traced
                 calls0 = tracer.py4j_calls
                 e0, s0 = time.time(), time.perf_counter()
@@ -209,6 +237,7 @@ def run(args, work: str, nproc: int) -> dict:
                 if err:
                     print(err, file=sys.stderr)
                 rec = {"i": i, "s": dt, "ok": ok, "traced": traced,
+                       "steps": result["steps"] if err is None else {},
                        "t0": s0, "t1": s0 + dt, "py4j": tracer.py4j_calls - calls0}
                 if traced:
                     ledger.settle()
@@ -218,6 +247,9 @@ def run(args, work: str, nproc: int) -> dict:
                 failed += not ok
                 busy += dt
                 i += 1
+            checks = wl.verify()
+            attempted += len(checks)
+            failed += checks.count(False)
         finally:
             _shutdown(spark)
     extra = wl.extra()
@@ -229,7 +261,8 @@ def run(args, work: str, nproc: int) -> dict:
                    "nproc": nproc}, f, indent=1, default=str)
     if args.trace:
         tracer.dump(stem + ".spans.jsonl")
-        metrics = per_layer(tracer, ops, wl, workloads.PIPELINE_QUERIES, rss.peak_kb)
+        metrics = per_layer(tracer, ledger, clock, ops, wl, workloads.PIPELINE_QUERIES,
+                            rss.peak_kb)
     else:
         metrics = end_to_end(ops, setup_s)
     return {
@@ -243,7 +276,7 @@ def run(args, work: str, nproc: int) -> dict:
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--workload", required=True,
-                    choices=["levi_metadata", "levi_maintenance", "pipeline_queries"])
+                    choices=["levi_tables", "pipeline_queries"])
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
@@ -260,6 +293,8 @@ def main(argv=None) -> int:
         "SPARK_GRAFT_CPUS": str(nproc),
         "TMPDIR": f"{work}/tmp",
         "SPARK_LOCAL_DIRS": f"{work}/tmp",
+        # spark-submit's launcher JVM: no perf-data file in the system temp dir
+        "SPARK_LAUNCHER_OPTS": f"-XX:-UsePerfData -Djava.io.tmpdir={work}/tmp",
     })
     tempfile.tempdir = None
     try:

@@ -160,7 +160,8 @@ def install(tracer: Tracer) -> None:
         attrs["json_commits"] = len(snap._commit_versions)
 
     def on_live(attrs, rows):
-        attrs["live_files"] = len(rows)
+        if rows is not None:
+            attrs["live_files"] = len(rows)
 
     def on_skipped(attrs, res):
         attrs["num_files"] = res["num_files"]
@@ -173,8 +174,11 @@ def install(tracer: Tracer) -> None:
     for cls, meth, name, hook in [
         (log.DeltaLog, "snapshot", "delta.log.snapshot", on_snapshot),
         (log.DeltaLog, "latest_version", "delta.log.latest_version", None),
-        (log.Snapshot, "live_adds_collected", "delta.log.replay", on_live),
-        (log.Snapshot, "add_actions", "delta.log.replay", None),
+        # Log replay: the driver-side reconcile of the snapshot's actions
+        # (parsing them on its first call), which every add-actions frame
+        # and live-file list is built from. A snapshot too large for it
+        # replays inside the caller's Spark job instead (not timed here).
+        (log.Snapshot, "_local_live", "delta.log.replay", on_live),
         (merge.MergeBuilder, "execute", "operators.merge.execute", on_rewrite),
     ]:
         setattr(cls, meth, tracer.wrap(getattr(cls, meth), name, hook))
@@ -209,19 +213,25 @@ class SparkLedger:
     def __init__(self, spark) -> None:
         self.store = spark.sparkContext._jsc.sc().statusStore()
         self.jobs: dict[int, dict] = {}
+        self.pending: set[int] = set()  # seen unfinished, looked up again
 
     def _read(self) -> bool:
         """Fold newly visible jobs in; False while any job is unfinished."""
         jobs = self.store.jobsList(None)
-        settled = True
+        # the list is newest first: stop below the oldest job that may
+        # still be missing (an unfinished one, or the newest one held)
+        stop = min([*self.pending, max(self.jobs, default=-1) + 1])
+        pending: set[int] = set()
         for i in range(jobs.size()):
             j = jobs.apply(i)
             jid = j.jobId()
+            if jid < stop:
+                break
             if jid in self.jobs:
-                break  # the list is newest first
+                continue
             end = j.completionTime()
             if not end.isDefined():
-                settled = False
+                pending.add(jid)
                 continue
             sids = j.stageIds()
             busy_ms = 0
@@ -233,7 +243,8 @@ class SparkLedger:
                 "tasks": j.numTasks() - j.numSkippedTasks(),
                 "busy_s": busy_ms / 1000.0,
             }
-        return settled
+        self.pending = pending
+        return not pending
 
     def settle(self, timeout_s: float = 2.0) -> None:
         """Wait for the listener bus to publish every finished job."""
