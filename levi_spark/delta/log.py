@@ -237,6 +237,29 @@ def _conform(dt: T.DataType, v):
         return [_conform(dt.elementType, x) for x in v]
     return v
 
+
+def local_frame(spark: SparkSession, rows, schema: T.StructType) -> DataFrame:
+    """Driver-side rows (tuples/Rows in ``schema`` field order; structs
+    as Rows, maps as dicts) as an Arrow-backed DataFrame.
+
+    Spark keeps such a frame a ``LocalRelation`` while it is under
+    ``spark.sql.execution.arrow.localRelationThreshold`` (and falls back
+    to an RDD above it), so the optimizer folds Project and Filter over
+    it at planning time and collecting the result starts no job. A
+    ``createDataFrame(list)`` frame is an RDD scan instead: every
+    collect, aggregate or broadcast over it costs a job."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 # Leaf types for which Delta collects min/max stats.
 _MINMAX_TYPES = (
     T.StringType,
@@ -1168,7 +1191,7 @@ class Snapshot:
                     T.StructField("version", T.LongType()),
                 ]
             )
-            return self.spark.createDataFrame(local or [], schema)
+            return local_frame(self.spark, local, schema)
         acts = self._actions_df()
         file_acts = acts.where(
             F.col("add.path").isNotNull() | F.col("remove.path").isNotNull()
@@ -1345,8 +1368,10 @@ class Snapshot:
             dirs = sorted(
                 {join_path(self.log.table_path, dv) for _p, dv in path_adds}
             )
-            names_df = self.spark.createDataFrame(
-                [(p,) for p, _dv in path_adds], ["__file_name"]
+            names_df = local_frame(
+                self.spark,
+                [(p,) for p, _dv in path_adds],
+                T.StructType([T.StructField("__file_name", T.StringType())]),
             )
             rows = self.spark.read.parquet(*dirs).select(
                 F.col("file_name").alias("__file_name"),
@@ -1421,7 +1446,7 @@ class Snapshot:
 
             parts.append(desc_df.mapInPandas(expand, out_schema))
         if not parts:
-            return self.spark.createDataFrame([], out_schema)
+            return local_frame(self.spark, [], out_schema)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -1573,7 +1598,7 @@ class Snapshot:
                 for r in self.live_adds_collected()
             ]
             df = df.join(
-                F.broadcast(self.spark.createDataFrame(rid_rows, rid_schema)),
+                F.broadcast(local_frame(self.spark, rid_rows, rid_schema)),
                 on="__file_name",
                 how="left",
             )
@@ -1612,8 +1637,8 @@ class Snapshot:
                 T.StructField("__pv", T.MapType(T.StringType(), T.StringType())),
             ]
         )
-        pv_df = self.spark.createDataFrame(
-            [(os.path.basename(p), pv) for p, pv in infos], pv_schema
+        pv_df = local_frame(
+            self.spark, [(os.path.basename(p), pv) for p, pv in infos], pv_schema
         )
         joined = df.join(F.broadcast(pv_df), on="__file_name", how="left")
         part_cols = [

@@ -33,7 +33,9 @@ from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from levi_spark.delta.log import local_frame
 from levi_spark.delta.table import LeviTable
 from levi_spark.delta.writer import write_delta
 
@@ -99,6 +101,10 @@ def kill_duplicates_targeted(table: LeviTable, duplication_columns: list[str]) -
        the *set of files* holding its rows (``_metadata.file_name`` +
        ``collect_set`` — output is metadata-sized, bounded by the file
        count, never the row count).
+       The same query credits each group's row count to one of its
+       files: every non-NULL member of a duplicate group is deleted,
+       so those counts sum to ``rows_deleted`` and the rewrite is
+       never counted separately.
     2. Only those "hit" files are re-read; the anti-join against the
        duplicate keys runs on that subset, and one commit atomically
        replaces exactly those files (``write_delta(replace_paths=…)``).
@@ -124,29 +130,36 @@ def kill_duplicates_targeted(table: LeviTable, duplication_columns: list[str]) -
     non_null = functools.reduce(
         operator.and_, [F.col(c).isNotNull() for c in dcols]
     )
-    hit_names = {
-        r["__fn"]
+    # hit file -> the __cnt of the duplicate groups listed first in it
+    # (each group is credited to exactly one of its files), so the
+    # values sum to rows_deleted
+    per_file = {
+        r["__fn"]: r["__rows"]
         for r in (
             df.where(non_null)
             .select(*dcols, F.col("_metadata.file_name").alias("__fn"))
             .groupBy(*dcols)
             .agg(F.count(F.lit(1)).alias("__cnt"), F.collect_set("__fn").alias("__fns"))
             .where(F.col("__cnt") > 1)
-            .select(F.explode("__fns").alias("__fn"))
-            .distinct()
+            .select(F.posexplode("__fns").alias("__pos", "__fn"), "__cnt")
+            .groupBy("__fn")
+            .agg(
+                F.sum(F.when(F.col("__pos") == 0, F.col("__cnt")).otherwise(0))
+                .alias("__rows")
+            )
             .collect()
         )
     }
     all_rels = [unquote(r["add"]["path"])
                 for r in snap.live_adds_collected()]
-    if not hit_names:
+    if not per_file:
         return {
             "files_rewritten": 0,
             "files_total": len(all_rels),
             "rows_deleted": 0,
             "version": -1,
         }
-    rels = [p for p in all_rels if os.path.basename(p) in hit_names]
+    rels = [p for p in all_rels if os.path.basename(p) in per_file]
     # survivors of the rewrite are not logically modified — preserve
     # their row ids on row-tracked tables (materialized columns ride
     # through the transform; the writer strips them from the schema)
@@ -159,8 +172,6 @@ def kill_duplicates_targeted(table: LeviTable, duplication_columns: list[str]) -
             "_row_commit_version", mat_cv
         )
     survivors = kill_duplicates_transform(sub, dcols)
-    n_before = sub.count()
-    n_after = survivors.count()
     version = write_delta(
         survivors,
         table.path,
@@ -173,32 +184,37 @@ def kill_duplicates_targeted(table: LeviTable, duplication_columns: list[str]) -
     return {
         "files_rewritten": len(rels),
         "files_total": len(all_rels),
-        "rows_deleted": n_before - n_after,
+        "rows_deleted": sum(per_file.values()),
         "version": version,
     }
 
 
 def _physical_order_df(table: LeviTable) -> DataFrame:
     """Table data plus ``__file_name``/``__file_seq``/``__row_idx``
-    columns reproducing single-process read order: add actions sorted by
-    (commit version, path), then parquet row index within each file."""
+    columns reproducing single-process read order: live files sorted by
+    (commit version, path), then parquet row index within each file.
+    The file order comes from the snapshot's cached live-file list, so
+    building the frame starts no Spark job."""
     snap = table.snapshot()
-    files = (
-        snap.add_actions()
-        .select("path", "commit_version")
-        .orderBy("commit_version", "path")
-        .collect()
+    files = sorted(
+        (r["version"], unquote(r["add"]["path"])) for r in snap.live_adds_collected()
     )
-    seq_rows = [(os.path.basename(r["path"]), i) for i, r in enumerate(files)]
-    spark = table.spark
-    seq_df = spark.createDataFrame(seq_rows, ["__file_name", "__file_seq"])
-    df = snap.to_df()
-    data_cols = df.columns
+    seq_df = local_frame(
+        table.spark,
+        [(os.path.basename(p), i) for i, (_v, p) in enumerate(files)],
+        T.StructType(
+            [
+                T.StructField("__file_name", T.StringType()),
+                T.StructField("__file_seq", T.LongType()),
+            ]
+        ),
+    )
     return (
-        df.withColumn("__file_name", F.col("_metadata.file_name"))
-        .withColumn("__row_idx", F.col("_metadata.row_index"))
+        snap.to_df(with_lineage=True)
+        .withColumnRenamed("_file_name", "__file_name")
+        .withColumnRenamed("_row_index", "__row_idx")
         .join(F.broadcast(seq_df), on="__file_name", how="left")
-        .select(*data_cols, "__file_name", "__file_seq", "__row_idx")
+        .select(*snap.metadata.data_columns, "__file_name", "__file_seq", "__row_idx")
     )
 
 
@@ -209,22 +225,31 @@ def _targeted_loser_rewrite(table: LeviTable, losers: DataFrame) -> dict:
     """Rewrite ONLY the files that contain a loser row, dropping exactly
     those rows. ``losers`` carries (``__file_name``, ``__row_idx``) of
     every row to delete — computed by the caller over the FULL table, so
-    global survivor choice is preserved. One metadata-scale collect
-    (distinct file names), one subset re-read, one atomic commit."""
+    global survivor choice is preserved.
+
+    The losers are materialized once (``localCheckpoint``): the
+    full-table window behind them runs a single time, and both the
+    per-file loser count (one metadata-scale collect: the hit files and
+    ``rows_deleted``) and the rewrite's anti-join read the materialized
+    rows. Then one subset re-read and one atomic commit."""
     snap = table.snapshot()
-    hit_names = {
-        r["__file_name"] for r in losers.select("__file_name").distinct().collect()
+    losers = losers.localCheckpoint(eager=True)
+    per_file = {
+        r["__file_name"]: r["n"]
+        for r in losers.groupBy("__file_name")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
     }
     all_rels = [unquote(r["add"]["path"])
                 for r in snap.live_adds_collected()]
-    if not hit_names:
+    if not per_file:
         return {
             "files_rewritten": 0,
             "files_total": len(all_rels),
             "rows_deleted": 0,
             "version": -1,
         }
-    rels = [p for p in all_rels if os.path.basename(p) in hit_names]
+    rels = [p for p in all_rels if os.path.basename(p) in per_file]
     from levi_spark.operators.layout import _rt_materialized_names
 
     mat_id, mat_cv = _rt_materialized_names(snap)
@@ -245,8 +270,6 @@ def _targeted_loser_rewrite(table: LeviTable, losers: DataFrame) -> dict:
         on=["_file_name", "_row_index"],
         how="left_anti",
     ).select(*keep_cols)
-    n_before = sub.count()
-    n_after = kept.count()
     version = write_delta(
         kept,
         table.path,
@@ -259,7 +282,7 @@ def _targeted_loser_rewrite(table: LeviTable, losers: DataFrame) -> dict:
     return {
         "files_rewritten": len(rels),
         "files_total": len(all_rels),
-        "rows_deleted": n_before - n_after,
+        "rows_deleted": sum(per_file.values()),
         "version": version,
     }
 

@@ -6,9 +6,15 @@ Spark-native re-expression of the reference's metadata analytics
 ``delta_file_sizes``, ``updated_partitions``).
 
 Scale stance: the add-actions frame is O(number of data files) — at
-100 TB that is at most a few million rows, so single-pass aggregations
-over it are cheap; nothing here ever touches data-plane rows. Every
-operator is one ``agg()`` job (no driver-side loops over files).
+100 TB that is at most a few million rows — and nothing here ever
+touches data-plane rows. Each operator is one per-file projection
+(Spark SQL still evaluates the pruning predicate, the bucket bounds and
+the partition casts) whose rows are collected and folded on the
+driver: counts, sums and first-seen order in Python, the way the
+reference folds its add-action frame with pandas. Over a driver-side
+log replay the add-actions frame is a ``LocalRelation``, so the
+projection folds at planning time and the collect starts no Spark job;
+over a log too large for the driver it is one job per call.
 """
 
 from __future__ import annotations
@@ -64,24 +70,19 @@ def skipped_stats(snapshot: Snapshot, filters: Sequence[Filter]) -> dict:
     Returns ``{"num_files", "num_files_skipped", "num_bytes_skipped"}``.
     Files with missing stats produce NULL comparisons → not matched →
     counted as skipped (mirrors the reference's pandas-NaN behavior,
-    SURVEY §7.3-4). Single aggregation job over the add-actions frame.
+    SURVEY §7.3-4); a NULL size adds no bytes.
     """
-    flat = snapshot.add_actions_flat()
-    pred = F.expr(filters_to_sql(filters))
-    row = flat.agg(
-        F.count(F.lit(1)).alias("num_files"),
-        F.coalesce(F.sum("size_bytes"), F.lit(0)).alias("total_bytes"),
-        F.coalesce(F.sum(F.when(pred, F.lit(1)).otherwise(F.lit(0))), F.lit(0)).alias(
-            "matching_files"
-        ),
-        F.coalesce(F.sum(F.when(pred, F.col("size_bytes"))), F.lit(0)).alias(
-            "matching_bytes"
-        ),
-    ).first()
+    pred = F.coalesce(F.expr(filters_to_sql(filters)), F.lit(False))
+    files = (
+        snapshot.add_actions_flat()
+        .select(F.col("size_bytes"), pred.alias("matched"))
+        .collect()
+    )
+    skipped = [r for r in files if not r["matched"]]
     return {
-        "num_files": row["num_files"],
-        "num_files_skipped": row["num_files"] - row["matching_files"],
-        "num_bytes_skipped": row["total_bytes"] - row["matching_bytes"],
+        "num_files": len(files),
+        "num_files_skipped": len(skipped),
+        "num_bytes_skipped": sum(r["size_bytes"] or 0 for r in skipped),
     }
 
 
@@ -174,24 +175,26 @@ def delta_file_sizes(
 ) -> dict:
     """File-size histogram over live files.
 
-    One pass: each bucket is a conditional sum over inclusive
-    ``between(lo, hi)`` ranges; keys are ``num_files_<boundary>``
-    (reference parity, levi/__init__.py:54-63).
+    Each bucket counts the files whose size lies in the inclusive
+    ``between(lo, hi)`` range (a NULL size is in no bucket); keys are
+    ``num_files_<boundary>`` (reference parity, levi/__init__.py:54-63).
     """
     boundaries = list(boundaries or DEFAULT_SIZE_BOUNDARIES)
-    ranges = [boundary_parser(b) for b in boundaries]
-    aa = snapshot.add_actions()
-    aggs = [
-        F.coalesce(
-            F.sum(
-                F.when(F.col("size_bytes").between(lo, hi), F.lit(1)).otherwise(F.lit(0))
-            ),
-            F.lit(0),
-        ).alias(f"b{i}")
-        for i, (lo, hi) in enumerate(ranges)
-    ]
-    row = aa.agg(*aggs).first()
-    return {f"num_files_{b}": row[f"b{i}"] for i, b in enumerate(boundaries)}
+    size = F.col("size_bytes")
+    files = (
+        snapshot.add_actions()
+        .select(
+            *[
+                size.between(lo, hi).alias(f"b{i}")
+                for i, (lo, hi) in enumerate(map(boundary_parser, boundaries))
+            ]
+        )
+        .collect()
+    )
+    return {
+        f"num_files_{b}": sum(1 for r in files if r[i])
+        for i, b in enumerate(boundaries)
+    }
 
 
 def _to_epoch_millis(t) -> int:
@@ -222,24 +225,28 @@ def updated_partitions(
     if end_time is not None:
         aa = aa.where(F.col("modification_time") < F.lit(_to_epoch_millis(end_time)))
     by_name = {f.name: f for f in meta.schema.fields}
-    typed = (
-        aa.select(
-            F.col("commit_version"),
-            F.col("modification_time"),
-            *[
-                F.col("partitionValues").getItem(c).cast(by_name[c].dataType).alias(c)
-                for c in part_cols
-            ],
-        )
-        # First-seen order parity with the reference (levi returns
-        # partitions in add-action order): order by earliest commit /
-        # modification time per distinct partition tuple.
-        .groupBy(*part_cols)
-        .agg(
-            F.min("commit_version").alias("__v"),
-            F.min("modification_time").alias("__t"),
-        )
-        .orderBy("__v", "__t")
-        .drop("__v", "__t")
+    files = aa.select(
+        F.col("commit_version"),
+        F.col("modification_time"),
+        *[
+            F.col("partitionValues").getItem(c).cast(by_name[c].dataType).alias(c)
+            for c in part_cols
+        ],
+    ).collect()
+    # First-seen order parity with the reference (levi returns
+    # partitions in add-action order): order the distinct partition
+    # tuples by earliest commit version, then earliest modification
+    # time (a missing time sorts first, as in Spark's ascending order).
+    first: dict[tuple, tuple] = {}
+    for r in files:
+        key = tuple(r[c] for c in part_cols)
+        v, t = r["commit_version"], r["modification_time"]
+        if key in first:
+            v0, t0 = first[key]
+            v = min(v0, v)
+            t = min((x for x in (t0, t) if x is not None), default=None)
+        first[key] = (v, t)
+    order = sorted(
+        first, key=lambda k: (first[k][0], first[k][1] is not None, first[k][1])
     )
-    return [r.asDict() for r in typed.collect()]
+    return [dict(zip(part_cols, k)) for k in order]

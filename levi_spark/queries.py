@@ -4552,8 +4552,7 @@ def _cpu_fanout(spark, cap=None, input_bytes=None):
     n = spark.sparkContext.defaultParallelism
     if cap and input_bytes:
         need = -(-int(input_bytes) // _FANOUT_BYTES_PER_TASK)  # ceil
-        if need > cap:
-            return max(cap, min(n, need))
+        return min(n, max(cap, need))
     return min(n, cap) if cap else n
 
 

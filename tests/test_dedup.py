@@ -158,3 +158,52 @@ def test_drop_duplicates_pkey_errors(spark, tmp_path):
         drop_duplicates_pkey(t, "col1", ["missing"])
     with pytest.raises(ValueError):
         drop_duplicates_pkey(t, "col1", ["col2"])  # pk not unique
+
+
+def test_kill_duplicates_targeted_rows_deleted_is_row_count_drop(spark, tmp_path):
+    path = str(tmp_path / "t")
+    cols = ["col1", "col2", "col3"]
+    # groups of 3 (one spanning both files), 2, and NULL-keyed repeats
+    write_delta(
+        spark.createDataFrame(
+            [(1, "A", "A"), (2, "A", "A"), (3, "B", "B"), (4, None, "N")], cols
+        ).coalesce(1),
+        path, mode="error",
+    )
+    write_delta(
+        spark.createDataFrame(
+            [(5, "A", "A"), (6, "B", "B"), (7, None, "N"), (8, "C", "C")], cols
+        ).coalesce(1),
+        path, mode="append",
+    )
+    t = LeviTable(spark, path)
+    before = t.to_df().count()
+    res = kill_duplicates_targeted(t, ["col2", "col3"])
+    after = LeviTable(spark, path).to_df().count()
+    assert res["rows_deleted"] == before - after == 5
+    assert _rows(LeviTable(spark, path), ["col1"]) == [(4,), (7,), (8,)]
+
+
+def test_drop_duplicates_partitioned_with_null_partition(spark, tmp_path):
+    path = str(tmp_path / "t")
+    cols = ["id", "k", "p"]
+    # the "x" group spans commit 0 (NULL partition) and commit 1
+    # (partition "b"); the "y" group sits in partition "a" only
+    write_delta(
+        spark.createDataFrame(
+            [(1, "x", None), (2, "y", "a"), (3, "y", "a"), (4, "z", "b")], cols
+        ).coalesce(1),
+        path, mode="error", partition_by=["p"],
+    )
+    write_delta(
+        spark.createDataFrame([(5, "x", "b"), (6, "w", None)], cols).coalesce(1),
+        path, mode="append", partition_by=["p"],
+    )
+    t = LeviTable(spark, path)
+    before = t.to_df().count()
+    res = drop_duplicates(t, ["k"])
+    t = LeviTable(spark, path)
+    # survivor = first in (commit version, path, row index) order
+    assert _rows(t, cols) == [(1, "x", None), (2, "y", "a"), (4, "z", "b"), (6, "w", None)]
+    assert res["rows_deleted"] == before - t.to_df().count() == 2
+    assert res["files_rewritten"] == 2

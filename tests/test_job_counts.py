@@ -1,0 +1,71 @@
+"""Spark job counts of the levi operators on a small table whose log
+is replayed on the driver: the metadata plane answers from the log
+without starting a job, and ``drop_duplicates`` computes its loser set
+once. Jobs are counted from the status store by submission time, so
+jobs started on other threads (broadcasts, subqueries) count too."""
+
+import time
+
+import pytest
+
+from levi_spark.delta.log import DeltaLog
+from levi_spark.delta.table import LeviTable
+from levi_spark.delta.writer import write_delta
+from levi_spark.operators.dedup import drop_duplicates
+from levi_spark.operators.metadata import (
+    delta_file_sizes,
+    pruned_scan,
+    skipped_stats,
+    updated_partitions,
+)
+
+
+def _jobs_started(spark, fn) -> int:
+    """Number of Spark jobs submitted while ``fn()`` runs."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    t0 = time.time() * 1000
+    fn()
+    t1 = time.time() * 1000
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    submitted = [jobs.apply(i).submissionTime() for i in range(jobs.size())]
+    return sum(
+        1 for s in submitted if s.isDefined() and t0 <= s.get().getTime() <= t1
+    )
+
+
+@pytest.fixture
+def table_path(spark, tmp_path):
+    loc = str(tmp_path / "t")
+    for v, part in enumerate(["a", "b", "a"]):
+        df = spark.range(10 * v, 10 * v + 10, numPartitions=1).selectExpr(
+            "id % 15 as k", "id as x", f"'{part}' as p"
+        )
+        write_delta(df, loc, mode="error" if v == 0 else "append", partition_by=["p"])
+    return loc
+
+
+def _snapshot(spark, path):
+    snap = DeltaLog(spark, path).snapshot()
+    assert snap._local_actions() is not None  # driver-side replay
+    return snap
+
+
+def test_metadata_plane_starts_no_job(spark, table_path):
+    for op in (
+        lambda s: skipped_stats(s, [("x", ">", 12)]),
+        lambda s: delta_file_sizes(s),
+        lambda s: updated_partitions(s),
+        lambda s: pruned_scan(s, [("x", ">", 12), ("p", "=", "a")]),
+    ):
+        snap = _snapshot(spark, table_path)
+        assert _jobs_started(spark, lambda: op(snap)) == 0
+
+
+def test_drop_duplicates_job_budget(spark, table_path):
+    t = LeviTable(spark, table_path)
+    res = {}
+    n = _jobs_started(spark, lambda: res.update(drop_duplicates(t, ["k"])))
+    assert res["rows_deleted"] == 15
+    assert n <= 10, n

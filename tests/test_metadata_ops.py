@@ -2,6 +2,7 @@
 (/root/reference/tests/test_public_interface.py:11-156)."""
 
 import datetime
+import json
 import os
 import time
 
@@ -116,3 +117,90 @@ def test_write_read_roundtrip_overwrite(spark, tmp_path):
     # stats present and parsed
     aa = log.snapshot().add_actions()
     assert aa.selectExpr("sum(num_records)").first()[0] == 3
+
+
+def _commit_add(table_path, version, edit=None):
+    """The single add action of one commit file, after rewriting it in
+    place with ``edit`` when given."""
+    p = os.path.join(table_path, "_delta_log", f"{version:020d}.json")
+    with open(p) as f:
+        actions = [json.loads(line) for line in f if line.strip()]
+    (add,) = [a["add"] for a in actions if "add" in a]
+    if edit is not None:
+        edit(add)
+        with open(p, "w") as f:
+            f.write("".join(json.dumps(a) + "\n" for a in actions))
+    return add
+
+
+@pytest.fixture(scope="module")
+def fold_table(spark, tmp_path_factory):
+    """Five one-file commits, partitioned by string ``p`` over long
+    ``x``: v0 p=a x 0-9, v1 p=NULL x 10-19, v2 p=b x 20-29 (stats
+    removed), v3 p=NULL x 30-39 (size NULL), v4 p=a x 40-49. Returns
+    (path, {version: add action as committed})."""
+    loc = str(tmp_path_factory.mktemp("fold") / "t")
+    for v, p in enumerate(["a", None, "b", None, "a"]):
+        df = spark.range(10 * v, 10 * v + 10, numPartitions=1).selectExpr(
+            "id as x", f"cast({'null' if p is None else repr(p)} as string) as p"
+        )
+        write_delta(df, loc, mode="error" if v == 0 else "append", partition_by=["p"])
+        time.sleep(0.05)  # distinct modification times per commit
+    adds = {v: _commit_add(loc, v) for v in (0, 1, 4)}
+    adds[2] = _commit_add(loc, 2, lambda a: a.pop("stats"))
+    adds[3] = _commit_add(loc, 3, lambda a: a.update(size=None))
+    return loc, adds
+
+
+@pytest.fixture(params=["local", "distributed"])
+def fold_snap(request, spark, fold_table):
+    """The fold table's snapshot, replayed on the driver or forced onto
+    the distributed replay path that logs over 64 MB take."""
+    snap = DeltaLog(spark, fold_table[0]).snapshot()
+    if request.param == "distributed":
+        snap._local = False
+    else:
+        assert snap._local_actions() is not None
+    return snap
+
+
+def test_skipped_stats_fold_parity(fold_snap, fold_table):
+    adds = fold_table[1]
+    size = {v: a["size"] for v, a in adds.items()}
+    # x = 15 can only be in v1; v2 has no stats (NULL predicate = not
+    # matched = skipped); v3's NULL size adds no bytes
+    assert skipped_stats(fold_snap, [("x", "=", 15)]) == {
+        "num_files": 5,
+        "num_files_skipped": 4,
+        "num_bytes_skipped": size[0] + size[2] + size[4],
+    }
+    # the bounds are inclusive: x <= 0 matches v0's min exactly
+    assert skipped_stats(fold_snap, [("x", "<=", 0)])["num_files_skipped"] == 4
+    assert skipped_stats(fold_snap, [("x", ">=", 49)])["num_files_skipped"] == 4
+
+
+def test_delta_file_sizes_fold_parity(fold_snap, fold_table):
+    sizes = [a["size"] for a in fold_table[1].values() if a["size"] is not None]
+    lo, hi = min(sizes), max(sizes)
+    res = delta_file_sizes(
+        fold_snap, [f"<{lo}b", f"{lo}b-{hi}b", f"{lo}b-{lo}b", f">{hi}b"]
+    )
+    # inclusive bucket bounds; the NULL-size file is in no bucket
+    assert res == {
+        f"num_files_<{lo}b": 0,
+        f"num_files_{lo}b-{hi}b": 4,
+        f"num_files_{lo}b-{lo}b": sizes.count(lo),
+        f"num_files_>{hi}b": 0,
+    }
+
+
+def test_updated_partitions_fold_parity(fold_snap, fold_table):
+    adds = fold_table[1]
+    # the NULL partition is one group; first-seen order
+    assert updated_partitions(fold_snap) == [{"p": "a"}, {"p": None}, {"p": "b"}]
+    # from v3 on, NULL (first seen at v3) precedes "a" (v4 in the window)
+    t3 = adds[3]["modificationTime"]
+    assert updated_partitions(fold_snap, t3) == [{"p": None}, {"p": "a"}]
+    assert updated_partitions(fold_snap, t3, adds[4]["modificationTime"]) == [
+        {"p": None}
+    ]

@@ -747,8 +747,9 @@ def test_cpu_fanout_cap_is_size_adaptive(spark, monkeypatch):
     assert _cpu_fanout(spark, cap=8, input_bytes=big) == max(
         min(cores, 8), min(cores, 1000))
     # in-between: ceil(bytes / per-task budget), never below the cap
+    # and never above the cores
     mid = 12 * _FANOUT_BYTES_PER_TASK + 1
-    assert _cpu_fanout(spark, cap=8, input_bytes=mid) == max(
-        8, min(cores, 13))
+    assert _cpu_fanout(spark, cap=8, input_bytes=mid) == min(
+        cores, max(8, 13))
     # unknown size (non-local URI): the cap is kept
     assert _cpu_fanout(spark, cap=8, input_bytes=None) == min(cores, 8)
