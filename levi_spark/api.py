@@ -10,7 +10,11 @@ is the whole migration. Tables are :class:`levi_spark.delta.table.
 LeviTable` (``LeviTable.for_path(spark, path)``) where the reference
 takes a ``deltalake.DeltaTable``; updates frames may be any
 ``__dataframe__``-protocol object (pandas, pyarrow, ...) exactly like
-the reference (``levi/__init__.py:9,171,224``).
+the reference (``levi/__init__.py:9,171,224``). The three dedup
+verbs (``kill_duplicates``, ``drop_duplicates``,
+``drop_duplicates_pkey``) each return their file-targeted rewrite's
+report ``{"files_rewritten", "files_total", "rows_deleted",
+"version"}`` (version -1 when nothing was deleted).
 
 | reference (levi/__init__.py) | here |
 |---|---|

@@ -437,15 +437,9 @@ def purge_deleted(spark: SparkSession, path: str) -> dict:
     if not dv_paths:
         return {"version": -1, "files_rewritten": 0}
     # a purge rewrite does not logically modify the surviving rows —
-    # preserve their row ids (same materialized-column mechanism as
-    # OPTIMIZE) on row-tracked tables
-    from levi_spark.operators.layout import _with_preserved_row_ids
-
-    survivors = _with_preserved_row_ids(
-        snap, lambda rid: snap.to_df(paths=dv_paths, with_row_ids=rid)
-    )
+    # rewrite_df preserves their row ids on row-tracked tables
     version = write_delta(
-        survivors,
+        snap.rewrite_df(paths=dv_paths),
         path,
         mode="append",
         partition_by=list(snap.metadata.partition_columns),

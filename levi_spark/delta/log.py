@@ -401,6 +401,19 @@ class TableMetadata:
         }
 
     @property
+    def materialized_row_columns(self) -> tuple[str, str] | None:
+        """(row-id, row-commit-version) physical column names a rewrite
+        stores preserved row ids under, or None unless row tracking is
+        enabled and both names are configured (the writer sets both
+        when it enables the feature)."""
+        conf = self.configuration or {}
+        mid = conf.get("delta.rowTracking.materializedRowIdColumnName")
+        mcv = conf.get("delta.rowTracking.materializedRowCommitVersionColumnName")
+        if conf.get("delta.enableRowTracking") == "true" and mid and mcv:
+            return mid, mcv
+        return None
+
+    @property
     def physical_schema(self) -> T.StructType:
         """Schema of the parquet data files: table schema minus partition
         columns (Delta stores partition values only in the log/paths),
@@ -1451,6 +1464,25 @@ class Snapshot:
         for p in parts[1:]:
             out = out.unionByName(p)
         return out
+
+    def rewrite_df(
+        self, paths: list[str] | None = None, with_lineage: bool = False
+    ) -> DataFrame:
+        """The rows of ``paths`` (default: every live file) in the shape
+        a file rewrite hands to ``write_delta``: :meth:`to_df`'s columns
+        and, on a row-tracked table, each row's current ``_row_id`` /
+        ``_row_commit_version`` under the table's materialized column
+        names. The writer stores those instead of minting new ids, so a
+        row a rewrite only copies keeps its id and commit version."""
+        mat = self.metadata.materialized_row_columns
+        df = self.to_df(
+            paths=paths, with_lineage=with_lineage, with_row_ids=mat is not None
+        )
+        if mat is None:
+            return df
+        return df.withColumnRenamed("_row_id", mat[0]).withColumnRenamed(
+            "_row_commit_version", mat[1]
+        )
 
     def to_df(
         self,

@@ -38,14 +38,6 @@ class LeviTable:
     def to_df(self, version: int | None = None) -> DataFrame:
         return self.snapshot(version).to_df()
 
-    def overwrite(self, df: DataFrame, partition_by: list[str] | None = None) -> int:
-        """Full-table rewrite as a new version (the reference's
-        ``write_deltalake(mode="overwrite")`` path)."""
-        pb = partition_by
-        if pb is None:
-            pb = self.snapshot().metadata.partition_columns
-        return write_delta(df, self.path, mode="overwrite", partition_by=pb)
-
     def append(self, df: DataFrame) -> int:
         return write_delta(
             df,

@@ -13,14 +13,17 @@ Spark-first design notes (100 TB stance):
   ``_metadata.row_index`` within a file — byte-for-byte the order a
   single-process reader would see, but computed without collapsing to
   one partition.
-* Writes are FILE-TARGETED: every mutation rewrites only the files
-  that actually lose a row (``write_delta(replace_paths=…)``), never
-  the whole table — at 100 TB a dedup pass touching 0.1% of rows must
-  not rewrite the other 99.9% of bytes. Survivor selection still sees
-  the GLOBAL duplicate structure (the loser set is computed over the
-  full table, then anti-joined against only the hit files), so
-  targeting never changes results. Untouched files keep their add
-  actions, stats, and history.
+* Every table verb is one loser-set computation over the FULL table
+  (``kill_duplicates``: every non-NULL-keyed row of a group counting
+  more than one; ``drop_duplicates`` / ``drop_duplicates_pkey``: every
+  row after the first of its group) followed by the one
+  FILE-TARGETED rewrite, :func:`_targeted_loser_rewrite`: only the
+  files that lose a row are replaced (``write_delta(replace_paths=…)``),
+  never the whole table — at 100 TB a dedup pass touching 0.1% of rows
+  must not rewrite the other 99.9% of bytes. Because the loser set is
+  global, targeting never changes results. Untouched files keep their
+  add actions, stats, and history; rewritten survivors keep their row
+  ids on row-tracked tables (``Snapshot.rewrite_df``).
 """
 
 from __future__ import annotations
@@ -57,7 +60,8 @@ def _check_columns(df_cols: list[str], required: list[str]) -> None:
 def kill_duplicates_transform(df: DataFrame, duplication_columns: list[str]) -> DataFrame:
     """Survivor set after deleting every member of every duplicate group.
 
-    Pure transform shared by the table operator and the query surface.
+    Pure transform for the query surface (the table operator,
+    :func:`kill_duplicates`, deletes the same rows in place).
     left_anti on equi-keys: NULL keys never match ⇒ NULL rows survive,
     exactly like the reference's MERGE-delete predicate
     (levi/__init__.py:155).
@@ -76,45 +80,15 @@ def kill_duplicates_transform(df: DataFrame, duplication_columns: list[str]) -> 
     )
 
 
-def kill_duplicates(table: LeviTable, duplication_columns: list[str]) -> None:
-    """Delete **every** member of every duplicate group (no survivor).
+def kill_duplicates(table: LeviTable, duplication_columns: list[str]) -> dict:
+    """Delete **every** member of every duplicate group (no survivor),
+    rewriting only the files that hold one.
 
     Rows with NULL in any duplication column are never deleted — SQL
     ``=`` never matches NULL (reference parity, the MERGE predicate at
-    levi/__init__.py:155).
-
-    Full-table rewrite for reference parity; at scale prefer
-    :func:`kill_duplicates_targeted`, which rewrites only the files
-    that actually hold duplicate-group rows.
-    """
-    _check_table(table)
-    table.overwrite(kill_duplicates_transform(table.to_df(), duplication_columns))
-
-
-def kill_duplicates_targeted(table: LeviTable, duplication_columns: list[str]) -> dict:
-    """P9 semantics with a file-targeted rewrite — the 100 TB path.
-
-    The reference's MERGE-delete (levi/__init__.py:155-166) and our
-    :func:`kill_duplicates` both rewrite the whole table. Here:
-
-    1. One full scan, aggregated map-side, produces per duplicate key
-       the *set of files* holding its rows (``_metadata.file_name`` +
-       ``collect_set`` — output is metadata-sized, bounded by the file
-       count, never the row count).
-       The same query credits each group's row count to one of its
-       files: every non-NULL member of a duplicate group is deleted,
-       so those counts sum to ``rows_deleted`` and the rewrite is
-       never counted separately.
-    2. Only those "hit" files are re-read; the anti-join against the
-       duplicate keys runs on that subset, and one commit atomically
-       replaces exactly those files (``write_delta(replace_paths=…)``).
-
-    Correct because every row of a (non-NULL-keyed) duplicate group is,
-    by definition, in a hit file — so recomputing duplicate keys on the
-    subset yields exactly the global duplicate keys. Rows with NULL in
-    a duplication column never match (reference parity) and are
-    excluded up front, so files whose only repeats are NULL-keyed are
-    not rewritten. Untouched files keep their stats and history.
+    levi/__init__.py:155) — so they are dropped before the group count.
+    The losers are every remaining row whose group counts more than
+    one; :func:`_targeted_loser_rewrite` replaces exactly their files.
 
     Returns ``{"files_rewritten", "files_total", "rows_deleted",
     "version"}`` (version -1 if the table has no duplicates).
@@ -124,69 +98,21 @@ def kill_duplicates_targeted(table: LeviTable, duplication_columns: list[str]) -
         raise TypeError("duplication_columns must be a non-empty list")
     dcols = list(duplication_columns)
     snap = table.snapshot()
-    df = snap.to_df()
-    _check_columns(df.columns, dcols)
-
+    _check_columns(snap.metadata.data_columns, dcols)
     non_null = functools.reduce(
         operator.and_, [F.col(c).isNotNull() for c in dcols]
     )
-    # hit file -> the __cnt of the duplicate groups listed first in it
-    # (each group is credited to exactly one of its files), so the
-    # values sum to rows_deleted
-    per_file = {
-        r["__fn"]: r["__rows"]
-        for r in (
-            df.where(non_null)
-            .select(*dcols, F.col("_metadata.file_name").alias("__fn"))
-            .groupBy(*dcols)
-            .agg(F.count(F.lit(1)).alias("__cnt"), F.collect_set("__fn").alias("__fns"))
-            .where(F.col("__cnt") > 1)
-            .select(F.posexplode("__fns").alias("__pos", "__fn"), "__cnt")
-            .groupBy("__fn")
-            .agg(
-                F.sum(F.when(F.col("__pos") == 0, F.col("__cnt")).otherwise(0))
-                .alias("__rows")
-            )
-            .collect()
+    losers = (
+        snap.to_df(with_lineage=True)
+        .where(non_null)
+        .withColumn("__cnt", F.count(F.lit(1)).over(Window.partitionBy(*dcols)))
+        .where(F.col("__cnt") > 1)
+        .select(
+            F.col("_file_name").alias("__file_name"),
+            F.col("_row_index").alias("__row_idx"),
         )
-    }
-    all_rels = [unquote(r["add"]["path"])
-                for r in snap.live_adds_collected()]
-    if not per_file:
-        return {
-            "files_rewritten": 0,
-            "files_total": len(all_rels),
-            "rows_deleted": 0,
-            "version": -1,
-        }
-    rels = [p for p in all_rels if os.path.basename(p) in per_file]
-    # survivors of the rewrite are not logically modified — preserve
-    # their row ids on row-tracked tables (materialized columns ride
-    # through the transform; the writer strips them from the schema)
-    from levi_spark.operators.layout import _rt_materialized_names
-
-    mat_id, mat_cv = _rt_materialized_names(snap)
-    sub = snap.to_df(paths=rels, with_row_ids=mat_id is not None)
-    if mat_id is not None:
-        sub = sub.withColumnRenamed("_row_id", mat_id).withColumnRenamed(
-            "_row_commit_version", mat_cv
-        )
-    survivors = kill_duplicates_transform(sub, dcols)
-    version = write_delta(
-        survivors,
-        table.path,
-        mode="append",
-        partition_by=list(snap.metadata.partition_columns),
-        replace_paths=rels,
-        operation="DELETE",
-        identity_passthrough=True,  # rewrite carries existing ids
     )
-    return {
-        "files_rewritten": len(rels),
-        "files_total": len(all_rels),
-        "rows_deleted": sum(per_file.values()),
-        "version": version,
-    }
+    return _targeted_loser_rewrite(table, losers)
 
 
 def _physical_order_df(table: LeviTable) -> DataFrame:
@@ -250,26 +176,18 @@ def _targeted_loser_rewrite(table: LeviTable, losers: DataFrame) -> dict:
             "version": -1,
         }
     rels = [p for p in all_rels if os.path.basename(p) in per_file]
-    from levi_spark.operators.layout import _rt_materialized_names
-
-    mat_id, mat_cv = _rt_materialized_names(snap)
-    sub = snap.to_df(
-        paths=rels, with_lineage=True, with_row_ids=mat_id is not None
-    )
-    keep_cols = list(snap.metadata.data_columns)
-    if mat_id is not None:
-        sub = sub.withColumnRenamed("_row_id", mat_id).withColumnRenamed(
-            "_row_commit_version", mat_cv
+    kept = (
+        snap.rewrite_df(paths=rels, with_lineage=True)
+        .join(
+            losers.select(
+                F.col("__file_name").alias("_file_name"),
+                F.col("__row_idx").alias("_row_index"),
+            ),
+            on=["_file_name", "_row_index"],
+            how="left_anti",
         )
-        keep_cols += [mat_id, mat_cv]
-    kept = sub.join(
-        losers.select(
-            F.col("__file_name").alias("_file_name"),
-            F.col("__row_idx").alias("_row_index"),
-        ),
-        on=["_file_name", "_row_index"],
-        how="left_anti",
-    ).select(*keep_cols)
+        .drop("_file_name", "_row_index")
+    )
     version = write_delta(
         kept,
         table.path,

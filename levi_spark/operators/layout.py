@@ -12,6 +12,9 @@ Scale stance:
 * Compaction reads ONLY the files below the size threshold (never the
   whole table), bin-packs them to the target size, and replaces them
   in one commit. Untouched large files keep their stats.
+* Every rewrite reads its input through ``Snapshot.rewrite_df``, so on
+  a row-tracked table each rewritten row keeps its row id and commit
+  version (an OPTIMIZE moves rows, it does not modify them).
 * Curve clustering maps each clustering column to a fixed-width rank
   via min/max linear bucketing (two literals from one metadata-cheap
   agg — no global sort, no skew-prone single-partition window), maps
@@ -47,44 +50,6 @@ from levi_spark.delta.log import DeltaLog
 from levi_spark.delta.writer import write_delta
 
 
-def _rt_materialized_names(snap) -> tuple[str, str] | tuple[None, None]:
-    """The table's materialized row-id / commit-version column names
-    when row tracking is enabled AND the names are configured, else
-    (None, None). Rewriters use these to hand preserved ids to the
-    writer."""
-    conf = snap.metadata.configuration or {}
-    mid = conf.get("delta.rowTracking.materializedRowIdColumnName")
-    mcv = conf.get("delta.rowTracking.materializedRowCommitVersionColumnName")
-    if conf.get("delta.enableRowTracking") == "true" and mid and mcv:
-        return mid, mcv
-    return None, None
-
-
-def _with_preserved_row_ids(snap, df_reader):
-    """Row-tracking preservation for OPTIMIZE rewrites: when the table
-    tracks rows AND declares materialized row-id columns, read the
-    input WITH its current row ids and hand them to the writer under
-    the config-declared physical column names — every surviving row
-    keeps its id across the rewrite (the Delta spec's preserved-id
-    semantics; lineage consumers rely on exactly this). Tables without
-    the feature read plainly and ids re-mint (spec-legal "fresh").
-
-    ``df_reader(with_row_ids)`` -> DataFrame, so callers decide the
-    scan (subset of files for compaction, full table for clustering).
-    """
-    conf = snap.metadata.configuration or {}
-    mat_id = conf.get("delta.rowTracking.materializedRowIdColumnName")
-    mat_cv = conf.get("delta.rowTracking.materializedRowCommitVersionColumnName")
-    if conf.get("delta.enableRowTracking") == "true" and mat_id:
-        df = df_reader(True).withColumnRenamed("_row_id", mat_id)
-        if mat_cv:
-            df = df.withColumnRenamed("_row_commit_version", mat_cv)
-        else:
-            df = df.drop("_row_commit_version")
-        return df
-    return df_reader(False)
-
-
 def compact_small_files(
     spark: SparkSession,
     path: str,
@@ -112,9 +77,7 @@ def compact_small_files(
     total = sum(os.stat(os.path.join(path, p)).st_size for p in smalls)
     n_out = max(1, math.ceil(total / target_bytes))
 
-    df = _with_preserved_row_ids(
-        snap, lambda rid: snap.to_df(paths=smalls, with_row_ids=rid)
-    )
+    df = snap.rewrite_df(paths=smalls)
     before = log.latest_version()
     version = write_delta(
         df.repartition(n_out),
@@ -309,11 +272,7 @@ def optimize_hilbert(
     min/max locality per file). Returns the new version."""
     log = DeltaLog(spark, path)
     snap = log.snapshot()
-    df = hilbert_value(
-        _with_preserved_row_ids(snap, lambda rid: snap.to_df(with_row_ids=rid)),
-        cols,
-        bits=bits,
-    )
+    df = hilbert_value(snap.rewrite_df(), cols, bits=bits)
     clustered = (
         df.repartitionByRange(n_files, F.col("__h"))
         .sortWithinPartitions("__h")
@@ -341,11 +300,7 @@ def optimize_zorder(
     new version."""
     log = DeltaLog(spark, path)
     snap = log.snapshot()
-    df = zorder_value(
-        _with_preserved_row_ids(snap, lambda rid: snap.to_df(with_row_ids=rid)),
-        cols,
-        bits=bits,
-    )
+    df = zorder_value(snap.rewrite_df(), cols, bits=bits)
     clustered = (
         df.repartitionByRange(n_files, F.col("__z"))
         .sortWithinPartitions("__z")
@@ -427,11 +382,8 @@ def recluster(spark: SparkSession, path: str) -> int:
             f"{path} carries no delta.clustering domain — nothing to "
             "recluster (use optimize_zorder/optimize_hilbert)"
         )
-    df = _with_preserved_row_ids(
-        snap, lambda rid: snap.to_df(with_row_ids=rid)
-    )
     return write_delta(
-        df,
+        snap.rewrite_df(),
         path,
         mode="overwrite",
         operation="OPTIMIZE",

@@ -4,10 +4,11 @@ MERGE is the reference's core mutation primitive — ``kill_duplicates``
 and ``type_2_scd_upsert`` are both thin stagings over
 ``delta_table.merge(...).when_matched_delete / when_not_matched_insert /
 when_matched_update`` (``/root/reference/levi/__init__.py:155-166,
-274-295``). Those two operators are implemented directly elsewhere
-(:mod:`levi_spark.operators.dedup`, :mod:`levi_spark.operators.scd`);
-this module provides the *general* builder so any user merge the
-reference could express runs here too:
+274-295``). Here ``type_2_scd_upsert`` stages its source the same way
+and runs through this builder (:mod:`levi_spark.operators.scd`);
+``kill_duplicates`` needs no source and is a loser-set rewrite like the
+other dedup verbs (:mod:`levi_spark.operators.dedup`). The builder is
+general, so any user merge the reference could express runs here too:
 
     (MergeBuilder(table, source, "t.pk = s.pk")
         .when_matched_update(condition="t.v <> s.v", set={"v": "s.v"})
@@ -177,21 +178,12 @@ class MergeBuilder:
         src = src.alias("s")
         cdc_parts: list[DataFrame] = []
 
-        # Row tracking: a MERGE rewrite preserves every surviving
-        # row's id through the materialized columns — copied rows also
-        # keep their commit version, updated rows re-stamp it (null
-        # materialized value -> the rewrite commit's default, i.e.
-        # "last modified here"), inserts mint fresh ids.
-        _conf = snap.metadata.configuration or {}
-        rt_mat_id = _conf.get("delta.rowTracking.materializedRowIdColumnName")
-        rt_mat_cv = _conf.get(
-            "delta.rowTracking.materializedRowCommitVersionColumnName"
-        )
-        rt_preserve = (
-            _conf.get("delta.enableRowTracking") == "true"
-            and rt_mat_id is not None
-            and rt_mat_cv is not None
-        )
+        # Row tracking: the rewrite reads touched files through
+        # Snapshot.rewrite_df, so copied rows keep their id and commit
+        # version; updated rows re-stamp the version (null materialized
+        # value -> the rewrite commit's default, i.e. "last modified
+        # here"); inserts mint fresh ids.
+        rt_mat = snap.metadata.materialized_row_columns
         # Identity columns: rewritten rows pass their existing values
         # through; INSERT branches must not assign a GENERATED ALWAYS
         # column, and unassigned identity columns get system values
@@ -254,10 +246,8 @@ class MergeBuilder:
                     raise ValueError(
                         "MERGE: a target row matches multiple source rows"
                     )
-                sub = snap.to_df(
-                    paths=touched_rels,
-                    with_lineage=True,
-                    with_row_ids=rt_preserve,
+                sub = snap.rewrite_df(
+                    paths=touched_rels, with_lineage=True
                 ).alias("t")
                 joined = sub.join(src, cond, "left_outer")
                 matched = F.col(_MARKER).isNotNull()
@@ -298,7 +288,7 @@ class MergeBuilder:
                 # CDF images need.
                 carry_cols = list(out_cols)
                 carry_cols.append(keep.alias("__keep"))
-                if rt_preserve:
+                if rt_mat is not None:
                     upd_any = functools.reduce(
                         operator.or_,
                         [
@@ -310,12 +300,12 @@ class MergeBuilder:
                         ],
                         F.lit(False),
                     )
-                    carry_cols.append(F.col("t._row_id").alias(rt_mat_id))
+                    carry_cols.append(F.col(f"t.{rt_mat[0]}"))
                     carry_cols.append(
                         F.when(upd_any, F.lit(None))
-                        .otherwise(F.col("t._row_commit_version"))
+                        .otherwise(F.col(f"t.{rt_mat[1]}"))
                         .cast("long")
-                        .alias(rt_mat_cv)
+                        .alias(rt_mat[1])
                     )
                 if emit_cdf:
                     carry_cols += [
@@ -331,7 +321,7 @@ class MergeBuilder:
                     carry = carry.withColumn(g, F.expr(e).cast(types[g]))
                 rewritten = carry.where(F.col("__keep")).select(
                     *all_cols,
-                    *([rt_mat_id, rt_mat_cv] if rt_preserve else []),
+                    *(rt_mat or ()),
                 )
                 if emit_cdf:
                     # preimages null-fill evolution columns, typed to the

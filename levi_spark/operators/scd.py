@@ -39,6 +39,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 from levi_spark.delta.table import LeviTable
 
@@ -65,6 +66,60 @@ def as_spark_df(spark: SparkSession, obj) -> DataFrame:
     )
 
 
+def _check_scd_columns(
+    base_cols: list[str],
+    updates_cols: list[str],
+    primary_key: str,
+    attr_col_names: list[str],
+    is_current_col_name: str,
+    effective_time_col_name: str,
+    end_time_col_name: str,
+) -> None:
+    base_required = sorted(
+        [primary_key, *attr_col_names, is_current_col_name,
+         effective_time_col_name, end_time_col_name]
+    )
+    if sorted(base_cols) != base_required:
+        raise TypeError(
+            f"Base table columns {sorted(base_cols)} must be exactly {base_required}"
+        )
+    updates_required = sorted([primary_key, *attr_col_names, effective_time_col_name])
+    if sorted(updates_cols) != updates_required:
+        raise TypeError(
+            f"Updates columns {sorted(updates_cols)} must be exactly {updates_required}"
+        )
+
+
+def _staged_source(
+    current: DataFrame, updates_df: DataFrame, primary_key: str,
+    attr_col_names: list[str], pk_type: DataType | str,
+) -> DataFrame:
+    """The reference's NULL-merge-key staged source: every update row
+    keyed by ``__merge_key`` = pk; rows whose attrs differ from the
+    ``current`` version also appear NULL-keyed, so they fall through to
+    the insert clause."""
+    base_sfx = current.select(
+        F.col(primary_key).alias("__pk_base"),
+        *[F.col(a).alias(f"{a}__base") for a in attr_col_names],
+    )
+    changed = (
+        updates_df.join(
+            base_sfx, updates_df[primary_key] == base_sfx["__pk_base"], "inner"
+        )
+        .where(
+            reduce(
+                lambda x, y: x | y,
+                [F.col(a) != F.col(f"{a}__base") for a in attr_col_names],
+            )
+        )
+        .select(*updates_df.columns)
+        .withColumn("__merge_key", F.lit(None).cast(pk_type))
+    )
+    return updates_df.withColumn("__merge_key", F.col(primary_key)).unionByName(
+        changed
+    )
+
+
 def scd2_merge_result(
     base_df: DataFrame,
     updates_df: DataFrame,
@@ -74,49 +129,23 @@ def scd2_merge_result(
     effective_time_col_name: str,
     end_time_col_name: str,
 ) -> DataFrame:
-    """Pure transform: the post-upsert table contents. Shared by the
-    table operator and the query/oracle surface."""
-    base_required = sorted(
-        [primary_key, *attr_col_names, is_current_col_name,
-         effective_time_col_name, end_time_col_name]
+    """Pure transform: the post-upsert table contents, for the
+    query/oracle surface. Column checks and the staged source are the
+    table operator's own."""
+    _check_scd_columns(
+        base_df.columns, updates_df.columns, primary_key, attr_col_names,
+        is_current_col_name, effective_time_col_name, end_time_col_name,
     )
-    if sorted(base_df.columns) != base_required:
-        raise TypeError(
-            f"Base table columns {sorted(base_df.columns)} must be exactly {base_required}"
-        )
-    updates_required = sorted([primary_key, *attr_col_names, effective_time_col_name])
-    if sorted(updates_df.columns) != updates_required:
-        raise TypeError(
-            f"Updates columns {sorted(updates_df.columns)} must be exactly {updates_required}"
-        )
-
-    pk_type = dict(base_df.dtypes)[primary_key]
     flag = is_current_col_name
     eff = effective_time_col_name
     end = end_time_col_name
 
     current = base_df.where(F.col(flag) == F.lit(True))
     history = base_df.where(~(F.col(flag) == F.lit(True)) | F.col(flag).isNull())
-
-    # -- staged source: NULL-merge-key trick ---------------------------------
-    base_sfx = current.select(
-        F.col(primary_key).alias("__pk_base"),
-        *[F.col(a).alias(f"{a}__base") for a in attr_col_names],
+    staged = _staged_source(
+        current, updates_df, primary_key, attr_col_names,
+        dict(base_df.dtypes)[primary_key],
     )
-    joined = updates_df.join(
-        base_sfx, updates_df[primary_key] == base_sfx["__pk_base"], "inner"
-    )
-    any_attr_differs = reduce(
-        lambda x, y: x | y,
-        [F.col(a) != F.col(f"{a}__base") for a in attr_col_names],
-    )
-    staged_changed = (
-        joined.where(any_attr_differs)
-        .select(*updates_df.columns)
-        .withColumn("__merge_key", F.lit(None).cast(pk_type))
-    )
-    staged_all = updates_df.withColumn("__merge_key", F.col(primary_key))
-    staged = staged_all.unionByName(staged_changed)
 
     # -- MERGE as set algebra -------------------------------------------------
     src = staged.select(
@@ -187,46 +216,17 @@ def type_2_scd_upsert(
     updates_df = as_spark_df(table.spark, updates_df)
 
     base_schema = table.snapshot().metadata.schema
-    base_cols = [f.name for f in base_schema.fields]
-    base_required = sorted(
-        [primary_key, *attr_col_names, is_current_col_name,
-         effective_time_col_name, end_time_col_name]
+    _check_scd_columns(
+        base_schema.names, updates_df.columns, primary_key, attr_col_names,
+        is_current_col_name, effective_time_col_name, end_time_col_name,
     )
-    if sorted(base_cols) != base_required:
-        raise TypeError(
-            f"Base table columns {sorted(base_cols)} must be exactly {base_required}"
-        )
-    updates_required = sorted([primary_key, *attr_col_names, effective_time_col_name])
-    if sorted(updates_df.columns) != updates_required:
-        raise TypeError(
-            f"Updates columns {sorted(updates_df.columns)} must be exactly {updates_required}"
-        )
-
     pk = primary_key
     flag = is_current_col_name
     eff = effective_time_col_name
-    pk_type = dict((f.name, f.dataType) for f in base_schema.fields)[pk]
-
-    # Staged source (reference NULL-merge-key trick): every update row
-    # keyed by pk; rows whose attrs differ from the CURRENT version also
-    # appear NULL-keyed so they fall through to the insert clause.
     current = table.to_df().where(F.col(flag) == F.lit(True))
-    base_sfx = current.select(
-        F.col(pk).alias("__pk_base"),
-        *[F.col(a).alias(f"{a}__base") for a in attr_col_names],
+    staged = _staged_source(
+        current, updates_df, pk, attr_col_names, base_schema[pk].dataType
     )
-    changed = (
-        updates_df.join(base_sfx, updates_df[pk] == base_sfx["__pk_base"], "inner")
-        .where(
-            reduce(
-                lambda x, y: x | y,
-                [F.col(a) != F.col(f"{a}__base") for a in attr_col_names],
-            )
-        )
-        .select(*updates_df.columns)
-        .withColumn("__merge_key", F.lit(None).cast(pk_type))
-    )
-    staged = updates_df.withColumn("__merge_key", F.col(pk)).unionByName(changed)
 
     attr_differs = " OR ".join(
         f"t.`{a}` != s.`{a}`" for a in attr_col_names

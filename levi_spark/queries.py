@@ -14340,25 +14340,33 @@ def parquet_column_read(spark, sf_dir):
     # engine's parquet split planning does — and the integer partials
     # aggregate to the same row (one final divide, identical
     # expressions to the gzip branch). One row group at the driver's
-    # bench SFs, so the bench-scale plan is unchanged there.
+    # bench SFs, so the bench-scale plan is unchanged there. A path
+    # that is not a local file (a directory, a remote URI) has no
+    # footer to read while the plan is built: it falls back to one task
+    # reading every row group (rg null).
     import os as _os
 
     from levi_spark.operators.parquetmeta import read_footer
 
     real_path = _os.path.join(sf_dir, "orders.parquet")
-    n_rg = len(read_footer(real_path)["row_groups"])
+    rgs = (
+        list(range(len(read_footer(real_path)["row_groups"])))
+        if _os.path.isfile(real_path)
+        else [None]
+    )
     real = spark.createDataFrame(
-        [(real_path, i) for i in range(n_rg)], "path string, rg int"
-    ).repartition(min(n_rg, _cpu_fanout(spark)))
+        [(real_path, i) for i in rgs], "path string, rg int"
+    ).repartition(min(len(rgs), _cpu_fanout(spark)))
 
     def from_real_file(batches):
         from levi_spark.operators.parquetmeta import read_column
 
         for pdf in batches:
             for path, rg in zip(pdf["path"], pdf["rg"]):
-                ks = read_column(path, "o_orderkey", [int(rg)])
-                ps = read_column(path, "o_totalprice", [int(rg)])
-                ss = read_column(path, "o_orderpriority", [int(rg)])
+                sel = None if pd.isna(rg) else [int(rg)]
+                ks = read_column(path, "o_orderkey", sel)
+                ps = read_column(path, "o_totalprice", sel)
+                ss = read_column(path, "o_orderpriority", sel)
                 yield pd.DataFrame(
                     {
                         "n_rows": [len(ks)],
@@ -14454,8 +14462,11 @@ def orc_column_read(spark, sf_dir):
                                  input_bytes=_table_bytes(sf_dir, "orders")))
     )
 
+    # sum_price partials are integers scaled by 10^4 (exact in a long;
+    # summed doubles round differently per addition order above 2^53),
+    # divided once after the final sum
     cols = ("n_rows long, sum_key long, n_null_price long, "
-            "sum_price double, prio_chars long, sum_days long, "
+            "sum_price long, prio_chars long, sum_days long, "
             "sum_ts_secs long, sum_ts_micros long")
 
     def _table_of(pdf):

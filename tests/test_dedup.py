@@ -10,7 +10,6 @@ from levi_spark.operators.dedup import (
     drop_duplicates,
     drop_duplicates_pkey,
     kill_duplicates,
-    kill_duplicates_targeted,
 )
 
 
@@ -67,7 +66,7 @@ def test_kill_duplicates_targeted_rewrites_only_hit_files(spark, tmp_path):
         for r in t.snapshot().add_actions().where("commit_version = 1").collect()
     }
 
-    res = kill_duplicates_targeted(t, ["col3", "col2"])
+    res = kill_duplicates(t, ["col3", "col2"])
     assert res["files_rewritten"] == 1
     assert res["files_total"] == 2
     assert res["rows_deleted"] == 5
@@ -85,7 +84,7 @@ def test_kill_duplicates_targeted_noop_and_nulls(spark, tmp_path):
     rows = [(1, None, "A"), (2, None, "A"), (3, "X", "A")]
     write_delta(spark.createDataFrame(rows, cols), path, mode="error")
     t = LeviTable(spark, path)
-    res = kill_duplicates_targeted(t, ["col2", "col3"])
+    res = kill_duplicates(t, ["col2", "col3"])
     assert res["version"] == -1
     assert res["files_rewritten"] == 0
     assert _rows(t, ["col1"]) == [(1,), (2,), (3,)]
@@ -104,7 +103,7 @@ def test_kill_duplicates_targeted_group_spanning_files(spark, tmp_path):
         path, mode="append",
     )
     t = LeviTable(spark, path)
-    res = kill_duplicates_targeted(t, ["col2", "col3"])
+    res = kill_duplicates(t, ["col2", "col3"])
     assert res["files_rewritten"] == 2
     assert _rows(t, cols) == [(2, "A", "B"), (4, "C", "C")]
 
@@ -178,7 +177,7 @@ def test_kill_duplicates_targeted_rows_deleted_is_row_count_drop(spark, tmp_path
     )
     t = LeviTable(spark, path)
     before = t.to_df().count()
-    res = kill_duplicates_targeted(t, ["col2", "col3"])
+    res = kill_duplicates(t, ["col2", "col3"])
     after = LeviTable(spark, path).to_df().count()
     assert res["rows_deleted"] == before - after == 5
     assert _rows(LeviTable(spark, path), ["col1"]) == [(4,), (7,), (8,)]
@@ -207,3 +206,37 @@ def test_drop_duplicates_partitioned_with_null_partition(spark, tmp_path):
     assert _rows(t, cols) == [(1, "x", None), (2, "y", "a"), (4, "z", "b"), (6, "w", None)]
     assert res["rows_deleted"] == before - t.to_df().count() == 2
     assert res["files_rewritten"] == 2
+
+
+def test_kill_duplicates_partitioned_with_null_partition(spark, tmp_path):
+    path = str(tmp_path / "t")
+    cols = ["id", "k", "p"]
+    # the "x" group spans commit 0 (NULL partition) and commit 1
+    # (partition "b"); the "y" group sits in partition "a" only; the
+    # NULL-keyed repeats (ids 5, 8) survive; partition "c" is clean
+    write_delta(
+        spark.createDataFrame(
+            [(1, "x", None), (2, "y", "a"), (3, "y", "a"), (4, "z", "b"),
+             (5, None, "c")],
+            cols,
+        ).coalesce(1),
+        path, mode="error", partition_by=["p"],
+    )
+    write_delta(
+        spark.createDataFrame(
+            [(6, "x", "b"), (7, "w", None), (8, None, "c")], cols
+        ).coalesce(1),
+        path, mode="append", partition_by=["p"],
+    )
+    t = LeviTable(spark, path)
+    before = t.to_df().count()
+    files_total = len(t.snapshot().live_adds_collected())
+    res = kill_duplicates(t, ["k"])
+    t = LeviTable(spark, path)
+    assert _rows(t, cols) == [
+        (4, "z", "b"), (5, None, "c"), (7, "w", None), (8, None, "c"),
+    ]
+    assert res["rows_deleted"] == before - t.to_df().count() == 4
+    # hit files: commit 0's NULL and "a" partitions, commit 1's "b"
+    assert res["files_rewritten"] == 3
+    assert res["files_total"] == files_total == 7

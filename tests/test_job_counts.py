@@ -1,8 +1,9 @@
 """Spark job counts of the levi operators on a small table whose log
 is replayed on the driver: the metadata plane answers from the log
-without starting a job, and ``drop_duplicates`` computes its loser set
-once. Jobs are counted from the status store by submission time, so
-jobs started on other threads (broadcasts, subqueries) count too."""
+without starting a job, and ``drop_duplicates`` / ``kill_duplicates``
+compute their loser set once. Jobs are counted from the status store
+by submission time, so jobs started on other threads (broadcasts,
+subqueries) count too."""
 
 import time
 
@@ -11,7 +12,7 @@ import pytest
 from levi_spark.delta.log import DeltaLog
 from levi_spark.delta.table import LeviTable
 from levi_spark.delta.writer import write_delta
-from levi_spark.operators.dedup import drop_duplicates
+from levi_spark.operators.dedup import drop_duplicates, kill_duplicates
 from levi_spark.operators.metadata import (
     delta_file_sizes,
     pruned_scan,
@@ -68,4 +69,13 @@ def test_drop_duplicates_job_budget(spark, table_path):
     res = {}
     n = _jobs_started(spark, lambda: res.update(drop_duplicates(t, ["k"])))
     assert res["rows_deleted"] == 15
+    assert n <= 10, n
+
+
+def test_kill_duplicates_job_budget(spark, table_path):
+    t = LeviTable(spark, table_path)
+    res = {}
+    n = _jobs_started(spark, lambda: res.update(kill_duplicates(t, ["k"])))
+    # keys 0..14 appear twice over ids 0..29: every row is a loser
+    assert res["rows_deleted"] == 30
     assert n <= 10, n

@@ -227,3 +227,21 @@ def test_column_read_refusals(tmp_path):
     (path, _), = read_footer(p4)["columns"]
     with pytest.raises(NotImplementedError, match="read_column_nested"):
         read_column(p4, path)
+
+
+def test_parquet_column_read_plans_on_a_directory(spark, testdata_dir, tmp_path):
+    """An orders table stored as a directory has no footer to read
+    while the plan is built: parquet_column_read falls back to one task
+    reading every row group instead of raising."""
+    import shutil
+
+    from levi_spark.queries import parquet_column_read
+
+    orders = tmp_path / "orders.parquet"
+    orders.mkdir()
+    shutil.copy(os.path.join(testdata_dir, "orders.parquet"),
+                orders / "part-0.parquet")
+    df = parquet_column_read(spark, str(tmp_path))
+    assert df.columns == [
+        "n_rows", "sum_key", "n_null_price", "sum_price", "prio_chars",
+    ]

@@ -402,12 +402,12 @@ def test_merge_preserves_copied_and_updated_row_ids(spark, tmp_path):
 
 
 def test_dedup_rewrites_preserve_survivor_ids(spark, tmp_path):
-    """drop_duplicates / kill_duplicates_targeted loser-file rewrites
-    keep every surviving row's id and commit version."""
+    """drop_duplicates / kill_duplicates loser-file rewrites keep every
+    surviving row's id and commit version."""
     from levi_spark.delta.table import LeviTable
     from levi_spark.operators.dedup import (
         drop_duplicates,
-        kill_duplicates_targeted,
+        kill_duplicates,
     )
 
     p = str(tmp_path / "t")
@@ -430,7 +430,7 @@ def test_dedup_rewrites_preserve_survivor_ids(spark, tmp_path):
         _sorted_single(df, "id"),
         p2, mode="error", checkpoint_interval=None, row_tracking=True,
     )
-    kill_duplicates_targeted(LeviTable(spark, p2), ["k"])
+    kill_duplicates(LeviTable(spark, p2), ["k"])
     got = _full_ids(spark, p2)
     # every dup-group member dies (ids 0..19), uniques keep their ids
     assert got == [(i, i, 0) for i in range(20, 30)]
