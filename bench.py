@@ -28,19 +28,7 @@ from levi_spark.session import get_spark
 
 STDOUT_BUDGET = 1800
 
-# Queries whose repeat runs would hit the per-session staged SimHash
-# pair-set cache (levi_spark.queries._NEARDUP_PAIRS_CACHE) and report a
-# cache-hit time instead of real work — they keep single-run timing.
-SESSION_STAGED = {
-    "simhash_neardup_pairs",
-    "neardup_clusters",
-    "dedup_canonical_corpus",
-    # the ANN evaluation gates stage the exact/IVF/PQ pipelines per
-    # session (queries._staged_ann) — same cache-hit concern
-    "ann_recall_scores",
-    "ann_ranking_metrics",
-}
-# EVERY non-staged query gets a 2nd run so single-run variance stops
+# EVERY query gets a 2nd run so single-run variance stops
 # masquerading as regression (ivf_trained_topk swung 3.0->5.2->4.1 s,
 # then embedding_pca_projection "doubled" on unchanged code in r05
 # precisely because >=5 s queries were exempt — the hysteresis VERDICT
@@ -288,12 +276,10 @@ def main():
     runs: dict[str, list[float]] = {}
     for name, (fn, _sql) in QUERIES.items():
         runs[name] = [run_once(name, fn)]
-    # variance pass: every non-staged query gets a 2nd run; a 3rd only
-    # when the first two disagree by >NOISY_RATIO and the query is fast
-    # enough that the tie-breaker stays cheap
+    # variance pass: every query gets a 2nd run; a 3rd only when the
+    # first two disagree by >NOISY_RATIO and the query is fast enough
+    # that the tie-breaker stays cheap
     for name, (fn, _sql) in QUERIES.items():
-        if name in SESSION_STAGED:
-            continue
         runs[name].append(run_once(name, fn))
         lo, hi = min(runs[name]), max(runs[name])
         if lo > 0 and hi / lo > NOISY_RATIO and lo < THIRD_RUN_BELOW_S:
@@ -354,9 +340,8 @@ def main():
             "per-query time = min over runs; EVERY query runs 2x (3rd "
             f"tie-breaker only when the first two disagree by "
             f">{NOISY_RATIO:.1f}x and the query is under "
-            f"{THIRD_RUN_BELOW_S:.0f}s); session-staged queries (SimHash "
-            "pair-set / ANN pipeline consumers) keep single-run timing so "
-            "a cache hit is never reported as query speed"
+            f"{THIRD_RUN_BELOW_S:.0f}s); queries keep no state between "
+            "calls, so every run of every query does its full work"
         ),
         "sf": sf,
         "n_queries": len(timings),

@@ -29,19 +29,17 @@ Scale stance:
   across the domain at power-of-two seams), but its in-place
   bit-by-bit state updates are sequentially dependent: unrolling them
   as nested CASE expressions blows up exponentially in Catalyst (no
-  CSE across when-branches), so the index is computed by a vectorized
-  numpy pandas_udf over the bucket tuple — one Arrow-batched map-side
-  pass with no shuffle of its own, amortized inside an IO-bound
-  rewrite job.
+  CSE across when-branches). ``hilbert_value`` therefore folds the
+  Q-loop at runtime with Catalyst higher-order functions — pure JVM
+  expressions, no Python in the OPTIMIZE path. ``_hilbert_index_np``
+  is the numpy reference implementation the tests check it against.
 """
 
 from __future__ import annotations
 
 import math
-import os
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,22 +57,24 @@ def compact_small_files(
     """Rewrite every live file smaller than ``small_bytes`` into
     ~``target_bytes`` files; one commit replaces them atomically.
 
-    Returns {"files_removed", "files_added", "version"} (version is -1
-    when nothing qualified — fewer than 2 small files is a no-op).
+    Returns {"files_removed", "files_added", "version",
+    "prev_version"}: ``prev_version`` is the table version the rewrite
+    read from. When nothing qualified (fewer than 2 small files is a
+    no-op) it returns only the first three keys, with version -1.
     """
     log = DeltaLog(spark, path)
     snap = log.snapshot()
     part_cols = list(snap.metadata.partition_columns)
-    smalls = [
-        r["path"]
-        for r in snap.add_actions()
+    small_rows = (
+        snap.add_actions()
         .where(F.col("size_bytes") < small_bytes)
-        .select("path")
+        .select("path", "size_bytes")
         .collect()
-    ]
-    if len(smalls) < 2:
+    )
+    if len(small_rows) < 2:
         return {"files_removed": 0, "files_added": 0, "version": -1}
-    total = sum(os.stat(os.path.join(path, p)).st_size for p in smalls)
+    smalls = [r["path"] for r in small_rows]
+    total = sum(r["size_bytes"] for r in small_rows)
     n_out = max(1, math.ceil(total / target_bytes))
 
     df = snap.rewrite_df(paths=smalls)

@@ -6,7 +6,7 @@ One place to configure the session the way the engine expects:
   duckdb oracle, the Delta log's epoch-millis ``modificationTime``
   fields, and partition-value parsing.
 * AQE on — runtime re-planning (skew joins, dynamic coalescing) is the
-  scale story for the 100 TB target; on local[32] it also coalesces
+  scale story for the 100 TB target; on local[N] it also coalesces
   tiny shuffle partitions.
 * ``spark.sql.shuffle.partitions`` sized for the local test harness;
   a real cluster deployment overrides it (or lets AQE coalesce).
@@ -23,7 +23,14 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def local_cpus() -> int:
+    """Cores for ``local[N]`` and the default shuffle width:
+    ``$SPARK_GRAFT_CPUS`` when set, otherwise the cores this process
+    may run on (its CPU affinity, not the machine's core count)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
 
 # --- input-sized session rule (the 100x-tier lesson, as code) ---------
 #
@@ -73,7 +80,7 @@ def dir_bytes(path: str) -> int:
 def sized_session_conf(input_bytes: int, cpus: int | None = None) -> dict:
     """{'shuffle_partitions': int, 'driver_memory': 'Ng'} sized for
     ``input_bytes`` of on-disk columnar input (rule above)."""
-    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = cpus or local_cpus()
     need = max(1, math.ceil(input_bytes / TARGET_DISK_BYTES_PER_PARTITION))
     waves = max(1, math.ceil(need / cpus))
     gb_needed = max(
@@ -123,7 +130,7 @@ def get_spark(
     if pkg_root not in pp.split(os.pathsep):
         os.environ["PYTHONPATH"] = f"{pkg_root}{os.pathsep}{pp}" if pp else pkg_root
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -133,7 +140,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or cpus),
         )
         # Arrow for any pandas-UDF boundary (similarity / multimodal ops).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -10,6 +10,7 @@ from levi_spark.delta.log import DeltaLog
 from levi_spark.delta.writer import write_delta
 from levi_spark.operators.layout import (
     _hilbert_index_np,
+    auto_optimize,
     compact_small_files,
     hilbert_value,
     optimize_hilbert,
@@ -50,6 +51,19 @@ def test_compaction_noop_when_nothing_small(spark, fragmented_table):
     compact_small_files(spark, fragmented_table, small_bytes=10**9)
     res2 = compact_small_files(spark, fragmented_table, small_bytes=1)
     assert res2 == {"files_removed": 0, "files_added": 0, "version": -1}
+
+
+@pytest.mark.parametrize("op", [compact_small_files, auto_optimize])
+def test_compaction_on_file_uri_table(spark, tmp_path, op):
+    path = str(tmp_path / "uri")
+    write_delta(spark.range(400).repartition(4), path, mode="error")
+    assert DeltaLog(spark, path).snapshot().add_actions().count() == 4
+
+    res = op(spark, "file://" + path, small_bytes=10**9, target_bytes=10**9)
+    assert (res["files_removed"], res["files_added"]) == (4, 1)
+    snap = DeltaLog(spark, path).snapshot()
+    assert snap.version == res["version"] == 1
+    assert sorted(r.id for r in snap.to_df().collect()) == list(range(400))
 
 
 def test_zorder_value_interleaves(spark):

@@ -11,8 +11,6 @@ from levi_spark.delta.log import DeltaLog
 from levi_spark.delta.writer import write_delta
 from levi_spark.operators.metadata import pruned_scan, skipped_stats
 
-FIXTURES = "/root/reference/tests/reader_tests/generated"
-
 
 @pytest.fixture()
 def range_table(spark, tmp_path):
@@ -67,10 +65,10 @@ def test_partition_pruning_is_exact(spark, tmp_path):
     assert got == sorted(range(1, 900, 3))
 
 
-def test_missing_stats_files_are_kept(spark):
+def test_missing_stats_files_are_kept(spark, fixtures_dir):
     """The no_stats fixture has files without min/max: pruning must
     keep them (conservative), and rows still filter correctly."""
-    snap = DeltaLog(spark, f"{FIXTURES}/no_stats/delta").snapshot()
+    snap = DeltaLog(spark, f"{fixtures_dir}/no_stats/delta").snapshot()
     cols = snap.metadata.data_columns
     c = cols[0]
     full = snap.to_df()

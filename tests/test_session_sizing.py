@@ -65,3 +65,11 @@ def test_sf01_testdata_sizes_like_the_small_tier():
         return
     conf = sized_session_conf(dir_bytes(sf), cpus=32)
     assert conf == {"shuffle_partitions": 32, "driver_memory": "8g"}
+
+
+def test_unset_cpu_variable_sizes_to_affinity(monkeypatch):
+    # an unset SPARK_GRAFT_CPUS means the cores this process may run
+    # on, not a fixed width
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    conf = sized_session_conf(17 * MB)
+    assert conf["shuffle_partitions"] == len(os.sched_getaffinity(0))
