@@ -14,7 +14,7 @@ Mirrors Databricks' ``CREATE TABLE ... [SHALLOW|DEEP] CLONE``:
   At 100 TB this is THE way to fork a table for an experiment: the
   alternative copies the lake.
 
-* **Deep**: live data files (and DV sidecars) are copied
+* **Deep**: live data files (and deletion-vector files) are copied
   byte-for-byte and the same add actions re-emitted with their
   original relative paths — no row is ever re-encoded, so the work is
   a distcp-style transfer, not a read-decode-write of the dataset.
@@ -46,7 +46,8 @@ from urllib.parse import quote, unquote
 from pyspark.sql import SparkSession
 
 from levi_spark.delta.log import DeltaLog
-from levi_spark.fs import absolutize, copy_file, copy_tree, fs_for
+from levi_spark.delta.roaring import dv_file
+from levi_spark.fs import absolutize, copy_file, fs_for
 
 
 def clone_table(
@@ -98,26 +99,14 @@ def clone_table(
             dv_storage = None
             if dv is not None and dv["pathOrInlineDv"]:
                 _require_path_dv(dv, shallow=True)
-                st = dv["storageType"]
-                d = dv["pathOrInlineDv"]
-                if st == "u":
+                abs_dv = dv["pathOrInlineDv"]  # 'i' / 'p': portable verbatim
+                if dv["storageType"] == "u":
                     # relative-UUID DV: resolves against the TABLE dir,
                     # which for the clone would be the wrong table —
                     # rewrite to the spec's absolute marker 'p' pointing
                     # into the source
-                    from levi_spark.delta.roaring import dv_file_path
-
-                    abs_dv = dv_file_path(src_log.table_path, d)
+                    abs_dv = dv_file(src_log.table_path, dv)
                     dv_storage = "p"
-                elif st == "i":
-                    abs_dv = d  # inline payload: portable verbatim
-                else:
-                    # 'path' (ours) / 'p': absolute into the source
-                    # (emitted verbatim — no quoting round-trip in the
-                    # reader)
-                    abs_dv = d if os.path.isabs(d) else os.path.join(
-                        src_log.table_path, d
-                    )
             out_adds.append(
                 _add_dict(a, quote(abs_path, safe="/"), abs_dv, dv_storage)
             )
@@ -127,8 +116,6 @@ def clone_table(
         # is copied: a failure must leave dst_path untouched, not
         # strewn with orphan data files that a later clone to the same
         # destination would silently merge over.
-        from levi_spark.delta.roaring import dv_file_path
-
         rels: list[str] = []
         # per add: (emitted pathOrInlineDv, table-relative file to copy
         # or None for inline)
@@ -147,32 +134,16 @@ def clone_table(
             plan = None
             if dv is not None and dv["pathOrInlineDv"]:
                 _require_path_dv(dv, shallow=False)
-                st = dv["storageType"]
-                d = dv["pathOrInlineDv"]
-                if st == "i":
-                    plan = (d, None)  # inline payload, nothing to copy
-                elif st == "u":
-                    # standard UUID DV: resolves relative to the table
-                    # dir — copy under the same relative name, emit
-                    # the descriptor verbatim
-                    copy_rel = os.path.relpath(
-                        dv_file_path(src_log.table_path, d),
-                        src_log.table_path,
-                    )
-                    plan = (d, copy_rel)
-                else:  # 'path'
-                    if os.path.isabs(d) or "://" in d:
-                        raise ValueError(
-                            "deep clone cannot re-link external DV "
-                            f"sidecar: {d}"
-                        )
-                    plan = (d, d)
-                if plan[1] is not None and not src_log.fs.exists(
-                    os.path.join(src_log.table_path, plan[1])
-                ):
-                    raise ValueError(
-                        f"deep clone DV sidecar missing on disk: {plan[1]}"
-                    )
+                # 'u' resolves relative to the table dir: copy the file
+                # under the same relative name and emit the descriptor
+                # verbatim; 'i' is inline, nothing to copy
+                f = dv_file(src_log.table_path, dv)
+                if f is not None and not src_log.fs.exists(f):
+                    raise ValueError(f"deep clone DV file missing on disk: {f}")
+                plan = (
+                    dv["pathOrInlineDv"],
+                    f and os.path.relpath(f, src_log.table_path),
+                )
             rels.append(rel)
             dv_plans.append(plan)
         copied_dv: set[str] = set()
@@ -181,15 +152,9 @@ def clone_table(
             dfs.mkdirs(os.path.dirname(dst_f))
             copy_file(os.path.join(src_log.table_path, rel), dst_f)
             if plan is not None and plan[1] is not None and plan[1] not in copied_dv:
-                src_dv = os.path.join(src_log.table_path, plan[1])
                 dst_dv = os.path.join(dst_path, plan[1])
-                # our writer emits a sidecar parquet *directory*;
-                # a foreign log may reference a single sidecar file
-                if src_log.fs.isdir(src_dv):
-                    copy_tree(src_dv, dst_dv)
-                else:
-                    dfs.mkdirs(os.path.dirname(dst_dv))
-                    copy_file(src_dv, dst_dv)
+                dfs.mkdirs(os.path.dirname(dst_dv))
+                copy_file(os.path.join(src_log.table_path, plan[1]), dst_dv)
                 copied_dv.add(plan[1])
             out_adds.append(
                 _add_dict(a, a["path"], plan[0] if plan else None)
@@ -250,25 +215,15 @@ def clone_table(
 
 
 def _require_path_dv(dv: dict, *, shallow: bool) -> None:
-    """Clone supports file-based deletion vectors only. The engine's
-    own sidecars use storageType='path' (relative file reference) and
-    work for both flavors. A foreign log's spec marker 'p' means the
-    reference is ALREADY an absolute path (Delta protocol, deletion
-    vector descriptor) — portable verbatim for a SHALLOW clone (the
-    add action is re-emitted pointing at the same absolute sidecar)
-    but not re-linkable by a deep clone's relative-path copy. Inline
-    DVs ('i', base85 payload in pathOrInlineDv) and relative-UUID ones
-    ('u') must never be treated as filesystem paths: absolutizing or
-    copying them would manufacture a bogus descriptor. Refuse up
-    front, before any bytes move."""
+    """Clone supports the spec's deletion vectors: relative-UUID ('u')
+    and inline ('i') ones for both flavors — a shallow clone rewrites
+    'u' to an absolute 'p' into the source, a deep clone copies the DV
+    file under the same relative name, and 'i' carries its payload in
+    the log. A 'p' descriptor is ALREADY an absolute path: portable
+    verbatim for a SHALLOW clone but not re-linkable by a deep clone's
+    relative-path copy. Refuse up front, before any bytes move."""
     st = dv["storageType"]
-    if st in ("path", "u", "i") or (shallow and st == "p"):
-        # 'path' copies/absolutizes like data files; 'u' resolves
-        # relative to the table dir (shallow rewrites it to an absolute
-        # 'p' into the source, deep copies the DV file under the same
-        # relative name); 'i' carries its payload inline — portable
-        # everywhere; 'p' (external absolute file) is portable only
-        # for shallow clones
+    if st in ("u", "i") or (shallow and st == "p"):
         return
     if st == "p":
         raise ValueError(
@@ -276,7 +231,7 @@ def _require_path_dv(dv: dict, *, shallow: bool) -> None:
             "vector; shallow-clone it instead"
         )
     raise ValueError(
-        f"clone supports storageType 'path'/'u'/'i' deletion vectors "
+        f"clone supports storageType 'u'/'i' deletion vectors "
         f"(plus 'p' for shallow clones), got {st!r}"
     )
 

@@ -4,28 +4,33 @@ The reference's only delete primitive is a whole-file-rewriting Delta
 MERGE (``/root/reference/levi/__init__.py:157-166``) and its dedup ops
 rewrite the entire table (``:347-351``). At 100 TB a point delete that
 rewrites gigabyte files is the dominant cost, so this module adds the
-modern Delta-protocol answer — deletion vectors — to the engine's own
-log format:
+Delta protocol's answer — deletion vectors — in the spec's own format,
+so every table stays readable by any conforming Delta engine:
 
 * ``soft_delete(spark, path, predicate)`` marks matching rows deleted
-  by writing a parquet *sidecar* of (file_name, row_index) keys under
-  ``_deletion_vectors/`` and re-emitting the affected ``add`` actions
-  with a ``deletionVector`` descriptor ({storageType: "path",
-  pathOrInlineDv, cardinality} — the public Delta DV descriptor shape).
-  Cost is O(matching rows), not O(bytes of touched files). A file whose
-  every row is deleted becomes a plain ``remove`` tombstone.
-* The read path (``Snapshot.to_df``) anti-joins the scan against the
-  sidecar on (file, row_index) via the parquet reader's
-  ``_metadata.row_index`` — pushdown and partition pruning on the scan
-  are untouched, and the DV frame is broadcast.
+  with one roaring bitmap per affected data file — inline in the log
+  ('i') when tiny, else a ``deletion_vector_<uuid>.bin`` file at the
+  table root ('u'), :mod:`levi_spark.delta.roaring` — re-emits the
+  affected ``add`` actions with the descriptor, and upgrades the
+  protocol to minReaderVersion 3 + ``deletionVectors``. Cost is
+  O(matching rows), not O(bytes of touched files). A file whose every
+  row is deleted becomes a plain ``remove`` tombstone.
+* The read path (``Snapshot.to_df``) decodes the live bitmaps on the
+  driver and anti-joins the scan against them on (file, row_index) via
+  the parquet reader's ``_metadata.row_index`` — pushdown and partition
+  pruning on the scan are untouched, and the DV frame is broadcast.
 * ``purge_deleted(spark, path)`` is the compaction half: physically
   rewrites only the DV-bearing files (their surviving rows), dropping
   the descriptors — the OPTIMIZE-style "hard delete" that bounds DV
   accumulation. Scan cost is O(files with DVs), never the whole table.
 
-Sidecars are written by Spark executors (the doomed-key frame is never
-collected); only per-file cardinalities (metadata scale: one row per
-affected file) come to the driver to build the commit.
+Bitmaps are encoded and written by Spark executors (the doomed-key
+frame is never collected); only one descriptor row per affected file
+(metadata scale) comes to the driver to build the commit.
+
+Upgrade note: earlier builds wrote engine-private parquet sidecar DVs
+(``storageType: "path"``); this build refuses to read them, so a table
+with live ones must be ``purge_deleted`` by the build that wrote it.
 """
 
 from __future__ import annotations
@@ -33,17 +38,12 @@ from __future__ import annotations
 import json
 import os
 import time
-import uuid
-
-from urllib.parse import unquote as _unquote
 
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 from levi_spark.delta.log import DeltaLog
 from levi_spark.delta.writer import DEFAULT_CHECKPOINT_INTERVAL, write_delta
-
-DV_DIR = "_deletion_vectors"
 
 
 def _append_commit(
@@ -98,13 +98,14 @@ def _append_commit(
 
 
 def _write_standard_dvs(spark, table_path: str, dv_out) -> dict[str, dict]:
-    """Write one SPEC-CONFORMANT deletion-vector file per affected data
-    file — ``deletion_vector_<uuid>.bin`` at the table root, framed +
-    CRC'd roaring-bitmap blobs (:mod:`levi_spark.delta.roaring`) — and
-    return ``file_name -> 'u' descriptor``. Encoding and file writes
-    happen EXECUTOR-side via applyInPandas over the file_name groups
-    (each group is bounded by one data file's row count); only the
-    per-file descriptor rows come back to the driver."""
+    """Write one SPEC-CONFORMANT deletion vector per affected data file
+    — a framed + CRC'd roaring-bitmap blob
+    (:mod:`levi_spark.delta.roaring`) in ``deletion_vector_<uuid>.bin``
+    at the table root, or inline in the log when tiny — and return
+    ``file_name -> 'u'/'i' descriptor``. Encoding and file writes happen
+    EXECUTOR-side via applyInPandas over the file_name groups (each
+    group is bounded by one data file's row count); only the per-file
+    descriptor rows come back to the driver."""
     import pandas as pd
 
     from levi_spark.fs import local_form
@@ -120,8 +121,7 @@ def _write_standard_dvs(spark, table_path: str, dv_out) -> dict[str, dict]:
         # out to the table root through the scheme filesystem (one
         # streaming driver-side pass, one file per affected data file
         # — DV count is bounded by the commit's file count, a
-        # metadata-plane volume). ``dv_format='sidecar'`` remains the
-        # zero-copy object-store path (its sidecars ride ``df.write``).
+        # metadata-plane volume).
         import tempfile
 
         remote_root = table_path
@@ -229,7 +229,6 @@ def soft_delete(
     predicate: str | Column,
     checkpoint_interval: int | None = DEFAULT_CHECKPOINT_INTERVAL,
     emit_cdf: bool = False,
-    dv_format: str = "sidecar",
 ) -> dict:
     """Logically delete every row matching ``predicate`` (SQL string or
     Column over the table's columns, partition columns included).
@@ -242,13 +241,11 @@ def soft_delete(
     visible to :func:`levi_spark.delta.changes.table_changes_cdf` —
     one extra pass over the matching rows, still O(matches).
 
-    ``dv_format``: ``"sidecar"`` (default) writes the engine's parquet
-    sidecar directory; ``"standard"`` writes SPEC-CONFORMANT deletion
-    vectors — per-file ``deletion_vector_<uuid>.bin`` roaring-bitmap
-    files with 'u' descriptors, and bumps the commit's protocol to
-    minReaderVersion 3 + deletionVectors so any conforming Delta
-    reader (delta-spark included) applies them. Both formats read back
-    identically through this engine.
+    The deletion vectors are the Delta spec's: one roaring bitmap per
+    affected file, inline ('i') or in a ``deletion_vector_<uuid>.bin``
+    file ('u'), and the commit's protocol is upgraded to
+    minReaderVersion 3 + deletionVectors, so any conforming Delta
+    reader (delta-spark included) applies them.
     """
     log = DeltaLog(spark, path)
     path = log.table_path
@@ -271,8 +268,8 @@ def soft_delete(
         )
     )
 
-    # Cumulative per affected file: old sidecar rows for those files ride
-    # into the new sidecar so each add points at exactly one directory.
+    # Cumulative per affected file: the file's old bitmap rows ride into
+    # its new bitmap, so each add carries exactly one descriptor.
     old = snap.deletion_vector_rows().select(
         F.col("__file_name").alias("file_name"), F.col("__row_index").alias("row_index")
     )
@@ -281,64 +278,23 @@ def soft_delete(
         old.join(F.broadcast(affected_names), on="file_name", how="left_semi")
     )
 
-    if dv_format not in ("sidecar", "standard"):
-        raise ValueError(f"dv_format must be 'sidecar' or 'standard', got {dv_format!r}")
-    out_dir = None
-    std_descs: dict[str, dict] = {}
-    if dv_format == "standard":
-        std_descs = _write_standard_dvs(spark, path, dv_out)
-        counts = {f: d["cardinality"] for f, d in std_descs.items()}
-    else:
-        rel_dir = os.path.join(DV_DIR, f"dv-{uuid.uuid4().hex}")
-        out_dir = os.path.join(path, rel_dir)
-        dv_out.write.parquet(out_dir)
-        counts = {
-            r["file_name"]: r["n"]
-            for r in spark.read.parquet(out_dir)
-            .groupBy("file_name")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-
-    def _cleanup():
-        from levi_spark.fs import fs_for
-
-        if out_dir is not None:
-            fs_for(out_dir).rmtree(out_dir)
-        from levi_spark.delta.roaring import dv_file_path
-
-        for d in std_descs.values():
-            if d["storageType"] != "u":
-                continue  # inline DVs live in the (uncommitted) log only
-            try:
-                fs_for(path).remove(dv_file_path(path, d["pathOrInlineDv"]))
-            except OSError:
-                pass
-
+    descs = _write_standard_dvs(spark, path, dv_out)
+    counts = {f: d["cardinality"] for f, d in descs.items()}
     if not counts:
-        _cleanup()
         return {"version": -1, "rows_deleted": 0, "files_affected": 0, "files_removed": 0}
 
-    # A table must not end up with MIXED descriptor families: sidecar
-    # ('path') descriptors under a deletionVectors protocol would hit
-    # foreign readers as an unknown storageType, and standard
-    # descriptors on a v1 table would be silently ignored by them.
-    # Affected files get this delete's format; check the survivors.
-    surviving_formats = {
-        "standard" if r["add"]["deletionVector"]["storageType"] != "path" else "sidecar"
-        for r in snap.live_adds_collected()
-        if r["add"]["deletionVector"] is not None
-        and r["add"]["deletionVector"]["pathOrInlineDv"] is not None
-        and os.path.basename(_unquote(r["add"]["path"])) not in counts
-    }
-    if surviving_formats - {dv_format}:
-        _cleanup()
-        raise ValueError(
-            f"table has live {surviving_formats.pop()!r}-format deletion "
-            f"vectors; a {dv_format!r}-format delete would mix descriptor "
-            "families. purge_deleted() first, or keep one dv_format per "
-            "table"
-        )
+    def _cleanup():
+        from levi_spark.delta.roaring import dv_file
+        from levi_spark.fs import fs_for
+
+        for d in descs.values():
+            f = dv_file(path, d)  # None: inline DVs live in the log only
+            if f is None:
+                continue
+            try:
+                fs_for(f).remove(f)
+            except OSError:
+                pass
 
     # Driver-side commit build over the (metadata-scale) affected adds.
     now_ms = int(time.time() * 1000)
@@ -368,15 +324,7 @@ def soft_delete(
             )
             files_removed += 1
             continue
-        add["deletionVector"] = (
-            std_descs[name]
-            if dv_format == "standard"
-            else {
-                "storageType": "path",
-                "pathOrInlineDv": rel_dir,
-                "cardinality": card,
-            }
-        )
+        add["deletionVector"] = descs[name]
         actions.append({"add": {k: v for k, v in add.items() if v is not None}})
 
     if emit_cdf:
@@ -397,7 +345,7 @@ def soft_delete(
     try:
         _append_commit(
             log, snap, version, actions, "DELETE", {"predicate": str(predicate)},
-            protocol=_standard_dv_protocol(snap) if dv_format == "standard" else None,
+            protocol=_standard_dv_protocol(snap),
         )
     except ValueError:
         # Lost the commit race: the DV files written above are

@@ -58,9 +58,9 @@ _CP_V2_RE = re.compile(r"^(\d{20})\.checkpoint\.([0-9a-zA-Z_-]+)\.(parquet|json)
 
 # Action schema for reading commit JSON files (subset of the Delta
 # protocol that matters for snapshot reconstruction).
-# deletionVector mirrors the public Delta protocol's DV descriptor
-# (storageType/pathOrInlineDv/cardinality): rows listed in the sidecar
-# are logically deleted from the file without rewriting it.
+# deletionVector is the Delta protocol's DV descriptor: the rows in
+# the roaring bitmap it names are logically deleted from the file
+# without rewriting it (levi_spark.delta.roaring).
 _DV_TYPE = T.StructType(
     [
         T.StructField("storageType", T.StringType()),
@@ -127,8 +127,7 @@ _PROTOCOL_TYPE = T.StructType(
 
 # Table features this reader actually implements. deletionVectors =
 # the spec's roaring-bitmap DVs ('u'/'p'/'i' descriptors decoded by
-# levi_spark.delta.roaring; this engine's own parquet sidecars travel
-# under minReaderVersion 1 table conf, not the protocol feature).
+# levi_spark.delta.roaring — the only DV format this engine writes).
 # v2Checkpoint = UUID-named parquet/JSON manifests with sidecar files
 # (_scan_log discovery + Snapshot._cp_files resolution).
 _SUPPORTED_READER_FEATURES = frozenset(
@@ -1328,142 +1327,38 @@ class Snapshot:
 
     def deletion_vector_rows(self) -> DataFrame:
         """(``__file_name``, ``__row_index``) of every logically deleted
-        row in this snapshot.
+        row in this snapshot: each live add's Delta-spec deletion
+        vector ('u' relative UUID file / 'p' absolute path / 'i' inline
+        z85, :mod:`levi_spark.delta.roaring`) decoded on the driver into
+        one Arrow table — a ``LocalRelation`` under Spark's Arrow
+        threshold, as :func:`local_frame` frames are. ``to_df``
+        broadcasts this frame anyway, so every key reaches the driver
+        either way; decoding there starts no job and no Python worker."""
+        import numpy as np
+        import pyarrow as pa
 
-        Two descriptor families are honored:
+        from levi_spark.delta.roaring import decode_descriptor
 
-        * the engine's own ``storageType='path'`` parquet sidecars —
-          read as a distributed parquet scan, restricted (broadcast
-          semi-join on the small DV-bearing file list) to files whose
-          *current* add actually carries a DV (a cumulative sidecar may
-          also hold rows for files since rewritten, which must not be
-          re-applied);
-        * the Delta spec's standard roaring-bitmap DVs ('u' relative
-          UUID file / 'p' absolute path / 'i' inline z85,
-          :mod:`levi_spark.delta.roaring`) — e.g. tables written by
-          delta-spark — decoded executor-side via one Arrow-batched
-          ``mapInPandas`` over the descriptor list, so a snapshot with
-          thousands of DV-bearing files expands its bitmaps in
-          parallel, never on the driver."""
-        path_adds: list[tuple[str, str]] = []
-        std_adds: list[tuple[str, str, str, int, int, int]] = []
+        names: list[str] = []
+        idxs: list[np.ndarray] = []
         for r in self.live_adds_collected():
             dv = r["add"]["deletionVector"]
             if dv is None or dv["pathOrInlineDv"] is None:
                 continue
-            fname = os.path.basename(unquote(r["add"]["path"]))
-            st = dv["storageType"]
-            if st == "path":
-                path_adds.append((fname, dv["pathOrInlineDv"]))
-            else:
-                std_adds.append(
-                    (
-                        fname,
-                        st,
-                        dv["pathOrInlineDv"],
-                        dv.get("offset") if isinstance(dv, dict) else dv["offset"],
-                        dv.get("sizeInBytes")
-                        if isinstance(dv, dict)
-                        else dv["sizeInBytes"],
-                        dv.get("cardinality")
-                        if isinstance(dv, dict)
-                        else dv["cardinality"],
-                    )
-                )
-        out_schema = T.StructType(
-            [
-                T.StructField("__file_name", T.StringType()),
-                T.StructField("__row_index", T.LongType()),
-            ]
+            vals = decode_descriptor(self.log.table_path, dv.asDict())
+            names += [os.path.basename(unquote(r["add"]["path"]))] * len(vals)
+            idxs.append(vals.astype(np.int64))
+        table = pa.table(
+            {
+                "__file_name": pa.array(names, pa.string()),
+                "__row_index": pa.array(
+                    np.concatenate(idxs) if idxs else [], pa.int64()
+                ),
+            }
         )
-        parts: list[DataFrame] = []
-        if path_adds:
-            dirs = sorted(
-                {join_path(self.log.table_path, dv) for _p, dv in path_adds}
-            )
-            names_df = local_frame(
-                self.spark,
-                [(p,) for p, _dv in path_adds],
-                T.StructType([T.StructField("__file_name", T.StringType())]),
-            )
-            rows = self.spark.read.parquet(*dirs).select(
-                F.col("file_name").alias("__file_name"),
-                F.col("row_index").alias("__row_index"),
-            )
-            parts.append(
-                rows.join(F.broadcast(names_df), on="__file_name", how="left_semi")
-            )
-        if std_adds:
-            table_path = self.log.table_path
-            from levi_spark.fs import local_form
-
-            blobs: list[bytes | None] = [None] * len(std_adds)
-            if local_form(table_path) is None:
-                # genuinely remote table: the Python workers that
-                # expand the bitmaps cannot resolve the scheme (no
-                # JVM gateway executor-side), so each DISTINCT DV
-                # file is fetched ONCE driver-side through the seam
-                # and its bytes ride the descriptor frame into the
-                # fan-out. Metadata-plane volume: one bitmap file per
-                # DV-bearing data file, offset-sliced per descriptor.
-                from levi_spark.delta.roaring import dv_file_path
-                from levi_spark.fs import fs_for
-
-                fetched: dict[str, bytes] = {}
-                for i, (_f, st, dvs, _o, _s, _c) in enumerate(std_adds):
-                    if st not in ("u", "p"):
-                        continue
-                    p = (dv_file_path(table_path, dvs)
-                         if st == "u" else dvs)
-                    if p not in fetched:
-                        fetched[p] = fs_for(p).read_bytes(p)
-                    blobs[i] = fetched[p]
-            desc_df = self.spark.createDataFrame(
-                [row + (blobs[i],) for i, row in enumerate(std_adds)],
-                "__file_name string, st string, dv string, "
-                "offset int, size int, cardinality long, blob binary",
-            ).repartition(min(len(std_adds), 32))
-
-            def expand(batches):
-                import pandas as pd
-
-                from levi_spark.delta.roaring import decode_descriptor
-
-                for pdf in batches:
-                    names, idxs = [], []
-                    for fname, st, dvs, off, size, card, blob in zip(
-                        pdf["__file_name"], pdf["st"], pdf["dv"],
-                        pdf["offset"], pdf["size"], pdf["cardinality"],
-                        pdf["blob"],
-                    ):
-                        vals = decode_descriptor(
-                            table_path,
-                            {
-                                "storageType": st,
-                                "pathOrInlineDv": dvs,
-                                "offset": None if pd.isna(off) else int(off),
-                                "sizeInBytes": None
-                                if pd.isna(size)
-                                else int(size),
-                                "cardinality": None
-                                if pd.isna(card)
-                                else int(card),
-                            },
-                            file_bytes=None if blob is None else bytes(blob),
-                        )
-                        names.extend([fname] * len(vals))
-                        idxs.extend(vals.astype("int64").tolist())
-                    yield pd.DataFrame(
-                        {"__file_name": names, "__row_index": idxs}
-                    )
-
-            parts.append(desc_df.mapInPandas(expand, out_schema))
-        if not parts:
-            return local_frame(self.spark, [], out_schema)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return self.spark.createDataFrame(
+            table, "__file_name string, __row_index long"
+        )
 
     def rewrite_df(
         self, paths: list[str] | None = None, with_lineage: bool = False

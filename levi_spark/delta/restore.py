@@ -31,6 +31,8 @@ from pyspark.sql import SparkSession
 
 from levi_spark.delta.dv import _append_commit
 from levi_spark.delta.log import DeltaLog
+from levi_spark.delta.roaring import dv_file
+from levi_spark.fs import fs_for
 
 
 def commit_timestamps(log: DeltaLog) -> dict[int, int]:
@@ -103,11 +105,12 @@ def restore(spark: SparkSession, path: str, version: int) -> dict:
 
     missing = [p for p in readd
                if not log.fs.exists(os.path.join(path, unquote(p)))]
-    for p in readd:  # target DV sidecars must exist too
+    for p in readd:  # target DV files must exist too ('i' has none)
         dv = tgt_adds[p]["deletionVector"]
         if dv is not None and dv["pathOrInlineDv"] is not None:
-            if not log.fs.exists(os.path.join(path, dv["pathOrInlineDv"])):
-                missing.append(f"{dv['pathOrInlineDv']} (DV sidecar of {p})")
+            f = dv_file(path, dv)
+            if f is not None and not fs_for(f).exists(f):
+                missing.append(f"{f} (deletion vector of {p})")
     if missing:
         raise ValueError(
             f"cannot restore to version {version}: {len(missing)} referenced "

@@ -299,19 +299,34 @@ def dv_file_path(table_path: str, path_or_inline: str) -> str:
     )
 
 
-def decode_descriptor(
-    table_path: str, dv: dict, file_bytes: bytes | None = None
-) -> np.ndarray:
+def dv_file(table_path: str, dv) -> str | None:
+    """The file a deletion-vector descriptor names: 'u' (relative UUID)
+    resolves under ``table_path``, 'p' is already an absolute path, 'i'
+    is inline in the log (None). Any other storageType — including the
+    ``"path"`` parquet-sidecar descriptors of earlier builds — raises
+    ``ValueError``: silently skipping a DV would resurrect deleted
+    rows."""
+    st = dv["storageType"]
+    if st == "u":
+        return dv_file_path(table_path, dv["pathOrInlineDv"])
+    if st == "p":
+        return dv["pathOrInlineDv"]
+    if st == "i":
+        return None
+    raise ValueError(
+        f"unsupported deletion-vector storageType {st!r} (the Delta spec "
+        "defines 'u', 'p' and 'i'); a table with live 'path' sidecar DVs "
+        "must be purge_deleted by the build that wrote them"
+    )
+
+
+def decode_descriptor(table_path: str, dv: dict) -> np.ndarray:
     """Deletion-vector descriptor dict (storageType / pathOrInlineDv /
     offset / sizeInBytes / cardinality) -> sorted uint64 row indexes.
-    Handles the spec storage types 'u' (relative UUID file), 'p'
-    (absolute path file) and 'i' (inline z85). ``file_bytes``: the DV
-    file's content pre-fetched by the caller — used on remote-URI
-    tables, where the executor-side Python worker running this cannot
-    resolve the scheme (the driver fetches through the seam and ships
-    the bytes in the fan-out frame)."""
-    st = dv["storageType"]
-    if st == "i":
+    The blob is inline ('i') or read from :func:`dv_file` — a plain
+    ``open`` for local paths, the filesystem seam for remote URIs."""
+    p = dv_file(table_path, dv)
+    if p is None:
         blob = z85_decode(dv["pathOrInlineDv"])
         # z85 requires 4-byte alignment, so writers pad the blob before
         # encoding; sizeInBytes recovers the true length
@@ -319,23 +334,14 @@ def decode_descriptor(
         if size is not None and size >= 0:
             blob = blob[: int(size)]
     else:
-        if st == "u":
-            p = dv_file_path(table_path, dv["pathOrInlineDv"])
-        elif st == "p":
-            p = dv["pathOrInlineDv"]
-        else:
-            raise ValueError(f"not a standard DV storageType: {st!r}")
-        if file_bytes is not None:
-            data = file_bytes
-        else:
-            from levi_spark.fs import fs_for, local_form
+        from levi_spark.fs import fs_for, local_form
 
-            lp = local_form(p)
-            if lp is not None:
-                with open(lp, "rb") as f:
-                    data = f.read()
-            else:
-                data = fs_for(p).read_bytes(p)
+        lp = local_form(p)
+        if lp is not None:
+            with open(lp, "rb") as f:
+                data = f.read()
+        else:
+            data = fs_for(p).read_bytes(p)
         blob = read_dv_blob(data, dv.get("offset"), dv["sizeInBytes"])
     vals = decode_rbm_array(blob)
     card = dv.get("cardinality")

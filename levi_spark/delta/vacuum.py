@@ -1,4 +1,4 @@
-"""VACUUM: reclaim data files and DV sidecars no snapshot references.
+"""VACUUM: reclaim data and deletion-vector files no snapshot references.
 
 The reference leaves physical cleanup to delta-rs / OPTIMIZE guidance
 (levi README.md:30); our engine's overwrite / replace_paths / purge
@@ -10,8 +10,10 @@ than the retention window that the CURRENT snapshot no longer lists.
 Semantics (mirrors Delta's VACUUM contract):
 
 * a file is a candidate iff it is under the table root, is not part of
-  ``_delta_log``, is not referenced by the latest snapshot (live add or
-  live DV sidecar), and its mtime is older than ``retention_hours``;
+  ``_delta_log``, is a parquet data file or a ``deletion_vector_*.bin``
+  file, is not referenced by the latest snapshot (live add or the DV
+  file a live add's descriptor names), and its mtime is older than
+  ``retention_hours``;
 * change-data files (``_change_data/``, written by ``emit_cdf``
   operations) are referenced by their commit, not by any snapshot —
   they stay as long as the referencing commit JSON is still in the log
@@ -21,8 +23,8 @@ Semantics (mirrors Delta's VACUUM contract):
   the same idea for the log side, handled by ``expire_log``);
 * ``dry_run=True`` lists, deletes nothing.
 
-The referenced-file set is metadata-scale (the snapshot's live adds +
-DV dirs, one cached collect — :meth:`Snapshot.live_adds_collected`);
+The referenced-file set is metadata-scale (the snapshot's live adds and
+their DV files, one cached collect — :meth:`Snapshot.live_adds_collected`);
 the filesystem walk is driver-side, which matches the single-node
 filesystem this engine runs on here. On an object store, the walk
 would become a distributed listing job; the set-difference logic is
@@ -37,8 +39,8 @@ import time
 
 from pyspark.sql import SparkSession
 
-from levi_spark.delta.dv import DV_DIR
 from levi_spark.delta.log import DeltaLog
+from levi_spark.delta.roaring import dv_file
 from levi_spark.delta.writer import CDC_DIR
 
 
@@ -77,31 +79,18 @@ def vacuum(
     from urllib.parse import unquote
 
     live_files: set[str] = set()
-    live_dv_dirs: set[str] = set()
     for r in snap.live_adds_collected():
         add = r["add"]
         live_files.add(os.path.normpath(unquote(add["path"])))
         dv = add["deletionVector"]
         if dv is not None and dv["pathOrInlineDv"] is not None:
-            if dv["storageType"] == "u":
-                # standard roaring DV: the referenced .bin file is live
-                from levi_spark.delta.roaring import dv_file_path
-
-                live_files.add(
-                    os.path.normpath(
-                        os.path.relpath(
-                            dv_file_path(path, dv["pathOrInlineDv"]), path
-                        )
-                    )
-                )
-            elif dv["storageType"] == "p":
-                # absolute reference; protect it if it happens to live
-                # under this table's directory
-                rp = os.path.relpath(dv["pathOrInlineDv"], path)
+            f = dv_file(path, dv)  # None: inline, no file
+            if f is not None:
+                rp = os.path.relpath(f, path)
+                # a 'p' file outside this table's directory is never a
+                # candidate; only one under it needs protecting
                 if not rp.startswith(".."):
                     live_files.add(os.path.normpath(rp))
-            else:
-                live_dv_dirs.add(os.path.normpath(dv["pathOrInlineDv"]))
 
     cutoff = time.time() - retention_hours * 3600.0
     doomed: list[str] = []
@@ -110,15 +99,9 @@ def vacuum(
     base = path.rstrip("/")
     for root, dirs, files in fs.walk(base):
         rel_root = "." if root == base else root[len(base) + 1:]
-        # never touch the log; skip live DV dirs wholesale
+        # never touch the log
         if rel_root == "." :
             dirs[:] = [d for d in dirs if d != "_delta_log" and not d.startswith(".")]
-        if rel_root == DV_DIR:
-            dirs[:] = [
-                d
-                for d in dirs
-                if os.path.normpath(os.path.join(DV_DIR, d)) not in live_dv_dirs
-            ]
         for name in files:
             rel = os.path.normpath(
                 name if rel_root == "." else os.path.join(rel_root, name)
@@ -127,15 +110,10 @@ def vacuum(
                 continue
             if rel.startswith(CDC_DIR + os.sep) and rel in live_cdc:
                 continue
-            # outside the DV area only parquet data files and orphaned
-            # standard deletion-vector .bin files are fair game; inside
-            # an orphaned DV dir, writer markers (_SUCCESS) go too
-            is_std_dv = name.startswith("deletion_vector_") and name.endswith(".bin")
-            if (
-                not name.endswith(".parquet")
-                and not is_std_dv
-                and not rel.startswith(DV_DIR + os.sep)
-            ):
+            # only parquet data files and deletion-vector files are
+            # fair game
+            is_dv = name.startswith("deletion_vector_") and name.endswith(".bin")
+            if not name.endswith(".parquet") and not is_dv:
                 continue
             full = os.path.join(root, name)
             st = fs.stat(full)
@@ -147,7 +125,7 @@ def vacuum(
                 fs.remove(full)
 
     if not dry_run:
-        # sweep now-empty partition/DV directories (bottom-up: deepest
+        # sweep now-empty partition/DV-prefix directories (bottom-up: deepest
         # first so an emptied child empties its parent)
         all_dirs = [r for r, _d, _f in fs.walk(base)]
         for root in sorted(all_dirs, key=len, reverse=True):

@@ -32,11 +32,11 @@ through the filesystem commit coordinator automatically
 with existence-check arbitration instead of a silent lost write.
 
 Everything here is DRIVER-side. Executor-side file IO (the
-self-hosted parquet staging, standard-DV emission/expansion) keeps
-raw ``open`` on ``local_form()`` paths; for genuinely remote schemes
-it stages through a driver-visible local scratch and the driver ships
-the files through this seam (writes: ``copy_tree``/``copy_file``;
-reads: DV bytes prefetched into the fan-out frame) — shipping a
+self-hosted parquet staging, deletion-vector emission) keeps raw
+``open`` on ``local_form()`` paths; for genuinely remote schemes it
+stages through a driver-visible local scratch and the driver ships
+the files through this seam (``copy_tree``/``copy_file``); deletion
+vectors are decoded on the driver, which reads them here — shipping a
 Hadoop client into Python workers stays out of scope, and the
 standard executor path (``df.write``) already handles URIs in the JVM.
 """
@@ -425,7 +425,7 @@ def copy_file(src: str, dst: str) -> None:
 
 
 def copy_tree(src: str, dst: str) -> None:
-    """Recursive copy (clone's DV directory copy)."""
+    """Recursive copy (the self-hosted writer's staged output)."""
     sfs, dfs = fs_for(src), fs_for(dst)
     if sfs is _LOCAL and dfs is _LOCAL:
         shutil.copytree(src, dst, dirs_exist_ok=True)

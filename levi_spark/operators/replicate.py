@@ -40,7 +40,7 @@ def _replica_app_id(src_path: str, dst_path: str) -> str:
 
 def _bootstrap_clone(src_log: DeltaLog, dst_path: str, app_id: str, cur: int) -> bool:
     """File-level bootstrap: a DEEP clone (:func:`clone_table` — copy
-    the source's live data files and DV sidecars byte-for-byte, commit
+    the source's live data and deletion-vector files byte-for-byte, commit
     the same add actions; no row re-encoded) with the replica's ``txn``
     exactly-once marker riding the same atomic commit. Returns False
     when the source references files that can't be re-linked locally

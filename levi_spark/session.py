@@ -179,9 +179,7 @@ def _warm_python_workers(spark: SparkSession) -> None:
     5.0 s cold vs 1.3 s warm). Doing it here makes session startup own
     the one-time cost — the same place JVM startup already lives —
     instead of a random query. Guide §4.5: heavyweight init once per
-    task/worker, never per row; ``LEVI_WARM_WORKERS=0`` disables."""
-    if os.environ.get("LEVI_WARM_WORKERS", "1") == "0":
-        return
+    task/worker, never per row."""
     app_id = spark.sparkContext.applicationId
     if app_id in _WARMED_APP_IDS:
         return

@@ -4,10 +4,8 @@
    shallow clone emits) — a relpath()-based compare silently selected
    zero files while replace_paths still tombstoned them, so any MERGE /
    purge / dedup / compact on a shallow clone dropped the matched rows.
-2. (medium) clone_table must refuse non-'path' deletion-vector storage
-   types (inline 'i' / relative-UUID 'u') instead of treating the
-   payload as a filesystem path, and deep clone must handle file (not
-   just directory) sidecars without crashing mid-copy.
+2. (medium) clone_table must refuse deletion-vector storage types it
+   cannot clone instead of treating the payload as a filesystem path.
 3. (low) describe_detail's createdAt must come from metaData.createdTime
    (survives checkpoint + log expiry) rather than the earliest surviving
    commit timestamp, and must stay non-NULL on a checkpoint-only log.
@@ -123,50 +121,6 @@ def test_clone_refuses_unknown_dv_storage(spark, tmp_path, shallow):
     _rewrite_dv_storage(src, "x", "bogus-payload")
     with pytest.raises(ValueError, match="storageType"):
         clone_table(spark, src, str(tmp_path / "dst"), shallow=shallow)
-
-
-def test_deep_clone_copies_file_sidecar(spark, tmp_path):
-    """A foreign log may reference a single sidecar FILE; deep clone
-    must copy2 it, not crash in copytree."""
-    from levi_spark.delta.dv import soft_delete
-
-    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
-    write_delta(spark.range(10).select("id").repartition(2), src, mode="error",
-                checkpoint_interval=None)
-    soft_delete(spark, src, "id = 3", checkpoint_interval=None)
-    snap = DeltaLog(spark, src).snapshot()
-    rows_before = _rows(spark, src)
-
-    # flatten: repackage the sidecar directory as a single parquet file
-    import pyarrow.parquet as pq
-    import pyarrow as pa
-
-    dv_rel = next(
-        r["add"]["deletionVector"]["pathOrInlineDv"]
-        for r in snap.live_adds_collected()
-        if r["add"]["deletionVector"] is not None
-    )
-    dv_dir = os.path.join(src, dv_rel)
-    assert os.path.isdir(dv_dir)
-    tbl = pq.read_table(dv_dir)
-    flat_rel = dv_rel.rstrip("/") + ".flat.parquet"
-    pq.write_table(tbl, os.path.join(src, flat_rel))
-    # point the log at the flat file
-    log_dir = os.path.join(src, "_delta_log")
-    versions = sorted(int(f[:20]) for f in os.listdir(log_dir) if f.endswith(".json"))
-    v = versions[-1]
-    lines = _log_lines(src, v)
-    for d in lines:
-        add = d.get("add")
-        if add and add.get("deletionVector"):
-            add["deletionVector"]["pathOrInlineDv"] = flat_rel
-    with open(os.path.join(log_dir, f"{v:020d}.json"), "w") as f:
-        f.writelines(json.dumps(d) + "\n" for d in lines)
-
-    info = clone_table(spark, src, dst, shallow=False)
-    assert not info["shallow"]
-    assert os.path.isfile(os.path.join(dst, flat_rel))
-    assert _rows(spark, dst) == rows_before
 
 
 # ----------------------------------------------------------------- 3: low

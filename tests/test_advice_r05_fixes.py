@@ -36,7 +36,7 @@ from levi_spark.queries import (
 def _mk_dv_src(spark, path):
     """Two appends + a soft delete. Files are coalesced to hold many
     rows each, so the delete hits a strict subset of every file's rows
-    and MUST land as DV sidecars (single-row files would be dropped
+    and MUST land as deletion vectors (single-row files would be dropped
     whole via remove actions and the log would carry no DVs at all)."""
     write_delta(
         spark.range(20).select("id", (F.col("id") * 2).alias("v")).coalesce(2),

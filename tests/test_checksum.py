@@ -31,7 +31,7 @@ def table(spark, tmp_path_factory):
                 checkpoint_interval=None)
     write_delta(df.where("id >= 60").repartition(2), p, mode="append",
                 checkpoint_interval=None)
-    soft_delete(spark, p, "k = 3", dv_format="standard")
+    soft_delete(spark, p, "k = 3")
     return p
 
 

@@ -112,3 +112,38 @@ def test_soft_delete_on_partitioned_table(spark, tmp_path):
     # lineage surface
     lin = DeltaLog(spark, p).snapshot().to_df(with_lineage=True)
     assert {"_file_name", "_row_index"} <= set(lin.columns)
+
+
+def test_path_storage_type_refused(spark, tmp_path):
+    """Earlier builds wrote engine-private parquet sidecar DVs
+    (``storageType: "path"``). The reader refuses one loudly rather
+    than reading it as a directory of deleted keys."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = str(tmp_path / "t")
+    write_delta(spark.range(10).select("id").coalesce(1), p, mode="error",
+                checkpoint_interval=None)
+    (row,) = DeltaLog(spark, p).snapshot().live_adds_collected()
+    add = row["add"].asDict(recursive=True)
+    # a real sidecar directory, as those builds wrote it
+    rel = "dv-sidecar"
+    os.makedirs(os.path.join(p, rel))
+    pq.write_table(
+        pa.table({"file_name": [os.path.basename(add["path"])],
+                  "row_index": pa.array([3], pa.int64())}),
+        os.path.join(p, rel, "part-0.parquet"),
+    )
+    add["deletionVector"] = {
+        "storageType": "path", "pathOrInlineDv": rel, "cardinality": 1,
+    }
+    actions = [
+        {"add": {k: v for k, v in add.items() if v is not None}},
+        {"commitInfo": {"operation": "DELETE"}},
+    ]
+    with open(os.path.join(p, "_delta_log", f"{1:020d}.json"), "x") as f:
+        f.write("".join(json.dumps(a) + "\n" for a in actions))
+    with pytest.raises(ValueError, match="storageType 'path'"):
+        DeltaLog(spark, p).snapshot().to_df()

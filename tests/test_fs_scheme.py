@@ -148,8 +148,7 @@ def test_standard_dv_refuses_nonlocal_but_takes_file_uri(spark, furi):
     # file:// has a POSIX form, so spec-conformant DV files still write
     p = furi("t5std")
     write_delta(_df(spark, 0, 200), p)
-    out = soft_delete(spark, p, "k < 20", dv_format="standard",
-                      checkpoint_interval=None)
+    out = soft_delete(spark, p, "k < 20", checkpoint_interval=None)
     assert out["rows_deleted"] == 20
     assert DeltaLog(spark, p).snapshot().to_df().count() == 180
 

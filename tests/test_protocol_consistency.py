@@ -1,15 +1,13 @@
 """Round-5 self-review fixes: protocol actions are table state, not a
 writer constant — feature upgrades (standard DVs, v2 checkpoints,
-column mapping) must survive every later commit path, mixed DV
-descriptor families are refused, and the roaring cookie is unsigned."""
+column mapping) must survive every later commit path, and the roaring
+cookie is unsigned."""
 
 from __future__ import annotations
 
 import glob
 import json
 import os
-
-import pytest
 
 from levi_spark.delta.clone import clone_table
 from levi_spark.delta.constraints import set_table_properties
@@ -27,8 +25,7 @@ def _mk_standard(spark, path):
         spark.range(300).selectExpr("id", "id * 2 AS v").coalesce(2),
         path, mode="error", checkpoint_interval=None,
     )
-    soft_delete(spark, path, "id % 2 = 0", checkpoint_interval=None,
-                dv_format="standard")
+    soft_delete(spark, path, "id % 2 = 0", checkpoint_interval=None)
 
 
 def test_append_preserves_upgraded_protocol(spark, tmp_path):
@@ -62,31 +59,13 @@ def test_config_commit_preserves_protocol(spark, tmp_path):
 
 def test_sidecar_dv_commit_preserves_protocol_after_purge(spark, tmp_path):
     """After purge (no live DV descriptors) the table keeps its
-    upgraded protocol, and a subsequent sidecar delete neither
-    downgrades it nor mixes families (there are none left)."""
+    upgraded protocol, and a subsequent delete does not downgrade it."""
     path = str(tmp_path / "t")
     _mk_standard(spark, path)
     purge_deleted(spark, path)
     soft_delete(spark, path, "id = 7", checkpoint_interval=None)
     p = _proto(spark, path)
     assert p["minReaderVersion"] == 3
-
-
-def test_mixed_dv_families_refused(spark, tmp_path):
-    path = str(tmp_path / "t")
-    _mk_standard(spark, path)
-    with pytest.raises(ValueError, match="mix descriptor families"):
-        soft_delete(spark, path, "id = 7", checkpoint_interval=None)
-    # the other direction: sidecar table, then standard delete
-    path2 = str(tmp_path / "t2")
-    write_delta(
-        spark.range(300).selectExpr("id").coalesce(2), path2, mode="error",
-        checkpoint_interval=None,
-    )
-    soft_delete(spark, path2, "id % 2 = 0", checkpoint_interval=None)
-    with pytest.raises(ValueError, match="mix descriptor families"):
-        soft_delete(spark, path2, "id = 7", checkpoint_interval=None,
-                    dv_format="standard")
 
 
 def test_clone_inherits_source_protocol(spark, tmp_path):

@@ -10,7 +10,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from levi_spark.delta.dv import soft_delete
+from levi_spark.delta.dv import purge_deleted, soft_delete
 from levi_spark.delta.log import DeltaLog
 from levi_spark.delta.restore import (
     restore,
@@ -52,7 +52,7 @@ def test_restore_to_earlier_version_is_metadata_only(spark, tmp_path):
     assert restore(spark, path, r2["version"])["version"] == -1
 
 
-def test_restore_detaches_deletion_vectors(spark, tmp_path):
+def test_restore_detaches_dv_descriptors(spark, tmp_path):
     path = str(tmp_path / "t")
     write_delta(
         spark.range(20).select("id").coalesce(2), path, mode="error",
@@ -63,6 +63,34 @@ def test_restore_detaches_deletion_vectors(spark, tmp_path):
     r = restore(spark, path, 0)
     assert r["version"] == 2
     assert DeltaLog(spark, path).snapshot().to_df().count() == 20
+
+
+@pytest.mark.parametrize(
+    "mod,storage", [(3, "u"), (500, "i")], ids=["file_dv", "inline_dv"]
+)
+def test_restore_across_purge_keeps_dvs(spark, tmp_path, mod, storage):
+    """RESTORE to a delete's version after purge_deleted re-adds the
+    DV-bearing files with their descriptors. A 'u' descriptor names a
+    DV file that purge leaves on disk and an 'i' one names no file at
+    all — neither payload is a path under the table, so neither may
+    read as vacuumed."""
+    path = str(tmp_path / "t")
+    write_delta(spark.range(1000).select("id").coalesce(1), path,
+                mode="error", checkpoint_interval=None)         # v0
+    write_delta(spark.range(1000, 2000).select("id").coalesce(1), path,
+                mode="append", checkpoint_interval=None)        # v1
+    soft_delete(spark, path, f"id % {mod} = 0",
+                checkpoint_interval=None)                       # v2
+    dvs = [
+        r["add"]["deletionVector"]
+        for r in DeltaLog(spark, path).snapshot().live_adds_collected()
+    ]
+    assert [d["storageType"] for d in dvs] == [storage, storage]
+    purge_deleted(spark, path)                                  # v3
+    r = restore(spark, path, 2)
+    assert r["version"] == 4 and r["files_readded"] == 2
+    got = sorted(row.id for row in DeltaLog(spark, path).snapshot().to_df().collect())
+    assert got == [i for i in range(2000) if i % mod != 0]
 
 
 def test_restore_refuses_vacuumed_version(spark, tmp_path):

@@ -266,13 +266,13 @@ def test_deep_clone_of_uuid_dv_table_is_self_contained(spark, tmp_path):
     assert got == [i for i in range(20) if i not in deleted]
 
 
-# ---- writer side: soft_delete(dv_format="standard") ------------------------
+# ---- writer side: soft_delete ---------------------------------------------
 
 def test_soft_delete_standard_format(spark, tmp_path):
-    """soft_delete can WRITE spec-conformant DVs: per-file
+    """soft_delete WRITES spec-conformant DVs: per-file
     deletion_vector_<uuid>.bin roaring files with 'u' descriptors and a
     minReaderVersion-3 deletionVectors protocol — and the table reads
-    back identically to sidecar mode."""
+    back without the deleted rows."""
     from levi_spark.delta.dv import soft_delete
     from levi_spark.delta.roaring import dv_file_path
     from levi_spark.delta.writer import write_delta
@@ -282,8 +282,7 @@ def test_soft_delete_standard_format(spark, tmp_path):
         spark.range(300).selectExpr("id", "id * 2 AS v").coalesce(3),
         path, mode="error", checkpoint_interval=None,
     )
-    res = soft_delete(spark, path, "id % 2 = 0", checkpoint_interval=None,
-                      dv_format="standard")
+    res = soft_delete(spark, path, "id % 2 = 0", checkpoint_interval=None)
     assert res["rows_deleted"] == 150
     snap = DeltaLog(spark, path).snapshot()
     dv_adds = [
@@ -313,8 +312,7 @@ def test_soft_delete_standard_inlines_tiny_dvs(spark, tmp_path):
         spark.range(30).selectExpr("id", "id * 2 AS v").coalesce(3),
         path, mode="error", checkpoint_interval=None,
     )
-    res = soft_delete(spark, path, "id % 4 = 0", checkpoint_interval=None,
-                      dv_format="standard")
+    res = soft_delete(spark, path, "id % 4 = 0", checkpoint_interval=None)
     assert res["rows_deleted"] == 8
     snap = DeltaLog(spark, path).snapshot()
     dv_adds = [
@@ -329,7 +327,7 @@ def test_soft_delete_standard_inlines_tiny_dvs(spark, tmp_path):
 
 
 def test_soft_delete_standard_cumulative_and_purge(spark, tmp_path):
-    """A second standard-format delete folds the old bitmap into the
+    """A second delete folds the old bitmap into the
     new one (one descriptor per file), and purge rewrites cleanly."""
     from levi_spark.delta.dv import purge_deleted, soft_delete
     from levi_spark.delta.writer import write_delta
@@ -339,10 +337,8 @@ def test_soft_delete_standard_cumulative_and_purge(spark, tmp_path):
         spark.range(40).selectExpr("id", "id * 3 AS v").coalesce(2),
         path, mode="error", checkpoint_interval=None,
     )
-    soft_delete(spark, path, "id % 5 = 0", checkpoint_interval=None,
-                dv_format="standard")
-    soft_delete(spark, path, "id % 7 = 0", checkpoint_interval=None,
-                dv_format="standard")
+    soft_delete(spark, path, "id % 5 = 0", checkpoint_interval=None)
+    soft_delete(spark, path, "id % 7 = 0", checkpoint_interval=None)
     want = [i for i in range(40) if i % 5 != 0 and i % 7 != 0]
     snap = DeltaLog(spark, path).snapshot()
     assert sorted(r.id for r in snap.to_df().collect()) == want
@@ -369,8 +365,7 @@ def test_vacuum_reclaims_orphaned_standard_dvs(spark, tmp_path):
         spark.range(400).selectExpr("id").coalesce(2), path, mode="error",
         checkpoint_interval=None,
     )
-    soft_delete(spark, path, "id % 3 = 0", checkpoint_interval=None,
-                dv_format="standard")
+    soft_delete(spark, path, "id % 3 = 0", checkpoint_interval=None)
     live_bins = set(_glob.glob(os.path.join(path, "deletion_vector_*.bin")))
     assert live_bins
     # live DVs survive a vacuum
@@ -392,8 +387,7 @@ def test_standard_delete_bumps_protocol(spark, tmp_path):
     path = str(tmp_path / "t")
     write_delta(spark.range(10).selectExpr("id").coalesce(1), path,
                 mode="error", checkpoint_interval=None)
-    soft_delete(spark, path, "id = 3", checkpoint_interval=None,
-                dv_format="standard")
+    soft_delete(spark, path, "id = 3", checkpoint_interval=None)
     last = sorted(_glob.glob(os.path.join(path, "_delta_log", "*.json")))[-1]
     protos = [
         _json.loads(ln)["protocol"]

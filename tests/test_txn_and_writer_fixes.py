@@ -224,21 +224,34 @@ def test_soft_delete_conflict_raises_value_error_no_orphan(
 ):
     """Concurrent commit landing between soft_delete's snapshot read and
     its publish: surfaces as the retryable ValueError (not a raw
-    FileExistsError) and the already-written sidecar is cleaned up."""
+    FileExistsError) and the already-written DV file is cleaned up."""
     path = str(tmp_path / "t")
-    write_delta(spark.range(10).select("id"), path, mode="error",
-                checkpoint_interval=None)
+    # one file, 50 deleted rows: past the inline cap, so the delete
+    # writes a deletion_vector_*.bin file before it tries to publish
+    write_delta(spark.range(100).select("id").coalesce(1), path,
+                mode="error", checkpoint_interval=None)
     # pin soft_delete's snapshot at v0, then let a concurrent writer win
     # version 1 — the classic read-then-lose race
     orig = DeltaLog.snapshot
     monkeypatch.setattr(DeltaLog, "snapshot", lambda self, version=None: orig(self, 0))
     with open(os.path.join(path, "_delta_log", f"{1:020d}.json"), "x") as fh:
         fh.write(json.dumps({"commitInfo": {"operation": "WRITE"}}) + "\n")
+    import levi_spark.delta.dv as dv_mod
+
+    written: list[dict] = []
+    orig_write = dv_mod._write_standard_dvs
+
+    def spy(*a, **kw):
+        out = orig_write(*a, **kw)
+        written.extend(out.values())
+        return out
+
+    monkeypatch.setattr(dv_mod, "_write_standard_dvs", spy)
     with pytest.raises(ValueError, match="concurrent commit"):
         soft_delete(spark, path, "id % 2 = 0", checkpoint_interval=None)
-    # the sidecar written before the failed publish is cleaned up
-    dv_root = os.path.join(path, "_deletion_vectors")
-    assert not os.path.isdir(dv_root) or not os.listdir(dv_root)
+    assert [d["storageType"] for d in written] == ["u"]
+    # the DV file written before the failed publish is cleaned up
+    assert not [n for n in os.listdir(path) if n.startswith("deletion_vector_")]
 
 
 # ------------------------------------------- rebase metadata freshness --

@@ -61,7 +61,7 @@ def test_self_hosted_partitioned_over_file_uri(spark, tmp_path):
 def test_standard_dv_over_file_uri(spark, tmp_path):
     p = f"file://{tmp_path}/t"
     write_delta(_df(spark), p)
-    out = soft_delete(spark, p, "k % 5 = 0", dv_format="standard")
+    out = soft_delete(spark, p, "k % 5 = 0")
     assert out["rows_deleted"] == 80
     names = os.listdir(f"{tmp_path}/t")
     # small bitmaps may inline ('i'); with 80 rows over 4 files the
@@ -125,7 +125,7 @@ def test_standard_dv_remote_branch(spark, tmp_path, monkeypatch):
     p = f"file://{tmp_path}/t"
     write_delta(_df(spark, 4000), p)  # enough rows to force 'u' files
     _force_remote(monkeypatch, fsmod)
-    out = soft_delete(spark, p, "k % 2 = 0", dv_format="standard")
+    out = soft_delete(spark, p, "k % 2 = 0")
     assert out["rows_deleted"] == 2000
     survivors = [i for i in range(4000) if i % 2 == 1]
     back = DeltaLog(spark, p).snapshot().to_df()
@@ -140,17 +140,16 @@ def test_standard_dv_remote_branch(spark, tmp_path, monkeypatch):
 
 
 def test_standard_dv_remote_read_prefetch(spark, tmp_path, monkeypatch):
-    """Read-side counterpart: on a remote-URI table the DV bitmap
-    expansion runs in Python workers that cannot resolve the scheme,
-    so the driver must pre-fetch each distinct DV file through the
-    seam and ship bytes into the fan-out. Forced-remote over file://
-    so the prefetch goes through the real HadoopFS read."""
+    """Read-side counterpart: on a remote-URI table the driver reads
+    each DV file through the filesystem seam before decoding it.
+    Forced-remote over file:// so the read goes through the real
+    HadoopFS."""
     import levi_spark.fs as fsmod
 
     p = f"file://{tmp_path}/t"
     write_delta(_df(spark, 4000), p)
-    soft_delete(spark, p, "k % 2 = 0", dv_format="standard")
-    # descriptors may be 'u' files or inline; only 'u' needs prefetch —
+    soft_delete(spark, p, "k % 2 = 0")
+    # descriptors may be 'u' files or inline; only 'u' reads a file —
     # assert at least one file descriptor exists so the branch is real
     dv_files = [n for n in os.listdir(f"{tmp_path}/t")
                 if n.startswith("deletion_vector_")]

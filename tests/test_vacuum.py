@@ -1,5 +1,5 @@
 """VACUUM: unreferenced files are reclaimed, live ones (including DV
-sidecars) survive, retention is honored, dry-run deletes nothing."""
+files) survive, retention is honored, dry-run deletes nothing."""
 
 from __future__ import annotations
 
@@ -51,24 +51,28 @@ def test_vacuum_after_overwrite_reclaims_old_files(spark, table):
 
 
 def test_vacuum_keeps_live_dv_sidecars(spark, table):
-    soft_delete(spark, table, "id < 30", checkpoint_interval=None)
+    # ~30 deleted rows per file: past the inline cap, so every DV is a
+    # deletion_vector_*.bin file
+    soft_delete(spark, table, "id < 120", checkpoint_interval=None)
+    live = _dv_files(table)
+    assert live
     res = vacuum(spark, table, retention_hours=0.0)
-    # the DV sidecar is referenced -> not deleted; reads still correct
-    assert all("_deletion_vectors" not in f for f in res["files_deleted"])
-    assert _ids(spark, table) == list(range(30, 200))
+    # the DV files are referenced -> not deleted; reads still correct
+    assert _dv_files(table) == live
+    assert not any("deletion_vector_" in f for f in res["files_deleted"])
+    assert _ids(spark, table) == list(range(120, 200))
 
 
 def test_vacuum_reclaims_orphaned_dv_after_purge(spark, table):
-    soft_delete(spark, table, "id < 30", checkpoint_interval=None)
+    soft_delete(spark, table, "id < 120", checkpoint_interval=None)
+    purged = _dv_files(table)
+    assert purged
     purge_deleted(spark, table)
     res = vacuum(spark, table, retention_hours=0.0)
-    assert any("_deletion_vectors" in f for f in res["files_deleted"])
-    assert _ids(spark, table) == list(range(30, 200))
-    # DV dir fully gone from disk
-    dv_root = os.path.join(table, "_deletion_vectors")
-    assert not os.path.isdir(dv_root) or not any(
-        files for _r, _d, files in os.walk(dv_root)
-    )
+    assert purged <= set(res["files_deleted"])
+    assert _ids(spark, table) == list(range(120, 200))
+    # every DV file fully gone from disk
+    assert _dv_files(table) == set()
 
 
 def test_dry_run_deletes_nothing(spark, table):
@@ -81,6 +85,13 @@ def test_dry_run_deletes_nothing(spark, table):
     res = vacuum(spark, table, retention_hours=0.0, dry_run=True)
     assert len(res["files_deleted"]) == 4
     assert _parquet_rels(table) >= set(res["files_deleted"])  # still on disk
+
+
+def _dv_files(table: str) -> set[str]:
+    return {
+        n for n in os.listdir(table)
+        if n.startswith("deletion_vector_") and n.endswith(".bin")
+    }
 
 
 def _parquet_rels(table: str) -> set[str]:
