@@ -41,6 +41,7 @@ import time
 
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from levi_spark.delta.log import DeltaLog
 from levi_spark.delta.writer import DEFAULT_CHECKPOINT_INTERVAL, write_delta
@@ -239,7 +240,9 @@ def soft_delete(
     ``emit_cdf=True`` records the deleted rows (``_change_type =
     'delete'``) as change data in the same commit, making the DELETE
     visible to :func:`levi_spark.delta.changes.table_changes_cdf` —
-    one extra pass over the matching rows, still O(matches).
+    one extra pass over the matching rows, still O(matches). It writes
+    one change-data file per affected data file (``files_affected``
+    ``cdc`` actions), whatever the core count.
 
     The deletion vectors are the Delta spec's: one roaring bitmap per
     affected file, inline ('i') or in a ``deletion_vector_<uuid>.bin``
@@ -328,11 +331,28 @@ def soft_delete(
         actions.append({"add": {k: v for k, v in add.items() if v is not None}})
 
     if emit_cdf:
+        from levi_spark.delta.log import local_frame
         from levi_spark.delta.writer import cdc_action_lines, write_cdc_files
 
+        # One change-data file per affected data file: each file's
+        # deleted rows go to a partition of their own by a dense id
+        # (exact placement; hash partitioning can collide and a plain
+        # scan packs small files by core count).
+        ids = local_frame(
+            spark,
+            [(f, i) for i, f in enumerate(sorted(counts))],
+            T.StructType(
+                [
+                    T.StructField("_file_name", T.StringType()),
+                    T.StructField("__cdc_part", T.IntegerType()),
+                ]
+            ),
+        )
         deleted_rows = (
             snap.to_df(with_lineage=True)
             .where(pred)
+            .join(F.broadcast(ids), on="_file_name")
+            .repartitionById(len(counts), "__cdc_part")
             .select(*snap.metadata.data_columns)
             .withColumn("_change_type", F.lit("delete"))
         )

@@ -354,7 +354,10 @@ def write_cdc_files(cdc_df: DataFrame, path: str) -> list[tuple[str, int]]:
     """Write a change-data frame (table columns + ``_change_type``) as
     parquet under ``_change_data/``; returns [(rel_path, size_bytes)].
     The caller records them as ``cdc`` actions in its commit — they are
-    side data for `table_changes_cdf`, never part of the snapshot."""
+    side data for `table_changes_cdf`, never part of the snapshot. One
+    file is written per non-empty partition of ``cdc_df``, so the file
+    count follows the frame's partitioning; a caller that needs a fixed
+    count partitions the frame itself."""
     if CHANGE_TYPE_COL not in cdc_df.columns:
         raise ValueError(f"cdc frame must carry a {CHANGE_TYPE_COL} column")
     fs = fs_for(path)

@@ -2836,6 +2836,9 @@ def table_history_counts(spark, sf_dir):
     # ~19 per round-robin file) one round-robin file happened to hold
     # no multiple of 11, diverging n_adds/n_cdc_files 7 vs 8. Results
     # at sf0.01/sf0.1 are unchanged (all 8 files were already hit).
+    # n_cdc_files equals the number of files hit because soft_delete
+    # pins one change-data file per affected data file, not because of
+    # the scan's width (which follows the core count).
     write_delta(
         _t(spark, sf_dir, "customer").repartitionByRange(8, "c_custkey"),
         base, mode="error",

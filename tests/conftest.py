@@ -19,6 +19,10 @@ def spark():
 
 @pytest.fixture(scope="session")
 def fixtures_dir():
+    # delta-rs-written golden tables (FIXTURES.md, section A); they are
+    # not in the repository, so their tests skip where the path is absent.
+    if not os.path.isdir(FIXTURES):
+        pytest.skip(f"delta-rs golden tables not found at {FIXTURES}")
     return FIXTURES
 
 

@@ -159,3 +159,37 @@ def test_multi_version_feed_is_ordered_and_complete(spark, tmp_path):
     # windowed read: only (v2, v3]
     got23 = _changes(spark, p, 2)
     assert {cv for *_x, cv in got23} == {3}
+
+
+def test_soft_delete_writes_one_change_file_per_affected_file(spark, tmp_path):
+    import json
+    import os
+    from urllib.parse import unquote
+
+    import pyarrow.parquet as pq
+
+    p = str(tmp_path / "t")
+    write_delta(
+        spark.range(800).repartitionByRange(8, "id"),
+        p, mode="error", checkpoint_interval=None,
+    )
+    res = soft_delete(spark, p, "id % 10 = 0", emit_cdf=True, checkpoint_interval=None)
+    assert res["files_affected"] == 8
+
+    def actions(v):
+        with open(os.path.join(p, "_delta_log", f"{v:020d}.json")) as f:
+            return [json.loads(ln) for ln in f if ln.strip()]
+
+    ranges = [
+        (s["minValues"]["id"], s["maxValues"]["id"])
+        for s in (json.loads(a["add"]["stats"]) for a in actions(0) if "add" in a)
+    ]
+    cdc_ids = [
+        pq.read_table(os.path.join(p, unquote(a["cdc"]["path"]))).column("id").to_pylist()
+        for a in actions(1) if "cdc" in a
+    ]
+    # the count is set by the data, not by how Spark packs the scan
+    assert len(cdc_ids) == res["files_affected"]
+    assert sorted(i for ids in cdc_ids for i in ids) == list(range(0, 800, 10))
+    for ids in cdc_ids:
+        assert any(lo <= min(ids) and max(ids) <= hi for lo, hi in ranges), ids
