@@ -14,7 +14,8 @@ so every table stays readable by any conforming Delta engine:
   affected ``add`` actions with the descriptor, and upgrades the
   protocol to minReaderVersion 3 + ``deletionVectors``. Cost is
   O(matching rows), not O(bytes of touched files). A file whose every
-  row is deleted becomes a plain ``remove`` tombstone.
+  row is deleted becomes a plain ``remove`` tombstone and gets no DV;
+  a commit of removes only keeps the table's protocol.
 * The read path (``Snapshot.to_df``) decodes the live bitmaps on the
   driver and anti-joins the scan against them on (file, row_index) via
   the parquet reader's ``_metadata.row_index`` — pushdown and partition
@@ -98,12 +99,16 @@ def _append_commit(
     _publish_commit(log.log_path, version, "\n".join(lines) + "\n", rebase_ok=False)
 
 
-def _write_standard_dvs(spark, table_path: str, dv_out) -> dict[str, dict]:
+def _write_standard_dvs(
+    spark, table_path: str, dv_out, num_records: dict[str, int]
+) -> dict[str, dict | None]:
     """Write one SPEC-CONFORMANT deletion vector per affected data file
     — a framed + CRC'd roaring-bitmap blob
     (:mod:`levi_spark.delta.roaring`) in ``deletion_vector_<uuid>.bin``
     at the table root, or inline in the log when tiny — and return
-    ``file_name -> 'u'/'i' descriptor``. Encoding and file writes happen
+    ``file_name -> 'u'/'i' descriptor``. A file that loses at least its
+    ``num_records`` rows (every row: it becomes a ``remove``) gets no DV
+    and maps to None. Encoding and file writes happen
     EXECUTOR-side via applyInPandas over the file_name groups (each
     group is bounded by one data file's row count); only the per-file
     descriptor rows come back to the driver."""
@@ -145,6 +150,10 @@ def _write_standard_dvs(spark, table_path: str, dv_out) -> dict[str, dict]:
 
         rows = []
         for fname, grp in pdf.groupby("file_name"):
+            n = num_records.get(fname)
+            if n is not None and len(grp) >= n:
+                rows.append((fname, None, None, None, None, len(grp)))
+                continue
             blob = encode_rbm_array(grp["row_index"].tolist())
             if len(blob) <= INLINE_DV_MAX_BYTES:
                 # tiny bitmap: inline it in the log ('i'), no file IO —
@@ -180,7 +189,7 @@ def _write_standard_dvs(spark, table_path: str, dv_out) -> dict[str, dict]:
         .collect()
     )
     descs = {
-        r["file_name"]: {
+        r["file_name"]: None if r["st"] is None else {
             "storageType": r["st"],
             "pathOrInlineDv": r["pod"],
             **({"offset": int(r["offset"])} if r["offset"] is not None else {}),
@@ -248,7 +257,9 @@ def soft_delete(
     affected file, inline ('i') or in a ``deletion_vector_<uuid>.bin``
     file ('u'), and the commit's protocol is upgraded to
     minReaderVersion 3 + deletionVectors, so any conforming Delta
-    reader (delta-spark included) applies them.
+    reader (delta-spark included) applies them. A file that loses
+    every row is removed instead and gets no DV; a commit with no DV
+    left live keeps the table's protocol.
     """
     log = DeltaLog(spark, path)
     path = log.table_path
@@ -281,9 +292,16 @@ def soft_delete(
         old.join(F.broadcast(affected_names), on="file_name", how="left_semi")
     )
 
-    descs = _write_standard_dvs(spark, path, dv_out)
-    counts = {f: d["cardinality"] for f, d in descs.items()}
-    if not counts:
+    live_adds = snap.live_adds_collected()
+    num_records = {
+        os.path.basename(r["add"]["path"]): json.loads(r["add"]["stats"]).get(
+            "numRecords"
+        )
+        for r in live_adds
+        if r["add"]["stats"]
+    }
+    descs = _write_standard_dvs(spark, path, dv_out, num_records)
+    if not descs:
         return {"version": -1, "rows_deleted": 0, "files_affected": 0, "files_removed": 0}
 
     def _cleanup():
@@ -291,7 +309,8 @@ def soft_delete(
         from levi_spark.fs import fs_for
 
         for d in descs.values():
-            f = dv_file(path, d)  # None: inline DVs live in the log only
+            # None: inline DVs live in the log, removed files have none
+            f = dv_file(path, d) if d else None
             if f is None:
                 continue
             try:
@@ -304,18 +323,15 @@ def soft_delete(
     actions: list[dict] = []
     files_removed = 0
     rows_deleted = 0
-    for row in snap.live_adds_collected():
+    for row in live_adds:
         add = row["add"].asDict(recursive=True)
         name = os.path.basename(add["path"])
-        if name not in counts:
+        if name not in descs:
             continue
-        card = counts[name]
+        dv = descs[name]
         prev_card = (add.get("deletionVector") or {}).get("cardinality") or 0
-        rows_deleted += card - prev_card
-        num_records = None
-        if add.get("stats"):
-            num_records = json.loads(add["stats"]).get("numRecords")
-        if num_records is not None and card >= num_records:
+        rows_deleted += (dv["cardinality"] if dv else num_records[name]) - prev_card
+        if dv is None:
             actions.append(
                 {
                     "remove": {
@@ -327,7 +343,7 @@ def soft_delete(
             )
             files_removed += 1
             continue
-        add["deletionVector"] = descs[name]
+        add["deletionVector"] = dv
         actions.append({"add": {k: v for k, v in add.items() if v is not None}})
 
     if emit_cdf:
@@ -340,7 +356,7 @@ def soft_delete(
         # scan packs small files by core count).
         ids = local_frame(
             spark,
-            [(f, i) for i, f in enumerate(sorted(counts))],
+            [(f, i) for i, f in enumerate(sorted(descs))],
             T.StructType(
                 [
                     T.StructField("_file_name", T.StringType()),
@@ -352,7 +368,7 @@ def soft_delete(
             snap.to_df(with_lineage=True)
             .where(pred)
             .join(F.broadcast(ids), on="_file_name")
-            .repartitionById(len(counts), "__cdc_part")
+            .repartitionById(len(descs), "__cdc_part")
             .select(*snap.metadata.data_columns)
             .withColumn("_change_type", F.lit("delete"))
         )
@@ -362,10 +378,12 @@ def soft_delete(
         ]
 
     version = snap.version + 1
+    # only a commit that leaves a DV live needs the DV protocol
+    keeps_dv = any("add" in a for a in actions)
     try:
         _append_commit(
             log, snap, version, actions, "DELETE", {"predicate": str(predicate)},
-            protocol=_standard_dv_protocol(snap),
+            protocol=_standard_dv_protocol(snap) if keeps_dv else None,
         )
     except ValueError:
         # Lost the commit race: the DV files written above are
@@ -381,7 +399,7 @@ def soft_delete(
     return {
         "version": version,
         "rows_deleted": rows_deleted,
-        "files_affected": len(counts),
+        "files_affected": len(descs),
         "files_removed": files_removed,
     }
 

@@ -58,8 +58,7 @@ def _default_audio_decoder(payload: bytes) -> dict:
         "wav_audio_decoder (real PCM WAV), levi_spark.operators.flac."
         "flac_audio_decoder (real FLAC), fake_audio_decoder, or a "
         "soundfile/librosa-backed codec for formats we don't ship "
-        "(MP3/AAC/Opus audio DECODE — MP3 frame indexing is real, see "
-        "levi_spark.operators.mp3 — and MPEG-1 Layer II: like Layer I's "
+        "(MP3/AAC/Opus audio DECODE and MPEG-1 Layer II: like Layer I's "
         "synthesis window, its B.2a-d allocation tables are spec tables "
         "this build will not invent from memory)"
     )

@@ -12351,462 +12351,6 @@ FROM b
 """
 
 
-def multimodal_qoi_decode(spark, sf_dir):
-    """REAL lossless-image decode — QOI (qoiformat.org, the 2021
-    public-domain format fast image pipelines use for intermediates;
-    :mod:`levi_spark.operators.qoi`). Each document becomes a 16x16
-    image whose top 4 rows are a CONSTANT color (driving QOI_OP_RUN)
-    and whose remaining rows ramp per digest byte (driving
-    INDEX/DIFF/LUMA/literal ops); odd docs add an alpha plane
-    (``b[(r+c)%16] | 1``) and flip the colorspace flag, so one gate
-    covers both channel counts, both header variants, and the whole
-    op set. The oracle recomputes every channel sum from md5
-    arithmetic — a mis-biased LUMA delta, a stale index entry, or a
-    run that overshoots all shift a sum and cannot match. Scale
-    shape: two Arrow-batched map-side hops after the tiny
-    input-spreading repartition; no data-dependent shuffle, no
-    driver loop."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    from levi_spark.operators.qoi import decode_qoi, encode_qoi
-
-    docs = _docs_parallel(spark, sf_dir)
-
-    def encode(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = np.frombuffer(
-                    hashlib.md5(text.encode("utf-8")).digest(), np.uint8
-                ).astype(np.int64)
-                d = int(doc_id)
-                r = np.arange(16)[:, None]
-                c = np.arange(16)[None, :]
-                R = np.where(r < 4, b[0], (b[c] + r) % 256)
-                G = np.where(r < 4, b[1], (b[c] + r + 1) % 256)
-                B = np.where(r < 4, b[2], (b[c] + r + 2) % 256)
-                planes = [R, G, B]
-                if d % 2:
-                    planes.append(b[(r + c) % 16] | 1)
-                img = np.stack(planes, axis=2).astype(np.uint8)
-                payloads.append(encode_qoi(img, colorspace=d % 2))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    qois = docs.mapInPandas(encode, "doc_id long, payload binary")
-
-    def stats(batches):
-        for pdf in batches:
-            rows = []
-            for i, p in zip(pdf["doc_id"], pdf["payload"]):
-                img, cs = decode_qoi(bytes(p))
-                s = img.astype(np.int64).sum(axis=(0, 1))
-                rows.append(
-                    {
-                        "doc_id": int(i),
-                        "width": img.shape[1],
-                        "height": img.shape[0],
-                        "channels": img.shape[2],
-                        "colorspace": cs,
-                        "sum_r": int(s[0]),
-                        "sum_g": int(s[1]),
-                        "sum_b": int(s[2]),
-                        "sum_a": int(s[3]) if img.shape[2] == 4 else 65280,
-                    }
-                )
-            yield pd.DataFrame(rows).astype("int64")
-
-    return qois.mapInPandas(
-        stats,
-        "doc_id long, width long, height long, channels long, "
-        "colorspace long, sum_r long, sum_g long, sum_b long, sum_a long",
-    )
-
-
-QOI_DECODE_SQL = """
-WITH b AS (
-  SELECT doc_id, list_transform(range(1,17),
-      i -> ('0x'||substr(md5(text),((i-1)*2+1)::INT,2))::BIGINT) AS byt
-  FROM documents
-)
-SELECT doc_id, 16 AS width, 16 AS height,
-       3 + doc_id % 2 AS channels,
-       doc_id % 2 AS colorspace,
-       CAST(64 * byt[1] + list_sum(flatten(list_transform(range(4,16),
-          r -> list_transform(range(0,16), c -> (byt[c+1]+r)%256))))
-         AS BIGINT) AS sum_r,
-       CAST(64 * byt[2] + list_sum(flatten(list_transform(range(4,16),
-          r -> list_transform(range(0,16), c -> (byt[c+1]+r+1)%256))))
-         AS BIGINT) AS sum_g,
-       CAST(64 * byt[3] + list_sum(flatten(list_transform(range(4,16),
-          r -> list_transform(range(0,16), c -> (byt[c+1]+r+2)%256))))
-         AS BIGINT) AS sum_b,
-       CAST(CASE WHEN doc_id % 2 = 0 THEN 65280
-            ELSE list_sum(flatten(list_transform(range(0,16),
-               r -> list_transform(range(0,16),
-                 c -> byt[((r+c)%16)+1] + 1 - byt[((r+c)%16)+1] % 2))))
-       END AS BIGINT) AS sum_a
-FROM b
-"""
-
-
-def multimodal_bmp_decode(spark, sf_dir):
-    """REAL desktop-raster decode — Windows BMP
-    (:mod:`levi_spark.operators.bmp`), the screenshot/scan format a
-    crawl pipeline meets constantly, with its three classic
-    trip-wires: BOTTOM-UP row order, BGR byte order, and 4-byte row
-    padding (the 13-pixel width makes every row ragged). The layout
-    cycles by ``doc_id % 3`` through 24-bit bottom-up, 24-bit
-    TOP-DOWN (negative height — same image content, different byte
-    order on disk, so a reader that ignores the sign flips the image
-    and shifts nothing... except the oracle sums are row-dependent
-    ramps, so it DOES shift them), and 8-bit paletted BI_RLE8 (runs,
-    absolute-literal escapes, end-of-line/bitmap markers, palette
-    indirection). The oracle recomputes every channel sum from md5
-    arithmetic per layout. Scale shape: two Arrow-batched map-side
-    hops after the tiny input-spreading repartition; no
-    data-dependent shuffle, no driver loop."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    from levi_spark.operators.bmp import decode_bmp, encode_bmp
-
-    docs = _docs_parallel(spark, sf_dir)
-    H, W = 9, 13
-
-    def encode(batches):
-        for pdf in batches:
-            payloads, layouts = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = np.frombuffer(
-                    hashlib.md5(text.encode("utf-8")).digest(), np.uint8
-                ).astype(np.int64)
-                d = int(doc_id)
-                lay = d % 3
-                if lay < 2:
-                    r = np.arange(H)[:, None]
-                    c = np.arange(W)[None, :]
-                    img = np.stack(
-                        [
-                            (b[c % 16] + r) % 256,
-                            (b[(c + 3) % 16] + 2 * r) % 256,
-                            (b[(c + 7) % 16] + 3 * r) % 256,
-                        ],
-                        axis=2,
-                    ).astype(np.uint8)
-                    payloads.append(encode_bmp(img, top_down=lay == 1))
-                else:
-                    pal = np.stack(
-                        [b, (2 * b + 1) % 256, (3 * b + 2) % 256], axis=1
-                    ).astype(np.uint8)
-                    r = np.arange(H)[:, None]
-                    c = np.arange(W)[None, :]
-                    idx = np.where(r < 3, r, b[(r + c) % 16] % 16).astype(
-                        np.uint8
-                    )
-                    payloads.append(encode_bmp(idx, palette=pal, rle=True))
-                layouts.append(lay)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "layout": pd.Series(layouts, dtype="int64"),
-                }
-            )
-
-    bmps = docs.mapInPandas(encode, "doc_id long, payload binary, layout long")
-
-    def stats(batches):
-        for pdf in batches:
-            rows = []
-            for i, p, lay in zip(
-                pdf["doc_id"], pdf["payload"], pdf["layout"]
-            ):
-                img = decode_bmp(bytes(p))
-                s = img.astype(np.int64).sum(axis=(0, 1))
-                rows.append(
-                    {
-                        "doc_id": int(i),
-                        "layout": int(lay),
-                        "width": img.shape[1],
-                        "height": img.shape[0],
-                        "sum_r": int(s[0]),
-                        "sum_g": int(s[1]),
-                        "sum_b": int(s[2]),
-                    }
-                )
-            yield pd.DataFrame(rows).astype("int64")
-
-    return bmps.mapInPandas(
-        stats,
-        "doc_id long, layout long, width long, height long, "
-        "sum_r long, sum_g long, sum_b long",
-    )
-
-
-BMP_DECODE_SQL = """
-WITH b AS (
-  SELECT doc_id, list_transform(range(1,17),
-      i -> ('0x'||substr(md5(text),((i-1)*2+1)::INT,2))::BIGINT) AS byt
-  FROM documents
-),
-pix AS (
-  SELECT doc_id, byt,
-         flatten(list_transform(range(0,9), r -> list_transform(range(0,13),
-            c -> CASE WHEN r < 3 THEN r ELSE byt[((r+c)%16)+1] % 16 END)))
-           AS idx
-  FROM b
-)
-SELECT doc_id, doc_id % 3 AS layout, 13 AS width, 9 AS height,
-       CAST(CASE WHEN doc_id % 3 < 2
-         THEN list_sum(flatten(list_transform(range(0,9),
-              r -> list_transform(range(0,13),
-              c -> (byt[(c%16)+1]+r)%256))))
-         ELSE list_sum(list_transform(idx, i -> byt[i+1]))
-       END AS BIGINT) AS sum_r,
-       CAST(CASE WHEN doc_id % 3 < 2
-         THEN list_sum(flatten(list_transform(range(0,9),
-              r -> list_transform(range(0,13),
-              c -> (byt[((c+3)%16)+1]+2*r)%256))))
-         ELSE list_sum(list_transform(idx, i -> (2*byt[i+1]+1)%256))
-       END AS BIGINT) AS sum_g,
-       CAST(CASE WHEN doc_id % 3 < 2
-         THEN list_sum(flatten(list_transform(range(0,9),
-              r -> list_transform(range(0,13),
-              c -> (byt[((c+7)%16)+1]+3*r)%256))))
-         ELSE list_sum(list_transform(idx, i -> (3*byt[i+1]+2)%256))
-       END AS BIGINT) AS sum_b
-FROM pix
-"""
-
-
-def multimodal_aiff_decode(spark, sf_dir):
-    """REAL big-endian audio-container decode — AIFF
-    (:mod:`levi_spark.operators.aiff`), the Mac-corpus sibling of the
-    WAV gate with the two fields that break a WAV-shaped reader:
-    BIG-endian 16-bit PCM samples, and the sample rate as an 80-bit
-    IEEE EXTENDED float in COMM (decoded with exact integer
-    arithmetic — ``rate = mantissa >> (16446 - exponent)``). Eight
-    int16 samples derive from digest byte pairs
-    (``b[2j]*256 + b[2j+1] - 32768`` — a little-endian misread
-    scrambles every value), tiled 16x to 128 frames; odd docs go
-    STEREO with the right channel reading a rotated digest, and the
-    rate sweeps ``8000 + (doc_id % 7) * 1000`` so seven different
-    f80 encodings cross the gate. The oracle recomputes rate and
-    channel sums from md5 arithmetic in SQL. Scale shape: two
-    Arrow-batched map-side hops after the tiny input-spreading
-    repartition; no data-dependent shuffle, no driver loop."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    from levi_spark.operators.aiff import decode_aiff, encode_aiff
-
-    docs = _docs_parallel(spark, sf_dir)
-
-    def encode(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = np.frombuffer(
-                    hashlib.md5(text.encode("utf-8")).digest(), np.uint8
-                ).astype(np.int64)
-                d = int(doc_id)
-                s = (b[0::2] * 256 + b[1::2] - 32768).astype(np.int16)
-                left = np.tile(s, 16)
-                rate = 8000 + (d % 7) * 1000
-                if d % 2:
-                    right = np.tile(np.roll(s, -3), 16)
-                    payloads.append(
-                        encode_aiff(
-                            np.stack([left, right], axis=1), rate
-                        )
-                    )
-                else:
-                    payloads.append(encode_aiff(left, rate))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    aiffs = docs.mapInPandas(encode, "doc_id long, payload binary")
-
-    def stats(batches):
-        for pdf in batches:
-            rows = []
-            for i, p in zip(pdf["doc_id"], pdf["payload"]):
-                d = decode_aiff(bytes(p))
-                s = d["samples"].astype(np.int64)
-                left = s if d["channels"] == 1 else s[:, 0]
-                right = None if d["channels"] == 1 else s[:, 1]
-                rows.append(
-                    {
-                        "doc_id": int(i),
-                        "sample_rate": d["sample_rate"],
-                        "channels": d["channels"],
-                        "n_frames": d["n_frames"],
-                        "sum_left": int(left.sum()),
-                        "sum_abs_left": int(np.abs(left).sum()),
-                        "sum_right": 0 if right is None else int(right.sum()),
-                        "last_left": int(left[-1]),
-                        "last_right": 0 if right is None else int(right[-1]),
-                    }
-                )
-            yield pd.DataFrame(rows).astype("int64")
-
-    return aiffs.mapInPandas(
-        stats,
-        "doc_id long, sample_rate long, channels long, n_frames long, "
-        "sum_left long, sum_abs_left long, sum_right long, last_left long, "
-        "last_right long",
-    )
-
-
-AIFF_DECODE_SQL = """
-WITH b AS (
-  SELECT doc_id, list_transform(range(1,17),
-      i -> ('0x'||substr(md5(text),((i-1)*2+1)::INT,2))::BIGINT) AS byt
-  FROM documents
-),
-s AS (
-  SELECT doc_id, list_transform(range(0,8),
-      j -> byt[2*j+1]*256 + byt[2*j+2] - 32768) AS sm
-  FROM b
-)
-SELECT doc_id,
-       8000 + (doc_id % 7) * 1000 AS sample_rate,
-       1 + doc_id % 2 AS channels,
-       128 AS n_frames,
-       16 * CAST(list_sum(sm) AS BIGINT) AS sum_left,
-       16 * CAST(list_sum(list_transform(sm, v -> abs(v))) AS BIGINT)
-         AS sum_abs_left,
-       CAST(CASE WHEN doc_id % 2 = 0 THEN 0
-            ELSE 16 * list_sum(sm) END AS BIGINT) AS sum_right,
-       sm[8] AS last_left,
-       CAST(CASE WHEN doc_id % 2 = 0 THEN 0 ELSE sm[3] END AS BIGINT)
-         AS last_right
-FROM s
-"""
-
-
-def multimodal_tga_decode(spark, sf_dir):
-    """REAL game-asset raster decode — Truevision TGA
-    (:mod:`levi_spark.operators.tga`), the texture format 3D/game
-    corpora ship, with its own row-order/byte-order trip-wires:
-    BGR(A) pixel order, BOTTOM-UP rows by default with descriptor
-    bit 5 flipping to top-down, and the high-bit RLE packet coding.
-    The layout cycles by ``doc_id % 3`` through uncompressed 24-bit
-    bottom-up, uncompressed 32-bit TOP-DOWN (alpha plane + flipped
-    row order — the oracle sums are row-dependent ramps, so a
-    dropped descriptor bit shifts them), and RLE 24-bit (run packets
-    from the 2 constant top rows + literal packets from the digest
-    ramp). The oracle recomputes every channel sum from md5
-    arithmetic per layout. Scale shape: two Arrow-batched map-side
-    hops after the tiny input-spreading repartition; no
-    data-dependent shuffle, no driver loop."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    from levi_spark.operators.tga import decode_tga, encode_tga
-
-    docs = _docs_parallel(spark, sf_dir)
-    H, W = 11, 14
-
-    def encode(batches):
-        for pdf in batches:
-            payloads, layouts = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = np.frombuffer(
-                    hashlib.md5(text.encode("utf-8")).digest(), np.uint8
-                ).astype(np.int64)
-                d = int(doc_id)
-                lay = d % 3
-                r = np.arange(H)[:, None]
-                c = np.arange(W)[None, :]
-                R = np.where(r < 2, b[0], (b[c % 16] + 5 * r) % 256)
-                G = np.where(r < 2, b[1], (b[(c + 2) % 16] + r) % 256)
-                B = np.where(r < 2, b[2], (b[(c + 9) % 16] + 7 * r) % 256)
-                planes = [R, G, B]
-                if lay == 1:
-                    planes.append(
-                        np.where(r < 2, b[3] | 1, b[(r + 2 * c) % 16] | 1)
-                    )
-                img = np.stack(planes, axis=2).astype(np.uint8)
-                payloads.append(
-                    encode_tga(img, rle=lay == 2, top_down=lay == 1)
-                )
-                layouts.append(lay)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "layout": pd.Series(layouts, dtype="int64"),
-                }
-            )
-
-    tgas = docs.mapInPandas(encode, "doc_id long, payload binary, layout long")
-
-    def stats(batches):
-        for pdf in batches:
-            rows = []
-            for i, p, lay in zip(
-                pdf["doc_id"], pdf["payload"], pdf["layout"]
-            ):
-                img = decode_tga(bytes(p))
-                s = img.astype(np.int64).sum(axis=(0, 1))
-                rows.append(
-                    {
-                        "doc_id": int(i),
-                        "layout": int(lay),
-                        "width": img.shape[1],
-                        "height": img.shape[0],
-                        "channels": img.shape[2],
-                        "sum_r": int(s[0]),
-                        "sum_g": int(s[1]),
-                        "sum_b": int(s[2]),
-                        "sum_a": int(s[3]) if img.shape[2] == 4 else 0,
-                    }
-                )
-            yield pd.DataFrame(rows).astype("int64")
-
-    return tgas.mapInPandas(
-        stats,
-        "doc_id long, layout long, width long, height long, channels long, "
-        "sum_r long, sum_g long, sum_b long, sum_a long",
-    )
-
-
-TGA_DECODE_SQL = """
-WITH b AS (
-  SELECT doc_id, list_transform(range(1,17),
-      i -> ('0x'||substr(md5(text),((i-1)*2+1)::INT,2))::BIGINT) AS byt
-  FROM documents
-)
-SELECT doc_id, doc_id % 3 AS layout, 14 AS width, 11 AS height,
-       CASE WHEN doc_id % 3 = 1 THEN 4 ELSE 3 END AS channels,
-       CAST(28 * byt[1] + list_sum(flatten(list_transform(range(2,11),
-          r -> list_transform(range(0,14),
-          c -> (byt[(c%16)+1]+5*r)%256)))) AS BIGINT) AS sum_r,
-       CAST(28 * byt[2] + list_sum(flatten(list_transform(range(2,11),
-          r -> list_transform(range(0,14),
-          c -> (byt[((c+2)%16)+1]+r)%256)))) AS BIGINT) AS sum_g,
-       CAST(28 * byt[3] + list_sum(flatten(list_transform(range(2,11),
-          r -> list_transform(range(0,14),
-          c -> (byt[((c+9)%16)+1]+7*r)%256)))) AS BIGINT) AS sum_b,
-       CAST(CASE WHEN doc_id % 3 != 1 THEN 0
-         ELSE 28 * (byt[4] + 1 - byt[4] % 2)
-              + list_sum(flatten(list_transform(range(2,11),
-                r -> list_transform(range(0,14),
-                c -> byt[((r+2*c)%16)+1] + 1 - byt[((r+2*c)%16)+1] % 2))))
-       END AS BIGINT) AS sum_a
-FROM b
-"""
-
-
 def multimodal_flac_stereo_decode(spark, sf_dir):
     """STEREO-DECORRELATED FLAC decode — the round-6 verdict's FLAC
     seam (`operators/flac.py` refused left/right/mid-side, the channel
@@ -13937,115 +13481,6 @@ FROM customer
 WHERE NOT (c_acctbal < 0.0)
 GROUP BY c_mktsegment
 ORDER BY c_mktsegment
-"""
-
-
-def multimodal_au_decode(spark, sf_dir):
-    """REAL telephony-container decode — Sun AU / ``.snd``
-    (:mod:`levi_spark.operators.au`), the ``audio/basic`` framing
-    voicemail and call-center corpora arrive in: a big-endian header
-    (magic, data offset, size, encoding id, rate, channels) with an
-    annotation gap the offset must skip. Each document's digest
-    expands through the G.711 mu-law map into int16 samples and goes
-    out through a doc-rotating encoding — PCM16 big-endian, mu-law
-    (re-companded: the quantization levels are fixed points, so
-    values round-trip exactly), PCM8 (top byte, arithmetic-shift
-    floor semantics) — mono or interleaved stereo, with a doc-sized
-    annotation. The oracle recomputes every decoded sample from the
-    closed-form mu-law expansion in SQL and applies the same
-    floor-by-256 for PCM8 — a header offset that ignores the
-    annotation, a little-endian PCM16 read, or a truncating (not
-    flooring) PCM8 shift cannot match. Scale shape: two
-    Arrow-batched map-side hops after the tiny input-spreading
-    repartition; no data-dependent shuffle, no driver loop."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    from levi_spark.operators.adpcm import mulaw_expand
-    from levi_spark.operators.au import decode_au, encode_au
-
-    docs = _docs_parallel(spark, sf_dir)
-    encodings = ["pcm16", "ulaw", "pcm8"]
-
-    def encode(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                digest = hashlib.md5(text.encode("utf-8")).digest()
-                codes = np.tile(np.frombuffer(digest, np.uint8), 4)
-                s = mulaw_expand(codes).astype(np.int16)
-                ch = 1 + d % 2
-                payloads.append(
-                    encode_au(
-                        s.reshape(-1, ch),
-                        rate=8000 * (1 + d % 2),
-                        encoding=encodings[d % 3],
-                        annotation=b"x" * (d % 5),
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    aus = docs.mapInPandas(encode, "doc_id long, payload binary")
-
-    cols = [
-        "doc_id", "rate", "channels", "n_frames", "sum_samples", "sum_abs",
-    ]
-
-    def stats(batches):
-        for pdf in batches:
-            rows = []
-            for i, p in zip(pdf["doc_id"], pdf["payload"]):
-                out = decode_au(bytes(p))
-                sm = out["samples"].astype(np.int64)
-                rows.append(
-                    {
-                        "doc_id": int(i),
-                        "rate": out["rate"],
-                        "channels": out["channels"],
-                        "n_frames": sm.shape[0],
-                        "sum_samples": int(sm.sum()),
-                        "sum_abs": int(np.abs(sm).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=cols).astype("int64")
-
-    return aus.mapInPandas(stats, ", ".join(f"{c} long" for c in cols))
-
-
-AU_DECODE_SQL = """
-WITH b AS (
-  SELECT doc_id, list_transform(range(1,17),
-      i -> ('0x'||substr(md5(text),((i-1)*2+1)::INT,2))::BIGINT) AS byt
-  FROM documents
-),
-s AS (
-  SELECT doc_id, list_transform(byt, x ->
-    CASE WHEN 255 - x >= 128
-         THEN -(((2*((255-x)%16)+33) * (1 << (((255-x)//16)%8))) - 33)
-         ELSE ((2*((255-x)%16)+33) * (1 << (((255-x)//16)%8))) - 33
-    END) AS e
-  FROM b
-),
-v AS (  -- decoded values after the doc's encoding round trip
-  SELECT doc_id,
-    CASE WHEN doc_id % 3 = 2
-         -- pcm8: int16 >> 8 is an ARITHMETIC shift = true floor;
-         -- DuckDB's // truncates toward zero, so floor explicitly
-         THEN list_transform(e,
-              x -> CAST(floor(x / 256.0) AS BIGINT) * 256)
-         ELSE e END AS sm
-  FROM s
-)
-SELECT doc_id,
-  CAST(8000 * (1 + doc_id % 2) AS BIGINT) AS rate,
-  CAST(1 + doc_id % 2 AS BIGINT) AS channels,
-  CAST(64 // (1 + doc_id % 2) AS BIGINT) AS n_frames,
-  CAST(4 * list_sum(sm) AS BIGINT) AS sum_samples,
-  CAST(4 * list_sum(list_transform(sm, x -> abs(x))) AS BIGINT) AS sum_abs
-FROM v
 """
 
 
@@ -16919,218 +16354,6 @@ ORDER BY day_s, event_type
 """
 
 
-def midi_event_census(spark, sf_dir):
-    """SYMBOLIC-MUSIC ingestion — Standard MIDI File parsing
-    (:mod:`levi_spark.operators.midi`): every public score/piano
-    dataset ships as ``.mid``, and indexing one means big-endian
-    7-bit VARINTS (the reverse bit order of protobuf's — both now
-    owned), RUNNING STATUS (status bytes omitted after repeats; a
-    parser that misses it desyncs), and TEMPO-MAP integration
-    (microseconds = ticks x us-per-quarter segments / division).
-    Each document builds a format-1 file — a conductor track with
-    two tempo events and a note track whose deltas, pitches, and
-    velocities derive from md5 — with running status ON, and the
-    census walks it strictly. The oracle re-derives note sums,
-    tick spans, and the two-segment tempo integral from md5/doc_id
-    arithmetic: a varint read off by one bit, a skipped running-
-    status note, or a tempo segment attributed to the wrong span
-    all shift a sum and cannot match. Scale shape: two
-    Arrow-batched map-side hops after the tiny input-spreading
-    repartition; no data-dependent shuffle, no driver loop."""
-    import hashlib
-
-    import pandas as pd
-
-    from levi_spark.operators.midi import build_midi, midi_event_stats
-
-    docs = _docs_parallel(spark, sf_dir)
-
-    def encode(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = hashlib.md5(text.encode("utf-8")).digest()
-                d = int(doc_id)
-                t1_tick = 50 * (1 + d % 7)
-                t0 = [
-                    (0, "tempo", 300_000 + b[0] * 500),
-                    (t1_tick, "tempo", 200_000 + b[1] * 500),
-                ]
-                evs = []
-                for i in range(4 + d % 5):
-                    evs.append(
-                        (b[i % 16] % 128, "on", i % 16,
-                         b[(i + 1) % 16] % 128, 1 + b[(i + 2) % 16] % 127)
-                    )
-                    evs.append(
-                        (b[(i + 3) % 16] % 64 + 1, "off", i % 16,
-                         b[(i + 1) % 16] % 128, 0)
-                    )
-                payloads.append(
-                    build_midi([t0, evs], division=240 + (d % 4) * 120)
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    mids = docs.mapInPandas(encode, "doc_id long, payload binary")
-
-    cols = [
-        "doc_id", "fmt", "n_tracks", "division", "n_notes", "sum_pitch",
-        "sum_velocity", "max_tick", "n_tempo_changes", "duration_us",
-    ]
-
-    def stats(batches):
-        for pdf in batches:
-            rows = []
-            for i, p in zip(pdf["doc_id"], pdf["payload"]):
-                c = midi_event_stats(bytes(p))
-                c["doc_id"] = int(i)
-                rows.append(c)
-            yield pd.DataFrame(rows, columns=cols).astype("int64")
-
-    return mids.mapInPandas(stats, ", ".join(f"{c} long" for c in cols))
-
-
-MIDI_CENSUS_SQL = """
-WITH b AS (
-  SELECT doc_id, list_transform(range(1,17),
-      i -> ('0x'||substr(md5(text),((i-1)*2+1)::INT,2))::BIGINT) AS byt,
-    4 + doc_id % 5 AS n,
-    240 + (doc_id % 4) * 120 AS division,
-    50 * (1 + doc_id % 7) AS t1
-  FROM documents
-), agg AS (
-  SELECT doc_id, n, division, t1,
-    300000 + byt[1] * 500 AS v0,
-    200000 + byt[2] * 500 AS v1,
-    list_sum(list_transform(range(0, n::INT),
-      i -> byt[(i % 16) + 1] % 128
-         + byt[((i + 3) % 16) + 1] % 64 + 1)) AS note_ticks,
-    list_sum(list_transform(range(0, n::INT),
-      i -> byt[((i + 1) % 16) + 1] % 128)) AS sum_pitch,
-    list_sum(list_transform(range(0, n::INT),
-      i -> 1 + byt[((i + 2) % 16) + 1] % 127)) AS sum_velocity
-  FROM b
-)
-SELECT doc_id, 1 AS fmt, 2 AS n_tracks,
-  CAST(division AS BIGINT) AS division,
-  CAST(n AS BIGINT) AS n_notes,
-  CAST(sum_pitch AS BIGINT) AS sum_pitch,
-  CAST(sum_velocity AS BIGINT) AS sum_velocity,
-  CAST(greatest(note_ticks, t1) AS BIGINT) AS max_tick,
-  2 AS n_tempo_changes,
-  CAST((least(t1, greatest(note_ticks, t1)) * v0
-        + greatest(greatest(note_ticks, t1) - t1, 0) * v1)
-       // division AS BIGINT) AS duration_us
-FROM agg
-"""
-
-
-def mp3_frame_census_stats(spark, sf_dir):
-    """MP3 FRAMING census — the honest indexing slice of the refused
-    MP3-decode seam (:mod:`levi_spark.operators.mp3`): an audio-shard
-    pipeline must know per blob how many frames, samples, and bytes
-    of actual audio it holds, whether it is CBR or VBR, and where the
-    ID3 tags sit — all pure ISO/IEC 11172-3 header arithmetic, no
-    psychoacoustic decode. Each document synthesizes an MP3 whose
-    frame count, per-frame bitrate indices, padding bits, sample
-    rate, and ID3v2 tag size all derive from md5/doc_id arithmetic,
-    and the census walks it STRICTLY: the Layer III frame-size
-    formula (``144 * bitrate / rate + padding``) must land every
-    frame boundary exactly or the walk desyncs and raises — so a
-    hash match proves the size arithmetic, the syncsafe ID3 skip,
-    and the trailing-TAG handling all at once. Scale shape: two
-    Arrow-batched map-side hops after the tiny input-spreading
-    repartition; no data-dependent shuffle, no driver loop."""
-    import hashlib
-
-    import pandas as pd
-
-    from levi_spark.operators.mp3 import build_mp3, mp3_frame_census
-
-    docs = _docs_parallel(spark, sf_dir)
-
-    def encode(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = hashlib.md5(text.encode("utf-8")).digest()
-                d = int(doc_id)
-                frames = [
-                    (1 + b[i % 16] % 14, b[(i + 3) % 16] % 2)
-                    for i in range(3 + d % 4)
-                ]
-                payloads.append(
-                    build_mp3(
-                        frames,
-                        rate_index=d % 3,
-                        id3v2_payload=b"t" * ((d % 5) * 3),
-                        id3v1=d % 2 == 1,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    mp3s = docs.mapInPandas(encode, "doc_id long, payload binary")
-
-    def stats(batches):
-        for pdf in batches:
-            rows = []
-            for i, p in zip(pdf["doc_id"], pdf["payload"]):
-                c = mp3_frame_census(bytes(p))
-                c["doc_id"] = int(i)
-                rows.append(c)
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_frames", "n_samples", "sum_bitrate_kbps",
-                    "n_padded", "is_vbr", "sample_rate", "audio_bytes",
-                    "id3v2_bytes", "id3v1_bytes",
-                ],
-            ).astype("int64")
-
-    return mp3s.mapInPandas(
-        stats,
-        "doc_id long, n_frames long, n_samples long, "
-        "sum_bitrate_kbps long, n_padded long, is_vbr long, "
-        "sample_rate long, audio_bytes long, id3v2_bytes long, "
-        "id3v1_bytes long",
-    )
-
-
-MP3_CENSUS_SQL = """
-WITH b AS (
-  SELECT doc_id, list_transform(range(1,17),
-      i -> ('0x'||substr(md5(text),((i-1)*2+1)::INT,2))::BIGINT) AS byt,
-    3 + doc_id % 4 AS n,
-    [44100, 48000, 32000][(doc_id % 3)::INT + 1] AS rate
-  FROM documents
-), f AS (
-  SELECT doc_id, n, rate,
-    list_transform(range(0, n::INT),
-      i -> [0,32,40,48,56,64,80,96,112,128,160,192,224,256,320]
-           [(1 + byt[(i % 16) + 1] % 14)::INT + 1]) AS kbps,
-    list_transform(range(0, n::INT),
-      i -> byt[((i + 3) % 16) + 1] % 2) AS pads
-  FROM b
-)
-SELECT doc_id,
-  CAST(n AS BIGINT) AS n_frames,
-  CAST(n * 1152 AS BIGINT) AS n_samples,
-  CAST(list_sum(kbps) AS BIGINT) AS sum_bitrate_kbps,
-  CAST(list_sum(pads) AS BIGINT) AS n_padded,
-  CAST(CASE WHEN len(list_distinct(kbps)) > 1 THEN 1 ELSE 0 END
-       AS BIGINT) AS is_vbr,
-  CAST(rate AS BIGINT) AS sample_rate,
-  CAST(list_sum(list_transform(range(0, n::INT),
-      i -> 144 * kbps[i+1] * 1000 // rate + pads[i+1])) AS BIGINT)
-    AS audio_bytes,
-  CAST(CASE WHEN doc_id % 5 = 0 THEN 0
-            ELSE 10 + (doc_id % 5) * 3 END AS BIGINT) AS id3v2_bytes,
-  CAST(CASE WHEN doc_id % 2 = 1 THEN 128 ELSE 0 END AS BIGINT)
-    AS id3v1_bytes
-FROM f
-"""
-
-
 def multimodal_webp_decode(spark, sf_dir):
     """REAL web-image decode — WebP lossless / VP8L
     (:mod:`levi_spark.operators.webp`), the format that outnumbers
@@ -17851,127 +17074,6 @@ FROM b
 """
 
 
-def multimodal_ico_decode(spark, sf_dir):
-    """REAL icon-container decode — Windows ICO
-    (:mod:`levi_spark.operators.ico`), the ``/favicon.ico`` every web
-    crawl downloads from effectively every domain. Each document
-    becomes a TWO-entry icon: a 16x16 double-height DIB (bottom-up
-    BGR XOR plane + the 1-bit MSB-first AND mask, each mask row
-    padded to 32 bits — the three classic DIB trip-wires in one
-    entry) and an 8x8 PNG entry (the Vista+ extension, full PNG
-    stream with per-chunk CRCs). The oracle recomputes every channel
-    sum and the mask popcount from md5 arithmetic — a flipped mask
-    bit, a missed double-height halving, or BGR read as RGB all shift
-    a sum and cannot match. Scale shape: two Arrow-batched map-side
-    hops after the tiny input-spreading repartition; no
-    data-dependent shuffle, no driver loop."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    from levi_spark.operators.ico import decode_ico, encode_ico
-
-    docs = _docs_parallel(spark, sf_dir)
-
-    def encode(batches):
-        for pdf in batches:
-            payloads = []
-            for text in pdf["text"]:
-                b = np.frombuffer(
-                    hashlib.md5(text.encode("utf-8")).digest(), np.uint8
-                ).astype(np.int64)
-                r = np.arange(16)[:, None]
-                c = np.arange(16)[None, :]
-                dib = np.stack(
-                    [
-                        (b[c] + r) % 256,
-                        (b[c] + 2 * r) % 256,
-                        (b[c] + 3 * r) % 256,
-                    ],
-                    axis=2,
-                ).astype(np.uint8)
-                mask = ((b[c] + r) % 3 == 0).astype(np.uint8)
-                r8 = np.arange(8)[:, None]
-                c8 = np.arange(8)[None, :]
-                v = (3 * b[(r8 + c8) % 16] + r8) % 256
-                png = np.stack(
-                    [v, 255 - v, (v + 128) % 256], axis=2
-                ).astype(np.uint8)
-                payloads.append(
-                    encode_ico([("dib", dib, mask), ("png", png, None)])
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    icos = docs.mapInPandas(encode, "doc_id long, payload binary")
-
-    def stats(batches):
-        for pdf in batches:
-            rows = []
-            for i, p in zip(pdf["doc_id"], pdf["payload"]):
-                entries = decode_ico(bytes(p))
-                if len(entries) != 2 or [e["kind"] for e in entries] != [
-                    "dib",
-                    "png",
-                ]:
-                    raise ValueError(
-                        f"doc {i}: unexpected ICO layout {entries!r}"
-                    )
-                ds = entries[0]["pixels"].astype(np.int64).sum(axis=(0, 1))
-                ps = entries[1]["pixels"].astype(np.int64).sum(axis=(0, 1))
-                rows.append(
-                    {
-                        "doc_id": int(i),
-                        "n_entries": 2,
-                        "dib_sum_r": int(ds[0]),
-                        "dib_sum_g": int(ds[1]),
-                        "dib_sum_b": int(ds[2]),
-                        "dib_mask_ones": int(entries[0]["mask"].sum()),
-                        "png_sum_r": int(ps[0]),
-                        "png_sum_g": int(ps[1]),
-                        "png_sum_b": int(ps[2]),
-                    }
-                )
-            yield pd.DataFrame(rows).astype("int64")
-
-    return icos.mapInPandas(
-        stats,
-        "doc_id long, n_entries long, dib_sum_r long, dib_sum_g long, "
-        "dib_sum_b long, dib_mask_ones long, png_sum_r long, "
-        "png_sum_g long, png_sum_b long",
-    )
-
-
-ICO_DECODE_SQL = """
-WITH b AS (
-  SELECT doc_id, list_transform(range(1,17),
-      i -> ('0x'||substr(md5(text),((i-1)*2+1)::INT,2))::BIGINT) AS byt
-  FROM documents
-), g AS (
-  SELECT doc_id,
-    flatten(list_transform(range(0,16), r -> list_transform(range(0,16),
-      c -> byt[c+1] + r))) AS d1,
-    flatten(list_transform(range(0,16), r -> list_transform(range(0,16),
-      c -> byt[c+1] + 2*r))) AS d2,
-    flatten(list_transform(range(0,16), r -> list_transform(range(0,16),
-      c -> byt[c+1] + 3*r))) AS d3,
-    flatten(list_transform(range(0,8), r -> list_transform(range(0,8),
-      c -> (3*byt[((r+c)%16)+1] + r) % 256))) AS pv
-  FROM b
-)
-SELECT doc_id, 2 AS n_entries,
-  CAST(list_sum(list_transform(d1, x -> x % 256)) AS BIGINT) AS dib_sum_r,
-  CAST(list_sum(list_transform(d2, x -> x % 256)) AS BIGINT) AS dib_sum_g,
-  CAST(list_sum(list_transform(d3, x -> x % 256)) AS BIGINT) AS dib_sum_b,
-  CAST(len(list_filter(d1, x -> x % 3 = 0)) AS BIGINT) AS dib_mask_ones,
-  CAST(list_sum(pv) AS BIGINT) AS png_sum_r,
-  CAST(list_sum(list_transform(pv, v -> 255 - v)) AS BIGINT) AS png_sum_g,
-  CAST(list_sum(list_transform(pv, v -> (v + 128) % 256)) AS BIGINT)
-    AS png_sum_b
-FROM g
-"""
-
-
 # Registry order is load-bearing: the driver's correctness gate runs the
 # FIRST 50 entries only, so each round the first 50 slots rotate to
 # whatever most needs a fresh driver row: queries with no row yet,
@@ -18116,14 +17218,13 @@ QUERIES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] 
     #    derivation, ADVICE fix) — its gated consumer re-gates here
     "dedup_canonical_corpus": (dedup_canonical_corpus, CANONICAL_SQL),
     # -- ROUND 8 second-half additions, slots 1-22 (lead the window:
-    #    never driver-gated) — ICO container, Delta .crc checksums,
-    #    PDF text layer, CDC chunk dedup, binary-quant ANN, gap fill,
-    #    SRT/VTT, WebP/VP8L (8 encoder variants incl. the color
-    #    transform), MP3 framing census, SMF/MIDI, chained stateful
-    #    streaming agg, HTML boilerplate removal, CBOR, dyadic EWMA,
-    #    Arrow IPC, liquid clustering (with OPTIMIZE recluster),
-    #    from-scratch DEFLATE, parquet footer census + first-
-    #    principles column reads, CSV + ORC round trips, Sun AU. The reshaped
+    #    never driver-gated) — Delta .crc checksums, PDF text layer,
+    #    CDC chunk dedup, binary-quant ANN, gap fill, SRT/VTT,
+    #    WebP/VP8L (8 encoder variants incl. the color transform),
+    #    chained stateful streaming agg, HTML boilerplate removal,
+    #    CBOR, dyadic EWMA, Arrow IPC, liquid clustering (with OPTIMIZE
+    #    recluster), from-scratch DEFLATE, parquet footer census +
+    #    first-principles column reads, CSV + ORC round trips. The reshaped
     #    archive_extract_members (now five framings incl.
     #    tar.xz/tar.bz2) sits in the round-7 block below; the
     #    first-half round-8 queries follow at 23+, keeping the whole
@@ -18153,8 +17254,8 @@ QUERIES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] 
     "parquet_column_read": (parquet_column_read, PARQUET_COLUMN_SQL),
     "orc_roundtrip_counts": (orc_roundtrip_counts, ORC_ROUNDTRIP_SQL),
     # -- ROUND 8 slots: NEW this round (collated reads, coordinated
-    #    commits, Avro/TFRecord ingestion, QOI/BMP/AIFF/TGA codec gates,
-    #    sitemap, type widening, FULL OUTER stream join) ----------------
+    #    commits, Avro/TFRecord ingestion, sitemap, type widening,
+    #    FULL OUTER stream join) -----------------------------------------
     "collated_groupby_counts": (collated_groupby_counts, COLLATED_GROUPBY_SQL),
     "coordinated_commits_counts": (
         coordinated_commits_counts,
@@ -18363,30 +17464,19 @@ QUERIES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] 
 }
 
 # Retired from the driver registry in round 10, executing the README
-# "Registry cost policy": fringe single-format codec gates and
-# mode-variant gates whose codec family keeps a stronger registered
-# witness. Everything here stays FULLY gated by pytest — the oracle
-# parity suite runs RETIRED_QUERIES with the same strict compare as the
-# registry (tests/test_oracle_parity.py), so the round-1..9 union-green
-# invariant continues to hold for these names via pytest rather than
-# the driver window. Witnesses kept in the registry per family:
-# still image  -> png, jpeg (baseline), jpeg_prog_sa (progressive),
-#                 webp (VP8L), gif (LZW), tiff (container)
-# audio        -> flac_lpc + flac_stereo (supersede plain flac/wav/
-#                 aiff/au/adpcm/g711 PCM-family gates)
-# video        -> mjpeg_avi, mpeg1, frame_sample
-# container    -> archive_extract_members, warc_extract_records
+# "Registry cost policy": mode-variant codec gates whose family keeps a
+# stronger registered witness. Each codec here still backs registered
+# queries or the multimodal decoder seams, so its gate stays FULLY
+# checked by pytest — the oracle parity suite runs RETIRED_QUERIES with
+# the same strict compare as the registry (tests/test_oracle_parity.py).
+# Witnesses kept in the registry per family:
+# still image  -> png, jpeg (baseline), jpeg_prog_sa (progressive);
+#                 they supersede the jpeg420, jpeg_prog and ppm gates
+# audio        -> flac_lpc + flac_stereo; they supersede the plain
+#                 flac, wav, adpcm and g711 gates
 RETIRED_QUERIES: dict[
     str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
 ] = {
-    "multimodal_ico_decode": (multimodal_ico_decode, ICO_DECODE_SQL),
-    "mp3_frame_census_stats": (mp3_frame_census_stats, MP3_CENSUS_SQL),
-    "midi_event_census": (midi_event_census, MIDI_CENSUS_SQL),
-    "multimodal_au_decode": (multimodal_au_decode, AU_DECODE_SQL),
-    "multimodal_qoi_decode": (multimodal_qoi_decode, QOI_DECODE_SQL),
-    "multimodal_bmp_decode": (multimodal_bmp_decode, BMP_DECODE_SQL),
-    "multimodal_aiff_decode": (multimodal_aiff_decode, AIFF_DECODE_SQL),
-    "multimodal_tga_decode": (multimodal_tga_decode, TGA_DECODE_SQL),
     "multimodal_adpcm_decode": (multimodal_adpcm_decode, ADPCM_DECODE_SQL),
     "multimodal_g711_decode": (multimodal_g711_decode, G711_DECODE_SQL),
     "multimodal_jpeg420_decode": (multimodal_jpeg420_decode, JPEG420_DECODE_SQL),

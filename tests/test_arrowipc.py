@@ -177,3 +177,24 @@ def test_file_format_refusals():
 
     with pytest.raises(ValueError, match="magic"):
         decode_arrow_file(b"NOTARROWNOTARROW")
+
+
+def test_arrowipc_empty_pyarrow_batch_decodes():
+    """pyarrow emits a zero-length offsets buffer for an empty utf8
+    column; the reader must not unpack a phantom first offset."""
+    schema = pa.schema([("k", pa.int64()), ("s", pa.utf8())])
+    empty = pa.record_batch(
+        [pa.array([], pa.int64()), pa.array([], pa.utf8())], schema=schema
+    )
+    full = pa.record_batch(
+        [pa.array([1, 2], pa.int64()), pa.array(["a", "bb"], pa.utf8())],
+        schema=schema,
+    )
+    sink = io.BytesIO()
+    with pa.ipc.new_stream(sink, schema) as wr:
+        wr.write_batch(empty)
+        wr.write_batch(full)
+    schema_out, cols = decode_arrow_ipc(sink.getvalue())
+    assert [n for n, _ in schema_out] == ["k", "s"]
+    assert cols["k"] == [1, 2]
+    assert cols["s"] == ["a", "bb"]

@@ -165,3 +165,99 @@ def test_gzip_strictness():
         gzip_unwrap(bytes(blob))
     with pytest.raises(ValueError, match="not gzip"):
         gzip_unwrap(b"PKzip")
+
+
+def test_inflate_accepts_empty_distance_code():
+    """Hand-built dynamic block: two literal symbols (65, 256) of
+    length 1, ONE distance code of zero bits (all HDIST lengths 0) —
+    legal per §3.2.7, previously rejected at table-build time."""
+    from levi_spark.operators.deflate import _BitsW
+
+    w = _BitsW()
+    w.bits(1, 1)  # BFINAL
+    w.bits(2, 2)  # BTYPE = dynamic
+    w.bits(0, 5)  # HLIT  = 257
+    w.bits(0, 5)  # HDIST = 1
+    w.bits(14, 4)  # HCLEN = 18
+    # code-length code lengths in _CL_ORDER positions 0..17:
+    # sym18 -> 1, sym0 -> 2, sym1 -> 2, rest 0
+    cl = {18: 1, 0: 2, 1: 2}
+    order = [16, 17, 18, 0, 8, 7, 9, 6, 10, 5, 11, 4, 12, 3, 13, 2,
+             14, 1]
+    for s in order:
+        w.bits(cl.get(s, 0), 3)
+    # canonical codes: 18 -> 0 (1 bit), 0 -> 10, 1 -> 11 (2 bits)
+    def cl_emit(sym):
+        if sym == 18:
+            w.code(0, 1)
+        elif sym == 0:
+            w.code(0b10, 2)
+        else:
+            w.code(0b11, 2)
+
+    # 257 lit lengths + 1 dist length:
+    cl_emit(18); w.bits(65 - 11, 7)    # 65 zeros
+    cl_emit(1)                          # sym 65 'A' -> length 1
+    cl_emit(18); w.bits(138 - 11, 7)   # 138 zeros
+    cl_emit(18); w.bits(52 - 11, 7)    # 52 zeros  (66..255 done)
+    cl_emit(1)                          # sym 256 -> length 1
+    cl_emit(0)                          # the single dist length: 0
+    # data: lit code is {65: 0, 256: 1}, 1 bit each
+    for _ in range(5):
+        w.code(0, 1)  # 'A'
+    w.code(1, 1)  # end of block
+    stream = w.done()
+    assert inflate(stream) == b"AAAAA"
+    # cross-check: zlib accepts the same stream
+    assert zlib.decompressobj(-15).decompress(stream) == b"AAAAA"
+
+
+def test_inflate_still_rejects_length_code_with_empty_dist():
+    """If a block declares an empty distance code but then emits a
+    length code, that IS invalid — the error is deferred, not lost.
+    Built with HLIT=258 so symbol 257 (a length code) is in the lit
+    alphabet while the distance code stays empty."""
+    from levi_spark.operators import deflate as D
+
+    cl = {18: 1, 0: 2, 1: 2}
+    order = [16, 17, 18, 0, 8, 7, 9, 6, 10, 5, 11, 4, 12, 3, 13, 2,
+             14, 1]
+    w2 = D._BitsW()
+    w2.bits(1, 1)
+    w2.bits(2, 2)
+    w2.bits(1, 5)   # HLIT = 258 (includes sym 257)
+    w2.bits(0, 5)   # HDIST = 1
+    w2.bits(14, 4)
+    for s in order:
+        w2.bits(cl.get(s, 0), 3)
+
+    def cl2(sym):
+        if sym == 18:
+            w2.code(0, 1)
+        elif sym == 0:
+            w2.code(0b10, 2)
+        else:
+            w2.code(0b11, 2)
+
+    cl2(18); w2.bits(138 - 11, 7)  # 138 zeros
+    cl2(18); w2.bits(118 - 11, 7)  # 118 zeros (syms 0..255)
+    cl2(1)                          # sym 256 len 1
+    cl2(1)                          # sym 257 len 1  (a LENGTH code)
+    cl2(0)                          # dist: single zero length
+    # canonical lit: 256 -> 0, 257 -> 1
+    w2.code(1, 1)  # emit sym 257: length 3, needs a distance -> boom
+    with pytest.raises(ValueError, match="distance code is empty"):
+        D.inflate(w2.done())
+
+
+def test_len_code_258_uses_code_285():
+    """Length 258 must emit code 285 (0 extra bits), not code 284 +
+    extra 31."""
+    from levi_spark.operators.deflate import _len_code
+
+    assert _len_code(258) == (285, 0, 0)
+    assert _len_code(257) == (284, 5, 30)
+    data = b"Q" * 600  # forces max-length matches
+    enc = deflate(data)
+    assert inflate(enc) == data
+    assert zlib.decompressobj(-15).decompress(enc) == data

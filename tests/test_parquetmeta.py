@@ -245,3 +245,59 @@ def test_parquet_column_read_plans_on_a_directory(spark, testdata_dir, tmp_path)
     assert df.columns == [
         "n_rows", "sum_key", "n_null_price", "sum_price", "prio_chars",
     ]
+
+
+def test_required_column_reads_without_level_block(tmp_path):
+    """A REQUIRED (non-nullable) column carries no def-level block in
+    v1 data pages; the reader must not eat 4 value bytes as one."""
+    from levi_spark.operators.parquetmeta import read_column, read_footer
+
+    t = pa.table(
+        {
+            "k": pa.array(range(50), pa.int64()),
+            "x": pa.array([i * 0.5 for i in range(50)], pa.float64()),
+            "s": pa.array([f"s{i}" for i in range(50)], pa.utf8()),
+        },
+        schema=pa.schema(
+            [
+                pa.field("k", pa.int64(), nullable=False),
+                pa.field("x", pa.float64(), nullable=False),
+                pa.field("s", pa.utf8(), nullable=False),
+            ]
+        ),
+    )
+    p = str(tmp_path / "req.parquet")
+    pq.write_table(t, p, compression="none", use_dictionary=False,
+                   data_page_version="1.0")
+    f = read_footer(p)
+    assert f["levels"]["k"] == (0, 0)
+    for col in ("k", "x", "s"):
+        assert read_column(p, col) == t.column(col).to_pylist()
+
+
+def test_mixed_required_and_optional_levels(tmp_path):
+    """A REQUIRED and an OPTIONAL column side by side: only the OPTIONAL
+    one carries a def-level block."""
+    from levi_spark.operators.parquetmeta import read_column, read_footer
+
+    t = pa.table(
+        {
+            "r": pa.array(range(20), pa.int64()),
+            "o": pa.array(
+                [None if i % 3 == 0 else i for i in range(20)], pa.int64()
+            ),
+        },
+        schema=pa.schema(
+            [
+                pa.field("r", pa.int64(), nullable=False),
+                pa.field("o", pa.int64(), nullable=True),
+            ]
+        ),
+    )
+    p = str(tmp_path / "mix.parquet")
+    pq.write_table(t, p, compression="snappy", use_dictionary=False,
+                   data_page_version="1.0")
+    f = read_footer(p)
+    assert f["levels"] == {"r": (0, 0), "o": (1, 0)}
+    assert read_column(p, "r") == list(range(20))
+    assert read_column(p, "o") == t.column("o").to_pylist()

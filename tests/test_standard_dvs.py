@@ -396,3 +396,42 @@ def test_standard_delete_bumps_protocol(spark, tmp_path):
     ]
     assert protos and protos[0]["minReaderVersion"] == 3
     assert "deletionVectors" in protos[0]["readerFeatures"]
+
+
+@pytest.mark.parametrize("case", ["one_file", "two_files"])
+def test_soft_delete_removed_files_keep_no_dv_file(spark, tmp_path, case):
+    """A file whose every row is deleted becomes a plain remove: no
+    deletion_vector_*.bin is left behind for it, and a commit that
+    leaves no DV live keeps the parent's protocol."""
+    import glob as _glob
+
+    from levi_spark.delta.dv import soft_delete
+    from levi_spark.delta.writer import write_delta
+
+    path = str(tmp_path / "t")
+    write_delta(spark.range(200).coalesce(1), path, mode="error",
+                checkpoint_interval=None)
+    if case == "two_files":
+        write_delta(spark.range(200, 400).coalesce(1), path, mode="append",
+                    checkpoint_interval=None)
+    parent = DeltaLog(spark, path).snapshot()
+    # one_file: every row goes; two_files: the first file wholly, the
+    # second loses 100 rows — past the inline cap, so it needs a .bin
+    pred = "id >= 0" if case == "one_file" else "id < 200 OR id % 2 = 0"
+    res = soft_delete(spark, path, pred, checkpoint_interval=None)
+    assert res["files_removed"] == 1
+    commit = os.path.join(path, "_delta_log", f"{res['version']:020d}.json")
+    actions = [json.loads(ln) for ln in open(commit)]
+    bins = _glob.glob(os.path.join(path, "deletion_vector_*.bin"))
+    snap = DeltaLog(spark, path).snapshot()
+    if case == "one_file":
+        assert bins == []
+        protocol = next(a["protocol"] for a in actions if "protocol" in a)
+        assert protocol == parent.protocol
+        assert snap.to_df().count() == 0
+    else:
+        dvs = [a["add"]["deletionVector"] for a in actions if "add" in a]
+        assert len(dvs) == 1 and dvs[0]["storageType"] == "u"
+        assert bins == [dv_file_path(path, dvs[0]["pathOrInlineDv"])]
+        got = sorted(r.id for r in snap.to_df().collect())
+        assert got == list(range(201, 400, 2))
