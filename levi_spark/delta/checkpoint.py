@@ -7,81 +7,64 @@ cost stays O(files) instead of O(history), and commits older than the
 checkpoint can be deleted (Delta's metadata-cleanup behavior the
 ``no_replay`` fixture demonstrates).
 
-The checkpoint parquet is written BY SPARK (the live-file set is the
-reconciled add-action frame — O(table files), potentially millions of
-rows at 100 TB, so it is never collected to the driver) and the single
-part file is moved to ``NNNN.checkpoint.parquet``. Small logs take the
-same driver-side fast path as log replay: when the snapshot's local
-action list is available (log under the 64 MB cap), the checkpoint is
-assembled in Python and written with pyarrow under Spark's own arrow
-schema for COMMIT_SCHEMA — zero Spark jobs, ~ms instead of ~s — and
-the distributed writer stays authoritative for everything else.
+A checkpoint is the snapshot's replayed state — the live adds, the
+latest metaData and protocol, the latest SetTransaction per appId and
+the live domainMetadata — assembled on the driver and written with
+pyarrow under Spark's own arrow schema for ``COMMIT_SCHEMA``: no Spark
+job. A log that does not replay (a torn commit, say) raises before any
+checkpoint file is written, so :func:`expire_log` can never make a
+lossy state permanent.
 """
 
 from __future__ import annotations
 
+import io
 import json
 import os
+import time
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from pyspark.sql import Window
-
-from levi_spark.delta.log import (
-    _METADATA_TYPE,
-    _PROTOCOL_TYPE,
-    _REMOVE_TYPE,
-    _TXN_TYPE,
-    DeltaLog,
-)
+from levi_spark.delta.log import COMMIT_SCHEMA, DeltaLog
 
 
-def _local_checkpoint_rows(snap) -> list[dict] | None:
-    """Driver-side checkpoint assembly from the local action replay:
-    reconciled live adds + latest metaData + latest protocol + latest
-    SetTransaction per appId, each as a COMMIT_SCHEMA-shaped dict.
-    None when the log is too big / unparseable locally."""
-    local = snap._local_actions()
-    if local is None:
-        return None
-    live = snap._local_live()
-    if live is None:
-        return None
+def _checkpoint_actions(snap) -> list[dict]:
+    """The actions a checkpoint of ``snap`` carries, one per dict in
+    COMMIT_SCHEMA shape: the live adds, the latest metaData and
+    protocol, the latest SetTransaction per appId and the live
+    domainMetadata (:meth:`Snapshot._log_state`)."""
+    st = snap._log_state()
+    acts = [("add", r["add"]) for r in snap.live_adds_collected()]
+    acts += [
+        (k, a) for k, a in (("metaData", st.metadata), ("protocol", st.protocol))
+        if a is not None
+    ]
+    acts += [("txn", st.txns[k]) for k in sorted(st.txns)]
+    acts += [("domainMetadata", st.domains[k]) for k in sorted(st.domains)]
+    return [{k: a.asDict(recursive=True)} for k, a in acts]
 
-    def _d(row):
-        return row.asDict(recursive=True) if row is not None else None
 
-    blank = {"add": None, "remove": None, "metaData": None,
-             "protocol": None, "txn": None}
-    rows: list[dict] = []
-    for r in live:
-        rows.append({**blank, "add": _d(r["add"])})
-    metas = [r for r in local if r["metaData"] is not None
-             and r["metaData"]["schemaString"] is not None]
-    if metas:
-        m = max(metas, key=lambda r: r["version"])
-        rows.append({**blank, "metaData": _d(m["metaData"])})
-    protos = [r for r in local if r["protocol"] is not None
-              and r["protocol"]["minReaderVersion"] is not None]
-    if protos:
-        p = max(protos, key=lambda r: r["version"])
-        rows.append({**blank, "protocol": _d(p["protocol"])})
-    # latest SetTransaction per appId (ties broken by commit version,
-    # matching the distributed writer's window)
-    best: dict[str, tuple[tuple[int, int], object]] = {}
-    for r in local:
-        t = r["txn"]
-        if t is None or t["appId"] is None:
-            continue
-        key = (t["version"], r["version"])
-        cur = best.get(t["appId"])
-        if cur is None or key > cur[0]:
-            best[t["appId"]] = (key, t)
-    for _k, (_key, t) in sorted(best.items()):
-        rows.append({**blank, "txn": _d(t)})
-    return rows
+def _write_parquet(log: DeltaLog, rows: list[dict], dst: str) -> None:
+    """``rows`` as a COMMIT_SCHEMA parquet file at ``dst``, written to a
+    temp name and renamed so no reader sees a partial file."""
+    buf = io.BytesIO()
+    pq.write_table(
+        pa.Table.from_pylist(rows, schema=to_arrow_schema(COMMIT_SCHEMA)), buf
+    )
+    tmp = os.path.join(log.log_path, f".cp-tmp-{uuid.uuid4().hex}.parquet")
+    log.fs.write_bytes(tmp, buf.getvalue())
+    log.fs.replace(tmp, dst)
+
+
+def _write_last_checkpoint(log: DeltaLog, v: int, size: int) -> None:
+    log.fs.write_text(
+        os.path.join(log.log_path, "_last_checkpoint"),
+        json.dumps({"version": v, "size": size}) + "\n",
+    )
 
 
 def write_checkpoint(
@@ -106,126 +89,21 @@ def write_checkpoint(
         raise ValueError(f"checkpoint format must be 'classic' or 'v2', got {format!r}")
     log = DeltaLog(spark, table_path)
     snap = log.snapshot(version)
-    v = snap.version
     if format == "v2":
-        return _write_checkpoint_v2(spark, log, snap)
-
-    local_rows = None
-    try:
-        local_rows = _local_checkpoint_rows(snap)
-    except Exception:
-        local_rows = None
-    if local_rows is not None:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        from levi_spark.delta.log import COMMIT_SCHEMA
-
-        import pyspark.sql.types as T
-
-        cp_schema = T.StructType(
-            [f for f in COMMIT_SCHEMA.fields if f.name != "version"]
-        )
-        import io
-
-        table = pa.Table.from_pylist(local_rows, schema=to_arrow_schema(cp_schema))
-        log_dir = log.log_path
-        buf = io.BytesIO()
-        pq.write_table(table, buf)
-        tmp = os.path.join(log_dir, f".cp-tmp-{uuid.uuid4().hex}.parquet")
-        log.fs.write_bytes(tmp, buf.getvalue())
-        log.fs.replace(tmp, os.path.join(log_dir, f"{v:020d}.checkpoint.parquet"))
-        log.fs.write_text(
-            os.path.join(log_dir, "_last_checkpoint"),
-            json.dumps({"version": v, "size": len(local_rows)}) + "\n",
-        )
-        return v
-
-    acts = snap._actions_df()
-
-    adds = snap.live_adds_raw().select(
-        "add",
-        F.lit(None).cast(_REMOVE_TYPE).alias("remove"),
-        F.lit(None).cast(_METADATA_TYPE).alias("metaData"),
-        F.lit(None).cast(_PROTOCOL_TYPE).alias("protocol"),
-        F.lit(None).cast(_TXN_TYPE).alias("txn"),
-    )
-    add_type = adds.schema["add"].dataType
-    meta = (
-        acts.where(F.col("metaData.schemaString").isNotNull())
-        .orderBy(F.col("version").desc())
-        .limit(1)
-        .select(
-            F.lit(None).cast(add_type).alias("add"),
-            F.lit(None).cast(_REMOVE_TYPE).alias("remove"),
-            F.col("metaData"),
-            F.lit(None).cast(_PROTOCOL_TYPE).alias("protocol"),
-            F.lit(None).cast(_TXN_TYPE).alias("txn"),
-        )
-    )
-    proto = (
-        acts.where(F.col("protocol.minReaderVersion").isNotNull())
-        .orderBy(F.col("version").desc())
-        .limit(1)
-        .select(
-            F.lit(None).cast(add_type).alias("add"),
-            F.lit(None).cast(_REMOVE_TYPE).alias("remove"),
-            F.lit(None).cast(_METADATA_TYPE).alias("metaData"),
-            F.col("protocol"),
-            F.lit(None).cast(_TXN_TYPE).alias("txn"),
-        )
-    )
-    # Latest SetTransaction per appId rides into the checkpoint —
-    # expiring pre-checkpoint commits must not lose incremental
-    # consumers' applied-version watermarks.
-    txn_w = Window.partitionBy("txn.appId").orderBy(
-        F.col("txn.version").desc(), F.col("version").desc()
-    )
-    txns = (
-        acts.where(F.col("txn.appId").isNotNull())
-        .withColumn("__rn", F.row_number().over(txn_w))
-        .where(F.col("__rn") == 1)
-        .select(
-            F.lit(None).cast(add_type).alias("add"),
-            F.lit(None).cast(_REMOVE_TYPE).alias("remove"),
-            F.lit(None).cast(_METADATA_TYPE).alias("metaData"),
-            F.lit(None).cast(_PROTOCOL_TYPE).alias("protocol"),
-            F.col("txn"),
-        )
-    )
-    cp_df = adds.unionByName(meta).unionByName(proto).unionByName(txns)
-
-    log_dir = log.log_path
-    staging = os.path.join(log_dir, f".cp-staging-{uuid.uuid4().hex}")
-    n_actions = cp_df.count()
-    cp_df.coalesce(1).write.mode("overwrite").parquet(staging)
-    part = next(
-        n for n in log.fs.listdir(staging)
-        if n.endswith(".parquet") and n.startswith("part-")
-    )
-    dst = os.path.join(log_dir, f"{v:020d}.checkpoint.parquet")
-    log.fs.replace(os.path.join(staging, part), dst)
-    log.fs.rmtree(staging)
-    log.fs.write_text(
-        os.path.join(log_dir, "_last_checkpoint"),
-        json.dumps({"version": v, "size": n_actions}) + "\n",
-    )
+        return _write_checkpoint_v2(log, snap)
+    rows = _checkpoint_actions(snap)
+    v = snap.version
+    _write_parquet(log, rows, os.path.join(log.log_path, f"{v:020d}.checkpoint.parquet"))
+    _write_last_checkpoint(log, v, len(rows))
     return v
 
 
-def _write_checkpoint_v2(spark: SparkSession, log: DeltaLog, snap) -> int:
-    """V2 checkpoint: adds land in one ``_sidecars`` parquet (driver
-    fast path via pyarrow when the log is small, Spark write otherwise
-    — never a driver collect of the file list), non-file actions +
-    checkpointMetadata + the sidecar reference land in a JSON
-    manifest."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    import pyspark.sql.types as T
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from levi_spark.delta.log import COMMIT_SCHEMA
+def _write_checkpoint_v2(log: DeltaLog, snap) -> int:
+    """V2 checkpoint: the live adds land in one ``_sidecars`` parquet;
+    the non-file actions, a ``checkpointMetadata`` action and the
+    sidecar reference land in a JSON manifest. Tables without the
+    ``v2Checkpoint`` reader feature get it in a protocol-upgrade
+    commit first."""
     from levi_spark.delta.writer import _publish_commit, merge_protocol
 
     # A v2 checkpoint is only discoverable by spec-conforming foreign
@@ -250,10 +128,8 @@ def _write_checkpoint_v2(spark: SparkSession, log: DeltaLog, snap) -> int:
                 "writerFeatures": ["v2Checkpoint"],
             },
         )
-        import time as _time
-
         meta = snap.metadata
-        now_ms = int(_time.time() * 1000)
+        now_ms = int(time.time() * 1000)
         lines = [
             json.dumps({"protocol": new_proto}),
             json.dumps(
@@ -286,108 +162,30 @@ def _write_checkpoint_v2(spark: SparkSession, log: DeltaLog, snap) -> int:
         snap = log.snapshot()
 
     v = snap.version
-    log_dir = log.log_path
-    sidecars_dir = os.path.join(log_dir, "_sidecars")
+    rows = _checkpoint_actions(snap)
+    sidecars_dir = os.path.join(log.log_path, "_sidecars")
     log.fs.mkdirs(sidecars_dir)
-    cp_schema = T.StructType(
-        [f for f in COMMIT_SCHEMA.fields if f.name != "version"]
-    )
-
-    local_rows = None
-    try:
-        local_rows = _local_checkpoint_rows(snap)
-    except Exception:
-        local_rows = None
-
     sc_name = f"{uuid.uuid4()}.parquet"
     sc_path = os.path.join(sidecars_dir, sc_name)
-    others: list[dict]
-    if local_rows is not None:
-        adds = [r for r in local_rows if r["add"] is not None]
-        others = [r for r in local_rows if r["add"] is None]
-        import io
-
-        buf = io.BytesIO()
-        pq.write_table(
-            pa.Table.from_pylist(adds, schema=to_arrow_schema(cp_schema)), buf
-        )
-        tmp = os.path.join(log_dir, f".cp-tmp-{uuid.uuid4().hex}.parquet")
-        log.fs.write_bytes(tmp, buf.getvalue())
-        log.fs.replace(tmp, sc_path)
-        n_actions = len(local_rows)
-    else:
-        acts = snap._actions_df()
-        adds_df = snap.live_adds_raw().select(
-            "add", F.lit(None).cast(_REMOVE_TYPE).alias("remove")
-        )
-        staging = os.path.join(log_dir, f".cp-staging-{uuid.uuid4().hex}")
-        n_adds = adds_df.count()
-        adds_df.coalesce(1).write.mode("overwrite").parquet(staging)
-        part = next(
-            n
-            for n in log.fs.listdir(staging)
-            if n.endswith(".parquet") and n.startswith("part-")
-        )
-        log.fs.replace(os.path.join(staging, part), sc_path)
-        log.fs.rmtree(staging)
-        meta_rows = (
-            acts.where(F.col("metaData.schemaString").isNotNull())
-            .orderBy(F.col("version").desc())
-            .limit(1)
-            .select("metaData")
-            .collect()
-        )
-        proto_rows = (
-            acts.where(F.col("protocol.minReaderVersion").isNotNull())
-            .orderBy(F.col("version").desc())
-            .limit(1)
-            .select("protocol")
-            .collect()
-        )
-        txn_w = Window.partitionBy("txn.appId").orderBy(
-            F.col("txn.version").desc(), F.col("version").desc()
-        )
-        txn_rows = (
-            acts.where(F.col("txn.appId").isNotNull())
-            .withColumn("__rn", F.row_number().over(txn_w))
-            .where(F.col("__rn") == 1)
-            .select("txn")
-            .collect()
-        )
-        others = (
-            [{"metaData": r["metaData"].asDict(recursive=True)} for r in meta_rows]
-            + [{"protocol": r["protocol"].asDict(recursive=True)} for r in proto_rows]
-            + [{"txn": r["txn"].asDict(recursive=True)} for r in txn_rows]
-        )
-        n_actions = n_adds + len(others)
-
-    manifest_lines = []
-    for r in others:
-        for k in ("protocol", "metaData", "txn"):
-            if r.get(k) is not None:
-                manifest_lines.append(json.dumps({k: r[k]}))
-    manifest_lines.append(
-        json.dumps({"checkpointMetadata": {"version": v}})
-    )
-    manifest_lines.append(
+    _write_parquet(log, [r for r in rows if "add" in r], sc_path)
+    sc_st = log.fs.stat(sc_path)
+    manifest_lines = [json.dumps(r) for r in rows if "add" not in r] + [
+        json.dumps({"checkpointMetadata": {"version": v}}),
         json.dumps(
             {
                 "sidecar": {
                     "path": sc_name,
-                    "sizeInBytes": (_sc_st := log.fs.stat(sc_path)).size,
-                    "modificationTime": _sc_st.mtime_ms,
+                    "sizeInBytes": sc_st.size,
+                    "modificationTime": sc_st.mtime_ms,
                 }
             }
-        )
-    )
+        ),
+    ]
     manifest_name = f"{v:020d}.checkpoint.{uuid.uuid4()}.json"
-    tmp = os.path.join(log_dir, f".cp-tmp-{uuid.uuid4().hex}.json")
+    tmp = os.path.join(log.log_path, f".cp-tmp-{uuid.uuid4().hex}.json")
     log.fs.write_text(tmp, "\n".join(manifest_lines) + "\n")
-    log.fs.replace(tmp, os.path.join(log_dir, manifest_name))
-    log.fs.write_text(
-        os.path.join(log_dir, "_last_checkpoint"),
-        json.dumps({"version": v, "size": n_actions}) + "\n",
-    )
+    log.fs.replace(tmp, os.path.join(log.log_path, manifest_name))
+    _write_last_checkpoint(log, v, len(rows))
     return v
 
 

@@ -40,7 +40,6 @@ import json
 import os
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from levi_spark.delta.log import DeltaLog
 
@@ -52,32 +51,11 @@ def _raw_metadata(snap) -> dict:
     stripped except the spec-required fields (which stay, possibly
     empty) — so the checksum's ``metadata`` matches what a log reader
     reconstructs, byte-for-byte on ``schemaString``."""
-    local = snap._local_actions()
-    if local is not None:
-        rows = [
-            r
-            for r in local
-            if r["metaData"] is not None
-            and r["metaData"]["schemaString"] is not None
-        ]
-        if not rows:
-            raise ValueError(f"no metaData action found for {snap.log.table_path}")
-        m = max(rows, key=lambda r: r["version"])["metaData"]
-    else:
-        collected = (
-            snap._actions_df()
-            .where(F.col("metaData.schemaString").isNotNull())
-            .orderBy(F.col("version").desc())
-            .select("metaData")
-            .limit(1)
-            .collect()
-        )
-        if not collected:
-            raise ValueError(f"no metaData action found for {snap.log.table_path}")
-        m = collected[0]["metaData"]
-    d = m if isinstance(m, dict) else m.asDict(recursive=True)
+    m = snap._log_state().metadata
+    if m is None:
+        raise ValueError(f"no metaData action found for {snap.log.table_path}")
     out = {}
-    for k, v in d.items():
+    for k, v in m.asDict(recursive=True).items():
         if v is not None or k in _META_REQUIRED:
             out[k] = v
     out["format"] = dict(out.get("format") or {"provider": "parquet", "options": {}})

@@ -248,16 +248,10 @@ def _add_dict(
             "cardinality": dv["cardinality"],
         }
         # standard DV framing fields ride along when present (needed
-        # to locate + verify the blob inside a shared DV file). The
-        # descriptor may be a raw JSON dict (driver fast path) or a
-        # schema-conformed Row — index both uniformly.
+        # to locate + verify the blob inside a shared DV file)
         for k in ("offset", "sizeInBytes"):
-            try:
-                v = dv[k]
-            except (KeyError, ValueError, IndexError):
-                v = None
-            if v is not None:
-                out_dv[k] = v
+            if dv[k] is not None:
+                out_dv[k] = dv[k]
     out = {
         "path": path,
         "partitionValues": dict(a["partitionValues"] or {}),
@@ -271,10 +265,6 @@ def _add_dict(
     # the same positions, so baseRowId/defaultRowCommitVersion remain
     # valid (the clone's high-water mark re-derives from these adds)
     for k in ("baseRowId", "defaultRowCommitVersion"):
-        try:
-            v = a[k]
-        except (KeyError, ValueError, IndexError):
-            v = None
-        if v is not None:
-            out[k] = v
+        if a[k] is not None:
+            out[k] = a[k]
     return out

@@ -1,26 +1,31 @@
-"""Delta transaction-log replay as pure PySpark DataFrame operations.
+"""Delta transaction-log replay on the driver.
 
 This is the engine-like core the reference delegates to delta-rs
 (``/root/reference/levi/__init__.py:3,14,57,109`` — ``DeltaTable`` /
-``get_add_actions``). We rebuild it Spark-first:
+``get_add_actions``), and like delta-rs it replays the log on the
+driver (SURVEY.md §3.2):
 
-* JSON commits are read with ``spark.read.schema(...).json`` (explicit
-  action schema, so ``partitionValues`` is a real ``map<string,string>``),
-  tagged with their commit version via the ``_metadata.file_path`` hidden
-  column.
-* Parquet checkpoints are read with ``spark.read.parquet`` and unioned in
-  at the checkpoint version (fixtures: ``with_checkpoint``, ``no_replay``
-  — commits before the checkpoint may be vacuumed away).
-* Reconciliation — per-path "last action wins, add beats remove within a
-  version" — is a single window (`row_number` over path ordered by
-  version desc). No driver-side loops over actions: a log with millions
-  of add actions stays distributed until a caller explicitly collects
-  file lists for a scan.
+* The snapshot's checkpoint — classic, multipart, or a v2 manifest
+  with its sidecars; parquet read with pyarrow, JSON with ``json`` —
+  and the JSON commits after it are parsed into action Rows conformed
+  to ``COMMIT_SCHEMA`` (so ``partitionValues`` is a real
+  ``map<string,string>``), each tagged with its version. Commits before
+  the checkpoint may be vacuumed away (fixtures: ``with_checkpoint``,
+  ``no_replay``). No Spark job runs. A malformed commit line raises
+  ``ValueError`` naming its file and line.
+* Reconciliation is one pass in Python (:meth:`Snapshot._local_live`,
+  :meth:`Snapshot._log_state`): per path the last action wins and an
+  add beats a remove within a version; the latest metaData and
+  protocol win; per appId the SetTransaction with the highest
+  version, and per domain the latest domainMetadata (``removed``
+  clears it).
+* The live-file list is metadata scale — one row per live file, the
+  list every scan is planned from — and stays on the driver; the
+  add-actions frames are built from it with :func:`local_frame`.
 * Per-file stats (``numRecords`` / ``minValues`` / ``maxValues`` /
-  ``nullCount``) arrive as a JSON string (``basic_append``), as a struct
-  column in checkpoints, or not at all (``no_stats``); we normalize with
-  ``from_json`` against a stats schema derived from the table's
-  ``metaData.schemaString``.
+  ``nullCount``) arrive as a JSON string (``basic_append``) or not at
+  all (``no_stats``); we normalize with ``from_json`` against a stats
+  schema derived from the table's ``metaData.schemaString``.
 
 Semantics cross-checked against the reference's fixture corpus at
 ``/root/reference/tests/reader_tests/generated/`` (11 tables: checkpoint
@@ -34,12 +39,11 @@ import json
 import os
 import re
 from dataclasses import dataclass
-from functools import reduce
 from urllib.parse import unquote
 
 from levi_spark.fs import fs_for, join_path
 
-from pyspark.sql import DataFrame, Row, SparkSession, Window
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -200,6 +204,16 @@ _TXN_TYPE = T.StructType(
         T.StructField("lastUpdated", T.LongType()),
     ]
 )
+# DomainMetadata action (writer feature "domainMetadata"): named
+# configuration a table feature keeps in the log — the clustering
+# columns, row tracking's high-water mark; ``removed`` retires it.
+_DOMAIN_TYPE = T.StructType(
+    [
+        T.StructField("domain", T.StringType()),
+        T.StructField("configuration", T.StringType()),
+        T.StructField("removed", T.BooleanType()),
+    ]
+)
 COMMIT_SCHEMA = T.StructType(
     [
         T.StructField("add", _ADD_TYPE),
@@ -207,17 +221,9 @@ COMMIT_SCHEMA = T.StructType(
         T.StructField("metaData", _METADATA_TYPE),
         T.StructField("protocol", _PROTOCOL_TYPE),
         T.StructField("txn", _TXN_TYPE),
+        T.StructField("domainMetadata", _DOMAIN_TYPE),
     ]
 )
-
-# Logs whose bytes (commit tail + checkpoint) fit under this cap are
-# replayed DRIVER-SIDE (json/pyarrow parse, no Spark jobs): the
-# metadata plane of a table with a 10-commit checkpoint cadence is a
-# few KB of JSON, and burning a ~0.5 s Spark job per snapshot made
-# every lifecycle operation (MERGE, DV delete, CDF, restore) pay 5-10
-# such jobs. Bigger logs take the original distributed path unchanged.
-_LOCAL_LOG_CAP = 64 * 1024 * 1024
-
 
 def _conform(dt: T.DataType, v):
     """Conform a json/pyarrow-parsed value to ``dt``, Row-typed:
@@ -235,6 +241,20 @@ def _conform(dt: T.DataType, v):
     if isinstance(dt, T.ArrayType):
         return [_conform(dt.elementType, x) for x in v]
     return v
+
+
+def _parse_action(line: str, path: str, lineno: int) -> dict:
+    """One JSON log line as an action dict. A torn or non-object line
+    raises ``ValueError`` naming the file and line: replaying without
+    it would silently rebuild an older table state."""
+    try:
+        d = json.loads(line)
+        if isinstance(d, dict):
+            return d
+        err = "not a JSON object"
+    except ValueError as e:
+        err = str(e)
+    raise ValueError(f"{path}:{lineno}: malformed Delta log action ({err})")
 
 
 def local_frame(spark: SparkSession, rows, schema: T.StructType) -> DataFrame:
@@ -426,6 +446,17 @@ class TableMetadata:
             with_ids = self.column_mapping_mode == "id"
             fields = [_physical_field(f, with_ids) for f in fields]
         return T.StructType(fields)
+
+
+@dataclass
+class LogState:
+    """A snapshot's non-file actions after replay, as COMMIT_SCHEMA Rows
+    (see :meth:`Snapshot._log_state`)."""
+
+    metadata: Row | None
+    protocol: Row | None
+    txns: dict[str, Row]
+    domains: dict[str, Row]
 
 
 class DeltaLog:
@@ -689,9 +720,9 @@ class Snapshot:
         self._commit_versions = commit_versions
         self._metadata: TableMetadata | None = None
         self._protocol: dict | None = None
-        self._actions: DataFrame | None = None
+        self._actions: list | None = None
+        self._state: LogState | None = None
         self._live_rows: list | None = None
-        self._local: list | None | bool = None  # False = too big / unparseable
 
     def _cp_files(self) -> tuple[list[str], str | None]:
         """Files whose union is the checkpoint's action set:
@@ -732,301 +763,99 @@ class Snapshot:
         self._cp_files_cache = (parquet, manifest_json)
         return self._cp_files_cache
 
-    # ---- raw action frames -------------------------------------------------
+    # ---- log replay --------------------------------------------------------
 
     def _commit_path(self, v: int) -> str:
         return self.log._commit_file(v)
 
-    def _local_actions(self) -> list | None:
-        """Driver-side log replay for metadata-plane questions: every
-        action as a COMMIT_SCHEMA-conformed Row (+ .version), parsed
-        with json/pyarrow — zero Spark jobs. None when the log exceeds
-        ``_LOCAL_LOG_CAP`` or can't be parsed locally; callers then use
-        the distributed ``_actions_df`` path, which stays authoritative
-        for arbitrarily large logs."""
-        if self._local is False:
-            return None
-        if self._local is not None:
-            return self._local
-        if not self._commit_versions and self._cp is None:
-            # same contract as the distributed path: a snapshot whose
-            # log entries were all expired is unreadable, not empty
-            raise FileNotFoundError(f"no log entries for version {self.version}")
-        try:
-            cp_parquets, cp_json = self._cp_files()
-            fs = self.log.fs
-            total = (
-                sum(
-                    fs.getsize(self._commit_path(v))
-                    for v in self._commit_versions
-                )
-                + sum(fs.getsize(p) for p in cp_parquets)
-                + (fs.getsize(cp_json) if cp_json else 0)
-            )
-            if total > _LOCAL_LOG_CAP:
-                self._local = False
-                return None
-            raw: list[tuple[int, dict]] = []
-            for p in cp_parquets:
-                import io
-
-                import pyarrow.parquet as pq
-
-                for rec in pq.read_table(io.BytesIO(fs.read_bytes(p))).to_pylist():
-                    raw.append((self._cp, rec))
-            if cp_json:
-                for line in fs.read_text(cp_json).splitlines():
-                        if line := line.strip():
-                            raw.append((self._cp, json.loads(line)))
-            for v in self._commit_versions:
-                for line in fs.read_text(self._commit_path(v)).splitlines():
-                        if line := line.strip():
-                            raw.append((v, json.loads(line)))
-            rows = []
-            for v, d in raw:
-                fields = {
-                    f.name: _conform(f.dataType, d.get(f.name))
-                    for f in COMMIT_SCHEMA.fields
-                }
-                fields["version"] = v
-                rows.append(Row(**fields))
-            self._local = rows
-        except Exception:
-            self._local = False
-            return None
-        return self._local
-
-    def _actions_df(self) -> DataFrame:
-        """All actions (checkpoint ∪ commits) tagged with their version."""
+    def _local_actions(self) -> list:
+        """Every action of the snapshot — the checkpoint's, then each
+        commit's in version order — as a COMMIT_SCHEMA-conformed Row
+        plus its ``version``, parsed on the driver with json/pyarrow (no
+        Spark job) and cached. A malformed commit line raises
+        ``ValueError`` (:func:`_parse_action`)."""
         if self._actions is not None:
             return self._actions
-        parts: list[DataFrame] = []
-        if self._commit_versions:
-            paths = [self._commit_path(v) for v in self._commit_versions]
-            df = (
-                self.spark.read.schema(COMMIT_SCHEMA)
-                .json(paths)
-                .withColumn(
-                    "version",
-                    F.regexp_extract(F.col("_metadata.file_path"), r"(\d{20})\.json$", 1)
-                    .cast("long"),
-                )
-            )
-            parts.append(df)
-        if self._cp is not None:
-            cp_parquets, cp_json = self._cp_files()
-            for p in cp_parquets:
-                parts.append(self._conform_cp_parquet(p))
-            if cp_json:
-                parts.append(
-                    self.spark.read.schema(COMMIT_SCHEMA)
-                    .json(cp_json)
-                    .withColumn("version", F.lit(self._cp).cast("long"))
-                )
-        if not parts:
+        if not self._commit_versions and self._cp is None:
+            # a snapshot whose log entries were all expired is
+            # unreadable, not empty
             raise FileNotFoundError(f"no log entries for version {self.version}")
-        return reduce(DataFrame.unionByName, parts)
+        import io
 
-    def _conform_cp_parquet(self, cp_path: str) -> DataFrame:
-        """One checkpoint parquet (classic file, multipart part, v2
-        manifest, or v2 sidecar) conformed to COMMIT_SCHEMA columns —
-        foreign checkpoints may lack whole action columns or carry
-        extra struct fields (e.g. the spec DV descriptor's
-        maxRowIndex, or v2 checkpointMetadata/sidecar actions, which
-        replay ignores), so every field resolves by NAME with typed
-        null fallbacks."""
-        raw = self.spark.read.parquet(cp_path)
-        cols = {f.name for f in raw.schema.fields}
-        add_fields = (
-            {f.name for f in raw.schema["add"].dataType.fields}
-            if "add" in cols
-            else set()
-        )
-        dv_fields = (
-            {
-                f.name
-                for f in raw.schema["add"].dataType["deletionVector"].dataType.fields
-            }
-            if "deletionVector" in add_fields
-            else set()
-        )
-        dv_col = (
-            F.struct(
-                F.col("add.deletionVector.storageType").alias("storageType"),
-                F.col("add.deletionVector.pathOrInlineDv").alias("pathOrInlineDv"),
-                (
-                    F.col("add.deletionVector.offset")
-                    if "offset" in dv_fields
-                    else F.lit(None).cast("int")
-                ).alias("offset"),
-                (
-                    F.col("add.deletionVector.sizeInBytes")
-                    if "sizeInBytes" in dv_fields
-                    else F.lit(None).cast("int")
-                ).alias("sizeInBytes"),
-                (
-                    F.col("add.deletionVector.cardinality")
-                    if "cardinality" in dv_fields
-                    else F.lit(None).cast("long")
-                ).alias("cardinality"),
-            )
-            if "deletionVector" in add_fields
-            else F.lit(None).cast(_DV_TYPE)
-        )
-        add_col = (
-            F.struct(
-                F.col("add.path").alias("path"),
-                F.col("add.partitionValues").alias("partitionValues"),
-                F.col("add.size").alias("size"),
-                F.col("add.modificationTime").alias("modificationTime"),
-                F.col("add.dataChange").alias("dataChange"),
-                (
-                    F.col("add.stats")
-                    if "stats" in add_fields
-                    else F.lit(None).cast("string")
-                ).alias("stats"),
-                (
-                    F.col("add.tags")
-                    if "tags" in add_fields
-                    else F.lit(None).cast(T.MapType(T.StringType(), T.StringType()))
-                ).alias("tags"),
-                dv_col.alias("deletionVector"),
-                (
-                    F.col("add.baseRowId")
-                    if "baseRowId" in add_fields
-                    else F.lit(None).cast("long")
-                ).alias("baseRowId"),
-                (
-                    F.col("add.defaultRowCommitVersion")
-                    if "defaultRowCommitVersion" in add_fields
-                    else F.lit(None).cast("long")
-                ).alias("defaultRowCommitVersion"),
-                (
-                    F.col("add.clusteringProvider")
-                    if "clusteringProvider" in add_fields
-                    else F.lit(None).cast("string")
-                ).alias("clusteringProvider"),
-            )
-            if "add" in cols
-            else F.lit(None).cast(_ADD_TYPE)
-        )
-        remove_col = (
-            F.struct(
-                F.col("remove.path").alias("path"),
-                F.col("remove.deletionTimestamp").alias("deletionTimestamp"),
-                F.col("remove.dataChange").alias("dataChange"),
-            )
-            if "remove" in cols
-            else F.lit(None).cast(_REMOVE_TYPE)
-        )
-        def by_name(col_name: str, target: T.StructType):
-            """Struct conformed FIELD BY NAME (struct casts are
-            positional in Spark, so a foreign checkpoint with a field
-            subset or different order would silently shear values)."""
-            if col_name not in cols:
-                return F.lit(None).cast(target)
-            have = {f.name: f for f in raw.schema[col_name].dataType.fields}
-            members = []
-            for f in target.fields:
-                if f.name in have:
-                    src = F.col(f"{col_name}.{f.name}")
-                    if isinstance(f.dataType, T.StructType):
-                        # one nested level (metaData.format) suffices
-                        # for the commit schema's struct fields
-                        inner_have = {
-                            x.name for x in have[f.name].dataType.fields
-                        } if isinstance(have[f.name].dataType, T.StructType) else set()
-                        src = F.struct(
-                            *[
-                                (
-                                    F.col(f"{col_name}.{f.name}.{g.name}")
-                                    if g.name in inner_have
-                                    else F.lit(None).cast(g.dataType)
-                                ).alias(g.name)
-                                for g in f.dataType.fields
-                            ]
-                        )
-                    members.append(src.cast(f.dataType).alias(f.name))
-                else:
-                    members.append(F.lit(None).cast(f.dataType).alias(f.name))
-            # a built struct would be non-null even when the source row
-            # has no such action — preserve action-level nullness
-            return F.when(
-                F.col(col_name).isNotNull(), F.struct(*members)
-            ).otherwise(F.lit(None).cast(target))
+        import pyarrow.parquet as pq
 
-        meta_col = by_name("metaData", _METADATA_TYPE)
-        proto_col = by_name("protocol", _PROTOCOL_TYPE)
-        txn_col = by_name("txn", _TXN_TYPE)
-        return raw.select(
-            add_col.alias("add"),
-            remove_col.alias("remove"),
-            meta_col.alias("metaData"),
-            proto_col.alias("protocol"),
-            txn_col.alias("txn"),
-            F.lit(self._cp).cast("long").alias("version"),
-        )
+        fs = self.log.fs
+        cp_parquets, cp_json = self._cp_files()
+        raw: list[tuple[int, dict]] = [
+            (self._cp, rec)
+            for p in cp_parquets
+            for rec in pq.read_table(io.BytesIO(fs.read_bytes(p))).to_pylist()
+        ]
+        json_files = ([(self._cp, cp_json)] if cp_json else []) + [
+            (v, self._commit_path(v)) for v in sorted(self._commit_versions)
+        ]
+        for v, path in json_files:
+            for n, line in enumerate(fs.read_text(path).splitlines(), 1):
+                if line.strip():
+                    raw.append((v, _parse_action(line, path, n)))
+        self._actions = [
+            Row(
+                **{
+                    f.name: _conform(f.dataType, d.get(f.name))
+                    for f in COMMIT_SCHEMA.fields
+                },
+                version=v,
+            )
+            for v, d in raw
+        ]
+        return self._actions
+
+    def _log_state(self) -> LogState:
+        """The snapshot's non-file state, settled once: the latest
+        metaData and protocol, per appId the SetTransaction with the
+        highest version, and per domain the latest domainMetadata (a
+        ``removed`` one clears the domain). Actions arrive in replay
+        order, so a later one replaces an earlier one. Metadata
+        resolution, the checkpoint writer and the ``.crc`` checksum all
+        read this."""
+        if self._state is None:
+            st = LogState(None, None, {}, {})
+            for r in self._local_actions():
+                m, p, t, dm = r["metaData"], r["protocol"], r["txn"], r["domainMetadata"]
+                if m is not None and m["schemaString"] is not None:
+                    st.metadata = m
+                if p is not None and p["minReaderVersion"] is not None:
+                    st.protocol = p
+                if t is not None and t["appId"] is not None:
+                    cur = st.txns.get(t["appId"])
+                    if cur is None or t["version"] >= cur["version"]:
+                        st.txns[t["appId"]] = t
+                if dm is not None and dm["domain"]:
+                    if dm["removed"]:
+                        st.domains.pop(dm["domain"], None)
+                    else:
+                        st.domains[dm["domain"]] = dm
+            self._state = st
+        return self._state
 
     # ---- metadata ----------------------------------------------------------
 
     @property
     def metadata(self) -> TableMetadata:
         if self._metadata is None:
-            local = self._local_actions()
-            if local is not None:
-                rows = sorted(
-                    (
-                        r
-                        for r in local
-                        if (
-                            r["metaData"] is not None
-                            and r["metaData"]["schemaString"] is not None
-                        )
-                        or (
-                            r["protocol"] is not None
-                            and r["protocol"]["minReaderVersion"] is not None
-                        )
-                    ),
-                    key=lambda r: -r["version"],
-                )
-            else:
-                rows = (
-                    self._actions_df()
-                    .where(
-                        F.col("metaData.schemaString").isNotNull()
-                        | F.col("protocol.minReaderVersion").isNotNull()
-                    )
-                    .orderBy(F.col("version").desc())
-                    .select("metaData", "protocol", "version")
-                    .collect()
-                )
-            meta_rows = [r for r in rows if r["metaData"] is not None]
-            if not meta_rows:
+            st = self._log_state()
+            m = st.metadata
+            if m is None:
                 raise ValueError(f"no metaData action found for {self.log.table_path}")
-            m = meta_rows[0]["metaData"]
-            schema = T.StructType.fromJson(json.loads(m["schemaString"]))
             meta = TableMetadata(
                 id=m["id"],
-                schema=schema,
+                schema=T.StructType.fromJson(json.loads(m["schemaString"])),
                 partition_columns=list(m["partitionColumns"] or []),
                 configuration=dict(m["configuration"] or {}),
                 created_time=m["createdTime"],
             )
-            # The distributed branch builds `protocol` with F.struct(...),
-            # which is never NULL for checkpoint rows — a metaData row can
-            # carry a struct-of-nulls protocol. Require minReaderVersion
-            # itself so the reader-feature guard cannot fail open on the
-            # >64MB / unparseable-log fallback path.
-            proto_rows = [
-                r
-                for r in rows
-                if r["protocol"] is not None
-                and r["protocol"]["minReaderVersion"] is not None
-            ]
-            if proto_rows:
-                _check_reader_protocol(
-                    proto_rows[0]["protocol"], meta, self.log.table_path
-                )
+            if st.protocol is not None:
+                _check_reader_protocol(st.protocol, meta, self.log.table_path)
             self._metadata = meta
         return self._metadata
 
@@ -1041,94 +870,37 @@ class Snapshot:
         upgrade — e.g. standard deletion vectors — is never silently
         reverted by the next unrelated operation."""
         if self._protocol is None:
-            local = self._local_actions()
-            if local is not None:
-                rows = [
-                    r
-                    for r in local
-                    if r["protocol"] is not None
-                    and r["protocol"]["minReaderVersion"] is not None
-                ]
-                p = (
-                    max(rows, key=lambda r: r["version"])["protocol"]
-                    if rows
-                    else None
-                )
-                p = (
-                    p.asDict(recursive=True)
-                    if p is not None and not isinstance(p, dict)
-                    else (dict(p) if p is not None else None)
-                )
-            else:
-                rows = (
-                    self._actions_df()
-                    .where(F.col("protocol.minReaderVersion").isNotNull())
-                    .orderBy(F.col("version").desc())
-                    .select("protocol")
-                    .limit(1)
-                    .collect()
-                )
-                p = rows[0]["protocol"].asDict(recursive=True) if rows else None
-            if p is None:
-                p = {"minReaderVersion": 1, "minWriterVersion": 2}
+            p = self._log_state().protocol
+            p = (
+                p.asDict(recursive=True)
+                if p is not None
+                else {"minReaderVersion": 1, "minWriterVersion": 2}
+            )
             self._protocol = {k: v for k, v in p.items() if v is not None}
         return dict(self._protocol)
 
     def txn_versions(self) -> dict[str, int]:
         """Latest SetTransaction version per appId at this snapshot —
-        Delta's ``txnVersion`` lookup. Metadata-scale collect (one row
-        per writing application)."""
-        local = self._local_actions()
-        if local is not None:
-            out: dict[str, int] = {}
-            for r in local:
-                t = r["txn"]
-                if t is not None and t["appId"] is not None:
-                    v = t["version"]
-                    if t["appId"] not in out or v > out[t["appId"]]:
-                        out[t["appId"]] = v
-            return out
-        rows = (
-            self._actions_df()
-            .where(F.col("txn.appId").isNotNull())
-            .groupBy(F.col("txn.appId").alias("app_id"))
-            .agg(F.max(F.col("txn.version")).alias("v"))
-            .collect()
-        )
-        return {r["app_id"]: r["v"] for r in rows}
+        Delta's ``txnVersion`` lookup."""
+        return {app: t["version"] for app, t in self._log_state().txns.items()}
 
     def domain_metadata(self) -> dict[str, dict]:
-        """Latest ``domainMetadata`` action per domain from this
-        snapshot's JSON commit window (``removed: true`` clears a
-        domain). Domain actions older than the checkpoint are not
-        replayed — callers that derive counters from a domain (row
-        tracking's high-water mark) must also lower-bound from live
-        adds; see :meth:`row_id_high_water_mark`. Driver-side parse of
-        the commit tail — a few KB."""
-        out: dict[str, dict] = {}
-        for v in sorted(self._commit_versions):
-            try:
-                for line in self.log.fs.read_text(
-                        self._commit_path(v)).splitlines():
-                        if '"domainMetadata"' not in line:
-                            continue
-                        dm = json.loads(line).get("domainMetadata")
-                        if not dm or not dm.get("domain"):
-                            continue
-                        if dm.get("removed"):
-                            out.pop(dm["domain"], None)
-                        else:
-                            out[dm["domain"]] = dm
-            except FileNotFoundError:
-                continue
-        return out
+        """Live ``domainMetadata`` per domain at this snapshot, as
+        ``{domain, configuration, removed}`` dicts: the latest action
+        per domain over the checkpoint and the commits after it, where
+        ``removed: true`` clears the domain. Checkpoints carry the live
+        domains, so they survive log expiry."""
+        return {
+            k: {"domain": k, "configuration": dm["configuration"], "removed": False}
+            for k, dm in self._log_state().domains.items()
+        }
 
     def clustering_columns(self) -> list[str]:
         """The clustered table's clustering columns from the
         ``delta.clustering`` domain (writer feature ``clustering``):
         the domain's configuration JSON carries ``clusteringColumns``
         as a list of column-name paths. Empty list when the table is
-        not clustered. Driver-side parse of the commit tail."""
+        not clustered."""
         dm = self.domain_metadata().get("delta.clustering")
         if not dm or not dm.get("configuration"):
             return []
@@ -1142,8 +914,9 @@ class Snapshot:
         """Row tracking's ``rowIdHighWaterMark`` (-1 when no row ids
         were ever assigned): the ``delta.rowTracking`` domain value,
         floored by what live files already claim (base + numRecords -
-        1) so a checkpoint-truncated domain action can never cause id
-        reuse against the current snapshot."""
+        1), so a domain that lags the adds — from a foreign writer, or
+        lost by a checkpoint written before checkpoints carried
+        domains — can never cause id reuse against this snapshot."""
         hwm = -1
         dm = self.domain_metadata().get("delta.rowTracking")
         if dm and dm.get("configuration"):
@@ -1166,15 +939,12 @@ class Snapshot:
 
     # ---- add actions (the metadata-plane table) ----------------------------
 
-    def _local_live(self) -> list | None:
-        """Python reconcile of the local action list — the same
-        last-action-per-path rule as ``live_adds_raw``'s window (order
-        by version, then add-over-remove within a version)."""
-        local = self._local_actions()
-        if local is None:
-            return None
+    def _local_live(self) -> list:
+        """The reconciled live files as ``Row(add, version)``: per path
+        the last action wins, and within a version an add supersedes a
+        remove (overwrite commits pair remove+add across paths)."""
         best: dict[str, tuple[tuple[int, int], Row | None]] = {}
-        for r in local:
+        for r in self._local_actions():
             a, rm = r["add"], r["remove"]
             if a is not None and a["path"] is not None:
                 path, key, payload = a["path"], (r["version"], 1), r
@@ -1193,49 +963,24 @@ class Snapshot:
 
     def live_adds_raw(self) -> DataFrame:
         """Reconciled live files as RAW ``add`` structs (URL-encoded
-        paths, stats still a JSON string) + the winning ``version`` —
-        the exact rows a checkpoint must carry."""
-        local = self._local_live()
-        if local is not None:
-            schema = T.StructType(
-                [
-                    T.StructField("add", _ADD_TYPE),
-                    T.StructField("version", T.LongType()),
-                ]
-            )
-            return local_frame(self.spark, local, schema)
-        acts = self._actions_df()
-        file_acts = acts.where(
-            F.col("add.path").isNotNull() | F.col("remove.path").isNotNull()
-        ).select(
-            F.coalesce(F.col("add.path"), F.col("remove.path")).alias("path"),
-            F.col("add.path").isNotNull().alias("is_add"),
-            "version",
-            "add",
+        paths, stats still a JSON string) + the winning ``version``, as
+        a driver-built :func:`local_frame`."""
+        schema = T.StructType(
+            [
+                T.StructField("add", _ADD_TYPE),
+                T.StructField("version", T.LongType()),
+            ]
         )
-        # Last action per path wins; within a version an add supersedes a
-        # remove (overwrite commits pair remove+add across paths).
-        w = Window.partitionBy("path").orderBy(
-            F.col("version").desc(), F.col("is_add").desc()
-        )
-        return (
-            file_acts.withColumn("rn", F.row_number().over(w))
-            .where((F.col("rn") == 1) & F.col("is_add"))
-            .select("add", "version")
-        )
+        return local_frame(self.spark, self.live_adds_collected(), schema)
 
     def live_adds_collected(self) -> list:
-        """The reconciled live ``add`` rows, collected ONCE per snapshot
+        """The reconciled live ``add`` rows, computed ONCE per snapshot
         and cached. Every driver-side metadata consumer (scan planning,
-        DV lookup, merge/delete commit building) shares this collect
-        instead of re-running log replay per question — on a snapshot
-        consulted k times that is 1 Spark job instead of k. Metadata
-        scale: one row per live file (the same list Delta itself plans
-        scans from)."""
+        DV lookup, merge/delete commit building, checkpoints) shares
+        this list. Metadata scale: one row per live file (the same list
+        Delta itself plans scans from)."""
         if self._live_rows is None:
             self._live_rows = self._local_live()
-            if self._live_rows is None:
-                self._live_rows = self.live_adds_raw().collect()
         return self._live_rows
 
     def add_actions(self) -> DataFrame:

@@ -1,12 +1,6 @@
-"""The driver-side checkpoint writer fast path must be
-indistinguishable from the distributed writer: same reconciled
-content, readable by BOTH replay paths, same post-expiry behavior."""
+"""The checkpoint writer carries the snapshot's whole reconciled state:
+content, stats and SetTransaction watermarks survive log expiry."""
 
-import os
-
-import pytest
-
-from levi_spark.delta import checkpoint as cp_mod
 from levi_spark.delta.checkpoint import expire_log, write_checkpoint
 from levi_spark.delta.log import DeltaLog
 from levi_spark.delta.writer import write_delta
@@ -32,36 +26,17 @@ def _content(spark, path):
     return sorted(map(tuple, df.select(*sorted(df.columns)).collect()))
 
 
-def test_fast_path_equals_distributed_checkpoint(spark, tmp_path, monkeypatch):
-    fast, dist = str(tmp_path / "fast"), str(tmp_path / "dist")
-    _mk(spark, fast)
-    _mk(spark, dist)
-
-    v1 = write_checkpoint(spark, fast)  # local fast path (small log)
-    monkeypatch.setattr(cp_mod, "_local_checkpoint_rows", lambda snap: None)
-    v2 = write_checkpoint(spark, dist)  # forced distributed writer
-    monkeypatch.undo()
-    assert v1 == v2 == 1
-
-    want = _content(spark, dist)
-    assert _content(spark, fast) == want
-
-    # both checkpoints survive full log expiry and replay identically,
-    # on the LOCAL path and the DISTRIBUTED path
-    import levi_spark.delta.log as log_mod
-
-    for p in (fast, dist):
-        assert expire_log(spark, p) == [0, 1]
-        assert _content(spark, p) == want
-        monkeypatch.setattr(log_mod, "_LOCAL_LOG_CAP", 0)
-        snap = DeltaLog(spark, p).snapshot()
-        assert snap._local_actions() is None
-        df = snap.to_df()
-        assert sorted(map(tuple, df.select(*sorted(df.columns)).collect())) == want
-        monkeypatch.undo()
-
-    # SetTransaction watermarks ride into the fast-path checkpoint
-    assert DeltaLog(spark, fast).snapshot().txn_versions() == {"app-a": 7}
+def test_fast_path_equals_distributed_checkpoint(spark, tmp_path):
+    """Checkpoint, then expire every commit: the table reads the same
+    content from the checkpoint alone and keeps the SetTransaction
+    watermark."""
+    path = str(tmp_path / "t")
+    _mk(spark, path)
+    want = _content(spark, path)
+    assert write_checkpoint(spark, path) == 1
+    assert expire_log(spark, path) == [0, 1]
+    assert _content(spark, path) == want
+    assert DeltaLog(spark, path).snapshot().txn_versions() == {"app-a": 7}
 
 
 def test_fast_path_checkpoint_stats_preserved(spark, tmp_path):

@@ -6,6 +6,7 @@ mismatch, redefinition on append)."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -151,10 +152,10 @@ def test_recluster_refuses_unclustered(spark, tmp_path):
 
 
 def test_provider_survives_checkpoint_and_distributed_replay(spark, tmp_path):
-    """clusteringProvider must round-trip through a checkpoint parquet
-    AND through the distributed replay path (the local fast path is
-    bypassed by forcing the cap to zero)."""
-    from levi_spark.delta import log as log_mod
+    """clusteringProvider round-trips through a checkpoint parquet:
+    with every commit before it expired, the checkpoint alone rebuilds
+    the provider on each live add."""
+    from levi_spark.delta.checkpoint import expire_log
 
     p = str(tmp_path / "t")
     df = spark.range(200).select(F.col("id").alias("k"))
@@ -162,20 +163,49 @@ def test_provider_survives_checkpoint_and_distributed_replay(spark, tmp_path):
                 checkpoint_interval=1)  # checkpoint right away
     write_delta(df.select((F.col("k") + 200).alias("k")), p, mode="append",
                 checkpoint_interval=1)
+    assert expire_log(spark, p) == [0, 1]
     snap = DeltaLog(spark, p).snapshot()
     assert all(
         r["add"]["clusteringProvider"] == "liquid"
         for r in snap.live_adds_collected()
     )
-    cap = log_mod._LOCAL_LOG_CAP
-    try:
-        log_mod._LOCAL_LOG_CAP = 0  # force the distributed branch
-        snap2 = DeltaLog(spark, p).snapshot()
-        assert snap2._local_actions() is None
-        assert all(
-            r["add"]["clusteringProvider"] == "liquid"
-            for r in snap2.live_adds_raw().collect()
-        )
-        assert snap2.to_df().count() == 400
-    finally:
-        log_mod._LOCAL_LOG_CAP = cap
+    assert snap.to_df().count() == 400
+
+
+@pytest.mark.parametrize("fmt", ["classic", "v2"])
+def test_clustering_columns_survive_checkpoint_and_expiry(spark, tmp_path, fmt):
+    """Checkpoints carry the live domainMetadata: after a checkpoint and
+    log expiry the table is still clustered by ``k``, so a clustered
+    append is accepted and keeps the domain."""
+    from levi_spark.delta.checkpoint import expire_log, write_checkpoint
+
+    p = str(tmp_path / "t")
+    df = spark.range(100).select(F.col("id").alias("k"))
+    write_delta(df, p, mode="error", cluster_by=["k"], checkpoint_interval=None)
+    write_delta(df, p, mode="append", checkpoint_interval=None)
+    v = write_checkpoint(spark, p, format=fmt)
+    assert expire_log(spark, p) == list(range(v + 1))
+    assert DeltaLog(spark, p).snapshot().clustering_columns() == ["k"]
+    write_delta(df, p, mode="append", cluster_by=["k"], checkpoint_interval=None)
+    snap = DeltaLog(spark, p).snapshot()
+    assert snap.clustering_columns() == ["k"]
+    assert snap.to_df().count() == 300
+
+
+def test_removed_domain_stays_removed_through_checkpoint(spark, tmp_path):
+    """A ``removed`` domainMetadata action clears the domain, and the
+    checkpoint written after it does not bring the domain back."""
+    from levi_spark.delta.checkpoint import expire_log, write_checkpoint
+
+    p = str(tmp_path / "t")
+    write_delta(spark.range(10).select(F.col("id").alias("k")), p,
+                mode="error", cluster_by=["k"], checkpoint_interval=None)
+    with open(os.path.join(p, "_delta_log", f"{1:020d}.json"), "w") as f:
+        f.write(json.dumps({"domainMetadata": {
+            "domain": "delta.clustering", "configuration": "{}",
+            "removed": True}}) + "\n")
+    assert DeltaLog(spark, p).snapshot().domain_metadata() == {}
+    write_checkpoint(spark, p)
+    expire_log(spark, p)
+    snap = DeltaLog(spark, p).snapshot()
+    assert snap.domain_metadata() == {} and snap.clustering_columns() == []

@@ -234,3 +234,50 @@ def test_write_to_mapped_table_refused(spark, tmp_path):
     df = spark.createDataFrame([(3, "c")], "k BIGINT, s STRING")
     with pytest.raises(NotImplementedError, match="column-mapped"):
         write_delta(df, path, mode="append", checkpoint_interval=None)
+
+
+def _pn(name):
+    return {"delta.columnMapping.physicalName": name}
+
+
+def test_physical_schema_recurses_map_values_and_nested_arrays():
+    from levi_spark.delta.log import TableMetadata
+
+    schema = T.StructType(
+        [
+            T.StructField(
+                "m",
+                T.MapType(
+                    T.StringType(),
+                    T.StructType(
+                        [T.StructField("inner", T.LongType(), True, _pn("col-i"))]
+                    ),
+                ),
+                True,
+                _pn("col-m"),
+            ),
+            T.StructField(
+                "aa",
+                T.ArrayType(
+                    T.ArrayType(
+                        T.StructType(
+                            [T.StructField("deep", T.StringType(), True, _pn("col-d"))]
+                        )
+                    )
+                ),
+                True,
+                _pn("col-aa"),
+            ),
+        ]
+    )
+    meta = TableMetadata(
+        id="x",
+        schema=schema,
+        partition_columns=[],
+        configuration={"delta.columnMapping.mode": "name"},
+    )
+    phys = meta.physical_schema
+    assert phys["col-m"].dataType.valueType.fieldNames() == ["col-i"]
+    assert phys["col-aa"].dataType.elementType.elementType.fieldNames() == [
+        "col-d"
+    ]

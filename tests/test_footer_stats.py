@@ -3,9 +3,11 @@ aggregate they replace — and must refuse (return None) whenever they
 could not be."""
 
 import glob
+import json
 import math
 import os
 
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from levi_spark.delta.log import DeltaLog
@@ -100,3 +102,50 @@ def test_all_null_column_stays_on_footer_path(spark, tmp_path):
     assert footer is not None
     (s,) = footer.values()
     assert "s" not in s["minValues"] and s["nullCount"]["s"] == 2
+
+
+def _add_stats(path):
+    """{file -> parsed stats dict} from every add action in the log."""
+    out = {}
+    log_dir = os.path.join(path, "_delta_log")
+    for name in sorted(os.listdir(log_dir)):
+        if not name.endswith(".json"):
+            continue
+        with open(os.path.join(log_dir, name)) as f:
+            for line in f:
+                d = json.loads(line)
+                if "add" in d and d["add"].get("stats"):
+                    out[d["add"]["path"]] = json.loads(d["add"]["stats"])
+    return out
+
+
+def test_timestamp_stats_identical_footer_vs_spark_fallback(spark, tmp_path):
+    """Same timestamp data through both stats paths must serialize the
+    same min/max strings (explicit-offset UTC ISO), so data skipping
+    does not depend on which path a commit happened to take."""
+    base = spark.createDataFrame(
+        [("2024-03-01 10:30:00",), ("2024-07-15 23:59:59",)], "s STRING"
+    ).select(F.to_timestamp("s").alias("ts"), F.lit(1).alias("k"))
+
+    p_footer = str(tmp_path / "footer")
+    write_delta(base, p_footer, mode="error", checkpoint_interval=None)
+
+    # an array column makes _footer_stats bail -> Spark aggregate path
+    p_spark = str(tmp_path / "fallback")
+    write_delta(
+        base.withColumn("arr", F.array(F.lit(1))),
+        p_spark,
+        mode="error",
+        checkpoint_interval=None,
+    )
+
+    s_footer = _add_stats(p_footer)
+    s_spark = _add_stats(p_spark)
+    mins_f = {v["minValues"].get("ts") for v in s_footer.values()}
+    mins_s = {v["minValues"].get("ts") for v in s_spark.values()}
+    maxs_f = {v["maxValues"].get("ts") for v in s_footer.values()}
+    maxs_s = {v["maxValues"].get("ts") for v in s_spark.values()}
+    assert mins_f == mins_s and maxs_f == maxs_s
+    # and the canonical form is timezone-explicit UTC
+    for v in mins_f | maxs_f:
+        assert v.endswith("+00:00"), v

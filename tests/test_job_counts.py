@@ -1,14 +1,15 @@
-"""Spark job counts of the levi operators on a small table whose log
-is replayed on the driver: the metadata plane answers from the log
-without starting a job, and ``drop_duplicates`` / ``kill_duplicates``
-compute their loser set once. Jobs are counted from the status store
-by submission time, so jobs started on other threads (broadcasts,
-subqueries) count too."""
+"""Spark job counts of the levi operators on a small table. The log is
+replayed on the driver, so the metadata plane, snapshot metadata and
+the checkpoint writer answer from the log without starting a job, and
+``drop_duplicates`` / ``kill_duplicates`` compute their loser set
+once. Jobs are counted from the status store by submission time, so
+jobs started on other threads (broadcasts, subqueries) count too."""
 
 import time
 
 import pytest
 
+from levi_spark.delta.checkpoint import write_checkpoint
 from levi_spark.delta.log import DeltaLog
 from levi_spark.delta.table import LeviTable
 from levi_spark.delta.writer import write_delta
@@ -47,12 +48,6 @@ def table_path(spark, tmp_path):
     return loc
 
 
-def _snapshot(spark, path):
-    snap = DeltaLog(spark, path).snapshot()
-    assert snap._local_actions() is not None  # driver-side replay
-    return snap
-
-
 def test_metadata_plane_starts_no_job(spark, table_path):
     for op in (
         lambda s: skipped_stats(s, [("x", ">", 12)]),
@@ -60,8 +55,26 @@ def test_metadata_plane_starts_no_job(spark, table_path):
         lambda s: updated_partitions(s),
         lambda s: pruned_scan(s, [("x", ">", 12), ("p", "=", "a")]),
     ):
-        snap = _snapshot(spark, table_path)
+        snap = DeltaLog(spark, table_path).snapshot()
         assert _jobs_started(spark, lambda: op(snap)) == 0
+
+
+def test_snapshot_metadata_starts_no_job(spark, table_path):
+    for op in (
+        lambda s: s.metadata,
+        lambda s: s.protocol,
+        lambda s: s.txn_versions(),
+        lambda s: s.domain_metadata(),
+    ):
+        snap = DeltaLog(spark, table_path).snapshot()
+        assert _jobs_started(spark, lambda: op(snap)) == 0
+
+
+@pytest.mark.parametrize("fmt", ["classic", "v2"])
+def test_write_checkpoint_starts_no_job(spark, table_path, fmt):
+    n = _jobs_started(spark, lambda: write_checkpoint(spark, table_path, format=fmt))
+    assert n == 0
+    assert DeltaLog(spark, table_path).snapshot().to_df().count() == 30
 
 
 def test_drop_duplicates_job_budget(spark, table_path):

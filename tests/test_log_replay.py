@@ -2,7 +2,9 @@
 corpus (11 generated Delta tables, each with golden `expected/<version>/
 table_content.parquet`). Reference test model: SURVEY.md §5."""
 
+import glob
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -98,24 +100,35 @@ def test_partition_values_typed(spark, fixtures_dir):
     assert df.where(F.col("letter").isNull()).count() == 1
 
 
-def test_local_replay_equals_distributed(spark, fixtures_dir):
-    """The driver-side (json/pyarrow) log replay and the distributed
-    (Spark job) replay must reconcile to the identical live-file set on
-    every fixture — including checkpoint-bearing and pruned-history
-    tables (the pyarrow checkpoint branch)."""
-    import os
+def test_torn_commit_fails_loudly(spark, tmp_path):
+    """A torn ``add`` line in commit 1 fails every read at or after
+    version 1, naming the file and line, instead of replaying the
+    version-0 state. The checkpoint writer refuses too, so no
+    checkpoint bakes the loss in for ``expire_log`` to make
+    permanent."""
+    from levi_spark.delta.checkpoint import write_checkpoint
+    from levi_spark.delta.writer import write_delta
 
-    for case in CASES:
-        path = os.path.join(fixtures_dir, case, "delta")
-        snap = DeltaLog(spark, path).snapshot()
-        assert snap._local_actions() is not None, case
-        local = sorted(
-            (r["add"]["path"], r["version"]) for r in snap._local_live()
-        )
-        forced = DeltaLog(spark, path).snapshot()
-        forced._local = False  # force the distributed path
-        dist = sorted(
-            (r["add"]["path"], r["version"])
-            for r in forced.live_adds_raw().collect()
-        )
-        assert local == dist, case
+    path = str(tmp_path / "t")
+    write_delta(spark.range(0, 100, numPartitions=2), path, mode="error",
+                checkpoint_interval=None)
+    write_delta(spark.range(100, 200, numPartitions=2), path, mode="append",
+                checkpoint_interval=None)
+    commit1 = os.path.join(path, "_delta_log", f"{1:020d}.json")
+    with open(commit1) as f:
+        lines = f.read().splitlines()
+    i = next(n for n, line in enumerate(lines) if line.startswith('{"add"'))
+    lines[i] = lines[i][: len(lines[i]) // 2]
+    with open(commit1, "w") as f:
+        f.write("\n".join(lines) + "\n")
+
+    where = re.escape(f"{commit1}:{i + 1}: malformed Delta log action")
+    with pytest.raises(ValueError, match=where):
+        DeltaLog(spark, path).snapshot().to_df().count()
+    with pytest.raises(ValueError, match=where):
+        DeltaLog(spark, path).snapshot(1).metadata
+    with pytest.raises(ValueError, match=where):
+        write_checkpoint(spark, path)
+    assert not glob.glob(os.path.join(path, "_delta_log", "*.checkpoint*"))
+    # the versions before the torn commit still read
+    assert DeltaLog(spark, path).snapshot(0).to_df().count() == 100

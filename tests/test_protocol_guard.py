@@ -204,3 +204,27 @@ def test_collated_write_declares_feature_and_round_trips(spark, tmp_path):
         actions = [json.loads(line) for line in f]
     (proto2,) = [a["protocol"] for a in actions if "protocol" in a]
     assert "collations-preview" not in (proto2.get("readerFeatures") or [])
+
+
+def test_protocol_guard_enforced_on_checkpoint_path(spark, tmp_path):
+    """A protocol that demands an unsupported reader feature is refused
+    when the reader finds it in a checkpoint, with the commit that
+    declared it expired."""
+    from levi_spark.delta.checkpoint import expire_log, write_checkpoint
+
+    path = str(tmp_path / "t")
+    _mk_table(spark, path)
+    _append_protocol_commit(
+        path,
+        {
+            "minReaderVersion": 3,
+            "minWriterVersion": 7,
+            # catalog-owned commit coordination is unimplemented
+            "readerFeatures": ["catalogOwned-preview"],
+            "writerFeatures": ["catalogOwned-preview"],
+        },
+    )
+    write_checkpoint(spark, path)
+    assert expire_log(spark, path) == [0, 1]
+    with pytest.raises(UnsupportedTableFeatureError, match="catalogOwned"):
+        DeltaLog(spark, path).snapshot().to_df()

@@ -156,3 +156,33 @@ def test_foreign_replica_refused(spark, tmp_path):
     _mk_src(spark, dst)  # pre-existing table with no replication txn
     with pytest.raises(ValueError, match="no replication"):
         replicate_cdf(spark, src, dst, ["k"])
+
+
+def test_replicate_window_with_overwrite_keeps_surviving_keys(spark, tmp_path):
+    """An overwrite commit synthesizes delete+insert rows at ONE commit
+    version for every key present on both sides; the sync must land the
+    insert image, not the (alphabetically-first) delete image."""
+    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+    df = spark.createDataFrame(
+        [(i, f"n{i}", float(i)) for i in range(20)],
+        "k LONG, name STRING, v DOUBLE",
+    )
+    write_delta(df.repartition(3), src, mode="error", checkpoint_interval=None)
+    replicate_cdf(spark, src, dst, ["k"])
+
+    # keys 0-9 SURVIVE the overwrite (with new values), 10-19 vanish,
+    # 50 is new — all inside the one sync window
+    new = spark.createDataFrame(
+        [(i, f"ow{i}", i * 2.0) for i in range(10)] + [(50, "ow", 50.0)],
+        "k LONG, name STRING, v DOUBLE",
+    )
+    write_delta(new.repartition(2), src, mode="overwrite", checkpoint_interval=None)
+    r = replicate_cdf(spark, src, dst, ["k"])
+    assert not r["bootstrapped"]
+    assert _rows(spark, dst) == _rows(spark, src)
+    got = {
+        (row["k"], row["name"])
+        for row in DeltaLog(spark, dst).snapshot().to_df().collect()
+    }
+    assert (3, "ow3") in got and (3, "n3") not in got
+    assert (50, "ow") in got and all(k < 10 or k == 50 for k, _ in got)

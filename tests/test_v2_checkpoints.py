@@ -204,11 +204,6 @@ def test_v2_checkpoint_with_sidecars(spark, tmp_path, manifest_fmt):
     snap = DeltaLog(spark, path).snapshot()
     got = sorted(r.id for r in snap.to_df().collect())
     assert got == list(range(7))
-    # distributed replay agrees with the driver fast path
-    snap2 = DeltaLog(spark, path).snapshot()
-    snap2._local = False
-    got2 = sorted(r.id for r in snap2.to_df().collect())
-    assert got2 == list(range(7))
 
 
 def test_v2_checkpoint_then_later_commits(spark, tmp_path):
@@ -287,29 +282,6 @@ def test_write_v2_checkpoint_and_expire(spark, tmp_path):
     assert got == want
     assert snap.txn_versions().get("app-x") == 3
     assert snap.metadata.schema.fieldNames() == ["id", "v"]
-
-
-def test_write_v2_checkpoint_distributed_path(spark, tmp_path, monkeypatch):
-    """The Spark-write fallback (log 'too big' for the driver fast
-    path) produces the same readable v2 shape."""
-    import levi_spark.delta.checkpoint as cp_mod
-    from levi_spark.delta.checkpoint import expire_log, write_checkpoint
-
-    path = str(tmp_path / "t")
-    _mk_table(spark, path)
-    want = sorted(
-        (r.id, r.v)
-        for r in DeltaLog(spark, path).snapshot().to_df().collect()
-    )
-    monkeypatch.setattr(
-        cp_mod, "_local_checkpoint_rows", lambda snap: None
-    )
-    write_checkpoint(spark, path, format="v2")
-    expire_log(spark, path)
-    snap = DeltaLog(spark, path).snapshot()
-    got = sorted((r.id, r.v) for r in snap.to_df().collect())
-    assert got == want
-    assert snap.txn_versions().get("app-x") == 3
 
 
 def test_commits_after_v2_checkpoint_replay(spark, tmp_path):
