@@ -21,7 +21,6 @@ from __future__ import annotations
 import io
 import json
 import os
-import time
 import uuid
 
 import pyarrow as pa
@@ -104,7 +103,7 @@ def _write_checkpoint_v2(log: DeltaLog, snap) -> int:
     sidecar reference land in a JSON manifest. Tables without the
     ``v2Checkpoint`` reader feature get it in a protocol-upgrade
     commit first."""
-    from levi_spark.delta.writer import _publish_commit, merge_protocol
+    from levi_spark.delta.writer import commit, merge_protocol
 
     # A v2 checkpoint is only discoverable by spec-conforming foreign
     # readers when the table protocol declares the v2Checkpoint
@@ -128,36 +127,12 @@ def _write_checkpoint_v2(log: DeltaLog, snap) -> int:
                 "writerFeatures": ["v2Checkpoint"],
             },
         )
-        meta = snap.metadata
-        now_ms = int(time.time() * 1000)
-        lines = [
-            json.dumps({"protocol": new_proto}),
-            json.dumps(
-                {
-                    "metaData": {
-                        "id": meta.id,
-                        "format": {"provider": "parquet", "options": {}},
-                        "schemaString": meta.schema.json(),
-                        "partitionColumns": meta.partition_columns,
-                        "configuration": meta.configuration,
-                        "createdTime": meta.created_time or now_ms,
-                    }
-                }
-            ),
-            json.dumps(
-                {
-                    "commitInfo": {
-                        "timestamp": now_ms,
-                        "operation": "UPGRADE PROTOCOL",
-                        "operationParameters": {"feature": "v2Checkpoint"},
-                        "engineInfo": "levi-spark/0.1.0",
-                    }
-                }
-            ),
-        ]
-        _publish_commit(
-            log.log_path, snap.version + 1, "\n".join(lines) + "\n",
-            rebase_ok=False,
+        commit(
+            log.log_path, snap.version + 1, [],
+            operation="UPGRADE PROTOCOL",
+            params={"feature": "v2Checkpoint"},
+            metadata=snap.metadata,
+            protocol=new_proto,
         )
         snap = log.snapshot()
 

@@ -39,8 +39,7 @@ from __future__ import annotations
 
 import json
 import os
-import time
-import uuid
+from dataclasses import replace
 from urllib.parse import quote, unquote
 
 from pyspark.sql import SparkSession
@@ -69,7 +68,7 @@ def clone_table(
     for a DEEP clone of a source whose adds reference external
     (absolute/URI) files that cannot be re-linked locally.
     """
-    from levi_spark.delta.writer import _publish_commit
+    from levi_spark.delta.writer import commit
 
     src_log = DeltaLog(spark, src_path)
     snap = src_log.snapshot(version)
@@ -160,52 +159,27 @@ def clone_table(
                 _add_dict(a, a["path"], plan[0] if plan else None)
             )
 
-    now_ms = int(time.time() * 1000)
-    from levi_spark.delta.writer import in_commit_timestamp
-
-    _clone_ci: dict = {
-        "timestamp": now_ms,
-        "operation": "CLONE",
-        "operationParameters": {
+    log_dir = os.path.join(dst_path, "_delta_log")
+    dfs.mkdirs(log_dir)
+    # the clone inherits the SOURCE's protocol (its adds may carry
+    # standard DV descriptors and its configuration may enable column
+    # mapping — a default {1,2} protocol would make the clone
+    # spec-invalid for foreign readers) and configuration (so an
+    # inCommitTimestamps source makes a stamped version 0), under a
+    # fresh table id and creation time
+    commit(
+        log_dir, 0,
+        [{"add": a} for a in out_adds]
+        + [json.loads(ln) for ln in extra_action_lines or []],
+        operation="CLONE",
+        params={
             "source": src_log.table_path,
             "sourceVersion": str(snap.version),
             "isShallow": str(bool(shallow)).lower(),
         },
-        "engineInfo": "levi-spark/0.1.0",
-    }
-    # the clone inherits the source configuration verbatim — if that
-    # enables inCommitTimestamps, the clone's version-0 commit is
-    # stamped (fresh log: predecessor is the wall clock)
-    _ict = in_commit_timestamp(
-        meta.configuration, os.path.join(dst_path, "_delta_log"), now_ms
+        metadata=replace(meta, id=None, created_time=None),
+        protocol=snap.protocol,
     )
-    if _ict is not None:
-        _clone_ci["inCommitTimestamp"] = _ict
-    lines = [
-        # the clone inherits the SOURCE's protocol: its adds may carry
-        # standard DV descriptors and its configuration may enable
-        # column mapping — a default {1,2} protocol would make the
-        # clone spec-invalid for foreign readers
-        json.dumps({"protocol": snap.protocol}),
-        json.dumps(
-            {
-                "metaData": {
-                    "id": str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": meta.schema.json(),
-                    "partitionColumns": meta.partition_columns,
-                    "configuration": meta.configuration,
-                    "createdTime": now_ms,
-                }
-            }
-        ),
-        *[json.dumps({"add": a}) for a in out_adds],
-        *(extra_action_lines or []),
-        json.dumps({"commitInfo": _clone_ci}),
-    ]
-    log_dir = os.path.join(dst_path, "_delta_log")
-    dfs.mkdirs(log_dir)
-    _publish_commit(log_dir, 0, "\n".join(lines) + "\n", rebase_ok=False)
     return {
         "version": 0,
         "files": len(out_adds),

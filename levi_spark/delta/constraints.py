@@ -18,10 +18,7 @@ validation is the same single aggregate over the current snapshot.
 
 from __future__ import annotations
 
-import json
-import os
-import time
-import uuid
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -73,50 +70,21 @@ def enforce_constraints(df: DataFrame, configuration: dict[str, str]) -> None:
         raise CheckConstraintViolation(f"CHECK constraint violated — {detail}")
 
 
-def _config_commit(spark: SparkSession, path: str, new_conf: dict[str, str]) -> int:
-    """Publish a metadata-only commit carrying ``new_conf`` (schema,
-    partitioning and table id unchanged). Optimistic: a concurrent
-    commit surfaces as the writer's retryable ValueError."""
-    from levi_spark.delta.log import DeltaLog
-    from levi_spark.delta.writer import _publish_commit, in_commit_timestamp
+def _set_configuration(snap, conf: dict[str, str]) -> int:
+    """Publish a metadata-only commit carrying ``conf`` (schema,
+    partitioning, table id and protocol unchanged — a config commit
+    must never downgrade a feature-upgraded table). Optimistic: a
+    concurrent commit surfaces as the writer's retryable ValueError."""
+    from dataclasses import replace
 
-    path = os.path.abspath(path)
-    log = DeltaLog(spark, path)
-    snap = log.snapshot()
-    now_ms = int(time.time() * 1000)
-    _ci: dict = {
-        "timestamp": now_ms,
-        "operation": "SET TBLPROPERTIES",
-        "engineInfo": "levi-spark/0.1.0",
-    }
-    # the NEW configuration governs: the commit that turns
-    # inCommitTimestamps ON is itself the first stamped commit
-    _ict = in_commit_timestamp(new_conf, log.log_path, now_ms)
-    if _ict is not None:
-        _ci["inCommitTimestamp"] = _ict
-    lines = [
-        # preserve the table's current protocol — a config commit must
-        # never downgrade a feature-upgraded table
-        json.dumps({"protocol": snap.protocol}),
-        json.dumps(
-            {
-                "metaData": {
-                    "id": snap.metadata.id,
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": snap.metadata.schema.json(),
-                    "partitionColumns": snap.metadata.partition_columns,
-                    "configuration": new_conf,
-                    "createdTime": snap.metadata.created_time or now_ms,
-                }
-            }
-        ),
-        json.dumps({"commitInfo": _ci}),
-    ]
-    return _publish_commit(
-        os.path.join(path, "_delta_log"),
-        snap.version + 1,
-        "\n".join(lines) + "\n",
-        rebase_ok=False,
+    from levi_spark.delta.writer import commit
+
+    return commit(
+        snap.log.log_path, snap.version + 1, [],
+        operation="SET TBLPROPERTIES",
+        params={},
+        metadata=replace(snap.metadata, configuration=conf),
+        protocol=snap.protocol,
     )
 
 
@@ -146,7 +114,7 @@ def add_check_constraint(
             f"({expr})"
         )
     conf[key] = expr
-    return _config_commit(spark, path, conf)
+    return _set_configuration(snap, conf)
 
 
 def drop_check_constraint(spark: SparkSession, path: str, name: str) -> int:
@@ -159,7 +127,7 @@ def drop_check_constraint(spark: SparkSession, path: str, name: str) -> int:
     if key not in conf:
         raise KeyError(f"no such constraint: {name!r}")
     del conf[key]
-    return _config_commit(spark, path, conf)
+    return _set_configuration(snap, conf)
 
 
 def set_table_properties(
@@ -172,11 +140,11 @@ def set_table_properties(
     specialized callers of the same commit shape."""
     from levi_spark.delta.log import DeltaLog
 
-    snap = DeltaLog(spark, os.path.abspath(path)).snapshot()
+    snap = DeltaLog(spark, path).snapshot()
     conf = dict(snap.metadata.configuration or {})
     for k, v in properties.items():
         if v is None:
             conf.pop(k, None)
         else:
             conf[k] = str(v)
-    return _config_commit(spark, path, conf)
+    return _set_configuration(snap, conf)

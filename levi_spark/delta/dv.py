@@ -45,58 +45,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from levi_spark.delta.log import DeltaLog
-from levi_spark.delta.writer import DEFAULT_CHECKPOINT_INTERVAL, write_delta
-
-
-def _append_commit(
-    log: DeltaLog,
-    snap,
-    version: int,
-    actions: list[dict],
-    operation: str,
-    params: dict,
-    protocol: dict | None = None,
-) -> None:
-    """Append one commit JSON (re-emitting protocol+metaData like the
-    writer does). Published through the writer's conflict-safe
-    ``_publish_commit`` with ``rebase_ok=False``: a DV commit re-emits
-    add actions read from its snapshot, so a concurrent commit
-    invalidates it — the conflict surfaces as the documented retryable
-    ``ValueError``, never a raw ``FileExistsError``."""
-    now_ms = int(time.time() * 1000)
-    # default: preserve the table's current protocol (a feature upgrade
-    # must never be reverted by an unrelated DV commit)
-    lines = [json.dumps({"protocol": protocol or snap.protocol})]
-    meta = snap.metadata
-    lines.append(
-        json.dumps(
-            {
-                "metaData": {
-                    "id": meta.id,
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": meta.schema.json(),
-                    "partitionColumns": meta.partition_columns,
-                    "configuration": meta.configuration,
-                    "createdTime": meta.created_time or now_ms,
-                }
-            }
-        )
-    )
-    lines += [json.dumps(a) for a in actions]
-    from levi_spark.delta.writer import _publish_commit, in_commit_timestamp
-
-    ci: dict = {
-        "timestamp": now_ms,
-        "operation": operation,
-        "operationParameters": params,
-        "engineInfo": "levi-spark/0.1.0",
-    }
-    ict = in_commit_timestamp(meta.configuration, log.log_path, now_ms)
-    if ict is not None:
-        ci["inCommitTimestamp"] = ict
-    lines.append(json.dumps({"commitInfo": ci}))
-
-    _publish_commit(log.log_path, version, "\n".join(lines) + "\n", rebase_ok=False)
+from levi_spark.delta.writer import (
+    DEFAULT_CHECKPOINT_INTERVAL,
+    auto_checkpoint,
+    commit,
+    write_delta,
+)
 
 
 def _write_standard_dvs(
@@ -348,7 +302,7 @@ def soft_delete(
 
     if emit_cdf:
         from levi_spark.delta.log import local_frame
-        from levi_spark.delta.writer import cdc_action_lines, write_cdc_files
+        from levi_spark.delta.writer import cdc_actions, write_cdc_files
 
         # One change-data file per affected data file: each file's
         # deleted rows go to a partition of their own by a dense id
@@ -372,18 +326,20 @@ def soft_delete(
             .select(*snap.metadata.data_columns)
             .withColumn("_change_type", F.lit("delete"))
         )
-        actions += [
-            json.loads(ln)
-            for ln in cdc_action_lines(write_cdc_files(deleted_rows, path))
-        ]
+        actions += cdc_actions(write_cdc_files(deleted_rows, path))
 
     version = snap.version + 1
     # only a commit that leaves a DV live needs the DV protocol
     keeps_dv = any("add" in a for a in actions)
     try:
-        _append_commit(
-            log, snap, version, actions, "DELETE", {"predicate": str(predicate)},
-            protocol=_standard_dv_protocol(snap) if keeps_dv else None,
+        # a DV commit re-emits add actions read from its snapshot, so a
+        # concurrent commit invalidates it (the retryable ValueError)
+        commit(
+            log.log_path, version, actions,
+            operation="DELETE",
+            params={"predicate": str(predicate)},
+            metadata=snap.metadata,
+            protocol=_standard_dv_protocol(snap) if keeps_dv else snap.protocol,
         )
     except ValueError:
         # Lost the commit race: the DV files written above are
@@ -392,10 +348,9 @@ def soft_delete(
         # contract.
         _cleanup()
         raise
-    if checkpoint_interval and version % checkpoint_interval == 0:
-        from levi_spark.delta.checkpoint import write_checkpoint
-
-        write_checkpoint(spark, path, version)
+    auto_checkpoint(
+        spark, path, version, snap.metadata.configuration, checkpoint_interval
+    )
     return {
         "version": version,
         "rows_deleted": rows_deleted,

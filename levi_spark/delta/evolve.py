@@ -22,21 +22,13 @@ would corrupt every reader.
 
 from __future__ import annotations
 
-import json
-import os
-import time
-import uuid
+from dataclasses import replace
 
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from levi_spark.delta.log import DeltaLog
-from levi_spark.delta.writer import (
-    _COORD_PROP,
-    _publish_commit,
-    _publish_staged_commit,
-    merge_protocol,
-)
+from levi_spark.delta.writer import commit, merge_protocol
 
 _WIDENINGS: dict[str, set[str]] = {
     "byte": {"short", "integer", "long"},
@@ -108,38 +100,12 @@ def widen_column(
             "writerFeatures": ["typeWidening"],
         },
     )
-    now_ms = int(time.time() * 1000)
-    payload = "\n".join(
-        json.dumps(a)
-        for a in (
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "WIDEN COLUMN TYPE",
-                    "operationParameters": {
-                        "column": column,
-                        "toType": to_type,
-                    },
-                    "engineInfo": "levi-spark/0.1.0",
-                }
-            },
-            {"protocol": proto},
-            {
-                "metaData": {
-                    "id": meta.id or str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": new_schema.json(),
-                    "partitionColumns": meta.partition_columns,
-                    "configuration": meta.configuration,
-                    "createdTime": meta.created_time or now_ms,
-                }
-            },
-        )
-    ) + "\n"
-    log_dir = os.path.join(os.path.abspath(table_path), "_delta_log")
-    version = snap.version + 1
     # schema changes never blind-rebase: a racing commit may itself
     # have evolved the schema this widening was computed from
-    if _COORD_PROP in meta.configuration:
-        return _publish_staged_commit(log_dir, version, payload)
-    return _publish_commit(log_dir, version, payload, rebase_ok=False)
+    return commit(
+        log.log_path, snap.version + 1, [],
+        operation="WIDEN COLUMN TYPE",
+        params={"column": column, "toType": to_type},
+        metadata=replace(meta, schema=new_schema),
+        protocol=proto,
+    )

@@ -29,9 +29,9 @@ from urllib.parse import unquote
 
 from pyspark.sql import SparkSession
 
-from levi_spark.delta.dv import _append_commit
 from levi_spark.delta.log import DeltaLog
 from levi_spark.delta.roaring import dv_file
+from levi_spark.delta.writer import commit
 from levi_spark.fs import fs_for
 
 
@@ -128,10 +128,14 @@ def restore(spark: SparkSession, path: str, version: int) -> dict:
         actions.append(
             {"remove": {"path": p, "deletionTimestamp": now_ms, "dataChange": True}}
         )
-    # metaData re-emitted from the TARGET snapshot: RESTORE rolls the
-    # schema back too (Delta semantics)
-    _append_commit(
-        log, tgt, cur.version + 1, actions, "RESTORE", {"version": str(version)}
+    # metaData and protocol re-emitted from the TARGET snapshot:
+    # RESTORE rolls the schema back too (Delta semantics)
+    commit(
+        log.log_path, cur.version + 1, actions,
+        operation="RESTORE",
+        params={"version": str(version)},
+        metadata=tgt.metadata,
+        protocol=tgt.protocol,
     )
     return {
         "version": cur.version + 1,

@@ -45,18 +45,17 @@ from levi_spark.delta.writer import CDC_DIR
 
 
 def _referenced_cdc_files(log: DeltaLog) -> set[str]:
-    """cdc paths named by any commit JSON still present in the log."""
+    """cdc paths named by any commit still present in the log — the
+    backfilled JSONs and a coordinated table's staged tail alike."""
     from urllib.parse import unquote
 
     out: set[str] = set()
-    for name in log.fs.listdir(log.log_path):
-        if not name.endswith(".json"):
-            continue
-        for line in log.fs.read_text(
-                os.path.join(log.log_path, name)).splitlines():
-                a = json.loads(line)
-                if "cdc" in a:
-                    out.add(os.path.normpath(unquote(a["cdc"]["path"])))
+    commits, _cps = log._entries()
+    for v in commits:
+        for line in log.fs.read_text(log._commit_file(v)).splitlines():
+            a = json.loads(line)
+            if "cdc" in a:
+                out.add(os.path.normpath(unquote(a["cdc"]["path"])))
     return out
 
 

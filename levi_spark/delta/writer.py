@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from levi_spark.delta.log import DeltaLog, stats_schema, _MINMAX_TYPES
+from levi_spark.delta.log import DeltaLog, TableMetadata, stats_schema, _MINMAX_TYPES
 from levi_spark.fs import fs_for, local_form
 
 _PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
@@ -376,20 +376,18 @@ def write_cdc_files(cdc_df: DataFrame, path: str) -> list[tuple[str, int]]:
     return rels
 
 
-def cdc_action_lines(cdc_rels: list[tuple[str, int]]) -> list[str]:
+def cdc_actions(cdc_rels: list[tuple[str, int]]) -> list[dict]:
     """``cdc`` actions (Delta's change-data action shape) for files
     written by :func:`write_cdc_files`."""
     return [
-        json.dumps(
-            {
-                "cdc": {
-                    "path": quote(rel, safe="/"),
-                    "partitionValues": {},
-                    "size": size,
-                    "dataChange": False,
-                }
+        {
+            "cdc": {
+                "path": quote(rel, safe="/"),
+                "partitionValues": {},
+                "size": size,
+                "dataChange": False,
             }
-        )
+        }
         for rel, size in cdc_rels
     ]
 
@@ -405,12 +403,8 @@ def in_commit_timestamp(
     so timestamp time travel is total regardless of log-file mtimes
     (which rsync/backup/restore scramble). Returns None when the
     feature is off. The predecessor read is one O(1) driver-side file
-    read of the latest commit.
-
-    Rebase caveat: a blind-append commit that loses a race is
-    republished under the next version without re-stamping; the
-    reader's predecessor+1 monotonization (``commit_timestamps``)
-    keeps the time-travel mapping total in that case."""
+    read of the latest commit; a retried commit is re-stamped, since
+    :func:`commit` calls this once per attempt."""
     enabled = str(
         (meta_conf or {}).get("delta.enableInCommitTimestamps", "")
     ).lower() == "true"
@@ -454,30 +448,12 @@ def in_commit_timestamp(
     return max(int(now_ms), prev + 1)
 
 
-def _publish_commit(
-    log_dir: str,
-    version: int,
-    payload: str,
-    rebase_ok: bool,
-    max_attempts: int = 20,
-    ict_conf: dict | None = None,
-) -> int:
-    """O_EXCL publish with optimistic concurrency; returns the version
-    actually committed.
-
-    A blind append — no tombstones, no replaced files — commutes with
-    any concurrent commit, so on collision it REBASES: take the next
-    version number and re-publish (Delta's winning-writer rule for
-    AppendOnly conflicts). Overwrites and file replacements read the
-    snapshot they tombstone, so a concurrent commit invalidates them:
-    the conflict surfaces as ``ValueError`` and the caller must re-run
-    against the new snapshot.
-
-    ``ict_conf`` (the commit's table configuration): when in-commit
-    timestamps are enabled, each rebase RE-STAMPS the payload's
-    commitInfo from the new predecessor — republishing the pre-race
-    stamp verbatim could violate ICT's strict monotonicity when the
-    race winner carried a later timestamp.
+def _publish_commit(log_dir: str, version: int, payload: str) -> int:
+    """O_EXCL publish of ``payload`` as commit ``version``; returns the
+    version. A commit already at that version means a concurrent
+    writer won: the conflict surfaces as ``ValueError`` and the caller
+    re-runs against the new snapshot (write_delta's blind-append retry
+    loop is the one place that does so automatically).
 
     COORDINATOR FALLBACK (non-atomic backends): when the table's
     filesystem reports ``atomic_put_if_absent=False`` (S3-class object
@@ -493,57 +469,123 @@ def _publish_commit(
     file:// and hdfs keep the direct O_EXCL path.
     """
     fs = fs_for(log_dir)
-    coordinated = not getattr(fs, "atomic_put_if_absent", True)
-    for _attempt in range(max_attempts):
-        commit_path = os.path.join(log_dir, f"{version:020d}.json")
-        try:
-            if coordinated:
-                try:
-                    _publish_staged_commit(log_dir, version, payload)
-                except ValueError:
-                    # same arbitration signal as a direct-path loser
-                    raise FileExistsError(commit_path) from None
-                backfill_commits(
-                    os.path.dirname(log_dir.rstrip("/")), up_to=version
-                )
-                # arbitration verify: the existence check in
-                # _publish_staged_commit has a TOCTOU window on a
-                # listing-lagged store — two writers can both stage
-                # version N under distinct uuids. The ratified commit
-                # is whichever backfilled first; if the backfilled
-                # bytes are not OURS we lost the race and must surface
-                # it (rebase or conflict), never return success for a
-                # commit the log does not contain.
-                if fs.read_text(commit_path) != payload:
-                    raise FileExistsError(commit_path)
-            else:
-                fs.create_exclusive(commit_path, payload)
+    commit_path = os.path.join(log_dir, f"{version:020d}.json")
+    try:
+        if getattr(fs, "atomic_put_if_absent", True):
+            fs.create_exclusive(commit_path, payload)
             return version
-        except FileExistsError:
-            if not rebase_ok:
-                raise ValueError(
-                    f"concurrent commit at version {version}: this "
-                    "operation must be retried against the new snapshot"
-                ) from None
-            version += 1
-            if ict_conf is not None:
-                ict = in_commit_timestamp(
-                    ict_conf, log_dir, int(time.time() * 1000)
-                )
-                if ict is not None:
-                    lines = payload.rstrip("\n").split("\n")
-                    for i, ln in enumerate(lines):
-                        d = json.loads(ln)
-                        if "commitInfo" in d:
-                            d["commitInfo"]["inCommitTimestamp"] = ict
-                            lines[i] = json.dumps(d)
-                    payload = "\n".join(lines) + "\n"
-    raise RuntimeError(
-        f"commit contention: {max_attempts} rebase attempts failed"
-    )
+        try:
+            _publish_staged_commit(log_dir, version, payload)
+        except ValueError:
+            # same arbitration signal as a direct-path loser
+            raise FileExistsError(commit_path) from None
+        backfill_commits(os.path.dirname(log_dir.rstrip("/")), up_to=version)
+        # arbitration verify: the existence check in
+        # _publish_staged_commit has a TOCTOU window on a
+        # listing-lagged store — two writers can both stage version N
+        # under distinct uuids. The ratified commit is whichever
+        # backfilled first; if the backfilled bytes are not OURS we
+        # lost the race and must surface it, never return success for
+        # a commit the log does not contain.
+        if fs.read_text(commit_path) != payload:
+            raise FileExistsError(commit_path)
+        return version
+    except FileExistsError:
+        raise ValueError(
+            f"concurrent commit at version {version}: this "
+            "operation must be retried against the new snapshot"
+        ) from None
 
 
 _COORD_PROP = "delta.coordinatedCommits.commitCoordinator-preview"
+
+ENGINE_INFO = "levi-spark/0.1.0"
+
+
+def _stages_commit(configuration: dict | None, version: int) -> bool:
+    """Whether commit ``version`` under ``configuration`` is STAGED in
+    ``_delta_log/_commits`` rather than published to the main log: the
+    configuration names a commit coordinator and the commit is not the
+    table's creation (which always backfills)."""
+    return version > 0 and _COORD_PROP in (configuration or {})
+
+
+def commit(
+    log_dir: str,
+    version: int,
+    actions: list[dict],
+    *,
+    operation: str,
+    params: dict,
+    metadata: TableMetadata,
+    protocol: dict,
+) -> int:
+    """Build, stamp, stage and publish one commit; returns its version.
+
+    Every levi commit goes through here: it serialises the protocol,
+    the metaData (``metadata`` — the table state being committed), the
+    ``actions`` and a commitInfo (``timestamp``, ``operation``,
+    ``operationParameters``, ``engineInfo``, and ``inCommitTimestamp``
+    exactly when ``metadata.configuration`` enables in-commit
+    timestamps — so the commit that turns them on is the first one
+    stamped). The commit is staged for the filesystem coordinator
+    when :func:`_stages_commit` says so, else published through
+    :func:`_publish_commit`. A lost race raises the retryable
+    ``ValueError``.
+    """
+    now_ms = int(time.time() * 1000)
+    conf = metadata.configuration or {}
+    ci: dict = {
+        "timestamp": now_ms,
+        "operation": operation,
+        "operationParameters": params,
+        "engineInfo": ENGINE_INFO,
+    }
+    ict = in_commit_timestamp(conf, log_dir, now_ms)
+    if ict is not None:
+        ci["inCommitTimestamp"] = ict
+    meta = {
+        "id": metadata.id or str(uuid.uuid4()),
+        "format": {"provider": "parquet", "options": {}},
+        "schemaString": metadata.schema.json(),
+        "partitionColumns": metadata.partition_columns,
+        "configuration": conf,
+        "createdTime": metadata.created_time
+        if metadata.created_time is not None
+        else now_ms,
+    }
+    payload = "\n".join(
+        [
+            json.dumps({"protocol": protocol}),
+            json.dumps({"metaData": meta}),
+            *(json.dumps(a) for a in actions),
+            json.dumps({"commitInfo": ci}),
+        ]
+    ) + "\n"
+    if _stages_commit(conf, version):
+        return _publish_staged_commit(log_dir, version, payload)
+    return _publish_commit(log_dir, version, payload)
+
+
+def auto_checkpoint(
+    spark, table_path: str, version: int, configuration: dict | None,
+    interval: int | None,
+) -> None:
+    """Checkpoint after every ``interval``-th commit (Delta's
+    ``delta.checkpointInterval``; ``None``/0 disables) — never at a
+    staged version: checkpoints must not outrun the backfilled tail
+    (the spec ties checkpoint validity to backfilled commits), so run
+    ``backfill_commits`` + ``write_checkpoint`` explicitly to compact a
+    coordinated table's history."""
+    if (
+        interval
+        and version > 0
+        and version % interval == 0
+        and not _stages_commit(configuration, version)
+    ):
+        from levi_spark.delta.checkpoint import write_checkpoint
+
+        write_checkpoint(spark, table_path, version)
 
 
 def _publish_staged_commit(log_dir: str, version: int, payload: str) -> int:
@@ -913,7 +955,8 @@ def write_delta(
     ``delta.coordinatedCommits.commitCoordinator-preview =
     "filesystem"``; every later commit to the table is STAGED as
     ``_delta_log/_commits/<v>.<uuid>.json`` instead of backfilled
-    (whoever the writer is — the property, not the flag, drives it).
+    (whoever the writer is, by whatever verb — the property, not the
+    flag, drives it: :func:`commit` decides for every commit).
     :func:`backfill_commits` copies staged commits into the main log;
     :class:`levi_spark.delta.log.DeltaLog` reads the staged tail
     directly under the same contract (unambiguous + contiguous, else
@@ -1227,7 +1270,7 @@ def write_delta(
     # commit that records the coordinator property, matching the
     # spec's registration flow. Every later commit to a table whose
     # configuration names a coordinator is STAGED into
-    # _delta_log/_commits, whoever the writer is.
+    # _delta_log/_commits, whoever the writer is (see ``commit``).
     if coordinated and exists and mode == "append" and _COORD_PROP not in meta_conf:
         raise ValueError(
             "coordinated=True on append to an uncoordinated table — "
@@ -1235,8 +1278,7 @@ def write_delta(
         )
     if coordinated and (not exists or mode == "overwrite"):
         meta_conf.setdefault(_COORD_PROP, "filesystem")
-    stage_this_commit = _COORD_PROP in meta_conf
-    if stage_this_commit:
+    if _COORD_PROP in meta_conf:
         commit_protocol = merge_protocol(
             commit_protocol,
             {
@@ -1456,31 +1498,23 @@ def write_delta(
 
     # -- commit --------------------------------------------------------------
     now_ms = int(time.time() * 1000)
-    tail_lines: list[str] = []
-    for raw in prev_adds:  # raw add.path strings — never re-encoded
-        tail_lines.append(
-            json.dumps(
-                {
-                    "remove": {
-                        "path": raw,
-                        "deletionTimestamp": now_ms,
-                        "dataChange": True,
-                    }
-                }
-            )
-        )
+    tail_actions: list[dict] = [
+        # raw add.path strings — never re-encoded
+        {"remove": {"path": raw, "deletionTimestamp": now_ms, "dataChange": True}}
+        for raw in prev_adds
+    ]
     add_entries = []
     for rel in sorted(moved):
         st = tfs.stat(os.path.join(path, rel))
         stats = stats_by_name.get(os.path.basename(rel))
         add_entries.append((rel, st, stats))
 
-    def _add_lines(commit_version: int) -> list[str]:
+    def _add_actions(commit_version: int) -> list[dict]:
         """Add actions (+ the row-tracking domain action when enabled).
         Built per publish attempt: a rebased commit must re-mint its
         baseRowIds from the WINNER's high-water mark and stamp the
         final commit version as defaultRowCommitVersion."""
-        lines = []
+        actions = []
         next_id = row_hwm + 1
         for rel, st, stats in add_entries:
             add = {
@@ -1505,54 +1539,44 @@ def write_delta(
                 add["baseRowId"] = next_id
                 add["defaultRowCommitVersion"] = commit_version
                 next_id += int(stats["numRecords"])
-            lines.append(json.dumps({"add": add}))
+            actions.append({"add": add})
         if rt_enabled and next_id - 1 > row_hwm:
-            lines.append(
-                json.dumps(
-                    {
-                        "domainMetadata": {
-                            "domain": "delta.rowTracking",
-                            "configuration": json.dumps(
-                                {"rowIdHighWaterMark": next_id - 1}
-                            ),
-                            "removed": False,
-                        }
-                    }
-                )
-            )
-        return lines
-    if cluster_cols and (not exists or mode == "overwrite"):
-        tail_lines.append(
-            json.dumps(
+            actions.append(
                 {
                     "domainMetadata": {
-                        "domain": "delta.clustering",
+                        "domain": "delta.rowTracking",
                         "configuration": json.dumps(
-                            {
-                                "clusteringColumns": [
-                                    [c] for c in cluster_cols
-                                ]
-                            }
+                            {"rowIdHighWaterMark": next_id - 1}
                         ),
                         "removed": False,
                     }
                 }
             )
+        return actions
+    if cluster_cols and (not exists or mode == "overwrite"):
+        tail_actions.append(
+            {
+                "domainMetadata": {
+                    "domain": "delta.clustering",
+                    "configuration": json.dumps(
+                        {"clusteringColumns": [[c] for c in cluster_cols]}
+                    ),
+                    "removed": False,
+                }
+            }
         )
     if cdc_df is not None:
-        tail_lines += cdc_action_lines(write_cdc_files(cdc_df, path))
+        tail_actions += cdc_actions(write_cdc_files(cdc_df, path))
     if txn is not None:
         app_id, src_version = txn
-        tail_lines.append(
-            json.dumps(
-                {
-                    "txn": {
-                        "appId": app_id,
-                        "version": int(src_version),
-                        "lastUpdated": now_ms,
-                    }
+        tail_actions.append(
+            {
+                "txn": {
+                    "appId": app_id,
+                    "version": int(src_version),
+                    "lastUpdated": now_ms,
                 }
-            )
+            }
         )
     tfs.mkdirs(log_dir)
 
@@ -1628,51 +1652,6 @@ def write_delta(
             },
         )
 
-    def _payload() -> str:
-        meta_line = json.dumps(
-            {
-                "metaData": {
-                    "id": meta_id or str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": commit_schema.json(),
-                    "partitionColumns": partition_by,
-                    "configuration": meta_conf,
-                    "createdTime": meta_created
-                    if meta_created is not None
-                    else now_ms,
-                }
-            }
-        )
-        # commitInfo is built HERE so each retry attempt re-stamps the
-        # in-commit timestamp from its actual predecessor — a rebased
-        # commit republished with its pre-race stamp could violate
-        # ICT's strict monotonicity when the race winner carried a
-        # later timestamp
-        ci: dict = {
-            "timestamp": now_ms,
-            "operation": operation,
-            "operationParameters": {"mode": mode.capitalize()},
-            "engineInfo": "levi-spark/0.1.0",
-        }
-        ict = in_commit_timestamp(meta_conf, log_dir, int(time.time() * 1000))
-        if ict is not None:
-            ci["inCommitTimestamp"] = ict
-        return "\n".join(
-            [
-                json.dumps(
-                    {
-                        "protocol": _collation_protocol(
-                            _variant_protocol(commit_protocol)
-                        )
-                    }
-                ),
-                meta_line,
-                *tail_lines,
-                *_add_lines(version),
-                json.dumps({"commitInfo": ci}),
-            ]
-        ) + "\n"
-
     # Blind appends rebase past concurrent commits — but by RE-READING
     # the snapshot each attempt, not by blindly re-publishing: the
     # winning commit may have evolved the schema (mergeSchema union) or
@@ -1688,12 +1667,18 @@ def write_delta(
     blind_append = mode == "append" and not prev_adds and not identity_specs
     for _attempt in range(20):
         try:
-            if stage_this_commit and version > 0:
-                version = _publish_staged_commit(log_dir, version, _payload())
-            else:
-                version = _publish_commit(
-                    log_dir, version, _payload(), rebase_ok=False
-                )
+            version = commit(
+                log_dir,
+                version,
+                tail_actions + _add_actions(version),
+                operation=operation,
+                params={"mode": mode.capitalize()},
+                metadata=TableMetadata(
+                    meta_id, commit_schema, partition_by, meta_conf,
+                    meta_created,
+                ),
+                protocol=_collation_protocol(_variant_protocol(commit_protocol)),
+            )
             break
         except ValueError:
             if not blind_append:
@@ -1758,15 +1743,5 @@ def write_delta(
     else:
         raise RuntimeError("commit contention: 20 rebase attempts failed")
 
-    # checkpoints must never outrun the backfilled tail (the spec ties
-    # checkpoint validity to backfilled commits), so staged commits
-    # skip the auto-checkpoint; run backfill_commits + write_checkpoint
-    # explicitly to compact a coordinated table's history
-    if stage_this_commit:
-        checkpoint_interval = None
-    if checkpoint_interval and version > 0 and version % checkpoint_interval == 0:
-        # Deferred import: checkpoint.py only depends on log.py, no cycle.
-        from levi_spark.delta.checkpoint import write_checkpoint
-
-        write_checkpoint(spark, path, version)
+    auto_checkpoint(spark, path, version, meta_conf, checkpoint_interval)
     return version

@@ -27,9 +27,10 @@ atomic on POSIX (``open(..., "x")`` — ``file://`` URIs are routed
 there too, since Hadoop's LocalFileSystem lacks O_EXCL) and on HDFS
 (``create`` with ``overwrite=false``). S3-class schemes report
 ``atomic_put_if_absent = False`` and Delta commits to them route
-through the filesystem commit coordinator automatically
-(``delta/writer.py:_publish_commit``) — staged ``_commits/`` entries
-with existence-check arbitration instead of a silent lost write.
+through the filesystem commit coordinator automatically (every
+commit is published by ``delta/writer.py:commit``) — staged
+``_commits/`` entries with existence-check arbitration instead of a
+silent lost write.
 
 Everything here is DRIVER-side. Executor-side file IO (the
 self-hosted parquet staging, deletion-vector emission) keeps raw
@@ -78,7 +79,7 @@ def _strip_uri_slash(path: str) -> str:
 # check-then-write rather than an atomic put-if-absent (no conditional
 # PUT wired through the connector) — the delta-rs-without-a-lock
 # degradation. Commits to these route through the filesystem commit
-# coordinator (see ``delta/writer.py:_publish_commit``) instead of
+# coordinator (see ``delta/writer.py:commit``) instead of
 # silently losing the concurrent-writer guarantee. hdfs (namenode-
 # arbitrated), file (routed to POSIX O_EXCL below), abfs/gs
 # (conditional-PUT connectors) stay on the direct path.

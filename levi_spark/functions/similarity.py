@@ -44,15 +44,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
 
 
-def l2_normalize(v: Column) -> Column:
-    """Unit-normalize an array<double> vector (x / ||v||). The norm
-    subtree is inlined per element by Catalyst — fine for occasional
-    use; for scalar fingerprints of the normalized vector prefer
-    computing the norm once (see ``embedding_normalize`` in queries)."""
-    n = F.sqrt(dot(v, v))
-    return F.transform(v, lambda x: x / n)
-
-
 def sub_l2sq(a: Column, b: Column, start: int, length: int) -> Column:
     """Squared L2 distance between aligned subvectors, via the
     inner-product identity ip(a,a) - 2·ip(a,b) + ip(b,b) — three

@@ -161,42 +161,6 @@ SIMHASH_A = 1103515245
 SIMHASH_B = 12345
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles (space-joined) of a document."""
-    toks = F.split(F.trim(text), r"\s+")
-    idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1)))
-    sh = F.transform(
-        idx, lambda i: F.concat_ws(" ", *[F.element_at(toks, i + k) for k in range(n)])
-    )
-    # guard: Spark's sequence(1, hi<1) would generate a DESCENDING range,
-    # so short docs get an explicit empty shingle set (DuckDB: range() is
-    # empty there — keep both engines identical)
-    return F.when(F.size(toks) >= n, F.array_distinct(sh)).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
-def _horner_fp(s: Column, modulus: int = MINHASH_P) -> Column:
-    """Base-257 Horner hash of one string, mod ``modulus`` at each step
-    (acc < 2^31 so acc*257 + cp < 2^40 — exact in int64 everywhere)."""
-    chars = F.transform(
-        F.sequence(F.lit(1), F.length(s)),
-        lambda i: F.ascii(s.substr(i, F.lit(1))).cast("long"),
-    )
-    return F.aggregate(
-        chars,
-        F.lit(0).cast("long"),
-        lambda acc, c: (acc * F.lit(257) + c) % F.lit(modulus),
-    )
-
-
-def shingle_fingerprints(shingles: Column) -> Column:
-    """array<string> shingles -> array<long> fingerprints in [0, P)."""
-    # 1-arg wrapper: _horner_fp's optional modulus param would make
-    # PySpark treat it as a 2-arg (element, index) HOF lambda
-    return F.transform(shingles, lambda g: _horner_fp(g))
-
-
 def shingle_rows(docs, id_col: str = "doc_id", text_col: str = "text", n: int = 3):
     """Explode each document into distinct (id, shingle) word n-gram
     rows — entirely with codegen operators: posexplode the tokens, form

@@ -11,10 +11,13 @@ touches data-plane rows. Each operator is one per-file projection
 (Spark SQL still evaluates the pruning predicate, the bucket bounds and
 the partition casts) whose rows are collected and folded on the
 driver: counts, sums and first-seen order in Python, the way the
-reference folds its add-action frame with pandas. Over a driver-side
-log replay the add-actions frame is a ``LocalRelation``, so the
-projection folds at planning time and the collect starts no Spark job;
-over a log too large for the driver it is one job per call.
+reference folds its add-action frame with pandas. The log replay runs
+on the driver and the add-actions frame is built with
+``delta.log.local_frame``: under Spark's
+``spark.sql.execution.arrow.localRelationThreshold`` it is a
+``LocalRelation``, so the projection folds at planning time and the
+collect starts no Spark job; above it the frame is an RDD scan and each
+call costs one job.
 """
 
 from __future__ import annotations

@@ -836,19 +836,6 @@ def read_bloom_index(data: bytes, footer: dict, stripe: dict,
     return out
 
 
-def _seek_stream(raw: bytes, comp: str, positions: list[int],
-                 at: int) -> tuple[bytes, int]:
-    """Apply one stream's BASE seek positions (starting at
-    ``positions[at]``): compressed streams carry [chunk byte offset,
-    offset within the decompressed chunk]; uncompressed carry [byte
-    offset].  Returns (stream bytes from that logical point, next
-    position index)."""
-    if comp == "none":
-        return raw[positions[at]:], at + 1
-    chunk_off, inner = positions[at], positions[at + 1]
-    return decompress_stream(raw[chunk_off:], comp)[inner:], at + 2
-
-
 def read_row_group(path: str, column: str, stripe_idx: int,
                    group_idx: int) -> list:
     """Decode ONE row group (``rowIndexStride`` rows) of a flat

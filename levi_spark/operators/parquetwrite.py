@@ -128,27 +128,6 @@ class _TW:
         self.buf.append(_TRUET if v else _FALSET)
 
 
-def _bitpacked_run(values: list[int], width: int) -> bytes:
-    """RLE/bit-packed hybrid holding ONE bit-packed run — trailing
-    pad values beyond the count are ignored by readers per the
-    spec."""
-    n_groups = (len(values) + 7) // 8
-    header = bytearray()
-    v = (n_groups << 1) | 1
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        header.append(b | (0x80 if v else 0))
-        if not v:
-            break
-    acc = 0
-    mask = (1 << width) - 1
-    for i, lv in enumerate(values):
-        acc |= (lv & mask) << (i * width)
-    packed = acc.to_bytes(n_groups * width, "little")
-    return bytes(header) + packed
-
-
 def _rle_hybrid(vals: list[int], width: int) -> bytes:
     """Mixed RLE/bit-packed hybrid: runs of >= 8 equal values become
     RLE runs, the rest bit-packs in groups of 8.  A bit-packed run is
@@ -198,13 +177,6 @@ def _rle_levels(levels: list[int], width: int = 1) -> bytes:
     """Level block (def or rep) with the v1 4-byte length prefix."""
     body = _rle_hybrid(levels, width)
     return struct.pack("<i", len(body)) + body
-
-
-def _parse_coltype(ptype: str) -> tuple[bool, str]:
-    """``LIST<T>`` -> (True, T); plain physical type -> (False, T)."""
-    if ptype.startswith("LIST<") and ptype.endswith(">"):
-        return True, ptype[5:-1]
-    return False, ptype
 
 
 def _shred_list(seg: list) -> tuple[list[int], list[int], list]:

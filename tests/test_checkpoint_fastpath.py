@@ -1,7 +1,12 @@
 """The checkpoint writer carries the snapshot's whole reconciled state:
-content, stats and SetTransaction watermarks survive log expiry."""
+content, stats, SetTransaction watermarks and DESCRIBE DETAIL's
+createdAt survive log expiry."""
+
+import os
+import time
 
 from levi_spark.delta.checkpoint import expire_log, write_checkpoint
+from levi_spark.delta.history import describe_detail
 from levi_spark.delta.log import DeltaLog
 from levi_spark.delta.writer import write_delta
 
@@ -72,3 +77,47 @@ def test_describe_detail(spark, tmp_path):
     assert row.numFiles >= 3 and row.sizeInBytes > 0
     assert row.createdAt <= row.lastModified
     assert row.location.endswith("/t")
+
+
+def test_created_at_is_metadata_created_time(spark, tmp_path):
+    """createdAt pins to the creation commit's metaData.createdTime and
+    does not drift forward when later commits re-emit metaData."""
+    p = str(tmp_path / "t")
+    write_delta(spark.range(5).select("id"), p, mode="error",
+                checkpoint_interval=None)
+    d0 = describe_detail(spark, p).collect()[0]
+    assert d0["createdAt"] is not None
+    time.sleep(0.05)
+    write_delta(spark.range(5, 9).select("id"), p, mode="append",
+                checkpoint_interval=None)
+    write_delta(spark.range(20).select("id"), p, mode="overwrite",
+                checkpoint_interval=None)
+    d1 = describe_detail(spark, p).collect()[0]
+    assert d1["createdAt"] == d0["createdAt"]
+    assert d1["lastModified"] is not None
+    assert d1["createdAt"] <= d1["lastModified"]
+
+
+def test_created_at_survives_checkpoint_log_expiry(spark, tmp_path):
+    """After checkpointing and expiring every commit json, createdAt and
+    lastModified must both be non-NULL and ordered — callers comparing
+    them must not hit TypeError."""
+    p = str(tmp_path / "t")
+    write_delta(spark.range(5).select("id"), p, mode="error",
+                checkpoint_interval=None)
+    d0 = describe_detail(spark, p).collect()[0]
+    for lo in range(5, 20, 5):
+        write_delta(spark.range(lo, lo + 5).select("id"), p, mode="append",
+                    checkpoint_interval=None)
+    log = DeltaLog(spark, p)
+    v = log.snapshot().version
+    write_checkpoint(spark, p, v)
+    # expire every commit json (simulating log retention cleanup)
+    log_dir = os.path.join(p, "_delta_log")
+    for f in os.listdir(log_dir):
+        if f.endswith(".json") and not f.endswith("_last_checkpoint"):
+            os.remove(os.path.join(log_dir, f))
+    d1 = describe_detail(spark, p).collect()[0]
+    assert d1["createdAt"] == d0["createdAt"]
+    assert d1["lastModified"] is not None
+    assert d1["createdAt"] <= d1["lastModified"]

@@ -29,30 +29,13 @@ def _occupy(log_dir: str, version: int) -> None:
         fh.write(json.dumps({"commitInfo": {"operation": "WRITE", "timestamp": 0}}) + "\n")
 
 
-def test_publish_rebases_blind_append(tmp_path):
-    log_dir = str(tmp_path)
-    _occupy(log_dir, 1)
-    _occupy(log_dir, 2)
-    v = _publish_commit(log_dir, 1, "{}\n", rebase_ok=True)
-    assert v == 3
-    assert os.path.exists(os.path.join(log_dir, f"{3:020d}.json"))
-
-
 def test_publish_conflict_raises_without_rebase(tmp_path):
     log_dir = str(tmp_path)
     _occupy(log_dir, 1)
     with pytest.raises(ValueError, match="concurrent commit"):
-        _publish_commit(log_dir, 1, "{}\n", rebase_ok=False)
+        _publish_commit(log_dir, 1, "{}\n")
     # the temp staging file never leaks
     assert not [n for n in os.listdir(log_dir) if n.startswith(".commit-tmp")]
-
-
-def test_publish_contention_bound(tmp_path):
-    log_dir = str(tmp_path)
-    for v in range(1, 6):
-        _occupy(log_dir, v)
-    with pytest.raises(RuntimeError, match="contention"):
-        _publish_commit(log_dir, 1, "{}\n", rebase_ok=True, max_attempts=3)
 
 
 def test_multiwriter_stress_all_appends_land(spark, tmp_path):

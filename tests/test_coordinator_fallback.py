@@ -83,8 +83,7 @@ def test_one_winner_one_clean_retry(spark, tmp_path, nonatomic_file):
     log_dir = f"{tmp_path}/t/_delta_log"
     payload_a = json.dumps({"commitInfo": {"operation": "WRITE",
                                            "timestamp": 1}}) + "\n"
-    assert _publish_commit(f"file://{log_dir}", 1, payload_a,
-                           rebase_ok=False) == 1
+    assert _publish_commit(f"file://{log_dir}", 1, payload_a) == 1
     # writer B (a blind append that snapshotted before A landed)
     # must rebase to version 2, not clobber or double-publish 1
     v = write_delta(_df(spark, 100, 150), p, mode="append")
@@ -96,7 +95,7 @@ def test_one_winner_one_clean_retry(spark, tmp_path, nonatomic_file):
     assert versions == [0, 1, 2]
     # non-rebaseable writer at an occupied version: loud conflict
     with pytest.raises(ValueError, match="concurrent commit"):
-        _publish_commit(f"file://{log_dir}", 2, payload_a, rebase_ok=False)
+        _publish_commit(f"file://{log_dir}", 2, payload_a)
 
 
 def test_prestaged_twin_caught_by_existence_check(
@@ -114,7 +113,7 @@ def test_prestaged_twin_caught_by_existence_check(
               "x") as fh:
         fh.write(twin)
     with pytest.raises(ValueError, match="concurrent commit"):
-        _publish_commit(f"file://{log_dir}", 1, "{}\n", rebase_ok=False)
+        _publish_commit(f"file://{log_dir}", 1, "{}\n")
 
 
 def test_toctou_twin_surfaces_as_conflict(
@@ -146,7 +145,7 @@ def test_toctou_twin_surfaces_as_conflict(
 
     monkeypatch.setattr(W, "_publish_staged_commit", race_stage)
     with pytest.raises(ValueError, match="concurrent commit"):
-        _publish_commit(f"file://{log_dir}", 1, "{}\n", rebase_ok=False)
+        _publish_commit(f"file://{log_dir}", 1, "{}\n")
     # and the ratified twin is what the log holds
     with open(os.path.join(log_dir, f"{1:020d}.json")) as fh:
         assert fh.read() == twin

@@ -108,3 +108,37 @@ def _parquet_rels(table: str) -> set[str]:
                 )
     return out
 
+
+
+def test_vacuum_keeps_change_files_of_staged_commits(spark, tmp_path):
+    """On a coordinated table a MERGE's commit is staged under
+    ``_delta_log/_commits`` — its change-data files are referenced all
+    the same and must survive a zero-retention vacuum."""
+    from levi_spark.delta.changes import table_changes_cdf
+    from levi_spark.delta.table import LeviTable
+    from levi_spark.operators.merge import merge
+
+    p = str(tmp_path / "t")
+    write_delta(
+        spark.range(0, 6).select(F.col("id"), (F.col("id") * 10).alias("v")),
+        p, mode="error", checkpoint_interval=None, coordinated=True,
+    )
+    src = spark.createDataFrame([(2, -2)], "id long, v long")
+    (
+        merge(LeviTable.for_path(spark, p), src, "t.id = s.id")
+        .when_matched_update({"v": F.col("s.v")})
+        .execute(emit_cdf=True)
+    )
+    assert os.listdir(os.path.join(p, "_delta_log", "_commits"))
+    want = sorted(
+        (r.id, r.v, r._change_type)
+        for r in table_changes_cdf(spark, p, 0).collect()
+    )
+    assert want == [(2, -2, "update_postimage"), (2, 20, "update_preimage")]
+    res = vacuum(spark, p, retention_hours=0.0)
+    assert not any(f.startswith("_change_data") for f in res["files_deleted"])
+    got = sorted(
+        (r.id, r.v, r._change_type)
+        for r in table_changes_cdf(spark, p, 0).collect()
+    )
+    assert got == want
