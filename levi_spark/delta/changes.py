@@ -22,7 +22,6 @@ Two tiers, both O(files changed in the range), never the table:
 
 from __future__ import annotations
 
-import json
 import os
 from urllib.parse import unquote
 
@@ -39,16 +38,47 @@ from levi_spark.delta.log import DeltaLog
 _NON_DATA_OPS = {"OPTIMIZE", "PURGE", "DELETE"}
 
 
-def _commit_ops(log: DeltaLog, versions: list[int]) -> dict[int, str]:
-    ops: dict[int, str] = {}
-    for v in versions:
-        p = log._commit_file(v)
-        for line in log.fs.read_text(p).splitlines():
-                a = json.loads(line)
-                if "commitInfo" in a:
-                    ops[v] = a["commitInfo"].get("operation", "WRITE")
-                    break
-    return ops
+def _classify(actions: list[dict]) -> dict:
+    """One commit as the change feed sees it: its operation, the files
+    it added (with partition values), the files it removed with
+    ``dataChange``, and its change-data files."""
+    out = {"op": "WRITE", "adds": [], "removes": [], "cdc": []}
+    for a in actions:
+        if "commitInfo" in a:
+            out["op"] = a["commitInfo"].get("operation", "WRITE")
+        elif "add" in a:
+            out["adds"].append(
+                (unquote(a["add"]["path"]), a["add"].get("partitionValues") or {})
+            )
+        elif "remove" in a:
+            if a["remove"].get("dataChange", True):
+                out["removes"].append(unquote(a["remove"]["path"]))
+        elif "cdc" in a:
+            out["cdc"].append(unquote(a["cdc"]["path"]))
+    return out
+
+
+def _window(log: DeltaLog, from_version: int, to_version: int | None):
+    """The snapshot at ``to_version`` (default: latest) and every
+    commit in ``(from_version, to_version]``, classified, in version
+    order. Raises ``FileNotFoundError`` when commits of the range were
+    expired from the log (same contract as time travel past a vacuumed
+    history)."""
+    snap = log.snapshot(to_version)
+    if from_version > snap.version:
+        raise ValueError(f"from_version {from_version} > to_version {snap.version}")
+    commits: dict[int, dict] = {}
+    missing: list[int] = []
+    for v in range(from_version + 1, snap.version + 1):
+        try:
+            commits[v] = _classify(log.commit_actions(v))
+        except FileNotFoundError:
+            missing.append(v)
+    if missing:
+        raise FileNotFoundError(
+            f"commits expired from log, cannot compute changes: {missing}"
+        )
+    return snap, commits
 
 
 def table_changes(
@@ -62,45 +92,17 @@ def table_changes(
     ``FileNotFoundError`` when the range's commits were expired from
     the log (same contract as time travel past a vacuumed history)."""
     log = DeltaLog(spark, path)
-    path = log.table_path
-    snap = log.snapshot(to_version)
-    to_version = snap.version
-    if from_version > to_version:
-        raise ValueError(f"from_version {from_version} > to_version {to_version}")
-    versions = list(range(from_version + 1, to_version + 1))
-    missing = [
-        v
-        for v in versions
-        if not log.fs.exists(log._commit_file(v))
+    snap, commits = _window(log, from_version, to_version)
+    adds = [
+        (rel, v, pv)
+        for v, c in commits.items()
+        if c["op"] not in _NON_DATA_OPS
+        for rel, pv in c["adds"]
     ]
-    if missing:
-        raise FileNotFoundError(
-            f"commits expired from log, cannot compute changes: {missing}"
-        )
-    ops = _commit_ops(log, versions)
-    data_versions = [v for v in versions if ops.get(v) not in _NON_DATA_OPS]
-    meta = snap.metadata
-
-    if not data_versions:
-        schema = meta.schema.add("_commit_version", "long")
-        return spark.createDataFrame([], schema)
-
-    # metadata-plane: parse the window's commits driver-side (bounded by
-    # the version window) instead of a Spark job per feed read
-    adds = []
-    for v in data_versions:
-        for line in log.fs.read_text(log._commit_file(v)).splitlines():
-                if not (line := line.strip()):
-                    continue
-                a = json.loads(line).get("add")
-                if a and a.get("path"):
-                    adds.append(
-                        (unquote(a["path"]), v, dict(a.get("partitionValues") or {}))
-                    )
     if not adds:
-        schema = meta.schema.add("_commit_version", "long")
+        schema = snap.metadata.schema.add("_commit_version", "long")
         return spark.createDataFrame([], schema)
-    return _rows_from_files(spark, path, adds, meta)
+    return _rows_from_files(spark, log.table_path, adds, snap.metadata)
 
 
 def _rows_from_files(spark: SparkSession, path: str, entries: list, meta) -> DataFrame:
@@ -154,25 +156,6 @@ def _rows_from_files(spark: SparkSession, path: str, entries: list, meta) -> Dat
     ).select(*meta.data_columns, "_commit_version")
 
 
-def _parse_commit_actions(log: DeltaLog, version: int) -> dict:
-    """Driver-side parse of one commit JSON (metadata scale)."""
-    out = {"op": "WRITE", "adds": [], "removes": [], "cdc": []}
-    for line in log.fs.read_text(log._commit_file(version)).splitlines():
-            a = json.loads(line)
-            if "commitInfo" in a:
-                out["op"] = a["commitInfo"].get("operation", "WRITE")
-            elif "add" in a:
-                out["adds"].append(
-                    (unquote(a["add"]["path"]), a["add"].get("partitionValues") or {})
-                )
-            elif "remove" in a:
-                if a["remove"].get("dataChange", True):
-                    out["removes"].append(unquote(a["remove"]["path"]))
-            elif "cdc" in a:
-                out["cdc"].append(unquote(a["cdc"]["path"]))
-    return out
-
-
 def table_changes_cdf(
     spark: SparkSession,
     path: str,
@@ -194,28 +177,14 @@ def table_changes_cdf(
 
     log = DeltaLog(spark, path)
     path = log.table_path
-    snap = log.snapshot(to_version)
-    to_version = snap.version
-    if from_version > to_version:
-        raise ValueError(f"from_version {from_version} > to_version {to_version}")
-    versions = list(range(from_version + 1, to_version + 1))
-    missing = [
-        v
-        for v in versions
-        if not log.fs.exists(log._commit_file(v))
-    ]
-    if missing:
-        raise FileNotFoundError(
-            f"commits expired from log, cannot compute changes: {missing}"
-        )
+    snap, commits = _window(log, from_version, to_version)
     meta = snap.metadata
     part_cols = list(meta.partition_columns)
 
     cdc_entries: list = []   # (rel, version, {}) — pv unused, cols are physical
     ins_entries: list = []   # add files -> insert rows
     del_entries: list = []   # tombstoned files -> delete rows
-    for v in versions:
-        acts = _parse_commit_actions(log, v)
+    for v, acts in commits.items():
         if acts["cdc"]:
             cdc_entries += [(rel, v, {}) for rel in acts["cdc"]]
         elif acts["op"] in _NON_DATA_OPS and acts["op"] != "DELETE":

@@ -83,26 +83,36 @@ def write_checkpoint(
     ``sidecar`` reference. Note: spec-conformant *foreign* readers
     only look for v2 checkpoints on tables whose protocol carries the
     ``v2Checkpoint`` reader feature; this engine's reader discovers
-    both shapes regardless."""
+    both shapes regardless.
+
+    On a coordinated table the commits up to the checkpointed version
+    are backfilled first: a checkpoint covers only backfilled commits
+    (the coordinated-commits rule), and the reader ignores staged
+    commits at or below the newest checkpoint."""
+    from levi_spark.delta.writer import backfill_commits
+
     if format not in ("classic", "v2"):
         raise ValueError(f"checkpoint format must be 'classic' or 'v2', got {format!r}")
     log = DeltaLog(spark, table_path)
     snap = log.snapshot(version)
     if format == "v2":
-        return _write_checkpoint_v2(log, snap)
+        snap = _require_v2_checkpoint_feature(log, snap)
     rows = _checkpoint_actions(snap)
     v = snap.version
-    _write_parquet(log, rows, os.path.join(log.log_path, f"{v:020d}.checkpoint.parquet"))
+    backfill_commits(log.table_path, up_to=v)
+    if format == "v2":
+        _write_checkpoint_v2(log, v, rows)
+    else:
+        _write_parquet(
+            log, rows, os.path.join(log.log_path, f"{v:020d}.checkpoint.parquet")
+        )
     _write_last_checkpoint(log, v, len(rows))
     return v
 
 
-def _write_checkpoint_v2(log: DeltaLog, snap) -> int:
-    """V2 checkpoint: the live adds land in one ``_sidecars`` parquet;
-    the non-file actions, a ``checkpointMetadata`` action and the
-    sidecar reference land in a JSON manifest. Tables without the
-    ``v2Checkpoint`` reader feature get it in a protocol-upgrade
-    commit first."""
+def _require_v2_checkpoint_feature(log: DeltaLog, snap):
+    """``snap``, or — for a table without the ``v2Checkpoint`` reader
+    feature — the snapshot after a protocol-upgrade commit adding it."""
     from levi_spark.delta.writer import commit, merge_protocol
 
     # A v2 checkpoint is only discoverable by spec-conforming foreign
@@ -135,9 +145,13 @@ def _write_checkpoint_v2(log: DeltaLog, snap) -> int:
             protocol=new_proto,
         )
         snap = log.snapshot()
+    return snap
 
-    v = snap.version
-    rows = _checkpoint_actions(snap)
+
+def _write_checkpoint_v2(log: DeltaLog, v: int, rows: list[dict]) -> None:
+    """V2 checkpoint: the live adds land in one ``_sidecars`` parquet;
+    the non-file actions, a ``checkpointMetadata`` action and the
+    sidecar reference land in a JSON manifest."""
     sidecars_dir = os.path.join(log.log_path, "_sidecars")
     log.fs.mkdirs(sidecars_dir)
     sc_name = f"{uuid.uuid4()}.parquet"
@@ -160,15 +174,14 @@ def _write_checkpoint_v2(log: DeltaLog, snap) -> int:
     tmp = os.path.join(log.log_path, f".cp-tmp-{uuid.uuid4().hex}.json")
     log.fs.write_text(tmp, "\n".join(manifest_lines) + "\n")
     log.fs.replace(tmp, os.path.join(log.log_path, manifest_name))
-    _write_last_checkpoint(log, v, len(rows))
-    return v
 
 
 def expire_log(spark: SparkSession, table_path: str, keep_last: int = 0) -> list[int]:
     """Delete commit JSONs at versions <= the newest checkpoint minus
     ``keep_last`` — safe because the checkpoint carries the reconciled
     state (the ``no_replay`` fixture's layout). Returns the deleted
-    versions. Refuses to delete anything without a checkpoint."""
+    versions. Refuses to delete anything without a checkpoint. Only
+    backfilled ``<v>.json`` files are deleted, never a staged commit."""
     log = DeltaLog(spark, table_path)
     commits, checkpoints = log._entries()
     if not checkpoints:
@@ -176,7 +189,7 @@ def expire_log(spark: SparkSession, table_path: str, keep_last: int = 0) -> list
     cutoff = max(checkpoints) - keep_last
     deleted = []
     for c in commits:
-        if c <= cutoff:
+        if c <= cutoff and c not in log._staged:
             log.fs.remove(os.path.join(log.log_path, f"{c:020d}.json"))
             deleted.append(c)
     return deleted

@@ -75,7 +75,7 @@ def clone_table(
     meta = snap.metadata
     dst_path = absolutize(dst_path)
     dfs = fs_for(dst_path)
-    if dfs.isdir(os.path.join(dst_path, "_delta_log")):
+    if DeltaLog.exists(dst_path):
         raise ValueError(f"destination is already a Delta table: {dst_path}")
 
     adds = [r["add"] for r in snap.live_adds_collected()]

@@ -11,9 +11,6 @@ starts at the oldest surviving commit.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -44,27 +41,24 @@ def describe_history(spark: SparkSession, table_path: str) -> DataFrame:
         params: dict[str, str] = {}
         n_adds = n_removes = n_cdc = 0
         has_txn = False
-        for line in log.fs.read_text(log._commit_file(v)).splitlines():
-                if not (line := line.strip()):
-                    continue
-                d = json.loads(line)
-                if "add" in d:
-                    n_adds += 1
-                elif "remove" in d:
-                    n_removes += 1
-                elif "cdc" in d:
-                    n_cdc += 1
-                elif "txn" in d:
-                    has_txn = True
-                elif "commitInfo" in d:
-                    ci = d["commitInfo"]
-                    ts = ci.get("timestamp")
-                    op = ci.get("operation")
-                    engine = ci.get("engineInfo")
-                    params = {
-                        k: str(x)
-                        for k, x in (ci.get("operationParameters") or {}).items()
-                    }
+        for d in log.commit_actions(v):
+            if "add" in d:
+                n_adds += 1
+            elif "remove" in d:
+                n_removes += 1
+            elif "cdc" in d:
+                n_cdc += 1
+            elif "txn" in d:
+                has_txn = True
+            elif "commitInfo" in d:
+                ci = d["commitInfo"]
+                ts = ci.get("timestamp")
+                op = ci.get("operation")
+                engine = ci.get("engineInfo")
+                params = {
+                    k: str(x)
+                    for k, x in (ci.get("operationParameters") or {}).items()
+                }
         rows.append((v, ts, op, params, engine, n_adds, n_removes, n_cdc, has_txn))
     return spark.createDataFrame(rows, _HISTORY_SCHEMA)
 
@@ -90,12 +84,8 @@ def describe_detail(spark: SparkSession, table_path: str) -> DataFrame:
     # expired (checkpoint-only log) fall back to createdAt so the pair
     # stays comparable (createdAt <= lastModified) instead of NULL.
     created = meta.created_time
-    commits, _cps = log._entries()
-    if commits:
-        stamps = dict(log.commit_timestamps())
-        last_modified = stamps.get(max(stamps), None)
-    else:
-        last_modified = created
+    stamps = dict(log.commit_timestamps())
+    last_modified = stamps[max(stamps)] if stamps else created
     row = {
         "format": "delta",
         "id": meta.id,

@@ -3,7 +3,17 @@
 This is the engine-like core the reference delegates to delta-rs
 (``/root/reference/levi/__init__.py:3,14,57,109`` — ``DeltaTable`` /
 ``get_add_actions``), and like delta-rs it replays the log on the
-driver (SURVEY.md §3.2):
+driver (SURVEY.md §3.2).
+
+This module is the one reader of ``_delta_log``. It alone lists the
+log (:meth:`DeltaLog._scan_log`) and parses commit lines
+(:meth:`DeltaLog.commit_actions`: blank lines skipped, a malformed line
+raises ``ValueError`` naming its file and line). Its existence rule is
+the only one: a path is a Delta table iff its ``_delta_log`` holds at
+least one commit or complete checkpoint by that listing, accepted
+staged commits included (:meth:`DeltaLog.exists`). Writers list the
+log only to arbitrate a write: the O_EXCL publish, the staged-commit
+prefix check and ``backfill_commits``.
 
 * The snapshot's checkpoint — classic, multipart, or a v2 manifest
   with its sidecars; parquet read with pyarrow, JSON with ``json`` —
@@ -582,14 +592,38 @@ class DeltaLog:
         """Path of commit ``v``'s JSON: the backfilled file, or the
         accepted staged file for an un-backfilled coordinated commit
         (populated by the most recent ``_scan_log``; scans on first
-        use so history/CDF helpers can call this directly)."""
+        use)."""
         if not hasattr(self, "_staged"):
             self._scan_log()
-        staged = getattr(self, "_staged", None) or {}
         backfilled = os.path.join(self.log_path, f"{v:020d}.json")
-        if v in staged and not self.fs.exists(backfilled):
-            return staged[v]
+        if v in self._staged and not self.fs.exists(backfilled):
+            return self._staged[v]
         return backfilled
+
+    def _read_actions(self, path: str) -> list[dict]:
+        """The actions of one JSON log file, blank lines skipped; a
+        malformed line raises ``ValueError`` (:func:`_parse_action`)."""
+        return [
+            _parse_action(line, path, n)
+            for n, line in enumerate(self.fs.read_text(path).splitlines(), 1)
+            if line.strip()
+        ]
+
+    def commit_actions(self, v: int) -> list[dict]:
+        """Commit ``v``'s actions as dicts, in file order. A commit
+        expired from the log raises ``FileNotFoundError``."""
+        return self._read_actions(self._commit_file(v))
+
+    @classmethod
+    def exists(cls, table_path: str) -> bool:
+        """Whether ``table_path`` is a Delta table: its ``_delta_log``
+        holds at least one commit or complete checkpoint by
+        :meth:`_scan_log`'s listing (accepted staged commits count)."""
+        try:
+            cls(None, table_path).snapshot()
+        except FileNotFoundError:
+            return False
+        return True
 
     def latest_version(self) -> int:
         commits, checkpoints = self._entries()
@@ -598,8 +632,13 @@ class DeltaLog:
         return max(commits + checkpoints)
 
     def snapshot(self, version: int | None = None) -> "Snapshot":
+        """The snapshot at ``version`` (default: latest). Raises
+        ``FileNotFoundError`` when the table does not exist
+        (:meth:`exists`)."""
         commits, cp_map = self._scan_log()
         checkpoints = sorted(cp_map)
+        if not commits and not checkpoints:
+            raise FileNotFoundError(f"empty _delta_log at {self.log_path}")
         latest = max(commits + checkpoints)
         v = latest if version is None else version
         if version is not None and version > latest:
@@ -625,36 +664,23 @@ class DeltaLog:
         writer feature: a writer-guaranteed monotonic stamp that
         survives log-file copies/restores scrambling mtimes) over the
         ordinary ``timestamp`` field; file mtime is the fallback for
-        foreign logs with neither. Driver-side O(versions) file reads —
+        foreign commits with neither. A malformed commit line raises
+        (:meth:`commit_actions`). Driver-side O(versions) file reads —
         the same cost class as the log listing itself."""
         commits, _ = self._entries()
         out: list[tuple[int, int]] = []
         prev = -1
         for v in commits:
-            path = self._commit_file(v)
             ts = None
-            try:
-                for line in self.fs.read_text(path).splitlines():
-                        if not line.strip():
-                            continue
-                        a = json.loads(line)
-                        ci = a.get("commitInfo")
-                        if ci is not None and (
-                            ci.get("inCommitTimestamp") is not None
-                            or ci.get("timestamp") is not None
-                        ):
-                            ts = int(
-                                ci.get("inCommitTimestamp")
-                                if ci.get("inCommitTimestamp") is not None
-                                else ci["timestamp"]
-                            )
-                            break
-            except (OSError, ValueError):
-                ts = None
+            for a in self.commit_actions(v):
+                ci = a.get("commitInfo") or {}
+                ts = ci.get("inCommitTimestamp")
+                ts = ci.get("timestamp") if ts is None else ts
+                if ts is not None:
+                    break
             if ts is None:
-                ts = self.fs.stat(path).mtime_ms
-            ts = max(ts, prev + 1)
-            prev = ts
+                ts = self.fs.stat(self._commit_file(v)).mtime_ms
+            ts = prev = max(int(ts), prev + 1)
             out.append((v, ts))
         return out
 
@@ -742,11 +768,10 @@ class Snapshot:
         if v2m is not None:
             names: list[str] = []
             if v2m.endswith(".json"):
-                    for line in self.log.fs.read_text(v2m).splitlines():
-                        if line := line.strip():
-                            sc = json.loads(line).get("sidecar")
-                            if sc and sc.get("path"):
-                                names.append(sc["path"])
+                for a in self.log._read_actions(v2m):
+                    sc = a.get("sidecar")
+                    if sc and sc.get("path"):
+                        names.append(sc["path"])
             else:
                 import io
 
@@ -764,9 +789,6 @@ class Snapshot:
         return self._cp_files_cache
 
     # ---- log replay --------------------------------------------------------
-
-    def _commit_path(self, v: int) -> str:
-        return self.log._commit_file(v)
 
     def _local_actions(self) -> list:
         """Every action of the snapshot — the checkpoint's, then each
@@ -791,13 +813,10 @@ class Snapshot:
             for p in cp_parquets
             for rec in pq.read_table(io.BytesIO(fs.read_bytes(p))).to_pylist()
         ]
-        json_files = ([(self._cp, cp_json)] if cp_json else []) + [
-            (v, self._commit_path(v)) for v in sorted(self._commit_versions)
-        ]
-        for v, path in json_files:
-            for n, line in enumerate(fs.read_text(path).splitlines(), 1):
-                if line.strip():
-                    raw.append((v, _parse_action(line, path, n)))
+        if cp_json:
+            raw += [(self._cp, a) for a in self.log._read_actions(cp_json)]
+        for v in sorted(self._commit_versions):
+            raw += [(v, a) for a in self.log.commit_actions(v)]
         self._actions = [
             Row(
                 **{

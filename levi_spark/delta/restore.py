@@ -25,13 +25,14 @@ have no timestamp and are not addressable by time.
 from __future__ import annotations
 
 import os
+from dataclasses import replace
 from urllib.parse import unquote
 
 from pyspark.sql import SparkSession
 
 from levi_spark.delta.log import DeltaLog
 from levi_spark.delta.roaring import dv_file
-from levi_spark.delta.writer import commit
+from levi_spark.delta.writer import _COORD_PROP, commit, merge_protocol
 from levi_spark.fs import fs_for
 
 
@@ -128,14 +129,20 @@ def restore(spark: SparkSession, path: str, version: int) -> dict:
         actions.append(
             {"remove": {"path": p, "deletionTimestamp": now_ms, "dataChange": True}}
         )
-    # metaData and protocol re-emitted from the TARGET snapshot:
-    # RESTORE rolls the schema back too (Delta semantics)
+    # metaData from the TARGET snapshot: RESTORE rolls the schema back
+    # too (Delta semantics). The commit coordinator is the current
+    # table's, since the staged tail must stay contiguous; the protocol
+    # is never downgraded.
+    conf = dict(tgt.metadata.configuration)
+    conf.pop(_COORD_PROP, None)
+    if _COORD_PROP in cur.metadata.configuration:
+        conf[_COORD_PROP] = cur.metadata.configuration[_COORD_PROP]
     commit(
         log.log_path, cur.version + 1, actions,
         operation="RESTORE",
         params={"version": str(version)},
-        metadata=tgt.metadata,
-        protocol=tgt.protocol,
+        metadata=replace(tgt.metadata, configuration=conf),
+        protocol=merge_protocol(cur.protocol, tgt.protocol),
     )
     return {
         "version": cur.version + 1,

@@ -33,7 +33,6 @@ unchanged.
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
@@ -52,8 +51,7 @@ def _referenced_cdc_files(log: DeltaLog) -> set[str]:
     out: set[str] = set()
     commits, _cps = log._entries()
     for v in commits:
-        for line in log.fs.read_text(log._commit_file(v)).splitlines():
-            a = json.loads(line)
+        for a in log.commit_actions(v):
             if "cdc" in a:
                 out.add(os.path.normpath(unquote(a["cdc"]["path"])))
     return out

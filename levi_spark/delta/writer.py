@@ -393,7 +393,7 @@ def cdc_actions(cdc_rels: list[tuple[str, int]]) -> list[dict]:
 
 
 def in_commit_timestamp(
-    meta_conf: dict | None, log_dir: str, now_ms: int
+    meta_conf: dict | None, log_dir: str, version: int, now_ms: int
 ) -> int | None:
     """Monotonic in-commit timestamp (Delta's ``inCommitTimestamp``
     writer feature): when ``delta.enableInCommitTimestamps`` is true in
@@ -402,58 +402,42 @@ def in_commit_timestamp(
     bumped to prev+1 under clock skew or same-millisecond commits —
     so timestamp time travel is total regardless of log-file mtimes
     (which rsync/backup/restore scramble). Returns None when the
-    feature is off. The predecessor read is one O(1) driver-side file
-    read of the latest commit; a retried commit is re-stamped, since
-    :func:`commit` calls this once per attempt."""
+    feature is off. The predecessor is commit ``version - 1``, staged
+    or backfilled; an expired one anchors nothing, a malformed one
+    raises."""
     enabled = str(
         (meta_conf or {}).get("delta.enableInCommitTimestamps", "")
     ).lower() == "true"
     if not enabled:
         return None
     prev = -1
-    try:
-        # (version, path) over backfilled commits AND staged coordinated
-        # commits — on a coordinated table the predecessor usually lives
-        # in _delta_log/_commits, and reading only the backfilled tail
-        # would re-anchor the monotonic clock below already-staged stamps
-        fs = fs_for(log_dir)
-        cand: list[tuple[int, str]] = [
-            (int(n[:20]), os.path.join(log_dir, n))
-            for n in fs.listdir(log_dir)
-            if n.endswith(".json") and n[:20].isdigit()
-        ]
-        for d in ("_commits", "_staged_commits"):
-            sdir = os.path.join(log_dir, d)
-            if fs.isdir(sdir):
-                cand.extend(
-                    (int(n[:20]), os.path.join(sdir, n))
-                    for n in fs.listdir(sdir)
-                    if n.endswith(".json") and n[:20].isdigit()
-                )
-        commits = [p for _v, p in sorted(cand)]
-        if commits:
-                for line in fs.read_text(commits[-1]).splitlines():
-                    if not line.strip():
-                        continue
-                    ci = json.loads(line).get("commitInfo")
-                    if ci is not None:
-                        prev = int(
-                            ci.get("inCommitTimestamp")
-                            or ci.get("timestamp")
-                            or -1
-                        )
-                        break
-    except (OSError, ValueError):
-        prev = -1
+    if version > 0:
+        try:
+            actions = DeltaLog(None, os.path.dirname(log_dir)).commit_actions(
+                version - 1
+            )
+        except FileNotFoundError:
+            actions = []
+        for a in actions:
+            ci = a.get("commitInfo")
+            if ci is not None:
+                prev = int(ci.get("inCommitTimestamp") or ci.get("timestamp") or -1)
+                break
     return max(int(now_ms), prev + 1)
+
+
+class CommitConflict(ValueError):
+    """Another writer committed this version first: the operation must
+    be retried against the new snapshot."""
 
 
 def _publish_commit(log_dir: str, version: int, payload: str) -> int:
     """O_EXCL publish of ``payload`` as commit ``version``; returns the
     version. A commit already at that version means a concurrent
-    writer won: the conflict surfaces as ``ValueError`` and the caller
-    re-runs against the new snapshot (write_delta's blind-append retry
-    loop is the one place that does so automatically).
+    writer won: the conflict surfaces as :class:`CommitConflict` and
+    the caller re-runs against the new snapshot (write_delta's
+    blind-append retry loop is the one place that does so
+    automatically).
 
     COORDINATOR FALLBACK (non-atomic backends): when the table's
     filesystem reports ``atomic_put_if_absent=False`` (S3-class object
@@ -476,7 +460,7 @@ def _publish_commit(log_dir: str, version: int, payload: str) -> int:
             return version
         try:
             _publish_staged_commit(log_dir, version, payload)
-        except ValueError:
+        except CommitConflict:
             # same arbitration signal as a direct-path loser
             raise FileExistsError(commit_path) from None
         backfill_commits(os.path.dirname(log_dir.rstrip("/")), up_to=version)
@@ -491,7 +475,7 @@ def _publish_commit(log_dir: str, version: int, payload: str) -> int:
             raise FileExistsError(commit_path)
         return version
     except FileExistsError:
-        raise ValueError(
+        raise CommitConflict(
             f"concurrent commit at version {version}: this "
             "operation must be retried against the new snapshot"
         ) from None
@@ -531,7 +515,7 @@ def commit(
     stamped). The commit is staged for the filesystem coordinator
     when :func:`_stages_commit` says so, else published through
     :func:`_publish_commit`. A lost race raises the retryable
-    ``ValueError``.
+    :class:`CommitConflict`.
     """
     now_ms = int(time.time() * 1000)
     conf = metadata.configuration or {}
@@ -541,7 +525,7 @@ def commit(
         "operationParameters": params,
         "engineInfo": ENGINE_INFO,
     }
-    ict = in_commit_timestamp(conf, log_dir, now_ms)
+    ict = in_commit_timestamp(conf, log_dir, version, now_ms)
     if ict is not None:
         ci["inCommitTimestamp"] = ict
     meta = {
@@ -573,10 +557,9 @@ def auto_checkpoint(
 ) -> None:
     """Checkpoint after every ``interval``-th commit (Delta's
     ``delta.checkpointInterval``; ``None``/0 disables) — never at a
-    staged version: checkpoints must not outrun the backfilled tail
-    (the spec ties checkpoint validity to backfilled commits), so run
-    ``backfill_commits`` + ``write_checkpoint`` explicitly to compact a
-    coordinated table's history."""
+    staged version: a checkpoint backfills the commits it covers, and
+    backfilling stays an explicit step, so run ``write_checkpoint``
+    explicitly to compact a coordinated table's history."""
     if (
         interval
         and version > 0
@@ -608,7 +591,7 @@ def _publish_staged_commit(log_dir: str, version: int, payload: str) -> int:
     if fs.exists(os.path.join(log_dir, f"{version:020d}.json")) or any(
         n.startswith(prefix) for n in fs.listdir(sdir)
     ):
-        raise ValueError(
+        raise CommitConflict(
             f"concurrent commit at version {version}: the filesystem "
             "commit coordinator is single-writer; retry against the "
             "new snapshot"
@@ -967,10 +950,11 @@ def write_delta(
     tfs = fs_for(path)
     path = tfs.absolutize(path)
     log_dir = os.path.join(path, "_delta_log")
-    exists = tfs.isdir(log_dir) and any(
-        n.endswith(".json") or n.endswith(".checkpoint.parquet")
-        for n in tfs.listdir(log_dir)
-    )
+    try:
+        snap = DeltaLog(spark, path).snapshot()
+    except FileNotFoundError:
+        snap = None
+    exists = snap is not None
     if exists and mode == "error":
         raise ValueError(f"Delta table already exists at {path} (mode='error')")
     partition_explicit = partition_by is not None
@@ -993,12 +977,8 @@ def write_delta(
     # -- identity columns ----------------------------------------------------
     identity_specs: dict[str, dict] = {}
     prev_identity: dict[str, dict] = {}
-    _early_snap = None  # reused below — never replay the log twice
-    if exists and mode in ("append", "overwrite"):
-        _early_snap = DeltaLog(spark, path).snapshot()
-        prev_identity = _identity_specs_from_schema(
-            _early_snap.metadata.schema
-        )
+    if exists:
+        prev_identity = _identity_specs_from_schema(snap.metadata.schema)
     if not exists or mode == "overwrite":
         for iname, spec in (identity or {}).items():
             step = int(spec.get("step", 1))
@@ -1102,8 +1082,6 @@ def write_delta(
     if row_tracking and (not exists or mode == "overwrite"):
         meta_conf["delta.enableRowTracking"] = "true"
     if exists:
-        log = DeltaLog(spark, path)
-        snap = _early_snap if _early_snap is not None else log.snapshot()
         version = snap.version + 1
         # Protocol survives every commit too: re-emitting the default
         # would silently DOWNGRADE a table that a feature (standard
@@ -1680,7 +1658,7 @@ def write_delta(
                 protocol=_collation_protocol(_variant_protocol(commit_protocol)),
             )
             break
-        except ValueError:
+        except CommitConflict:
             if not blind_append:
                 raise
             # Transient staged ambiguity: on the coordinator-fallback

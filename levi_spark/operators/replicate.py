@@ -87,7 +87,7 @@ def replicate_cdf(
     app_id = _replica_app_id(src_path, dst_path)
     src_log = DeltaLog(spark, src_path)
     cur = src_log.latest_version()
-    if not os.path.isdir(os.path.join(dst_path, "_delta_log")):
+    if not DeltaLog.exists(dst_path):
         if not _bootstrap_clone(src_log, dst_path, app_id, cur):
             # source references external/absolute files: fall back to
             # the row-level rewrite (reads + re-encodes the dataset)

@@ -44,9 +44,7 @@ def _sink_batch(
     batch was already applied (crash replay)."""
     from levi_spark.delta.log import DeltaLog
 
-    from levi_spark.fs import fs_for
-
-    exists = fs_for(table_path).isdir(os.path.join(table_path, "_delta_log"))
+    exists = DeltaLog.exists(table_path)
     if exists:
         applied = (
             DeltaLog(batch_df.sparkSession, table_path)
@@ -142,9 +140,7 @@ def _upsert_batch(
     from levi_spark.operators.merge import merge
 
     spark = batch_df.sparkSession
-    from levi_spark.fs import fs_for
-
-    exists = fs_for(table_path).isdir(os.path.join(table_path, "_delta_log"))
+    exists = DeltaLog.exists(table_path)
     if exists:
         applied = (
             DeltaLog(spark, table_path)

@@ -69,9 +69,7 @@ class SyncState:
 
 def _applied_version(spark: SparkSession, dst_path: str, app_id: str) -> int:
     """Last source version recorded in the destination log (or -1)."""
-    from levi_spark.fs import fs_for
-
-    if not fs_for(dst_path).isdir(os.path.join(dst_path, "_delta_log")):
+    if not DeltaLog.exists(dst_path):
         return -1
     return (
         DeltaLog(spark, dst_path).snapshot().txn_versions().get(app_id, -1)
@@ -99,10 +97,7 @@ def incremental_sync(
         # wholesale, later calls go incremental)
         snap = src_log.snapshot(to_version)
         df = snap.to_df()
-        from levi_spark.fs import fs_for
-
-        mode = ("error" if not fs_for(dst_path)
-                .isdir(os.path.join(dst_path, "_delta_log")) else "append")
+        mode = "append" if DeltaLog.exists(dst_path) else "error"
         rows = df.count()
         dst_v = write_delta(
             df, dst_path, mode=mode,

@@ -127,3 +127,15 @@ def test_tar_bz2_strictness():
         decode_archive(blob[:-6])
     with pytest.raises(ValueError, match="after the bzip2 stream"):
         decode_archive(blob + b"tail")
+
+
+def test_targz_trailing_garbage_refuses():
+    from levi_spark.operators.archive import decode_archive, encode_tar
+
+    good = encode_tar([("a.txt", b"alpha")], gzip_stream=True)
+    assert decode_archive(good)[0]["data"] == b"alpha"
+    with pytest.raises(ValueError, match="after the gzip trailer"):
+        decode_archive(good + b"JUNK")
+    # a second concatenated gzip member is equally not a single stream
+    with pytest.raises(ValueError, match="after the gzip trailer"):
+        decode_archive(good + good)

@@ -222,3 +222,31 @@ def test_ict_stays_monotonic_across_staged_tail(spark, tmp_path):
     # strictly increasing ACROSS the staged tail (the writer-side
     # guarantee, not just the reader's monotonization)
     assert len(raw) == 3 and raw[0] < raw[1] < raw[2], raw
+
+
+def test_checkpoint_backfills_staged_versions_first(spark, tmp_path):
+    """A checkpoint covers only backfilled commits: ``write_checkpoint``
+    on a staged tail backfills it first, so time travel below the
+    checkpoint still sees every staged version, and ``expire_log``
+    then deletes only backfilled files."""
+    from levi_spark.delta.checkpoint import expire_log, write_checkpoint
+
+    p = str(tmp_path / "t")
+    write_delta(
+        spark.range(3).select("id"), p, mode="error",
+        checkpoint_interval=None, coordinated=True,
+    )
+    for lo in (3, 5):
+        write_delta(
+            spark.range(lo, lo + 2).select("id"), p, mode="append",
+            checkpoint_interval=None,
+        )
+    log_dir = os.path.join(p, "_delta_log")
+    assert not os.path.exists(os.path.join(log_dir, f"{1:020d}.json"))
+    assert write_checkpoint(spark, p) == 2
+    log = DeltaLog(spark, p)
+    assert log._entries() == ([0, 1, 2], [2])
+    assert [log.snapshot(v).to_df().count() for v in (0, 1, 2)] == [3, 5, 7]
+    assert expire_log(spark, p) == [0, 1, 2]
+    assert len(os.listdir(os.path.join(log_dir, "_commits"))) == 2
+    assert DeltaLog(spark, p).snapshot().to_df().count() == 7

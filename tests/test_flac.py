@@ -306,3 +306,18 @@ def test_lpc_actually_emitted_and_targeted():
         encode_flac(st2, 44100, stereo="mid-side", lpc_order=6)
     )
     assert np.array_equal(dec, st2)
+
+
+def test_flac_escape_width_over_31_refuses():
+    from levi_spark.operators.flac import _BitWriter, _write_residual
+
+    bw = _BitWriter()
+    # residuals needing > 31 raw bits: |r| = 2^33 -> bit_length+1 = 35
+    huge = np.array([1 << 33, -(1 << 33)] * 8, dtype=np.int64)
+    with pytest.raises(ValueError, match="escape width caps at 31"):
+        _write_residual(bw, huge, eff=16)
+    # a legal escape (raw width <= 31) still writes
+    bw2 = _BitWriter()
+    big_but_legal = np.array([1 << 24, -(1 << 24)] * 8, dtype=np.int64)
+    _write_residual(bw2, big_but_legal, eff=16)
+    assert len(bw2.out) > 0 or bw2.n > 0

@@ -166,3 +166,32 @@ def test_gate_fixture_stats_closed_form():
 def test_synthesis_refused_loudly():
     with pytest.raises(NotImplementedError, match="512-tap"):
         synthesize_pcm(np.zeros((12, 32)))
+
+
+def test_mpeg1_returns_documented_keys():
+    from levi_spark.operators.mpeg1 import (
+        decode_mpeg1_layer1,
+        encode_mpeg1_layer1,
+    )
+
+    alloc = np.zeros(32, dtype=np.int64)
+    alloc[0], alloc[5] = 2, 7
+    scf = np.zeros(32, dtype=np.int64)
+    scf[0], scf[5] = 6, 21
+    raw = np.zeros((12, 32), dtype=np.int64)
+    raw[:, 0] = np.arange(12) % 7
+    raw[:, 5] = (3 * np.arange(12) + 1) % 255
+    frame = encode_mpeg1_layer1(alloc, scf, raw)
+    out = decode_mpeg1_layer1(frame)
+    # exactly the documented surface — consumers following the
+    # docstring's formula find every key it names
+    for key in ("sample_rate", "bitrate_kbps", "alloc", "scf_idx",
+                "raw", "numerators", "denominators", "scale_log2_num3"):
+        assert key in out, key
+    assert "denom_log2" not in out
+    # and the law: denominators = 2^nb - 1, numerators = 2*raw-2^nb+2
+    nb = int(alloc[5]) + 1
+    assert out["denominators"][5] == (1 << nb) - 1
+    assert (out["numerators"][:, 5]
+            == 2 * raw[:, 5] - (1 << nb) + 2).all()
+    assert out["scale_log2_num3"][5] == 3 - 21

@@ -187,3 +187,29 @@ def test_restore_to_timestamp(spark, tmp_path):
     # restoring to "now" (current state) is a no-op
     r2 = restore_to_timestamp(spark, path, adj[2] + 10**7)
     assert r2["version"] == -1
+
+
+def test_restore_keeps_coordinator_and_protocol(spark, tmp_path):
+    """Restoring to a version from before the commit coordinator was
+    enabled keeps the coordinator: the restore commit is staged behind
+    the staged tail, so the table stays readable. The protocol is the
+    union of the current and the target one, never a downgrade."""
+    from levi_spark.delta.constraints import set_table_properties
+
+    coord = "delta.coordinatedCommits.commitCoordinator-preview"
+    path = str(tmp_path / "t")
+    write_delta(spark.range(3).select("id"), path, mode="error",
+                checkpoint_interval=None)                       # v0
+    set_table_properties(spark, path, {coord: "filesystem"})    # v1 staged
+    write_delta(spark.range(3, 5).select("id"), path, mode="append",
+                checkpoint_interval=None)                       # v2 staged
+    before = DeltaLog(spark, path).snapshot().protocol
+    assert restore(spark, path, 0)["version"] == 3
+    log_dir = os.path.join(path, "_delta_log")
+    assert not os.path.exists(os.path.join(log_dir, f"{3:020d}.json"))
+    snap = DeltaLog(spark, path).snapshot()
+    assert snap.version == 3
+    assert sorted(r.id for r in snap.to_df().collect()) == [0, 1, 2]
+    assert snap.metadata.configuration[coord] == "filesystem"
+    assert "coordinatedCommits-preview" in before["writerFeatures"]
+    assert snap.protocol == before

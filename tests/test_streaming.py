@@ -268,3 +268,23 @@ def test_full_outer_join_emits_both_sides_complete(spark, oracle):
     assert any(r[2] == -1 for r in got)  # unmatched views
     assert any(r[1] != -1 and r[2] != -1 for r in got)  # matches
     assert all(r[0] >= 0 for r in got)  # no sentinel leakage
+
+
+def test_stage_timer_records_and_echoes(monkeypatch, capsys):
+    import importlib
+
+    from levi_spark.functions import timing
+
+    monkeypatch.setenv("LEVI_STAGE_TIMING", "1")
+    with timing.stage_timer("scope_x", "stage_y"):
+        pass
+    assert "stage_y" in timing.STAGE_TIMINGS["scope_x"]
+    assert timing.STAGE_TIMINGS["scope_x"]["stage_y"] >= 0.0
+    assert "[stage] scope_x.stage_y:" in capsys.readouterr().err
+    # exceptions propagate and the stage still records
+    import pytest as _pytest
+
+    with _pytest.raises(RuntimeError):
+        with timing.stage_timer("scope_x", "boom"):
+            raise RuntimeError("x")
+    assert "boom" in timing.STAGE_TIMINGS["scope_x"]
