@@ -113,13 +113,14 @@ def write_checkpoint(
 def _require_v2_checkpoint_feature(log: DeltaLog, snap):
     """``snap``, or — for a table without the ``v2Checkpoint`` reader
     feature — the snapshot after a protocol-upgrade commit adding it."""
-    from levi_spark.delta.writer import commit, merge_protocol
+    from levi_spark.delta.writer import _write_commit, merge_protocol
 
     # A v2 checkpoint is only discoverable by spec-conforming foreign
     # readers when the table protocol declares the v2Checkpoint
     # feature — and after log expiry it is the ONLY route to the
     # state, so writing one without the feature could strand such
-    # readers. Upgrade the protocol in its own commit first.
+    # readers. Upgrade the protocol in its own commit first — one
+    # that never auto-checkpoints, since the caller checkpoints it.
     proto = snap.protocol
     if (
         proto.get("minReaderVersion", 1) < 3
@@ -137,7 +138,7 @@ def _require_v2_checkpoint_feature(log: DeltaLog, snap):
                 "writerFeatures": ["v2Checkpoint"],
             },
         )
-        commit(
+        _write_commit(
             log.log_path, snap.version + 1, [],
             operation="UPGRADE PROTOCOL",
             params={"feature": "v2Checkpoint"},

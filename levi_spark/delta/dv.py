@@ -45,12 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from levi_spark.delta.log import DeltaLog
-from levi_spark.delta.writer import (
-    DEFAULT_CHECKPOINT_INTERVAL,
-    auto_checkpoint,
-    commit,
-    write_delta,
-)
+from levi_spark.delta.writer import CommitConflict, commit, write_delta
 
 
 def _write_standard_dvs(
@@ -68,28 +63,7 @@ def _write_standard_dvs(
     descriptor rows come back to the driver."""
     import pandas as pd
 
-    from levi_spark.fs import local_form
-
-    remote_root = None
-    lp = local_form(table_path)
-    if lp is None:
-        # Remote URI table: executors' Python open() cannot speak the
-        # scheme, so the DV ``.bin`` files are encoded into a
-        # DRIVER-VISIBLE local scratch (``LEVI_EXEC_SCRATCH`` or the
-        # system tempdir — on a real cluster a shared mount; in
-        # local/local-cluster mode the tempdir qualifies) and copied
-        # out to the table root through the scheme filesystem (one
-        # streaming driver-side pass, one file per affected data file
-        # — DV count is bounded by the commit's file count, a
-        # metadata-plane volume).
-        import tempfile
-
-        remote_root = table_path
-        lp = tempfile.mkdtemp(
-            prefix="levi_dvstage_",
-            dir=os.environ.get("LEVI_EXEC_SCRATCH") or None,
-        )
-    table_path = lp
+    from levi_spark.fs import executor_dir, local_form
 
     def encode(pdf: pd.DataFrame) -> pd.DataFrame:
         import os as _os
@@ -120,9 +94,7 @@ def _write_standard_dvs(
                 continue
             data, offs = write_dv_file([blob])
             u = _uuid.uuid4()
-            with open(
-                _os.path.join(table_path, f"deletion_vector_{u}.bin"), "wb"
-            ) as f:
+            with open(_os.path.join(root, f"deletion_vector_{u}.bin"), "wb") as f:
                 f.write(data)
             rows.append(
                 (fname, "u", z85_encode(u.bytes), offs[0], len(blob), len(grp))
@@ -132,16 +104,20 @@ def _write_standard_dvs(
             columns=["file_name", "st", "pod", "offset", "size", "cardinality"],
         )
 
-    desc_rows = (
-        dv_out.repartition("file_name")
-        .groupBy("file_name")
-        .applyInPandas(
-            encode,
-            "file_name string, st string, pod string, offset int, size int, "
-            "cardinality long",
+    # A remote URI table encodes its ``.bin`` files into a
+    # driver-visible scratch, copied to the table root on exit — one
+    # file per affected data file, a metadata-plane volume.
+    with executor_dir(table_path, local_form(table_path), "levi_dvstage_") as root:
+        desc_rows = (
+            dv_out.repartition("file_name")
+            .groupBy("file_name")
+            .applyInPandas(
+                encode,
+                "file_name string, st string, pod string, offset int, size int, "
+                "cardinality long",
+            )
+            .collect()
         )
-        .collect()
-    )
     descs = {
         r["file_name"]: None if r["st"] is None else {
             "storageType": r["st"],
@@ -152,17 +128,6 @@ def _write_standard_dvs(
         }
         for r in desc_rows
     }
-    if remote_root is not None:
-        from levi_spark.fs import copy_file, fs_for
-
-        fs_for(remote_root).mkdirs(remote_root)
-        for name in os.listdir(table_path):
-            if name.startswith("deletion_vector_"):
-                copy_file(os.path.join(table_path, name),
-                          f"{remote_root.rstrip('/')}/{name}")
-        import shutil
-
-        shutil.rmtree(table_path, ignore_errors=True)
     return descs
 
 
@@ -191,7 +156,6 @@ def soft_delete(
     spark: SparkSession,
     path: str,
     predicate: str | Column,
-    checkpoint_interval: int | None = DEFAULT_CHECKPOINT_INTERVAL,
     emit_cdf: bool = False,
 ) -> dict:
     """Logically delete every row matching ``predicate`` (SQL string or
@@ -213,7 +177,8 @@ def soft_delete(
     minReaderVersion 3 + deletionVectors, so any conforming Delta
     reader (delta-spark included) applies them. A file that loses
     every row is removed instead and gets no DV; a commit with no DV
-    left live keeps the table's protocol.
+    left live keeps the table's protocol. The commit checkpoints when
+    the table's ``delta.checkpointInterval`` says so, like every commit.
     """
     log = DeltaLog(spark, path)
     path = log.table_path
@@ -333,7 +298,7 @@ def soft_delete(
     keeps_dv = any("add" in a for a in actions)
     try:
         # a DV commit re-emits add actions read from its snapshot, so a
-        # concurrent commit invalidates it (the retryable ValueError)
+        # concurrent commit invalidates it (the retryable CommitConflict)
         commit(
             log.log_path, version, actions,
             operation="DELETE",
@@ -341,16 +306,14 @@ def soft_delete(
             metadata=snap.metadata,
             protocol=_standard_dv_protocol(snap) if keeps_dv else snap.protocol,
         )
-    except ValueError:
+    except CommitConflict:
         # Lost the commit race: the DV files written above are
         # unreachable from any committed version — remove them rather
         # than leaving orphans for vacuum, then surface the retry
-        # contract.
+        # contract. Any later error (the commit's checkpoint, say)
+        # leaves a published version that references them.
         _cleanup()
         raise
-    auto_checkpoint(
-        spark, path, version, snap.metadata.configuration, checkpoint_interval
-    )
     return {
         "version": version,
         "rows_deleted": rows_deleted,
@@ -386,7 +349,6 @@ def purge_deleted(spark: SparkSession, path: str) -> dict:
         partition_by=list(snap.metadata.partition_columns),
         replace_paths=dv_paths,
         operation="PURGE",
-        checkpoint_interval=None,
         identity_passthrough=True,  # rewrite carries existing ids
     )
     return {"version": version, "files_rewritten": len(dv_paths)}

@@ -27,17 +27,16 @@ import datetime as _dt
 import decimal
 import json
 import os
-import shutil
 import time
 import uuid
 from urllib.parse import quote, unquote
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from levi_spark.delta.log import DeltaLog, TableMetadata, stats_schema, _MINMAX_TYPES
-from levi_spark.fs import fs_for, local_form
+from levi_spark.fs import executor_dir, fs_for, local_form
 
 _PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
 
@@ -76,6 +75,18 @@ def _identity_field_metadata(md: dict | None, spec: dict) -> dict:
     if spec["hwm"] is not None:
         out["delta.identity.highWaterMark"] = spec["hwm"]
     return out
+
+
+def identity_values(spec: dict) -> Column:
+    """System-assigned values for an identity column: unique,
+    congruent to ``start (mod step)`` and strictly beyond the
+    persisted high water mark. Map-side ``monotonically_increasing_id``
+    arithmetic — no shuffle, no driver loop; values may be sparse
+    across task partitions, which the spec permits."""
+    base = spec["hwm"] if spec["hwm"] is not None else spec["start"] - spec["step"]
+    return (
+        F.lit(base) + (F.monotonically_increasing_id() + 1) * F.lit(spec["step"])
+    ).cast("long")
 
 
 def merge_protocol(base: dict, req: dict) -> dict:
@@ -504,18 +515,75 @@ def commit(
     metadata: TableMetadata,
     protocol: dict,
 ) -> int:
-    """Build, stamp, stage and publish one commit; returns its version.
+    """Build, stamp, stage and publish one commit, then checkpoint it
+    when the table's cadence says so; returns its version.
 
-    Every levi commit goes through here: it serialises the protocol,
-    the metaData (``metadata`` — the table state being committed), the
-    ``actions`` and a commitInfo (``timestamp``, ``operation``,
-    ``operationParameters``, ``engineInfo``, and ``inCommitTimestamp``
-    exactly when ``metadata.configuration`` enables in-commit
-    timestamps — so the commit that turns them on is the first one
-    stamped). The commit is staged for the filesystem coordinator
-    when :func:`_stages_commit` says so, else published through
-    :func:`_publish_commit`. A lost race raises the retryable
-    :class:`CommitConflict`.
+    Every levi commit goes through here (:func:`_write_commit` builds
+    and publishes it). A published commit at a version ``v > 0`` with
+    ``v % interval == 0`` is followed by a classic checkpoint, where
+    ``interval`` is the ``delta.checkpointInterval`` of the
+    configuration being committed (default
+    :data:`DEFAULT_CHECKPOINT_INTERVAL`) — the Delta writer's rule,
+    applied to every verb. A value that is not a positive integer
+    raises ``ValueError`` before anything is published. A staged
+    commit never checkpoints: a checkpoint backfills the commits it
+    covers, and backfilling stays an explicit step, so run
+    ``write_checkpoint`` to compact a coordinated table's history.
+    """
+    conf = metadata.configuration or {}
+    every = _checkpoint_every(conf)
+    _write_commit(
+        log_dir, version, actions,
+        operation=operation, params=params, metadata=metadata,
+        protocol=protocol,
+    )
+    if version > 0 and version % every == 0 and not _stages_commit(conf, version):
+        # looked up at call time, so a wrapper installed on the
+        # checkpoint module sees every automatic checkpoint
+        from levi_spark.delta import checkpoint
+
+        checkpoint.write_checkpoint(None, os.path.dirname(log_dir), version)
+    return version
+
+
+def _checkpoint_every(configuration: dict) -> int:
+    """The table's checkpoint cadence: its ``delta.checkpointInterval``,
+    else :data:`DEFAULT_CHECKPOINT_INTERVAL`. A value that is not a
+    positive integer raises ``ValueError`` naming the property."""
+    raw = configuration.get("delta.checkpointInterval")
+    if raw is None:
+        return DEFAULT_CHECKPOINT_INTERVAL
+    s = str(raw)
+    if not (s.isascii() and s.isdigit()) or int(s) == 0:
+        raise ValueError(
+            f"delta.checkpointInterval must be a positive integer, got {raw!r}"
+        )
+    return int(s)
+
+
+def _write_commit(
+    log_dir: str,
+    version: int,
+    actions: list[dict],
+    *,
+    operation: str,
+    params: dict,
+    metadata: TableMetadata,
+    protocol: dict,
+) -> int:
+    """Build, stamp, stage and publish one commit, with no checkpoint;
+    returns its version. Only :func:`commit` and the v2-checkpoint
+    protocol upgrade (whose caller checkpoints it next) call this.
+
+    It serialises the protocol, the metaData (``metadata`` — the table
+    state being committed), the ``actions`` and a commitInfo
+    (``timestamp``, ``operation``, ``operationParameters``,
+    ``engineInfo``, and ``inCommitTimestamp`` exactly when
+    ``metadata.configuration`` enables in-commit timestamps — so the
+    commit that turns them on is the first one stamped). The commit is
+    staged for the filesystem coordinator when :func:`_stages_commit`
+    says so, else published through :func:`_publish_commit`. A lost
+    race raises the retryable :class:`CommitConflict`.
     """
     now_ms = int(time.time() * 1000)
     conf = metadata.configuration or {}
@@ -549,26 +617,6 @@ def commit(
     if _stages_commit(conf, version):
         return _publish_staged_commit(log_dir, version, payload)
     return _publish_commit(log_dir, version, payload)
-
-
-def auto_checkpoint(
-    spark, table_path: str, version: int, configuration: dict | None,
-    interval: int | None,
-) -> None:
-    """Checkpoint after every ``interval``-th commit (Delta's
-    ``delta.checkpointInterval``; ``None``/0 disables) — never at a
-    staged version: a checkpoint backfills the commits it covers, and
-    backfilling stays an explicit step, so run ``write_checkpoint``
-    explicitly to compact a coordinated table's history."""
-    if (
-        interval
-        and version > 0
-        and version % interval == 0
-        and not _stages_commit(configuration, version)
-    ):
-        from levi_spark.delta.checkpoint import write_checkpoint
-
-        write_checkpoint(spark, table_path, version)
 
 
 def _publish_staged_commit(log_dir: str, version: int, payload: str) -> int:
@@ -704,29 +752,6 @@ def _stage_self_hosted(
                    if f.name not in set(partition_by)]
     specs = [(f.name, _self_hosted_coltype(f.dataType), f.dataType)
              for f in data_fields]
-    lp = local_form(staging)
-    remote_target = None
-    if lp is None:
-        # Remote URI target: the executors' Python open() cannot speak
-        # the scheme, so stage through a DRIVER-VISIBLE local scratch
-        # (``LEVI_EXEC_SCRATCH`` or the system tempdir — on a real
-        # cluster this must be a shared mount: an NFS/FUSE scratch or
-        # object-store mount; in local/local-cluster mode the tempdir
-        # qualifies) and copy the staged tree out through the scheme
-        # filesystem (Hadoop ``FileUtil.copy``, one driver-side pass,
-        # streaming — no file bytes held in memory). Data moves
-        # executor→scratch→store exactly once; the standard
-        # (non-self-hosted) path keeps ``df.write``, which speaks URIs
-        # natively in the JVM.
-        import tempfile
-
-        remote_target = staging
-        lp = tempfile.mkdtemp(
-            prefix="levi_selfhosted_",
-            dir=os.environ.get("LEVI_EXEC_SCRATCH") or None,
-        )
-    staging = lp
-    os.makedirs(staging, exist_ok=True)
 
     def _to_values(pdf, name: str, dt: T.DataType) -> list:
         import pandas as pd
@@ -799,38 +824,26 @@ def _stage_self_hosted(
                 for c, v in zip(partition_by, key)
             )
             n = _write_file([pdf[[f.name for f in data_fields]]],
-                            os.path.join(staging, seg))
+                            os.path.join(root, seg))
             return pd.DataFrame({"n": [n]})
-
-    def _ship_remote():
-        # copy the staged tree (hive subdirs included) to the remote
-        # staging URI, then drop the local scratch — the rest of the
-        # write path (stats read, file mover) already speaks the seam
-        if remote_target is None:
-            return
-        from levi_spark.fs import copy_tree
-
-        copy_tree(staging, remote_target)
-        shutil.rmtree(staging, ignore_errors=True)
-
-    if partition_by:
-        (
-            df.groupBy(*partition_by)
-            .applyInPandas(write_group, "n long")
-            .agg(F.sum("n"))
-            .collect()
-        )
-        _ship_remote()
-        return
 
     def write_part(batches):
         import pandas as pd
 
-        n = _write_file([p for p in batches if len(p)], staging)
+        n = _write_file([p for p in batches if len(p)], root)
         yield pd.DataFrame({"n": [n]})
 
-    df.mapInPandas(write_part, "n long").agg(F.sum("n")).collect()
-    _ship_remote()
+    # The writers run executor-side into ``root`` (bound below before
+    # they ship): a remote URI target stages through a driver-visible
+    # scratch, so data moves executor→scratch→store exactly once. The
+    # standard path keeps ``df.write``, which speaks URIs in the JVM.
+    with executor_dir(staging, local_form(staging), "levi_selfhosted_") as root:
+        os.makedirs(root, exist_ok=True)
+        if partition_by:
+            written = df.groupBy(*partition_by).applyInPandas(write_group, "n long")
+        else:
+            written = df.mapInPandas(write_part, "n long")
+        written.agg(F.sum("n")).collect()
 
 
 def write_delta(
@@ -840,7 +853,6 @@ def write_delta(
     partition_by: list[str] | None = None,
     replace_paths: list[str] | None = None,
     operation: str = "WRITE",
-    checkpoint_interval: int | None = DEFAULT_CHECKPOINT_INTERVAL,
     merge_schema: bool = False,
     cdc_df: DataFrame | None = None,
     txn: tuple[str, int] | None = None,
@@ -864,10 +876,10 @@ def write_delta(
     (compaction / z-order, :mod:`levi_spark.operators.layout`) build
     on. Returns the committed version.
 
-    ``checkpoint_interval``: auto-write a checkpoint parquet after every
-    Nth commit (Delta's ``delta.checkpointInterval``, default 10), so
-    snapshot reconstruction stays O(live files) instead of O(history)
-    on long-lived tables. ``None``/0 disables.
+    The commit checkpoints when the table's ``delta.checkpointInterval``
+    (default 10) says so — :func:`commit` decides that for every verb —
+    so snapshot reconstruction stays O(live files) instead of
+    O(history) on long-lived tables.
 
     ``merge_schema`` (append mode): Delta's ``mergeSchema`` semantics —
     the commit's metaData carries the UNION of the table schema and the
@@ -943,8 +955,8 @@ def write_delta(
     :func:`backfill_commits` copies staged commits into the main log;
     :class:`levi_spark.delta.log.DeltaLog` reads the staged tail
     directly under the same contract (unambiguous + contiguous, else
-    loud refusal). Auto-checkpointing is disabled for staged commits
-    (checkpoints must not outrun the backfilled tail).
+    loud refusal). Staged commits never auto-checkpoint (checkpoints
+    must not outrun the backfilled tail).
     """
     spark = df.sparkSession
     tfs = fs_for(path)
@@ -1017,18 +1029,7 @@ def write_delta(
                     "(declare allow_explicit_insert=True for BY DEFAULT)"
                 )
         else:
-            base = (
-                spec["hwm"]
-                if spec["hwm"] is not None
-                else spec["start"] - spec["step"]
-            )
-            df = df.withColumn(
-                iname,
-                (
-                    F.lit(base)
-                    + (F.monotonically_increasing_id() + 1) * F.lit(spec["step"])
-                ).cast("long"),
-            )
+            df = df.withColumn(iname, identity_values(spec))
     # Nullability is a DECLARED contract, not an inferred one: Spark
     # marks every lit()/range-derived column non-nullable, so recording
     # df.schema verbatim would turn accidents into NOT NULL invariants
@@ -1720,6 +1721,4 @@ def write_delta(
                 commit_schema = prev_schema
     else:
         raise RuntimeError("commit contention: 20 rebase attempts failed")
-
-    auto_checkpoint(spark, path, version, meta_conf, checkpoint_interval)
     return version

@@ -36,7 +36,7 @@ Everything here is DRIVER-side. Executor-side file IO (the
 self-hosted parquet staging, deletion-vector emission) keeps raw
 ``open`` on ``local_form()`` paths; for genuinely remote schemes it
 stages through a driver-visible local scratch and the driver ships
-the files through this seam (``copy_tree``/``copy_file``); deletion
+the files through this seam (:func:`executor_dir`); deletion
 vectors are decoded on the driver, which reads them here — shipping a
 Hadoop client into Python workers stays out of scope, and the
 standard executor path (``df.write``) already handles URIs in the JVM.
@@ -46,6 +46,8 @@ from __future__ import annotations
 
 import os
 import shutil
+import tempfile
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 
@@ -432,3 +434,29 @@ def copy_tree(src: str, dst: str) -> None:
         shutil.copytree(src, dst, dirs_exist_ok=True)
         return
     copy_file(src, dst)  # FileUtil.copy recurses into directories
+
+
+@contextmanager
+def executor_dir(target: str, local: str | None, prefix: str):
+    """A directory executor-side Python can ``open()`` for files bound
+    for ``target``, whose :func:`local_form` is ``local``. A target
+    with a local form gets that form. A genuinely remote one gets a
+    driver-visible local scratch under ``prefix`` (in
+    ``LEVI_EXEC_SCRATCH`` or the system tempdir: on a real cluster a
+    shared mount, in local/local-cluster mode the tempdir qualifies);
+    on a clean exit every entry in it is copied to ``target`` through
+    the scheme filesystem (one streaming driver-side pass, no file
+    bytes held in memory), and the scratch is removed either way."""
+    if local is not None:
+        yield local
+        return
+    scratch = tempfile.mkdtemp(
+        prefix=prefix, dir=os.environ.get("LEVI_EXEC_SCRATCH") or None
+    )
+    try:
+        yield scratch
+        fs_for(target).mkdirs(target)
+        for name in os.listdir(scratch):
+            copy_file(os.path.join(scratch, name), f"{target.rstrip('/')}/{name}")
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)

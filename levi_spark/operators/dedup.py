@@ -57,6 +57,33 @@ def _check_columns(df_cols: list[str], required: list[str]) -> None:
         )
 
 
+def _dup_columns(duplication_columns) -> list[str]:
+    if not duplication_columns or not isinstance(duplication_columns, (list, tuple)):
+        raise TypeError("duplication_columns must be a non-empty list or tuple")
+    return list(duplication_columns)
+
+
+def _check_pkey(df: DataFrame, primary_key: str, duplication_columns) -> list[str]:
+    """Validate P12's arguments against ``df`` and require a globally
+    unique primary key (one aggregate); returns the duplication
+    columns as a list."""
+    if not primary_key or not isinstance(primary_key, str):
+        raise TypeError("primary_key must be a non-empty string")
+    dcols = _dup_columns(duplication_columns)
+    if primary_key in dcols:
+        raise TypeError("primary_key cannot be one of the duplication_columns")
+    _check_columns(df.columns, [primary_key, *dcols])
+    counts = df.agg(
+        F.count(F.lit(1)).alias("n"), F.countDistinct(primary_key).alias("d")
+    ).first()
+    if counts["n"] != counts["d"]:
+        raise ValueError(
+            f"Primary key {primary_key!r} is not unique: {counts['n']} rows, "
+            f"{counts['d']} distinct keys"
+        )
+    return dcols
+
+
 def kill_duplicates_transform(df: DataFrame, duplication_columns: list[str]) -> DataFrame:
     """Survivor set after deleting every member of every duplicate group.
 
@@ -66,18 +93,15 @@ def kill_duplicates_transform(df: DataFrame, duplication_columns: list[str]) -> 
     exactly like the reference's MERGE-delete predicate
     (levi/__init__.py:155).
     """
-    if not duplication_columns or not isinstance(duplication_columns, (list, tuple)):
-        raise TypeError("duplication_columns must be a non-empty list")
-    _check_columns(df.columns, list(duplication_columns))
+    dcols = _dup_columns(duplication_columns)
+    _check_columns(df.columns, dcols)
     dup_keys = (
-        df.groupBy(*duplication_columns)
+        df.groupBy(*dcols)
         .agg(F.count(F.lit(1)).alias("__cnt"))
         .where(F.col("__cnt") > 1)
-        .select(*duplication_columns)
+        .select(*dcols)
     )
-    return df.join(dup_keys, on=list(duplication_columns), how="left_anti").select(
-        *df.columns
-    )
+    return df.join(dup_keys, on=dcols, how="left_anti").select(*df.columns)
 
 
 def kill_duplicates(table: LeviTable, duplication_columns: list[str]) -> dict:
@@ -94,9 +118,7 @@ def kill_duplicates(table: LeviTable, duplication_columns: list[str]) -> dict:
     "version"}`` (version -1 if the table has no duplicates).
     """
     _check_table(table)
-    if not duplication_columns or not isinstance(duplication_columns, (list, tuple)):
-        raise TypeError("duplication_columns must be a non-empty list")
-    dcols = list(duplication_columns)
+    dcols = _dup_columns(duplication_columns)
     snap = table.snapshot()
     _check_columns(snap.metadata.data_columns, dcols)
     non_null = functools.reduce(
@@ -213,12 +235,10 @@ def drop_duplicates(table: LeviTable, duplication_columns: list[str]) -> dict:
     global, so survivors outside the rewritten files are untouched by
     construction)."""
     _check_table(table)
-    if not duplication_columns or not isinstance(duplication_columns, (list, tuple)):
-        raise TypeError("duplication_columns must be a non-empty list or tuple")
+    dcols = _dup_columns(duplication_columns)
     df = _physical_order_df(table)
-    data_cols = [c for c in df.columns if c not in _ORDER_META]
-    _check_columns(data_cols, list(duplication_columns))
-    w = Window.partitionBy(*duplication_columns).orderBy("__file_seq", "__row_idx")
+    _check_columns([c for c in df.columns if c not in _ORDER_META], dcols)
+    w = Window.partitionBy(*dcols).orderBy("__file_seq", "__row_idx")
     losers = (
         df.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") > 1)
@@ -233,10 +253,9 @@ def drop_duplicates_ordered(
     """Keep one row per duplicate group — the first under an explicit,
     caller-defined ordering. Pure transform; the SQL-stable counterpart
     of P11's physical-order semantics (one shuffle on the dup key)."""
-    if not duplication_columns:
-        raise TypeError("duplication_columns must be a non-empty list or tuple")
-    _check_columns(df.columns, [*duplication_columns, *order_columns])
-    w = Window.partitionBy(*duplication_columns).orderBy(
+    dcols = _dup_columns(duplication_columns)
+    _check_columns(df.columns, [*dcols, *order_columns])
+    w = Window.partitionBy(*dcols).orderBy(
         *[F.col(c).asc() for c in order_columns]
     )
     return (
@@ -251,22 +270,8 @@ def drop_duplicates_pkey_transform(
 ) -> DataFrame:
     """Pure transform behind P12: per duplicate group keep the lowest
     primary key; pk must be globally unique (``ValueError``)."""
-    if not primary_key or not isinstance(primary_key, str):
-        raise TypeError("primary_key must be a non-empty string")
-    if not duplication_columns or not isinstance(duplication_columns, (list, tuple)):
-        raise TypeError("duplication_columns must be a non-empty list or tuple")
-    if primary_key in duplication_columns:
-        raise TypeError("primary_key cannot be one of the duplication_columns")
-    _check_columns(df.columns, [primary_key, *duplication_columns])
-    counts = df.agg(
-        F.count(F.lit(1)).alias("n"), F.countDistinct(primary_key).alias("d")
-    ).first()
-    if counts["n"] != counts["d"]:
-        raise ValueError(
-            f"Primary key {primary_key!r} is not unique: {counts['n']} rows, "
-            f"{counts['d']} distinct keys"
-        )
-    return drop_duplicates_ordered(df, list(duplication_columns), [primary_key])
+    dcols = _check_pkey(df, primary_key, duplication_columns)
+    return drop_duplicates_ordered(df, dcols, [primary_key])
 
 
 def drop_duplicates_pkey(
@@ -277,24 +282,9 @@ def drop_duplicates_pkey(
     (``ValueError`` otherwise — it guards survivor determinism).
     File-targeted: only files losing a row are rewritten."""
     _check_table(table)
-    if not primary_key or not isinstance(primary_key, str):
-        raise TypeError("primary_key must be a non-empty string")
-    if not duplication_columns or not isinstance(duplication_columns, (list, tuple)):
-        raise TypeError("duplication_columns must be a non-empty list or tuple")
-    if primary_key in duplication_columns:
-        raise TypeError("primary_key cannot be one of the duplication_columns")
-    snap = table.snapshot()
-    df = snap.to_df(with_lineage=True)
-    _check_columns(df.columns, [primary_key, *duplication_columns])
-    counts = df.agg(
-        F.count(F.lit(1)).alias("n"), F.countDistinct(primary_key).alias("d")
-    ).first()
-    if counts["n"] != counts["d"]:
-        raise ValueError(
-            f"Primary key {primary_key!r} is not unique: {counts['n']} rows, "
-            f"{counts['d']} distinct keys"
-        )
-    w = Window.partitionBy(*duplication_columns).orderBy(F.col(primary_key).asc())
+    df = table.snapshot().to_df(with_lineage=True)
+    dcols = _check_pkey(df, primary_key, duplication_columns)
+    w = Window.partitionBy(*dcols).orderBy(F.col(primary_key).asc())
     losers = (
         df.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") > 1)

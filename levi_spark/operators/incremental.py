@@ -76,7 +76,7 @@ def init_aggregate(
         )
     )
     version = write_delta(
-        agg, agg_path, mode="error", checkpoint_interval=None,
+        agg, agg_path, mode="error",
         txn=(_agg_app_id(base_path), snap.version),
     )
     state.advance(snap.version)

@@ -188,7 +188,10 @@ class MergeBuilder:
         # through; INSERT branches must not assign a GENERATED ALWAYS
         # column, and unassigned identity columns get system values
         # minted beyond the persisted high water mark.
-        from levi_spark.delta.writer import _identity_specs_from_schema
+        from levi_spark.delta.writer import (
+            _identity_specs_from_schema,
+            identity_values,
+        )
 
         id_specs = _identity_specs_from_schema(snap.metadata.schema)
 
@@ -430,21 +433,8 @@ class MergeBuilder:
                         "MERGE INSERT cannot assign it"
                     )
             for c, spec in id_specs.items():
-                if c in assigned_ids:
-                    continue
-                base = (
-                    spec["hwm"]
-                    if spec["hwm"] is not None
-                    else spec["start"] - spec["step"]
-                )
-                inserts = inserts.withColumn(
-                    c,
-                    (
-                        F.lit(base)
-                        + (F.monotonically_increasing_id() + 1)
-                        * F.lit(spec["step"])
-                    ).cast("long"),
-                )
+                if c not in assigned_ids:
+                    inserts = inserts.withColumn(c, identity_values(spec))
             if emit_cdf:
                 cdc_parts.append(
                     inserts.withColumn("_change_type", F.lit("insert"))

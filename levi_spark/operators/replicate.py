@@ -97,7 +97,6 @@ def replicate_cdf(
                 dst_path,
                 mode="error",
                 partition_by=snap.metadata.partition_columns,
-                checkpoint_interval=None,
                 txn=(app_id, cur),
             )
         return {"applied_through": cur, "bootstrapped": True, "keys_changed": -1}

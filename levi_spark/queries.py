@@ -2198,10 +2198,8 @@ def cdf_timestamp_counts(spark, sf_dir):
     p = _os.path.join(base, "t")
     write_delta(
         _t(spark, sf_dir, "customer").repartition(8), p, mode="error",
-        checkpoint_interval=None,
     )
-    soft_delete(spark, p, "c_custkey % 9 = 0", emit_cdf=True,
-                checkpoint_interval=None)
+    soft_delete(spark, p, "c_custkey % 9 = 0", emit_cdf=True)
     write_delta(
         spark.range(1, 5).select(
             (F.col("id") + 80_000_000).alias("c_custkey"),
@@ -2210,7 +2208,7 @@ def cdf_timestamp_counts(spark, sf_dir):
             (F.col("id").cast("double") + F.lit(0.5)).alias("c_acctbal"),
             F.lit("TS").alias("c_mktsegment"),
         ),
-        p, mode="append", checkpoint_interval=None,
+        p, mode="append",
     )
     ts = dict(DeltaLog(spark, p).commit_timestamps())
     feed = table_changes_cdf_between_timestamps(spark, p, ts[1])
@@ -2293,7 +2291,7 @@ def row_tracking_counts(spark, sf_dir):
     )
     write_delta(
         cust.repartition(1).sortWithinPartitions("c_custkey"),
-        p, mode="error", checkpoint_interval=None, row_tracking=True,
+        p, mode="error", row_tracking=True,
     )
     appended = cust.where(F.col("c_custkey") % 10 == 0).select(
         (F.col("c_custkey") + 10_000_000).alias("c_custkey"),
@@ -2302,9 +2300,9 @@ def row_tracking_counts(spark, sf_dir):
     )
     write_delta(
         appended.repartition(1).sortWithinPartitions("c_custkey"),
-        p, mode="append", checkpoint_interval=None,
+        p, mode="append",
     )
-    soft_delete(spark, p, "c_custkey % 7 = 0", checkpoint_interval=None)
+    soft_delete(spark, p, "c_custkey % 7 = 0")
     # full rewrite: both files qualify as small; survivors must keep
     # their ids (materialized-column preservation, not fresh minting)
     from levi_spark.operators.layout import compact_small_files
@@ -2402,7 +2400,7 @@ def identity_column_counts(spark, sf_dir):
     )
     write_delta(
         cust.repartition(1).sortWithinPartitions("c_custkey"),
-        p, mode="error", checkpoint_interval=None,
+        p, mode="error",
         identity={"uid": {"start": 1000, "step": 2}},
     )
     appended = cust.where(F.col("c_custkey") % 5 == 0).select(
@@ -2411,7 +2409,7 @@ def identity_column_counts(spark, sf_dir):
     )
     write_delta(
         appended.repartition(1).sortWithinPartitions("c_custkey"),
-        p, mode="append", checkpoint_interval=None,
+        p, mode="append",
     )
     df = DeltaLog(spark, p).snapshot().to_df()
     return (
@@ -2499,7 +2497,6 @@ def collated_groupby_counts(spark, sf_dir):
         ).repartition(4),
         p,
         mode="error",
-        checkpoint_interval=None,
     )
     out = DeltaLog(spark, p).snapshot().to_df()
     return (
@@ -2565,7 +2562,7 @@ def type_widening_counts(spark, sf_dir):
     write_delta(
         orders.where(F.col("o_orderkey") % 3 == 0)
         .withColumn("qty", qty_small),
-        p, mode="error", checkpoint_interval=None,
+        p, mode="error",
     )
     widen_column(spark, p, "qty", "long")
     write_delta(
@@ -2573,13 +2570,13 @@ def type_widening_counts(spark, sf_dir):
             "qty",
             (F.col("o_orderkey") % 1000 + F.lit(3_000_000_000)).cast("long"),
         ),
-        p, mode="append", checkpoint_interval=None,
+        p, mode="append",
     )
     write_delta(
         orders.where(F.col("o_orderkey") % 3 == 2).withColumn(
             "qty", (F.col("o_orderkey") % 1000).cast("long")
         ),
-        p, mode="append", checkpoint_interval=None,
+        p, mode="append",
     )
     df = DeltaLog(spark, p).snapshot().to_df()
     return (
@@ -2644,15 +2641,15 @@ def coordinated_commits_counts(spark, sf_dir):
     orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
     write_delta(
         orders.where(F.col("o_orderkey") % 3 == 0),
-        p, mode="error", checkpoint_interval=None, coordinated=True,
+        p, mode="error", coordinated=True,
     )
     write_delta(
         orders.where(F.col("o_orderkey") % 3 == 1),
-        p, mode="append", checkpoint_interval=None,
+        p, mode="append",
     )
     write_delta(
         orders.where(F.col("o_orderkey") % 3 == 2),
-        p, mode="append", checkpoint_interval=None,
+        p, mode="append",
     )
     n = backfill_commits(p, up_to=1)
     log_dir = _os.path.join(p, "_delta_log")
@@ -2842,14 +2839,12 @@ def table_history_counts(spark, sf_dir):
     write_delta(
         _t(spark, sf_dir, "customer").repartitionByRange(8, "c_custkey"),
         base, mode="error",
-        checkpoint_interval=None,
     )
     write_delta(
         _synth_customers(spark, 93_000_000, "HIST").coalesce(1),
-        base, mode="append", checkpoint_interval=None,
+        base, mode="append",
     )
-    soft_delete(spark, base, "c_custkey % 11 = 0", emit_cdf=True,
-                checkpoint_interval=None)
+    soft_delete(spark, base, "c_custkey % 11 = 0", emit_cdf=True)
     upd = spark.createDataFrame(
         [(93_000_001, 999.0)], "uk LONG, uv DOUBLE"
     )
@@ -6102,7 +6097,6 @@ def dv_soft_delete_orders(spark, sf_dir):
     base = _scratch("dv_orders")
     write_delta(
         _t(spark, sf_dir, "orders").repartition(8), base, mode="error",
-        checkpoint_interval=None,
     )
     soft_delete(
         spark, base, "o_orderpriority = '1-URGENT' AND o_totalprice < 100000.0",
@@ -6241,7 +6235,6 @@ def merge_upsert_customer(spark, sf_dir):
     base = _scratch("merge_customer")
     write_delta(
         _t(spark, sf_dir, "customer").repartition(8), base, mode="error",
-        checkpoint_interval=None,
     )
     src = (
         _t(spark, sf_dir, "orders")
@@ -6344,7 +6337,7 @@ def generated_column_counts(spark, sf_dir):
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"
     )
     write_delta(
-        orders.repartition(8), base, mode="error", checkpoint_interval=None,
+        orders.repartition(8), base, mode="error",
         partition_by=["o_month"],
         generated={"o_month": "month(o_orderdate)"},
     )
@@ -6357,7 +6350,7 @@ def generated_column_counts(spark, sf_dir):
                 "o_orderdate"
             ),
         ),
-        base, mode="append", checkpoint_interval=None,
+        base, mode="append",
     )
     rejected = 0
     try:
@@ -6371,7 +6364,7 @@ def generated_column_counts(spark, sf_dir):
                 ),
                 F.lit(12).cast("int").alias("o_month"),  # wrong: June is 6
             ),
-            base, mode="append", checkpoint_interval=None,
+            base, mode="append",
         )
     except CheckConstraintViolation:
         rejected = 1
@@ -6857,7 +6850,6 @@ def table_detail_counts(spark, sf_dir):
     base = _scratch("detail_customer")
     write_delta(
         _t(spark, sf_dir, "customer").repartition(8), base, mode="error",
-        checkpoint_interval=None,
     )
     write_delta(
         spark.range(1, 4).select(
@@ -6867,7 +6859,7 @@ def table_detail_counts(spark, sf_dir):
             F.lit(1.5).alias("c_acctbal"),
             F.lit("DT").alias("c_mktsegment"),
         ).coalesce(1),
-        base, mode="append", checkpoint_interval=None,
+        base, mode="append",
     )
     d = describe_detail(spark, base).collect()[0]
     snap = DeltaLog(spark, base).snapshot()
@@ -6973,7 +6965,6 @@ def check_constraint_counts(spark, sf_dir):
     base = _scratch("check_customer")
     write_delta(
         _t(spark, sf_dir, "customer").repartition(8), base, mode="error",
-        checkpoint_interval=None,
     )
     add_check_constraint(spark, base, "bal_floor", "c_acctbal >= -1000.0")
 
@@ -6994,12 +6985,12 @@ def check_constraint_counts(spark, sf_dir):
     )["bal_floor"]
     rejected = 0
     try:
-        write_delta(mixed, base, mode="append", checkpoint_interval=None)
+        write_delta(mixed, base, mode="append")
     except CheckConstraintViolation:
         rejected = 1
-    write_delta(good, base, mode="append", checkpoint_interval=None)
+    write_delta(good, base, mode="append")
     drop_check_constraint(spark, base, "bal_floor")
-    write_delta(bad, base, mode="append", checkpoint_interval=None)
+    write_delta(bad, base, mode="append")
     return (
         DeltaLog(spark, base)
         .snapshot()
@@ -7042,7 +7033,6 @@ def merge_evolution_counts(spark, sf_dir):
     base = _scratch("merge_evo_customer")
     write_delta(
         _t(spark, sf_dir, "customer").repartition(8), base, mode="error",
-        checkpoint_interval=None,
     )
     src = (
         _t(spark, sf_dir, "customer")
@@ -7127,7 +7117,6 @@ def cdf_merge_changes(spark, sf_dir):
     base = _scratch("cdf_customer")
     write_delta(
         _t(spark, sf_dir, "customer").repartition(8), base, mode="error",
-        checkpoint_interval=None,
     )
     src = (
         _t(spark, sf_dir, "orders")
@@ -7243,14 +7232,12 @@ def incremental_agg_refresh(spark, sf_dir):
     with _stage_timer("incremental_agg_refresh", "base_write"):
         write_delta(
             _t(spark, sf_dir, "customer").repartition(8), base, mode="error",
-            checkpoint_interval=None,
         )
     with _stage_timer("incremental_agg_refresh", "init_aggregate"):
         init_aggregate(spark, base, agg, ["c_mktsegment"], ["c_acctbal"], state)
 
     with _stage_timer("incremental_agg_refresh", "dv_delete"):
-        soft_delete(spark, base, "c_custkey % 7 = 0", emit_cdf=True,
-                    checkpoint_interval=None)
+        soft_delete(spark, base, "c_custkey % 7 = 0", emit_cdf=True)
     src = (
         _t(spark, sf_dir, "orders")
         .where(F.col("o_custkey") % 50 == 0)
@@ -7278,7 +7265,7 @@ def incremental_agg_refresh(spark, sf_dir):
                 (F.col("id").cast("double") + F.lit(10.5)).alias("c_acctbal"),
                 F.lit("APPENDED").alias("c_mktsegment"),
             ),
-            base, mode="append", checkpoint_interval=None,
+            base, mode="append",
         )
     with _stage_timer("incremental_agg_refresh", "refresh_fold"):
         refresh_aggregate(spark, base, agg, ["c_mktsegment"], ["c_acctbal"], state)
@@ -8093,7 +8080,6 @@ def time_travel_counts(spark, sf_dir):
     base = _scratch("tt_customer")
     write_delta(
         _t(spark, sf_dir, "customer").repartition(8), base, mode="error",
-        checkpoint_interval=None,
     )
     write_delta(
         spark.range(1, 4).select(
@@ -8103,9 +8089,9 @@ def time_travel_counts(spark, sf_dir):
             F.lit(1.5).alias("c_acctbal"),
             F.lit("TT").alias("c_mktsegment"),
         ),
-        base, mode="append", checkpoint_interval=None,
+        base, mode="append",
     )
-    soft_delete(spark, base, "c_custkey % 10 = 0", checkpoint_interval=None)
+    soft_delete(spark, base, "c_custkey % 10 = 0")
     log = DeltaLog(spark, base)
     parts = []
     for v in (0, 1, 2):
@@ -8159,7 +8145,6 @@ def time_travel_timestamp(spark, sf_dir):
     base = _scratch("ttts_customer")
     write_delta(
         _t(spark, sf_dir, "customer").repartition(8), base, mode="error",
-        checkpoint_interval=None,
     )
     write_delta(
         spark.range(1, 4).select(
@@ -8169,9 +8154,9 @@ def time_travel_timestamp(spark, sf_dir):
             F.lit(1.5).alias("c_acctbal"),
             F.lit("TT").alias("c_mktsegment"),
         ),
-        base, mode="append", checkpoint_interval=None,
+        base, mode="append",
     )
-    soft_delete(spark, base, "c_custkey % 10 = 0", checkpoint_interval=None)
+    soft_delete(spark, base, "c_custkey % 10 = 0")
     log = DeltaLog(spark, base)
     ts = dict(log.commit_timestamps())
     # probes: each commit's exact timestamp, plus one strictly after the
@@ -8250,9 +8235,8 @@ def shallow_clone_counts(spark, sf_dir):
     src = _scratch("clone_src")
     write_delta(
         _t(spark, sf_dir, "customer").repartition(8), src, mode="error",
-        checkpoint_interval=None,
     )
-    soft_delete(spark, src, "c_custkey % 10 = 0", checkpoint_interval=None)
+    soft_delete(spark, src, "c_custkey % 10 = 0")
     dst = _os.path.join(_scratch("clone_dst"), "t")
     clone_table(spark, src, dst, shallow=True)
     write_delta(
@@ -8263,7 +8247,7 @@ def shallow_clone_counts(spark, sf_dir):
             F.lit(1.5).alias("c_acctbal"),
             F.lit("CL").alias("c_mktsegment"),
         ),
-        dst, mode="append", checkpoint_interval=None,
+        dst, mode="append",
     )
     src_df = DeltaLog(spark, src).snapshot().to_df()
     clone_v0 = DeltaLog(spark, dst).snapshot(0).to_df()
@@ -9199,7 +9183,7 @@ def coordinator_fallback_commit(spark, sf_dir):
     _os.environ["LEVI_FORCE_NON_ATOMIC_SCHEMES"] = scheme
     try:
         write_delta(
-            cust.where("c_custkey % 2 = 0"), uri, checkpoint_interval=None
+            cust.where("c_custkey % 2 = 0"), uri
         )
         log = DeltaLog(spark, uri)
         staged_dir = _os.path.join(log.log_path, "_commits")
@@ -9215,7 +9199,6 @@ def coordinator_fallback_commit(spark, sf_dir):
         # our blind append arbitrates: rebases past the staged rival
         v = write_delta(
             cust.where("c_custkey % 2 = 1"), uri, mode="append",
-            checkpoint_interval=None,
         )
         if v != 2:
             raise AssertionError(f"append landed at {v}, expected a "
@@ -9686,7 +9669,6 @@ def delta_sync_counts(spark, sf_dir):
     state = SyncState(_os.path.join(root, "state.json"))
     write_delta(
         _t(spark, sf_dir, "customer").repartition(8), src, mode="error",
-        checkpoint_interval=None,
     )
     incremental_sync(spark, src, dst, state)
     write_delta(
@@ -9697,7 +9679,7 @@ def delta_sync_counts(spark, sf_dir):
             F.lit(1.0).alias("c_acctbal"),
             F.lit("SYNCED").alias("c_mktsegment"),
         ),
-        src, mode="append", checkpoint_interval=None,
+        src, mode="append",
     )
     r2 = incremental_sync(spark, src, dst, state)
     r3 = incremental_sync(spark, src, dst, state)
@@ -9740,7 +9722,7 @@ def schema_evolution_counts(spark, sf_dir):
 
     base = _scratch("evo_nation")
     write_delta(
-        _t(spark, sf_dir, "nation"), base, mode="error", checkpoint_interval=None
+        _t(spark, sf_dir, "nation"), base, mode="error"
     )
     nation_types = dict(_t(spark, sf_dir, "nation").dtypes)
     write_delta(
@@ -9750,7 +9732,7 @@ def schema_evolution_counts(spark, sf_dir):
             F.lit(0).cast(nation_types["n_regionkey"]).alias("n_regionkey"),
             F.lit("RC").alias("region_code"),
         ),
-        base, mode="append", merge_schema=True, checkpoint_interval=None,
+        base, mode="append", merge_schema=True,
     )
     df = DeltaLog(spark, base).snapshot().to_df()
     return df.agg(
@@ -9786,7 +9768,6 @@ def table_restore_counts(spark, sf_dir):
     base = _scratch("restore_customer")
     write_delta(
         _t(spark, sf_dir, "customer").repartition(8), base, mode="error",
-        checkpoint_interval=None,
     )
     write_delta(
         spark.range(1, 4).select(
@@ -9796,7 +9777,7 @@ def table_restore_counts(spark, sf_dir):
             F.lit(2.5).alias("c_acctbal"),
             F.lit("RT").alias("c_mktsegment"),
         ),
-        base, mode="append", checkpoint_interval=None,
+        base, mode="append",
     )
     restore(spark, base, 0)
     log = DeltaLog(spark, base)
@@ -9853,7 +9834,6 @@ def optimize_layout_counts(spark, sf_dir):
     base = _scratch("layout_orders")
     write_delta(
         _t(spark, sf_dir, "orders").repartition(16), base, mode="error",
-        checkpoint_interval=None,
     )
     compact_small_files(spark, base, small_bytes=10**9, target_bytes=10**9)
     optimize_zorder(spark, base, ["o_custkey", "o_totalprice"], n_files=4)
@@ -9920,11 +9900,11 @@ def vacuum_counts(spark, sf_dir):
     base = _scratch("vacuum_customer")
     cust = _t(spark, sf_dir, "customer")
     write_delta(
-        cust.repartition(8), base, mode="error", checkpoint_interval=None
+        cust.repartition(8), base, mode="error"
     )
     write_delta(
         cust.where(F.col("c_custkey") % 2 == 0).repartition(4),
-        base, mode="overwrite", checkpoint_interval=None,
+        base, mode="overwrite",
     )
     dry = vacuum(spark, base, retention_hours=0.0, dry_run=True)
     # dry run must not have deleted anything: the v0 files are still on disk
@@ -10083,10 +10063,10 @@ def checkpoint_expiry_counts(spark, sf_dir):
     expired commits, and that reading v0 — whose history is gone —
     raises instead of answering wrong.
 
-    Scale shape: the checkpoint write is one metadata-plane job over
-    live adds (O(files)); expiry is driver-side unlink; replay from a
-    checkpoint is O(files + commits-since), the standard Delta
-    contract for unbounded table histories.
+    Scale shape: the checkpoint write is a driver-side pass over the
+    live adds (O(files), no Spark job); expiry is driver-side unlink;
+    replay from a checkpoint is O(files + commits-since), the standard
+    Delta contract for unbounded table histories.
     """
     from levi_spark.delta.checkpoint import expire_log, write_checkpoint
     from levi_spark.delta.log import DeltaLog
@@ -10095,17 +10075,16 @@ def checkpoint_expiry_counts(spark, sf_dir):
     base = _scratch("ckpt_customer")
     write_delta(
         _t(spark, sf_dir, "customer").repartition(8), base, mode="error",
-        checkpoint_interval=None,
     )
     write_delta(
         _synth_customers(spark, 91_000_000, "CKPT1"),
-        base, mode="append", checkpoint_interval=None,
+        base, mode="append",
     )
     cp_v = write_checkpoint(spark, base)
     expired = expire_log(spark, base, keep_last=0)
     write_delta(
         _synth_customers(spark, 92_000_000, "CKPT2"),
-        base, mode="append", checkpoint_interval=None,
+        base, mode="append",
     )
     log = DeltaLog(spark, base)
     rows_at_cp = log.snapshot(cp_v).to_df().count()
@@ -10862,14 +10841,12 @@ def cdc_replicate_counts(spark, sf_dir):
     with _stage_timer("cdc_replicate_counts", "src_write"):
         write_delta(
             _t(spark, sf_dir, "customer").repartition(8), src, mode="error",
-            checkpoint_interval=None,
         )
     with _stage_timer("cdc_replicate_counts", "bootstrap"):
         replicate_cdf(spark, src, dst, ["c_custkey"])
 
     with _stage_timer("cdc_replicate_counts", "dv_delete"):
-        soft_delete(spark, src, "c_custkey % 7 = 0", emit_cdf=True,
-                    checkpoint_interval=None)
+        soft_delete(spark, src, "c_custkey % 7 = 0", emit_cdf=True)
     upd = (
         _t(spark, sf_dir, "orders")
         .where(F.col("o_custkey") % 50 == 0)
@@ -10897,7 +10874,7 @@ def cdc_replicate_counts(spark, sf_dir):
                 (F.col("id").cast("double") + F.lit(10.5)).alias("c_acctbal"),
                 F.lit("APPENDED").alias("c_mktsegment"),
             ),
-            src, mode="append", checkpoint_interval=None,
+            src, mode="append",
         )
     with _stage_timer("cdc_replicate_counts", "sync"):
         replicate_cdf(spark, src, dst, ["c_custkey"])
@@ -13426,11 +13403,11 @@ def log_checksum_counts(spark, sf_dir):
     )
     write_delta(
         cust.where(F.col("c_custkey") % 2 == 0).repartition(4),
-        p, mode="error", checkpoint_interval=None,
+        p, mode="error",
     )
     write_delta(
         cust.where(F.col("c_custkey") % 2 == 1).repartition(4),
-        p, mode="append", checkpoint_interval=None,
+        p, mode="append",
     )
     soft_delete(spark, p, "c_acctbal < 0.0")
 
@@ -15456,14 +15433,13 @@ def fs_scheme_roundtrip(spark, sf_dir):
         "o_orderkey", "o_totalprice", "o_orderpriority"
     )
     write_delta(
-        orders.where("o_orderkey % 2 = 0"), uri, checkpoint_interval=None,
+        orders.where("o_orderkey % 2 = 0"), uri,
         self_hosted=True,
     )
     write_delta(
         orders.where("o_orderkey % 2 = 1"), uri, mode="append",
-        checkpoint_interval=None,
     )
-    soft_delete(spark, uri, "o_orderkey % 10 = 0", checkpoint_interval=None)
+    soft_delete(spark, uri, "o_orderkey % 10 = 0")
     write_checkpoint(spark, uri)
     log = DeltaLog(spark, uri)
     if not isinstance(log.fs, HadoopFS):  # the gate's whole point
@@ -15956,11 +15932,10 @@ def liquid_clustering_counts(spark, sf_dir):
     write_delta(
         orders.where(F.col("o_orderkey") % 3 != 0),
         p, mode="error", cluster_by=["o_orderkey"],
-        checkpoint_interval=None,
     )
     write_delta(
         orders.where(F.col("o_orderkey") % 3 == 0),
-        p, mode="append", checkpoint_interval=None,
+        p, mode="append",
     )
 
     def spans_by_commit(snap):

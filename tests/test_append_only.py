@@ -17,7 +17,6 @@ from levi_spark.operators.merge import merge
 def _mk(spark, path):
     write_delta(
         spark.range(10).selectExpr("id", "id * 2 AS v"), path, mode="error",
-        checkpoint_interval=None,
     )
     set_table_properties(spark, path, {"delta.appendOnly": "true"})
 
@@ -27,7 +26,7 @@ def test_appends_and_reads_still_work(spark, tmp_path):
     _mk(spark, p)
     write_delta(
         spark.range(10, 13).selectExpr("id", "id * 2 AS v"), p,
-        mode="append", checkpoint_interval=None,
+        mode="append",
     )
     got = sorted(r.id for r in DeltaLog(spark, p).snapshot().to_df().collect())
     assert got == list(range(13))
@@ -39,7 +38,7 @@ def test_overwrite_refused(spark, tmp_path):
     with pytest.raises(ValueError, match="append-only"):
         write_delta(
             spark.range(3).selectExpr("id", "id * 2 AS v"), p,
-            mode="overwrite", checkpoint_interval=None,
+            mode="overwrite",
         )
 
 
@@ -47,7 +46,7 @@ def test_delete_refused(spark, tmp_path):
     p = str(tmp_path / "t")
     _mk(spark, p)
     with pytest.raises(ValueError, match="append-only"):
-        soft_delete(spark, p, "id % 2 = 0", checkpoint_interval=None)
+        soft_delete(spark, p, "id % 2 = 0")
 
 
 def test_merge_update_refused_but_insert_only_allowed(spark, tmp_path):
@@ -75,7 +74,7 @@ def test_unset_restores_mutability(spark, tmp_path):
     p = str(tmp_path / "t")
     _mk(spark, p)
     set_table_properties(spark, p, {"delta.appendOnly": None})
-    soft_delete(spark, p, "id = 0", checkpoint_interval=None)
+    soft_delete(spark, p, "id = 0")
     got = sorted(r.id for r in DeltaLog(spark, p).snapshot().to_df().collect())
     assert got == list(range(1, 10))
 
@@ -87,7 +86,7 @@ def test_restore_refused(spark, tmp_path):
     _mk(spark, p)
     write_delta(
         spark.range(10, 12).selectExpr("id", "id * 2 AS v"), p,
-        mode="append", checkpoint_interval=None,
+        mode="append",
     )
     with pytest.raises(ValueError, match="append-only"):
         restore(spark, p, 0)

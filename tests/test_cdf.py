@@ -21,7 +21,7 @@ def _base(spark, path):
         [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0), (4, "d", 40.0)],
         "id long, k string, v double",
     )
-    write_delta(df, path, mode="error", checkpoint_interval=None)
+    write_delta(df, path, mode="error")
     return df
 
 
@@ -62,7 +62,7 @@ def test_merge_emits_all_four_change_types(spark, tmp_path):
 def test_soft_delete_emits_deletes(spark, tmp_path):
     p = str(tmp_path / "t")
     _base(spark, p)
-    res = soft_delete(spark, p, "v >= 30.0", emit_cdf=True, checkpoint_interval=None)
+    res = soft_delete(spark, p, "v >= 30.0", emit_cdf=True)
     assert res["rows_deleted"] == 2
     assert _changes(spark, p, 0) == {
         (3, "c", 30.0, "delete", 1),
@@ -77,7 +77,6 @@ def test_append_synthesizes_inserts(spark, tmp_path):
         spark.createDataFrame([(5, "e", 50.0)], "id long, k string, v double"),
         p,
         mode="append",
-        checkpoint_interval=None,
     )
     assert _changes(spark, p, 0) == {(5, "e", 50.0, "insert", 1)}
 
@@ -89,7 +88,6 @@ def test_overwrite_synthesizes_deletes_and_inserts(spark, tmp_path):
         spark.createDataFrame([(9, "z", 90.0)], "id long, k string, v double"),
         p,
         mode="overwrite",
-        checkpoint_interval=None,
     )
     got = _changes(spark, p, 0)
     assert (9, "z", 90.0, "insert", 1) in got
@@ -118,7 +116,6 @@ def test_layout_commits_are_invisible(spark, tmp_path):
         spark.createDataFrame([(5, "e", 50.0)], "id long, k string, v double"),
         p,
         mode="append",
-        checkpoint_interval=None,
     )
     compact_small_files(spark, p, small_bytes=10**9, target_bytes=10**9)
     # the OPTIMIZE commit (v2) re-adds all rows; the feed must not echo them
@@ -129,7 +126,7 @@ def test_layout_commits_are_invisible(spark, tmp_path):
 def test_vacuum_keeps_referenced_change_files(spark, tmp_path):
     p = str(tmp_path / "t")
     _base(spark, p)
-    soft_delete(spark, p, "id = 1", emit_cdf=True, checkpoint_interval=None)
+    soft_delete(spark, p, "id = 1", emit_cdf=True)
     before = _changes(spark, p, 0)
     assert before == {(1, "a", 10.0, "delete", 1)}
     res = vacuum(spark, p, retention_hours=0.0)
@@ -142,9 +139,9 @@ def test_multi_version_feed_is_ordered_and_complete(spark, tmp_path):
     _base(spark, p)  # v0
     write_delta(
         spark.createDataFrame([(5, "e", 50.0)], "id long, k string, v double"),
-        p, mode="append", checkpoint_interval=None,
+        p, mode="append",
     )  # v1 insert
-    soft_delete(spark, p, "id = 2", emit_cdf=True, checkpoint_interval=None)  # v2
+    soft_delete(spark, p, "id = 2", emit_cdf=True)  # v2
     src = spark.createDataFrame([(3, "c3", 33.0)], "id long, k string, v double")
     merge(LeviTable(spark, p), src.alias("s"), "t.id = s.id").when_matched_update(
         set={"k": "s.k", "v": "s.v"}
@@ -171,9 +168,9 @@ def test_soft_delete_writes_one_change_file_per_affected_file(spark, tmp_path):
     p = str(tmp_path / "t")
     write_delta(
         spark.range(800).repartitionByRange(8, "id"),
-        p, mode="error", checkpoint_interval=None,
+        p, mode="error",
     )
-    res = soft_delete(spark, p, "id % 10 = 0", emit_cdf=True, checkpoint_interval=None)
+    res = soft_delete(spark, p, "id % 10 = 0", emit_cdf=True)
     assert res["files_affected"] == 8
 
     def actions(v):

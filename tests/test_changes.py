@@ -19,9 +19,9 @@ def _df(spark, lo, hi):
 @pytest.fixture()
 def table(spark, tmp_path):
     p = str(tmp_path / "t")
-    write_delta(_df(spark, 0, 100), p, mode="error", checkpoint_interval=None)      # v0
-    write_delta(_df(spark, 100, 150), p, mode="append", checkpoint_interval=None)   # v1
-    write_delta(_df(spark, 150, 160), p, mode="append", checkpoint_interval=None)   # v2
+    write_delta(_df(spark, 0, 100), p, mode="error")  # v0
+    write_delta(_df(spark, 100, 150), p, mode="append")  # v1
+    write_delta(_df(spark, 150, 160), p, mode="append")  # v2
     return p
 
 
@@ -38,8 +38,8 @@ def test_changes_bounded_range(spark, table):
 
 
 def test_layout_and_dv_commits_add_no_rows(spark, table):
-    compact_small_files(spark, table, small_bytes=10**9)          # v3 OPTIMIZE
-    soft_delete(spark, table, "id < 5", checkpoint_interval=None)  # v4 DELETE
+    compact_small_files(spark, table, small_bytes=10**9)  # v3 OPTIMIZE
+    soft_delete(spark, table, "id < 5")  # v4 DELETE
     ch = table_changes(spark, table, from_version=2)
     assert ch.count() == 0
     # and the full range still reports only genuine appends
@@ -58,11 +58,9 @@ def test_partitioned_changes_carry_partition_values(spark, tmp_path):
     p = str(tmp_path / "pt")
     write_delta(
         _df(spark, 0, 30), p, mode="error", partition_by=["k"],
-        checkpoint_interval=None,
     )
     write_delta(
         _df(spark, 30, 60), p, mode="append", partition_by=["k"],
-        checkpoint_interval=None,
     )
     ch = table_changes(spark, p, from_version=0)
     rows = {(r.id, r.k) for r in ch.collect()}

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from levi_spark.delta.checkpoint import expire_log, write_checkpoint
+from levi_spark.delta.constraints import set_table_properties
 from levi_spark.delta.log import DeltaLog
 from levi_spark.delta.writer import write_delta
 
@@ -65,14 +66,17 @@ def test_appends_after_checkpoint(spark, table):
 
 
 def test_auto_checkpoint_cadence(spark, tmp_path):
+    """The table property ``delta.checkpointInterval`` sets the
+    cadence: with 2 (set at v1), appends up to v5 checkpoint v2 and v4."""
     p = str(tmp_path / "t3")
     for i in range(5):
         write_delta(
             spark.range(i * 10, (i + 1) * 10).select("id"),
             p,
             mode="append" if i else "error",
-            checkpoint_interval=2,
         )
+        if not i:
+            set_table_properties(spark, p, {"delta.checkpointInterval": "2"})
     log_dir = os.path.join(p, "_delta_log")
     cps = sorted(n for n in os.listdir(log_dir) if n.endswith(".checkpoint.parquet"))
     assert cps == ["00000000000000000002.checkpoint.parquet",

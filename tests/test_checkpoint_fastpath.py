@@ -17,11 +17,11 @@ def _mk(spark, path):
             [(i, f"s{i}", float(i)) for i in range(40)],
             "k LONG, s STRING, v DOUBLE",
         ).repartition(4),
-        path, mode="error", checkpoint_interval=None,
+        path, mode="error",
     )
     write_delta(
         spark.createDataFrame([(100, "x", 1.0)], "k LONG, s STRING, v DOUBLE"),
-        path, mode="append", checkpoint_interval=None,
+        path, mode="append",
         txn=("app-a", 7),
     )
 
@@ -68,10 +68,8 @@ def test_describe_detail(spark, tmp_path):
     df = spark.range(0, 20).select(
         F.col("id").alias("k"), (F.col("id") % 2).cast("string").alias("part")
     )
-    write_delta(df.repartition(2), p, mode="error", partition_by=["part"],
-                checkpoint_interval=None)
-    write_delta(df.where("k < 2").select("k", "part"), p, mode="append",
-                checkpoint_interval=None)
+    write_delta(df.repartition(2), p, mode="error", partition_by=["part"])
+    write_delta(df.where("k < 2").select("k", "part"), p, mode="append")
     row = describe_detail(spark, p).collect()[0]
     assert row.format == "delta" and row.partitionColumns == ["part"]
     assert row.numFiles >= 3 and row.sizeInBytes > 0
@@ -83,15 +81,12 @@ def test_created_at_is_metadata_created_time(spark, tmp_path):
     """createdAt pins to the creation commit's metaData.createdTime and
     does not drift forward when later commits re-emit metaData."""
     p = str(tmp_path / "t")
-    write_delta(spark.range(5).select("id"), p, mode="error",
-                checkpoint_interval=None)
+    write_delta(spark.range(5).select("id"), p, mode="error")
     d0 = describe_detail(spark, p).collect()[0]
     assert d0["createdAt"] is not None
     time.sleep(0.05)
-    write_delta(spark.range(5, 9).select("id"), p, mode="append",
-                checkpoint_interval=None)
-    write_delta(spark.range(20).select("id"), p, mode="overwrite",
-                checkpoint_interval=None)
+    write_delta(spark.range(5, 9).select("id"), p, mode="append")
+    write_delta(spark.range(20).select("id"), p, mode="overwrite")
     d1 = describe_detail(spark, p).collect()[0]
     assert d1["createdAt"] == d0["createdAt"]
     assert d1["lastModified"] is not None
@@ -103,12 +98,10 @@ def test_created_at_survives_checkpoint_log_expiry(spark, tmp_path):
     lastModified must both be non-NULL and ordered — callers comparing
     them must not hit TypeError."""
     p = str(tmp_path / "t")
-    write_delta(spark.range(5).select("id"), p, mode="error",
-                checkpoint_interval=None)
+    write_delta(spark.range(5).select("id"), p, mode="error")
     d0 = describe_detail(spark, p).collect()[0]
     for lo in range(5, 20, 5):
-        write_delta(spark.range(lo, lo + 5).select("id"), p, mode="append",
-                    checkpoint_interval=None)
+        write_delta(spark.range(lo, lo + 5).select("id"), p, mode="append")
     log = DeltaLog(spark, p)
     v = log.snapshot().version
     write_checkpoint(spark, p, v)

@@ -27,10 +27,8 @@ def table(spark, tmp_path_factory):
     df = spark.range(100).select(
         F.col("id"), (F.col("id") % 7).alias("k"), (F.col("id") * 2.5).alias("x")
     )
-    write_delta(df.where("id < 60").repartition(3), p, mode="error",
-                checkpoint_interval=None)
-    write_delta(df.where("id >= 60").repartition(2), p, mode="append",
-                checkpoint_interval=None)
+    write_delta(df.where("id < 60").repartition(3), p, mode="error")
+    write_delta(df.where("id >= 60").repartition(2), p, mode="append")
     soft_delete(spark, p, "k = 3")
     return p
 
@@ -79,8 +77,7 @@ def test_metadata_and_protocol_round_trip(spark, table):
 
 def test_idempotent_and_refuses_stale(spark, table, tmp_path):
     p = str(tmp_path / "t")
-    write_delta(spark.range(10).repartition(1), p, mode="error",
-                checkpoint_interval=None)
+    write_delta(spark.range(10).repartition(1), p, mode="error")
     first = write_checksum(spark, p)
     assert write_checksum(spark, p) == first  # agreeing file: no-op
     body = _crc(p, 0)
@@ -93,8 +90,7 @@ def test_idempotent_and_refuses_stale(spark, table, tmp_path):
 
 def test_corruption_names_the_field(spark, table, tmp_path):
     p = str(tmp_path / "t")
-    write_delta(spark.range(20).repartition(2), p, mode="error",
-                checkpoint_interval=None)
+    write_delta(spark.range(20).repartition(2), p, mode="error")
     crc_path = write_checksum(spark, p)
     body = _crc(p, 0)
     body["tableSizeBytes"] -= 1
@@ -109,8 +105,7 @@ def test_corruption_names_the_field(spark, table, tmp_path):
 
 def test_unknown_stored_fields_are_tolerated(spark, tmp_path):
     p = str(tmp_path / "t")
-    write_delta(spark.range(5).repartition(1), p, mode="error",
-                checkpoint_interval=None)
+    write_delta(spark.range(5).repartition(1), p, mode="error")
     crc_path = write_checksum(spark, p)
     body = _crc(p, 0)
     body["txnId"] = "0000-fake"
@@ -122,8 +117,7 @@ def test_unknown_stored_fields_are_tolerated(spark, tmp_path):
 
 def test_missing_checksum_raises(spark, tmp_path):
     p = str(tmp_path / "t")
-    write_delta(spark.range(5).repartition(1), p, mode="error",
-                checkpoint_interval=None)
+    write_delta(spark.range(5).repartition(1), p, mode="error")
     with pytest.raises(FileNotFoundError):
         validate_checksum(spark, p, 0)
 

@@ -22,13 +22,13 @@ from levi_spark.operators.merge import merge
 def _mk_src(spark, path):
     write_delta(
         spark.range(20).select("id", (F.col("id") * 2).alias("v")),
-        path, mode="error", checkpoint_interval=None,
+        path, mode="error",
     )
     write_delta(
         spark.range(20, 25).select("id", (F.col("id") * 2).alias("v")),
-        path, mode="append", checkpoint_interval=None,
+        path, mode="append",
     )
-    soft_delete(spark, path, "id % 5 = 0", checkpoint_interval=None)
+    soft_delete(spark, path, "id % 5 = 0")
     return DeltaLog(spark, path)
 
 
@@ -53,9 +53,9 @@ def test_shallow_clone_diverges_without_touching_source(spark, tmp_path):
     clone_table(spark, src, dst, shallow=True)
     write_delta(
         spark.range(100, 103).select("id", (F.col("id") * 2).alias("v")),
-        dst, mode="append", checkpoint_interval=None,
+        dst, mode="append",
     )
-    soft_delete(spark, dst, "id = 1", checkpoint_interval=None)
+    soft_delete(spark, dst, "id = 1")
     # clone sees its own edits
     clone_ids = {r.id for r in DeltaLog(spark, dst).snapshot().to_df().collect()}
     assert {100, 101, 102} <= clone_ids and 1 not in clone_ids
@@ -135,7 +135,7 @@ def test_merge_on_shallow_clone_keeps_unmatched_rows(spark, tmp_path):
     src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
     write_delta(
         spark.range(10).select("id", (F.col("id") * 10).alias("v")),
-        src, mode="error", checkpoint_interval=None,
+        src, mode="error",
     )
     clone_table(spark, src, dst, shallow=True)
 
@@ -161,7 +161,6 @@ def test_to_df_paths_filter_on_absolute_adds(spark, tmp_path):
     src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
     write_delta(
         spark.range(12).select("id"), src, mode="error",
-        checkpoint_interval=None,
     )
     clone_table(spark, src, dst, shallow=True)
     snap = DeltaLog(spark, dst).snapshot()
@@ -202,9 +201,8 @@ def test_clone_refuses_unknown_dv_storage(spark, tmp_path, shallow):
     test_standard_dvs.py); a storage type outside the spec is still
     refused up front — before any byte is copied."""
     src = str(tmp_path / f"src_{int(shallow)}")
-    write_delta(spark.range(10).select("id").repartition(2), src, mode="error",
-                checkpoint_interval=None)
-    soft_delete(spark, src, "id = 3", checkpoint_interval=None)
+    write_delta(spark.range(10).select("id").repartition(2), src, mode="error")
+    soft_delete(spark, src, "id = 3")
     _rewrite_dv_storage(src, "x", "bogus-payload")
     with pytest.raises(ValueError, match="storageType"):
         clone_table(spark, src, str(tmp_path / "dst"), shallow=shallow)
@@ -217,15 +215,15 @@ def _mk_dv_src(spark, path):
     whole via remove actions and the log would carry no DVs at all)."""
     write_delta(
         spark.range(20).select("id", (F.col("id") * 2).alias("v")).coalesce(2),
-        path, mode="error", checkpoint_interval=None,
+        path, mode="error",
     )
     write_delta(
         spark.range(20, 25)
         .select("id", (F.col("id") * 2).alias("v"))
         .coalesce(1),
-        path, mode="append", checkpoint_interval=None,
+        path, mode="append",
     )
-    soft_delete(spark, path, "id % 5 = 0", checkpoint_interval=None)
+    soft_delete(spark, path, "id % 5 = 0")
     dv_adds = [
         r
         for r in DeltaLog(spark, path).snapshot().live_adds_collected()

@@ -22,9 +22,8 @@ def clustered(spark, tmp_path_factory):
         F.col("id").alias("k"), (F.col("id") % 13).alias("v")
     )
     write_delta(df.where("id < 700"), p, mode="error",
-                cluster_by=["k"], checkpoint_interval=None)
-    write_delta(df.where("id >= 700"), p, mode="append",
-                checkpoint_interval=None)
+                cluster_by=["k"])
+    write_delta(df.where("id >= 700"), p, mode="append")
     return p
 
 
@@ -101,7 +100,6 @@ def test_refusals(spark, tmp_path, clustered):
             spark.range(5).select(F.col("id").alias("k"),
                                   F.lit(0).alias("v")),
             clustered, mode="append", cluster_by=["v"],
-            checkpoint_interval=None,
         )
 
 
@@ -114,9 +112,8 @@ def test_recluster_makes_spans_globally_disjoint(spark, tmp_path):
     p = str(tmp_path / "t")
     df = spark.range(600).select(F.col("id").alias("k"))
     write_delta(df.where("id % 2 = 0"), p, mode="error",
-                cluster_by=["k"], checkpoint_interval=None)
-    write_delta(df.where("id % 2 = 1"), p, mode="append",
-                checkpoint_interval=None)
+                cluster_by=["k"])
+    write_delta(df.where("id % 2 = 1"), p, mode="append")
 
     def spans(snap):
         out = []
@@ -146,7 +143,7 @@ def test_recluster_refuses_unclustered(spark, tmp_path):
     from levi_spark.operators.layout import recluster
 
     p = str(tmp_path / "t")
-    write_delta(spark.range(10), p, mode="error", checkpoint_interval=None)
+    write_delta(spark.range(10), p, mode="error")
     with pytest.raises(ValueError, match="no delta.clustering"):
         recluster(spark, p)
 
@@ -156,14 +153,15 @@ def test_provider_survives_checkpoint_and_distributed_replay(spark, tmp_path):
     with every commit before it expired, the checkpoint alone rebuilds
     the provider on each live add."""
     from levi_spark.delta.checkpoint import expire_log
+    from levi_spark.delta.constraints import set_table_properties
 
     p = str(tmp_path / "t")
     df = spark.range(200).select(F.col("id").alias("k"))
-    write_delta(df, p, mode="error", cluster_by=["k"],
-                checkpoint_interval=1)  # checkpoint right away
-    write_delta(df.select((F.col("k") + 200).alias("k")), p, mode="append",
-                checkpoint_interval=1)
-    assert expire_log(spark, p) == [0, 1]
+    write_delta(df, p, mode="error", cluster_by=["k"])
+    # checkpoint every commit from here on: v1 and v2
+    set_table_properties(spark, p, {"delta.checkpointInterval": "1"})
+    write_delta(df.select((F.col("k") + 200).alias("k")), p, mode="append")
+    assert expire_log(spark, p) == [0, 1, 2]
     snap = DeltaLog(spark, p).snapshot()
     assert all(
         r["add"]["clusteringProvider"] == "liquid"
@@ -181,12 +179,12 @@ def test_clustering_columns_survive_checkpoint_and_expiry(spark, tmp_path, fmt):
 
     p = str(tmp_path / "t")
     df = spark.range(100).select(F.col("id").alias("k"))
-    write_delta(df, p, mode="error", cluster_by=["k"], checkpoint_interval=None)
-    write_delta(df, p, mode="append", checkpoint_interval=None)
+    write_delta(df, p, mode="error", cluster_by=["k"])
+    write_delta(df, p, mode="append")
     v = write_checkpoint(spark, p, format=fmt)
     assert expire_log(spark, p) == list(range(v + 1))
     assert DeltaLog(spark, p).snapshot().clustering_columns() == ["k"]
-    write_delta(df, p, mode="append", cluster_by=["k"], checkpoint_interval=None)
+    write_delta(df, p, mode="append", cluster_by=["k"])
     snap = DeltaLog(spark, p).snapshot()
     assert snap.clustering_columns() == ["k"]
     assert snap.to_df().count() == 300
@@ -199,7 +197,7 @@ def test_removed_domain_stays_removed_through_checkpoint(spark, tmp_path):
 
     p = str(tmp_path / "t")
     write_delta(spark.range(10).select(F.col("id").alias("k")), p,
-                mode="error", cluster_by=["k"], checkpoint_interval=None)
+                mode="error", cluster_by=["k"])
     with open(os.path.join(p, "_delta_log", f"{1:020d}.json"), "w") as f:
         f.write(json.dumps({"domainMetadata": {
             "domain": "delta.clustering", "configuration": "{}",

@@ -233,7 +233,7 @@ def test_write_to_mapped_table_refused(spark, tmp_path):
     _mk_mapped(spark, path)
     df = spark.createDataFrame([(3, "c")], "k BIGINT, s STRING")
     with pytest.raises(NotImplementedError, match="column-mapped"):
-        write_delta(df, path, mode="append", checkpoint_interval=None)
+        write_delta(df, path, mode="append")
 
 
 def _pn(name):

@@ -43,9 +43,9 @@ def _coordinated_ict_table(spark, p) -> int:
     """v0 creates a coordinated table, v1 turns ICT on, v2 appends; the
     tail (at least v2) is staged. Returns the latest version."""
     write_delta(_frame(spark, 0, 6), p, mode="error",
-                checkpoint_interval=None, coordinated=True)
+                coordinated=True)
     set_table_properties(spark, p, {"delta.enableInCommitTimestamps": "true"})
-    write_delta(_frame(spark, 6, 8), p, mode="append", checkpoint_interval=None)
+    write_delta(_frame(spark, 6, 8), p, mode="append")
     return DeltaLog(spark, p).latest_version()
 
 
@@ -69,7 +69,7 @@ def _rows(spark, p):
 
 
 def _append(spark, p):
-    write_delta(_frame(spark, 100, 102), p, mode="append", checkpoint_interval=None)
+    write_delta(_frame(spark, 100, 102), p, mode="append")
     return BASE | {(100, 100), (101, 101)}
 
 
@@ -84,7 +84,7 @@ def _merge(spark, p):
 
 
 def _soft_delete(spark, p):
-    soft_delete(spark, p, "id = 3", checkpoint_interval=None)
+    soft_delete(spark, p, "id = 3")
     return BASE - {(3, 3)}
 
 
@@ -159,7 +159,7 @@ def test_commit_is_staged_and_stamped(spark, tmp_path, verb):
 )
 def test_metadata_verbs_take_file_uri(spark, tmp_path, verb):
     uri = f"file://{tmp_path}/t"
-    write_delta(_frame(spark, 0, 8), uri, mode="error", checkpoint_interval=None)
+    write_delta(_frame(spark, 0, 8), uri, mode="error")
     VERBS[verb](spark, uri)
     log_dir = os.path.join(str(tmp_path), "t", "_delta_log")
     versions = sorted(int(n[:20]) for n in os.listdir(log_dir) if n.endswith(".json"))

@@ -45,12 +45,12 @@ def test_multiwriter_stress_all_appends_land(spark, tmp_path):
     from concurrent.futures import ThreadPoolExecutor
 
     p = str(tmp_path / "t")
-    write_delta(_df(spark, 0, 10), p, mode="error", checkpoint_interval=None)
+    write_delta(_df(spark, 0, 10), p, mode="error")
 
     def one(i: int) -> int:
         lo = 10 + i * 10
         return write_delta(
-            _df(spark, lo, lo + 10), p, mode="append", checkpoint_interval=None
+            _df(spark, lo, lo + 10), p, mode="append"
         )
 
     with ThreadPoolExecutor(max_workers=8) as ex:
@@ -68,21 +68,20 @@ def test_concurrent_overwrite_vs_append_conflicts(spark, tmp_path):
     from concurrent.futures import ThreadPoolExecutor
 
     p = str(tmp_path / "t")
-    write_delta(_df(spark, 0, 10), p, mode="error", checkpoint_interval=None)
+    write_delta(_df(spark, 0, 10), p, mode="error")
 
     def appender(i: int):
         write_delta(
             _df(spark, 100 + i * 10, 110 + i * 10),
             p,
             mode="append",
-            checkpoint_interval=None,
         )
         return "append"
 
     def overwriter(_):
         try:
             write_delta(
-                _df(spark, 0, 5), p, mode="overwrite", checkpoint_interval=None
+                _df(spark, 0, 5), p, mode="overwrite"
             )
             return "overwrite-won"
         except ValueError as e:
@@ -104,9 +103,9 @@ def test_concurrent_overwrite_vs_append_conflicts(spark, tmp_path):
 
 def test_append_after_foreign_commit_lands_next_version(spark, tmp_path):
     p = str(tmp_path / "t")
-    write_delta(_df(spark, 0, 50), p, mode="error", checkpoint_interval=None)
+    write_delta(_df(spark, 0, 50), p, mode="error")
     _occupy(os.path.join(p, "_delta_log"), 1)  # landed before our snapshot read
-    v = write_delta(_df(spark, 50, 60), p, mode="append", checkpoint_interval=None)
+    v = write_delta(_df(spark, 50, 60), p, mode="append")
     assert v == 2
     got = sorted(r.id for r in DeltaLog(spark, p).snapshot().to_df().collect())
     assert got == list(range(60))

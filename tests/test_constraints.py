@@ -17,7 +17,7 @@ from levi_spark.delta.writer import write_delta
 
 def _mk(spark, path, vals=(1, 2, 3)):
     df = spark.createDataFrame([(v, f"r{v}") for v in vals], "k INT, s STRING")
-    write_delta(df, path, mode="error", checkpoint_interval=None)
+    write_delta(df, path, mode="error")
     return df
 
 
@@ -31,13 +31,13 @@ def test_add_validate_enforce_drop(spark, tmp_path):
 
     # good append passes
     good = spark.createDataFrame([(7, "x")], "k INT, s STRING")
-    write_delta(good, path, mode="append", checkpoint_interval=None)
+    write_delta(good, path, mode="append")
 
     # violating append refused, nothing committed, no stray files
     before = DeltaLog(spark, path).snapshot()
     bad = spark.createDataFrame([(5, "y"), (-1, "z")], "k INT, s STRING")
     with pytest.raises(CheckConstraintViolation, match="k_positive.*1 rows"):
-        write_delta(bad, path, mode="append", checkpoint_interval=None)
+        write_delta(bad, path, mode="append")
     after = DeltaLog(spark, path).snapshot()
     assert after.version == before.version
     assert not [d for d in os.listdir(path) if d.startswith(".staging-")]
@@ -45,10 +45,10 @@ def test_add_validate_enforce_drop(spark, tmp_path):
 
     # overwrite is checked too
     with pytest.raises(CheckConstraintViolation):
-        write_delta(bad, path, mode="overwrite", checkpoint_interval=None)
+        write_delta(bad, path, mode="overwrite")
 
     drop_check_constraint(spark, path, "k_positive")
-    write_delta(bad, path, mode="append", checkpoint_interval=None)
+    write_delta(bad, path, mode="append")
     assert DeltaLog(spark, path).snapshot().to_df().count() == 6
 
 
@@ -68,7 +68,7 @@ def test_null_passes_like_sql_check(spark, tmp_path):
     _mk(spark, path)
     add_check_constraint(spark, path, "s_prefix", "s LIKE 'r%'")
     with_null = spark.createDataFrame([(9, None)], "k INT, s STRING")
-    write_delta(with_null, path, mode="append", checkpoint_interval=None)
+    write_delta(with_null, path, mode="append")
     assert DeltaLog(spark, path).snapshot().to_df().count() == 4
 
 
@@ -98,7 +98,6 @@ def test_constraint_survives_other_commits(spark, tmp_path):
         spark.createDataFrame([(4, "a")], "k INT, s STRING"),
         path,
         mode="append",
-        checkpoint_interval=None,
     )
     conf = DeltaLog(spark, path).snapshot().metadata.configuration
     assert conf.get("delta.constraints.k_positive") == "k > 0"
@@ -116,14 +115,14 @@ def test_not_null_invariant_on_append(spark, tmp_path):
         ]
     )
     df = spark.createDataFrame([(1, "a"), (2, None)], schema)
-    write_delta(df, path, mode="error", checkpoint_interval=None,
+    write_delta(df, path, mode="error",
                 keep_nullability=True)
 
     # appending NULLs into the non-nullable column is refused even when
     # the INCOMING frame claims the column nullable
     bad = spark.createDataFrame([(None, "x")], "k LONG, s STRING")
     with pytest.raises(NotNullViolation, match="'k'"):
-        write_delta(bad, path, mode="append", checkpoint_interval=None)
+        write_delta(bad, path, mode="append")
     snap = DeltaLog(spark, path).snapshot()
     assert snap.version == 0 and snap.to_df().count() == 2
     assert not [d for d in os.listdir(path) if d.startswith(".staging-")]
@@ -131,7 +130,7 @@ def test_not_null_invariant_on_append(spark, tmp_path):
     # nullable column still takes NULLs; non-null appends pass
     write_delta(
         spark.createDataFrame([(3, None)], "k LONG, s STRING"),
-        path, mode="append", checkpoint_interval=None,
+        path, mode="append",
     )
     assert DeltaLog(spark, path).snapshot().to_df().count() == 3
 
@@ -149,12 +148,11 @@ def test_not_null_partition_column(spark, tmp_path):
     )
     write_delta(
         spark.createDataFrame([(1, "a")], schema), path, mode="error",
-        partition_by=["p"], checkpoint_interval=None, keep_nullability=True,
+        partition_by=["p"], keep_nullability=True,
     )
     bad = spark.createDataFrame([(2, None)], "k LONG, p STRING")
     with pytest.raises(NotNullViolation, match="'p'"):
-        write_delta(bad, path, mode="append", partition_by=["p"],
-                    checkpoint_interval=None)
+        write_delta(bad, path, mode="append", partition_by=["p"])
 
 
 def test_staged_not_null_checker_direct(spark, tmp_path):

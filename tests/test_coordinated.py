@@ -20,12 +20,12 @@ from levi_spark.delta.writer import backfill_commits, write_delta
 def _mk(spark, path, n_appends=2):
     write_delta(
         spark.createDataFrame([Row(k=1, part="v0")]),
-        path, mode="error", checkpoint_interval=None, coordinated=True,
+        path, mode="error", coordinated=True,
     )
     for i in range(n_appends):
         write_delta(
             spark.createDataFrame([Row(k=10 + i, part=f"v{i + 1}")]),
-            path, mode="append", checkpoint_interval=None,
+            path, mode="append",
         )
 
 
@@ -59,7 +59,7 @@ def test_property_not_flag_drives_staging(spark, tmp_path):
     _mk(spark, p, n_appends=1)
     write_delta(
         spark.createDataFrame([Row(k=99, part="late")]),
-        p, mode="append", checkpoint_interval=None,
+        p, mode="append",
     )
     log_dir = os.path.join(p, "_delta_log")
     assert len(os.listdir(os.path.join(log_dir, "_commits"))) == 2
@@ -129,7 +129,7 @@ def test_staged_conflict_refuses_same_version(spark, tmp_path):
     # a blind append through write_delta rebases to version 2
     write_delta(
         spark.createDataFrame([Row(k=50, part="x")]),
-        p, mode="append", checkpoint_interval=None,
+        p, mode="append",
     )
     assert DeltaLog(spark, p).latest_version() == 2
 
@@ -152,12 +152,12 @@ def test_coordinated_on_append_to_plain_table_refuses(spark, tmp_path):
     p = str(tmp_path / "t8")
     write_delta(
         spark.createDataFrame([Row(k=1, part="a")]),
-        p, mode="error", checkpoint_interval=None,
+        p, mode="error",
     )
     with pytest.raises(ValueError, match="uncoordinated"):
         write_delta(
             spark.createDataFrame([Row(k=2, part="b")]),
-            p, mode="append", checkpoint_interval=None, coordinated=True,
+            p, mode="append", coordinated=True,
         )
 
 
@@ -187,7 +187,7 @@ def test_ict_stays_monotonic_across_staged_tail(spark, tmp_path):
     p = str(tmp_path / "ict")
     write_delta(
         spark.createDataFrame([Row(k=1, part="a")]),
-        p, mode="error", checkpoint_interval=None, coordinated=True,
+        p, mode="error", coordinated=True,
     )
     # enable ICT by rewriting v0's metaData configuration (the engine
     # reads config from the snapshot, so later appends honor it)
@@ -204,7 +204,7 @@ def test_ict_stays_monotonic_across_staged_tail(spark, tmp_path):
     for i in range(3):
         write_delta(
             spark.createDataFrame([Row(k=10 + i, part="b")]),
-            p, mode="append", checkpoint_interval=None,
+            p, mode="append",
         )
     ts = DeltaLog(spark, p).commit_timestamps()
     assert [v for v, _ in ts] == [0, 1, 2, 3]
@@ -234,12 +234,11 @@ def test_checkpoint_backfills_staged_versions_first(spark, tmp_path):
     p = str(tmp_path / "t")
     write_delta(
         spark.range(3).select("id"), p, mode="error",
-        checkpoint_interval=None, coordinated=True,
+        coordinated=True,
     )
     for lo in (3, 5):
         write_delta(
             spark.range(lo, lo + 2).select("id"), p, mode="append",
-            checkpoint_interval=None,
         )
     log_dir = os.path.join(p, "_delta_log")
     assert not os.path.exists(os.path.join(log_dir, f"{1:020d}.json"))

@@ -124,8 +124,7 @@ def test_path_storage_type_refused(spark, tmp_path):
     import pyarrow.parquet as pq
 
     p = str(tmp_path / "t")
-    write_delta(spark.range(10).select("id").coalesce(1), p, mode="error",
-                checkpoint_interval=None)
+    write_delta(spark.range(10).select("id").coalesce(1), p, mode="error")
     (row,) = DeltaLog(spark, p).snapshot().live_adds_collected()
     add = row["add"].asDict(recursive=True)
     # a real sidecar directory, as those builds wrote it

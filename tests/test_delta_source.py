@@ -25,7 +25,7 @@ def _ids(spark, p):
 def paths(spark, tmp_path):
     src = str(tmp_path / "src")
     dst = str(tmp_path / "dst")
-    write_delta(_df(spark, 0, 40), src, mode="error", checkpoint_interval=None)
+    write_delta(_df(spark, 0, 40), src, mode="error")
     return src, dst, SyncState(str(tmp_path / "sync_state.json"))
 
 
@@ -35,8 +35,8 @@ def test_bootstrap_then_incremental(spark, paths):
     assert r1["rows"] == 40 and r1["from_version"] == -1
     assert _ids(spark, dst) == list(range(40))
 
-    write_delta(_df(spark, 40, 55), src, mode="append", checkpoint_interval=None)
-    write_delta(_df(spark, 55, 60), src, mode="append", checkpoint_interval=None)
+    write_delta(_df(spark, 40, 55), src, mode="append")
+    write_delta(_df(spark, 55, 60), src, mode="append")
     r2 = incremental_sync(spark, src, dst, state)
     assert r2["rows"] == 20
     assert _ids(spark, dst) == list(range(60))
@@ -56,7 +56,7 @@ def test_crash_replay_appends_nothing(spark, paths):
     only; simulate by rolling the state back one step."""
     src, dst, state = paths
     incremental_sync(spark, src, dst, state)
-    write_delta(_df(spark, 40, 50), src, mode="append", checkpoint_interval=None)
+    write_delta(_df(spark, 40, 50), src, mode="append")
     incremental_sync(spark, src, dst, state)
     assert _ids(spark, dst) == list(range(50))
     # roll back the checkpoint: the replayed window re-reads v1's rows —

@@ -20,7 +20,7 @@ def _mk(spark, p, dtype="int"):
     df = spark.range(4).select(
         F.col("id").alias("k"), (F.col("id") * 3).cast(dtype).alias("v")
     )
-    write_delta(df, p, mode="error", checkpoint_interval=None)
+    write_delta(df, p, mode="error")
 
 
 def test_widen_is_metadata_only_and_upcasts(spark, tmp_path):
@@ -39,7 +39,7 @@ def test_widen_is_metadata_only_and_upcasts(spark, tmp_path):
             F.lit(99).cast("long").alias("k"),
             F.lit(5_000_000_000).cast("long").alias("v"),
         ),
-        p, mode="append", checkpoint_interval=None,
+        p, mode="append",
     )
     out = DeltaLog(spark, p).snapshot().to_df()
     (vf,) = [f for f in out.schema.fields if f.name == "v"]
@@ -73,7 +73,7 @@ def test_widen_chained_short_int_long(spark, tmp_path):
         F.col("id").alias("k"),
         (F.col("id") * 1.5).cast("short").alias("s"),
     )
-    write_delta(df, p, mode="error", checkpoint_interval=None)
+    write_delta(df, p, mode="error")
     widen_column(spark, p, "s", "integer")
     widen_column(spark, p, "s", "long")
     out = DeltaLog(spark, p).snapshot().to_df()
@@ -92,7 +92,7 @@ def test_widen_on_coordinated_table_stages(spark, tmp_path):
         F.col("id").alias("k"), F.col("id").cast("int").alias("v")
     )
     write_delta(
-        df, p, mode="error", checkpoint_interval=None, coordinated=True
+        df, p, mode="error", coordinated=True
     )
     v = widen_column(spark, p, "v", "long")
     assert v == 1
@@ -110,7 +110,7 @@ def test_widen_float_to_double(spark, tmp_path):
     df = spark.range(3).select(
         F.col("id").alias("k"), (F.col("id") * 0.5).cast("float").alias("f")
     )
-    write_delta(df, p, mode="error", checkpoint_interval=None)
+    write_delta(df, p, mode="error")
     widen_column(spark, p, "f", "double")
     out = DeltaLog(spark, p).snapshot().to_df()
     (ff,) = [f for f in out.schema.fields if f.name == "f"]

@@ -42,7 +42,7 @@ def test_footer_matches_aggregate_on_real_tables(spark, tmp_path):
     for name in ("lineitem", "events", "customer", "documents"):
         df = read_table(spark, SF, name)
         path = str(tmp_path / name)
-        write_delta(df, path, mode="error", checkpoint_interval=None)
+        write_delta(df, path, mode="error")
         files = _committed_files(path)
         data_schema = T.StructType(list(df.schema.fields))
         footer = _footer_stats(files, data_schema)
@@ -56,7 +56,7 @@ def test_footer_matches_aggregate_on_real_tables(spark, tmp_path):
 def test_stats_written_into_commit(spark, tmp_path):
     df = read_table(spark, SF, "customer")
     path = str(tmp_path / "t")
-    write_delta(df, path, mode="error", checkpoint_interval=None)
+    write_delta(df, path, mode="error")
     adds = DeltaLog(spark, path).snapshot().add_actions().collect()
     assert adds and all(r["num_records"] and r["num_records"] > 0 for r in adds)
     st = adds[0]["stats"]
@@ -74,7 +74,7 @@ def test_nan_forces_fallback(spark, tmp_path):
     assert _footer_stats(files, df.schema) is None
     # and the full writer still commits via the aggregate fallback
     path = str(tmp_path / "t")
-    write_delta(df, path, mode="error", checkpoint_interval=None)
+    write_delta(df, path, mode="error")
     got = DeltaLog(spark, path).snapshot().to_df().collect()
     assert len(got) == 2 and any(math.isnan(r["d"]) for r in got)
 
@@ -128,7 +128,7 @@ def test_timestamp_stats_identical_footer_vs_spark_fallback(spark, tmp_path):
     ).select(F.to_timestamp("s").alias("ts"), F.lit(1).alias("k"))
 
     p_footer = str(tmp_path / "footer")
-    write_delta(base, p_footer, mode="error", checkpoint_interval=None)
+    write_delta(base, p_footer, mode="error")
 
     # an array column makes _footer_stats bail -> Spark aggregate path
     p_spark = str(tmp_path / "fallback")
@@ -136,7 +136,6 @@ def test_timestamp_stats_identical_footer_vs_spark_fallback(spark, tmp_path):
         base.withColumn("arr", F.array(F.lit(1))),
         p_spark,
         mode="error",
-        checkpoint_interval=None,
     )
 
     s_footer = _add_stats(p_footer)

@@ -94,9 +94,8 @@ def test_checkpoint_expire_and_checksum(spark, furi):
 
 def test_v2_checkpoint_roundtrip(spark, furi):
     p = furi("t3v2")
-    write_delta(_df(spark, 0, 120), p, checkpoint_interval=None)
-    write_delta(_df(spark, 120, 200), p, mode="append",
-                checkpoint_interval=None)
+    write_delta(_df(spark, 0, 120), p)
+    write_delta(_df(spark, 120, 200), p, mode="append")
     write_checkpoint(spark, p, format="v2")
     expire_log(spark, p)
     assert DeltaLog(spark, p).snapshot().to_df().count() == 200
@@ -131,8 +130,7 @@ def test_merge_cdf_history(spark, furi):
 def test_dv_delete_and_purge(spark, furi):
     p = furi("t5")
     write_delta(_df(spark, 0, 400), p)
-    out = soft_delete(spark, p, "k % 4 = 0",
-                      checkpoint_interval=None)
+    out = soft_delete(spark, p, "k % 4 = 0")
     assert out["rows_deleted"] == 100
     assert DeltaLog(spark, p).snapshot().to_df().count() == 300
     res = purge_deleted(spark, p)
@@ -148,7 +146,7 @@ def test_standard_dv_refuses_nonlocal_but_takes_file_uri(spark, furi):
     # file:// has a POSIX form, so spec-conformant DV files still write
     p = furi("t5std")
     write_delta(_df(spark, 0, 200), p)
-    out = soft_delete(spark, p, "k < 20", checkpoint_interval=None)
+    out = soft_delete(spark, p, "k < 20")
     assert out["rows_deleted"] == 20
     assert DeltaLog(spark, p).snapshot().to_df().count() == 180
 
@@ -197,10 +195,8 @@ def test_vacuum_over_uri(spark, furi, tmp_path):
 
 def test_coordinated_commits_backfill_over_uri(spark, furi):
     p = furi("t9")
-    write_delta(_df(spark, 0, 60), p, coordinated=True,
-                checkpoint_interval=None)
-    write_delta(_df(spark, 60, 90), p, mode="append",
-                checkpoint_interval=None)
+    write_delta(_df(spark, 0, 60), p, coordinated=True)
+    write_delta(_df(spark, 60, 90), p, mode="append")
     log = DeltaLog(spark, p)
     assert log.snapshot().to_df().count() == 90  # staged tail readable
     n = backfill_commits(p)

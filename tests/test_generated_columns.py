@@ -25,7 +25,7 @@ def _base(spark):
 def test_create_computes_missing_generated_column(spark, tmp_path):
     p = str(tmp_path / "t")
     write_delta(
-        _base(spark), p, mode="error", checkpoint_interval=None,
+        _base(spark), p, mode="error",
         generated={"amount_bucket": "CAST(amount / 500 AS BIGINT)"},
     )
     df = DeltaLog(spark, p).snapshot().to_df()
@@ -40,7 +40,7 @@ def test_create_computes_missing_generated_column(spark, tmp_path):
 def test_append_computes_and_validates(spark, tmp_path):
     p = str(tmp_path / "t")
     write_delta(
-        _base(spark), p, mode="error", checkpoint_interval=None,
+        _base(spark), p, mode="error",
         generated={"amount_bucket": "CAST(amount / 500 AS BIGINT)"},
     )
     # append WITHOUT the generated column -> computed
@@ -48,7 +48,7 @@ def test_append_computes_and_validates(spark, tmp_path):
         spark.range(10, 12).select(
             F.col("id").alias("k"), (F.col("id") * 100).alias("amount")
         ),
-        p, mode="append", checkpoint_interval=None,
+        p, mode="append",
     )
     # append WITH correct values -> validated, passes
     write_delta(
@@ -57,7 +57,7 @@ def test_append_computes_and_validates(spark, tmp_path):
             (F.col("id") * 100).alias("amount"),
             F.lit(2).cast("long").alias("amount_bucket"),
         ),
-        p, mode="append", checkpoint_interval=None,
+        p, mode="append",
     )
     got = {r.k: r.amount_bucket for r in DeltaLog(spark, p).snapshot().to_df().collect()}
     assert got[10] == 2 and got[11] == 2 and got[12] == 2 and len(got) == 13
@@ -66,7 +66,7 @@ def test_append_computes_and_validates(spark, tmp_path):
 def test_append_with_wrong_values_rejected_atomically(spark, tmp_path):
     p = str(tmp_path / "t")
     write_delta(
-        _base(spark), p, mode="error", checkpoint_interval=None,
+        _base(spark), p, mode="error",
         generated={"amount_bucket": "CAST(amount / 500 AS BIGINT)"},
     )
     v_before = DeltaLog(spark, p).latest_version()
@@ -77,7 +77,7 @@ def test_append_with_wrong_values_rejected_atomically(spark, tmp_path):
                 (F.col("id") * 100).alias("amount"),
                 F.lit(999).cast("long").alias("amount_bucket"),
             ),
-            p, mode="append", checkpoint_interval=None,
+            p, mode="append",
         )
     assert DeltaLog(spark, p).latest_version() == v_before
     assert DeltaLog(spark, p).snapshot().to_df().count() == 10
@@ -88,7 +88,7 @@ def test_append_with_wrong_values_rejected_atomically(spark, tmp_path):
 def test_generated_partition_column_prunes(spark, tmp_path):
     p = str(tmp_path / "t")
     write_delta(
-        _base(spark), p, mode="error", checkpoint_interval=None,
+        _base(spark), p, mode="error",
         partition_by=["amount_bucket"],
         generated={"amount_bucket": "CAST(amount / 500 AS BIGINT)"},
     )
@@ -96,7 +96,7 @@ def test_generated_partition_column_prunes(spark, tmp_path):
         spark.range(10, 14).select(
             F.col("id").alias("k"), (F.col("id") * 100).alias("amount")
         ),
-        p, mode="append", checkpoint_interval=None,
+        p, mode="append",
     )
     snap = DeltaLog(spark, p).snapshot()
     # partition values landed in the log per file
@@ -111,7 +111,7 @@ def test_create_with_supplied_wrong_values_rejected(spark, tmp_path):
     with pytest.raises(CheckConstraintViolation, match="generation expression"):
         write_delta(
             _base(spark).withColumn("amount_bucket", F.lit(7).cast("long")),
-            p, mode="error", checkpoint_interval=None,
+            p, mode="error",
             generated={"amount_bucket": "CAST(amount / 500 AS BIGINT)"},
         )
     # nothing committed at all
@@ -122,10 +122,10 @@ def test_create_with_supplied_wrong_values_rejected(spark, tmp_path):
 
 def test_append_passing_generated_param_raises(spark, tmp_path):
     p = str(tmp_path / "t")
-    write_delta(_base(spark), p, mode="error", checkpoint_interval=None)
+    write_delta(_base(spark), p, mode="error")
     with pytest.raises(ValueError, match="create/overwrite"):
         write_delta(
-            _base(spark), p, mode="append", checkpoint_interval=None,
+            _base(spark), p, mode="append",
             generated={"x": "k + 1"},
         )
 
@@ -141,7 +141,7 @@ def test_merge_recomputes_generated_columns(spark, tmp_path):
 
     p = str(tmp_path / "t")
     write_delta(
-        _base(spark), p, mode="error", checkpoint_interval=None,
+        _base(spark), p, mode="error",
         generated={"amount_bucket": "CAST(amount / 500 AS BIGINT)"},
     )
     src = spark.createDataFrame(
@@ -170,11 +170,9 @@ def test_overwrite_with_explicit_empty_partitioning_departitions(spark, tmp_path
     df = spark.range(0, 8).select(
         F.col("id").alias("k"), (F.col("id") % 2).cast("string").alias("part")
     )
-    write_delta(df, p, mode="error", partition_by=["part"],
-                checkpoint_interval=None)
+    write_delta(df, p, mode="error", partition_by=["part"])
     # explicit [] on overwrite: layout change to unpartitioned
-    write_delta(df.select("k"), p, mode="overwrite", partition_by=[],
-                checkpoint_interval=None)
+    write_delta(df.select("k"), p, mode="overwrite", partition_by=[])
     snap = DeltaLog(spark, p).snapshot()
     assert snap.metadata.partition_columns == []
     assert snap.to_df().count() == 8

@@ -36,8 +36,7 @@ def test_ict_stamped_and_monotonic_under_frozen_clock(spark, tmp_path,
     """With the wall clock frozen, successive commits still get
     strictly increasing inCommitTimestamps (prev+1 bump)."""
     path = str(tmp_path / "t")
-    write_delta(spark.range(5).select("id"), path, mode="error",
-                checkpoint_interval=None)
+    write_delta(spark.range(5).select("id"), path, mode="error")
     set_table_properties(
         spark, path, {"delta.enableInCommitTimestamps": "true"}
     )
@@ -46,7 +45,6 @@ def test_ict_stamped_and_monotonic_under_frozen_clock(spark, tmp_path,
     for i in range(3):
         write_delta(
             spark.range(10 + i, 11 + i).select("id"), path, mode="append",
-            checkpoint_interval=None,
         )
     cis = _commit_infos(path)
     assert "inCommitTimestamp" not in cis[0]  # pre-enablement
@@ -60,13 +58,11 @@ def test_time_travel_uses_ict_not_mtime(spark, tmp_path, monkeypatch):
     """Scrambled log-file mtimes must not affect timestampAsOf once
     ICT is on: the mapping follows the stamped values."""
     path = str(tmp_path / "t")
-    write_delta(spark.range(3).select("id"), path, mode="error",
-                checkpoint_interval=None)
+    write_delta(spark.range(3).select("id"), path, mode="error")
     set_table_properties(
         spark, path, {"delta.enableInCommitTimestamps": "true"}
     )
-    write_delta(spark.range(3, 6).select("id"), path, mode="append",
-                checkpoint_interval=None)
+    write_delta(spark.range(3, 6).select("id"), path, mode="append")
     # scramble every commit file's mtime into the far past/future
     for i, c in enumerate(
         sorted(glob.glob(os.path.join(path, "_delta_log", "*.json")))
@@ -88,12 +84,11 @@ def test_ict_rides_dv_and_clone_commits(spark, tmp_path):
     path = str(tmp_path / "t")
     write_delta(
         spark.range(20).select("id").coalesce(2), path, mode="error",
-        checkpoint_interval=None,
     )
     set_table_properties(
         spark, path, {"delta.enableInCommitTimestamps": "true"}
     )
-    soft_delete(spark, path, "id % 5 = 0", checkpoint_interval=None)
+    soft_delete(spark, path, "id % 5 = 0")
     cis = _commit_infos(path)
     assert "inCommitTimestamp" in cis[max(cis)]  # the DELETE commit
     from levi_spark.delta.clone import clone_table
@@ -106,8 +101,7 @@ def test_ict_rides_dv_and_clone_commits(spark, tmp_path):
 
 def test_property_unset(spark, tmp_path):
     path = str(tmp_path / "t")
-    write_delta(spark.range(3).select("id"), path, mode="error",
-                checkpoint_interval=None)
+    write_delta(spark.range(3).select("id"), path, mode="error")
     set_table_properties(spark, path, {"custom.flag": "1"})
     assert DeltaLog(spark, path).snapshot().metadata.configuration[
         "custom.flag"] == "1"

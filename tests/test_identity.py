@@ -24,7 +24,7 @@ def test_generated_always_assigns_and_advances_mark(spark, tmp_path):
     p = str(tmp_path / "t")
     write_delta(
         _one(spark.range(10).selectExpr("id AS k"), "k"), p, mode="error",
-        checkpoint_interval=None, identity={"uid": {"start": 100, "step": 10}},
+        identity={"uid": {"start": 100, "step": 10}},
     )
     snap = DeltaLog(spark, p).snapshot()
     assert "identityColumns" in snap.protocol["writerFeatures"]
@@ -34,7 +34,7 @@ def test_generated_always_assigns_and_advances_mark(spark, tmp_path):
     # append inherits the spec and continues beyond the mark
     write_delta(
         _one(spark.range(10, 14).selectExpr("id AS k"), "k"), p,
-        mode="append", checkpoint_interval=None,
+        mode="append",
     )
     snap = DeltaLog(spark, p).snapshot()
     got = sorted((r.k, r.uid) for r in snap.to_df().collect())
@@ -46,29 +46,29 @@ def test_always_refuses_explicit_and_partition_identity(spark, tmp_path):
     p = str(tmp_path / "t")
     write_delta(
         spark.range(3).selectExpr("id AS k"), p, mode="error",
-        checkpoint_interval=None, identity={"uid": {}},
+        identity={"uid": {}},
     )
     with pytest.raises(ValueError, match="GENERATED ALWAYS"):
         write_delta(
             spark.range(1).selectExpr("id AS k", "CAST(9 AS LONG) AS uid"),
-            p, mode="append", checkpoint_interval=None,
+            p, mode="append",
         )
     with pytest.raises(ValueError, match="partition column"):
         write_delta(
             spark.range(2).selectExpr("id AS k"), str(tmp_path / "t2"),
-            mode="error", checkpoint_interval=None,
+            mode="error",
             identity={"uid": {}}, partition_by=["uid"],
         )
     with pytest.raises(ValueError, match="step must be nonzero"):
         write_delta(
             spark.range(2).selectExpr("id AS k"), str(tmp_path / "t3"),
-            mode="error", checkpoint_interval=None,
+            mode="error",
             identity={"uid": {"step": 0}},
         )
     with pytest.raises(ValueError, match="create/overwrite"):
         write_delta(
             spark.range(3, 4).selectExpr("id AS k"), p, mode="append",
-            checkpoint_interval=None, identity={"uid": {}},
+            identity={"uid": {}},
         )
 
 
@@ -76,18 +76,17 @@ def test_by_default_accepts_explicit_and_mark_passes_them(spark, tmp_path):
     p = str(tmp_path / "t")
     write_delta(
         _one(spark.range(3).selectExpr("id AS k"), "k"), p, mode="error",
-        checkpoint_interval=None,
         identity={"uid": {"start": 1, "step": 1,
                           "allow_explicit_insert": True}},
     )
     write_delta(
         spark.range(3, 5).selectExpr("id AS k", "CAST(id * 1000 AS LONG) AS uid"),
-        p, mode="append", checkpoint_interval=None,
+        p, mode="append",
     )
     assert _uid_meta(spark, p)["delta.identity.highWaterMark"] == 4000
     write_delta(
         _one(spark.range(5, 8).selectExpr("id AS k"), "k"), p,
-        mode="append", checkpoint_interval=None,
+        mode="append",
     )
     snap = DeltaLog(spark, p).snapshot()
     rows = sorted((r.k, r.uid) for r in snap.to_df().collect())
@@ -101,7 +100,7 @@ def test_negative_step_uses_min_stats(spark, tmp_path):
     p = str(tmp_path / "t")
     write_delta(
         _one(spark.range(5).selectExpr("id AS k"), "k"), p, mode="error",
-        checkpoint_interval=None, identity={"uid": {"start": 0, "step": -3}},
+        identity={"uid": {"start": 0, "step": -3}},
     )
     got = sorted((r.k, r.uid) for r in DeltaLog(spark, p).snapshot().to_df().collect())
     # base = start - step = 3; value_i = 3 + (i+1) * (-3)
@@ -109,7 +108,7 @@ def test_negative_step_uses_min_stats(spark, tmp_path):
     assert _uid_meta(spark, p)["delta.identity.highWaterMark"] == -12
     write_delta(
         _one(spark.range(5, 7).selectExpr("id AS k"), "k"), p,
-        mode="append", checkpoint_interval=None,
+        mode="append",
     )
     assert _uid_meta(spark, p)["delta.identity.highWaterMark"] == -18
 
@@ -120,11 +119,11 @@ def test_mark_survives_overwrite(spark, tmp_path):
     p = str(tmp_path / "t")
     write_delta(
         _one(spark.range(6).selectExpr("id AS k"), "k"), p, mode="error",
-        checkpoint_interval=None, identity={"uid": {"start": 1, "step": 1}},
+        identity={"uid": {"start": 1, "step": 1}},
     )
     write_delta(
         _one(spark.range(2).selectExpr("id AS k"), "k"), p, mode="overwrite",
-        checkpoint_interval=None, identity={"uid": {"start": 1, "step": 1}},
+        identity={"uid": {"start": 1, "step": 1}},
     )
     got = sorted(r.uid for r in DeltaLog(spark, p).snapshot().to_df().collect())
     assert got == [7, 8]
@@ -140,11 +139,11 @@ def test_rewriters_pass_identity_through(spark, tmp_path):
     p = str(tmp_path / "t")
     write_delta(
         _one(spark.range(20).selectExpr("id AS k"), "k"), p, mode="error",
-        checkpoint_interval=None, identity={"uid": {"start": 5, "step": 3}},
+        identity={"uid": {"start": 5, "step": 3}},
     )
     write_delta(
         _one(spark.range(20, 30).selectExpr("id AS k"), "k"), p,
-        mode="append", checkpoint_interval=None,
+        mode="append",
     )
     before = sorted(
         (r.k, r.uid) for r in DeltaLog(spark, p).snapshot().to_df().collect()
@@ -155,7 +154,7 @@ def test_rewriters_pass_identity_through(spark, tmp_path):
     )
     assert after == before
     assert _uid_meta(spark, p)["delta.identity.highWaterMark"] == 5 + 3 * 29
-    soft_delete(spark, p, "k % 3 = 0", checkpoint_interval=None)
+    soft_delete(spark, p, "k % 3 = 0")
     purge_deleted(spark, p)
     got = sorted(
         (r.k, r.uid) for r in DeltaLog(spark, p).snapshot().to_df().collect()
@@ -164,7 +163,7 @@ def test_rewriters_pass_identity_through(spark, tmp_path):
     # and a fresh append still mints beyond the (unchanged) mark
     write_delta(
         _one(spark.range(30, 32).selectExpr("id AS k"), "k"), p,
-        mode="append", checkpoint_interval=None,
+        mode="append",
     )
     uids = [r.uid for r in DeltaLog(spark, p).snapshot().to_df().collect()]
     assert len(set(uids)) == len(uids)
@@ -182,7 +181,7 @@ def test_merge_generates_identity_for_inserts(spark, tmp_path):
     p = str(tmp_path / "t")
     write_delta(
         _one(spark.range(10).selectExpr("id AS k", "id AS v"), "k"), p,
-        mode="error", checkpoint_interval=None, identity={"uid": {}},
+        mode="error", identity={"uid": {}},
     )
     src = spark.range(8, 13).selectExpr("id AS k", "id * 100 AS v")
     res = (

@@ -28,7 +28,7 @@ def _setup(spark, tmp_path):
         [(i, ["x", "y", "z"][i % 3], float(i)) for i in range(30)],
         "id long, g string, v double",
     )
-    write_delta(df, base, mode="error", checkpoint_interval=None)
+    write_delta(df, base, mode="error")
     init_aggregate(spark, base, agg, ["g"], ["v"], state)
     return base, agg, state
 
@@ -60,7 +60,7 @@ def test_init_matches_full_compute(spark, tmp_path):
 def test_refresh_folds_all_change_types(spark, tmp_path):
     base, agg, state = _setup(spark, tmp_path)
     # delete (DV + cdf), update (merge + cdf), insert (plain append)
-    soft_delete(spark, base, "id % 5 = 0", emit_cdf=True, checkpoint_interval=None)
+    soft_delete(spark, base, "id % 5 = 0", emit_cdf=True)
     src = spark.createDataFrame([(1, "y", 100.0), (2, "x", 200.0)],
                                 "id long, g string, v double")
     merge(LeviTable(spark, base), src.alias("s"), "t.id = s.id").when_matched_update(
@@ -68,7 +68,7 @@ def test_refresh_folds_all_change_types(spark, tmp_path):
     ).execute(emit_cdf=True)
     write_delta(
         spark.createDataFrame([(100, "w", 1.5)], "id long, g string, v double"),
-        base, mode="append", checkpoint_interval=None,
+        base, mode="append",
     )
     res = refresh_aggregate(spark, base, agg, ["g"], ["v"], state)
     assert res["groups_changed"] > 0
@@ -77,7 +77,7 @@ def test_refresh_folds_all_change_types(spark, tmp_path):
 
 def test_refresh_is_exactly_once(spark, tmp_path):
     base, agg, state = _setup(spark, tmp_path)
-    soft_delete(spark, base, "id < 3", emit_cdf=True, checkpoint_interval=None)
+    soft_delete(spark, base, "id < 3", emit_cdf=True)
     refresh_aggregate(spark, base, agg, ["g"], ["v"], state)
     v = DeltaLog(spark, agg).latest_version()
     res2 = refresh_aggregate(spark, base, agg, ["g"], ["v"], state)
@@ -88,7 +88,7 @@ def test_refresh_is_exactly_once(spark, tmp_path):
 
 def test_group_death_removes_row(spark, tmp_path):
     base, agg, state = _setup(spark, tmp_path)
-    soft_delete(spark, base, "g = 'z'", emit_cdf=True, checkpoint_interval=None)
+    soft_delete(spark, base, "g = 'z'", emit_cdf=True)
     refresh_aggregate(spark, base, agg, ["g"], ["v"], state)
     groups = {r.g for r in read_aggregate(spark, agg, ["v"]).collect()}
     assert groups == {"x", "y"}

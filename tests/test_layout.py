@@ -201,7 +201,7 @@ def test_auto_optimize_policy(spark, tmp_path):
     path = str(tmp_path / "t")
     write_delta(
         spark.range(2000).selectExpr("id AS k", "id * 2 AS v").repartition(8),
-        path, mode="error", checkpoint_interval=None,
+        path, mode="error",
     )
     # 8 tiny files, 100% small -> triggers
     r = auto_optimize(spark, path, small_bytes=10**9, target_bytes=10**9)
@@ -220,7 +220,7 @@ def test_auto_optimize_policy(spark, tmp_path):
     # small files exist but below the fraction threshold -> no-op
     write_delta(
         spark.range(5).selectExpr("id AS k", "id AS v"),
-        path, mode="append", checkpoint_interval=None,
+        path, mode="append",
     )
     r3 = auto_optimize(
         spark, path, small_bytes=10, min_small_files=1, min_small_fraction=0.9

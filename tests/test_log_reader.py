@@ -32,7 +32,6 @@ def _mk(spark, path: str) -> None:
     for mode, lo, hi in (("error", 0, 3), ("append", 3, 5), ("append", 5, 7)):
         write_delta(
             spark.range(lo, hi).select("id"), path, mode=mode,
-            checkpoint_interval=None,
         )
 
 
@@ -44,9 +43,9 @@ def test_multipart_checkpoint_only_log_is_a_table(spark, tmp_path):
     """A log holding only a multi-part checkpoint (the layout a foreign
     writer leaves after log cleanup) is a table to write_delta too."""
     p = str(tmp_path / "t")
-    write_delta(spark.range(3).select("id"), p, mode="error", checkpoint_interval=None)
+    write_delta(spark.range(3).select("id"), p, mode="error")
     write_delta(
-        spark.range(3, 5).select("id"), p, mode="append", checkpoint_interval=None
+        spark.range(3, 5).select("id"), p, mode="append"
     )
     v = write_checkpoint(spark, p)
     log_dir = os.path.join(p, "_delta_log")
@@ -59,7 +58,7 @@ def test_multipart_checkpoint_only_log_is_a_table(spark, tmp_path):
     with pytest.raises(ValueError, match="already exists"):
         write_delta(spark.range(5, 6).select("id"), p, mode="error")
     assert write_delta(
-        spark.range(5, 7).select("id"), p, mode="append", checkpoint_interval=None
+        spark.range(5, 7).select("id"), p, mode="append"
     ) == 2
     assert _ids(spark, p) == list(range(7))
 
@@ -69,7 +68,7 @@ def test_exists_needs_a_commit_or_checkpoint(spark, tmp_path):
     assert not DeltaLog.exists(p)
     os.makedirs(os.path.join(p, "_delta_log"))
     assert not DeltaLog.exists(p)
-    write_delta(spark.range(2).select("id"), p, mode="error", checkpoint_interval=None)
+    write_delta(spark.range(2).select("id"), p, mode="error")
     assert DeltaLog.exists(p) and DeltaLog.exists("file://" + p)
 
 
@@ -124,7 +123,7 @@ def test_torn_ict_predecessor_raises(spark, tmp_path):
     commitInfo: a torn predecessor fails the commit instead of
     re-anchoring the clock."""
     p = str(tmp_path / "t")
-    write_delta(spark.range(2).select("id"), p, mode="error", checkpoint_interval=None)
+    write_delta(spark.range(2).select("id"), p, mode="error")
     set_table_properties(spark, p, {"delta.enableInCommitTimestamps": "true"})
     write_checkpoint(spark, p)
     path = _commit(p, 1)
@@ -134,7 +133,7 @@ def test_torn_ict_predecessor_raises(spark, tmp_path):
         f.write("\n".join(lines[:-1] + ['{"commitInfo": {"timest']) + "\n")
     with pytest.raises(ValueError, match=re.escape(f"{path}:{len(lines)}:")):
         write_delta(
-            spark.range(2, 3).select("id"), p, mode="append", checkpoint_interval=None
+            spark.range(2, 3).select("id"), p, mode="append"
         )
 
 
@@ -142,12 +141,12 @@ def test_replicate_to_file_uri_goes_incremental(spark, tmp_path):
     src, dst = str(tmp_path / "src"), "file://" + str(tmp_path / "dst")
     write_delta(
         spark.range(5).select("id", (F.col("id") * 2).alias("v")), src,
-        mode="error", checkpoint_interval=None,
+        mode="error",
     )
     assert replicate_cdf(spark, src, dst, ["id"])["bootstrapped"]
     write_delta(
         spark.range(5, 8).select("id", (F.col("id") * 2).alias("v")), src,
-        mode="append", checkpoint_interval=None,
+        mode="append",
     )
     r = replicate_cdf(spark, src, dst, ["id"])
     assert not r["bootstrapped"] and r["applied_through"] == 1

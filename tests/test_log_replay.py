@@ -110,10 +110,8 @@ def test_torn_commit_fails_loudly(spark, tmp_path):
     from levi_spark.delta.writer import write_delta
 
     path = str(tmp_path / "t")
-    write_delta(spark.range(0, 100, numPartitions=2), path, mode="error",
-                checkpoint_interval=None)
-    write_delta(spark.range(100, 200, numPartitions=2), path, mode="append",
-                checkpoint_interval=None)
+    write_delta(spark.range(0, 100, numPartitions=2), path, mode="error")
+    write_delta(spark.range(100, 200, numPartitions=2), path, mode="append")
     commit1 = os.path.join(path, "_delta_log", f"{1:020d}.json")
     with open(commit1) as f:
         lines = f.read().splitlines()

@@ -28,7 +28,7 @@ def table(spark, tmp_path):
         (F.col("id") * 10).alias("v"),
         F.lit("base").alias("tag"),
     )
-    write_delta(df.repartition(4), p, mode="error", checkpoint_interval=None)
+    write_delta(df.repartition(4), p, mode="error")
     return p
 
 
@@ -141,7 +141,7 @@ def test_merge_partitioned_table(spark, tmp_path):
         (F.col("id") % 3).alias("part"),
         F.lit("base").alias("tag"),
     )
-    write_delta(df, p, mode="error", partition_by=["part"], checkpoint_interval=None)
+    write_delta(df, p, mode="error", partition_by=["part"])
     src = spark.createDataFrame([(9, 9 % 3), (100, 1)], "pk long, part long")
     (
         merge(LeviTable(spark, p), src, "t.pk = s.pk")

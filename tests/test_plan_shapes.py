@@ -171,8 +171,8 @@ def test_dv_scan_stays_pushdown_clean(spark, tmp_path):
 
     p = str(tmp_path / "t")
     li = spark.read.parquet(f"{SF}/lineitem.parquet")
-    write_delta(li.repartition(4), p, mode="error", checkpoint_interval=None)
-    soft_delete(spark, p, "l_quantity > 45", checkpoint_interval=None)
+    write_delta(li.repartition(4), p, mode="error")
+    soft_delete(spark, p, "l_quantity > 45")
     df = DeltaLog(spark, p).snapshot().to_df().where(F.col("l_orderkey") == 7)
     pf = pushed_filters(df)
     assert any("l_orderkey" in f for f in pf), pf

@@ -23,9 +23,9 @@ def _proto(spark, path):
 def _mk_standard(spark, path):
     write_delta(
         spark.range(300).selectExpr("id", "id * 2 AS v").coalesce(2),
-        path, mode="error", checkpoint_interval=None,
+        path, mode="error",
     )
-    soft_delete(spark, path, "id % 2 = 0", checkpoint_interval=None)
+    soft_delete(spark, path, "id % 2 = 0")
 
 
 def test_append_preserves_upgraded_protocol(spark, tmp_path):
@@ -39,7 +39,7 @@ def test_append_preserves_upgraded_protocol(spark, tmp_path):
     assert "deletionVectors" in p["readerFeatures"]
     write_delta(
         spark.range(1000, 1003).selectExpr("id", "id * 2 AS v").coalesce(1),
-        path, mode="append", checkpoint_interval=None,
+        path, mode="append",
     )
     p2 = _proto(spark, path)
     assert p2["minReaderVersion"] == 3
@@ -63,7 +63,7 @@ def test_sidecar_dv_commit_preserves_protocol_after_purge(spark, tmp_path):
     path = str(tmp_path / "t")
     _mk_standard(spark, path)
     purge_deleted(spark, path)
-    soft_delete(spark, path, "id = 7", checkpoint_interval=None)
+    soft_delete(spark, path, "id = 7")
     p = _proto(spark, path)
     assert p["minReaderVersion"] == 3
 
@@ -88,7 +88,6 @@ def test_v2_checkpoint_upgrades_protocol_first(spark, tmp_path):
     path = str(tmp_path / "t")
     write_delta(
         spark.range(9).selectExpr("id").coalesce(1), path, mode="error",
-        checkpoint_interval=None,
     )
     assert _proto(spark, path)["minReaderVersion"] == 1
     v = write_checkpoint(spark, path, format="v2")
@@ -108,12 +107,10 @@ def test_v2_checkpoint_no_double_upgrade(spark, tmp_path):
     path = str(tmp_path / "t")
     write_delta(
         spark.range(5).selectExpr("id").coalesce(1), path, mode="error",
-        checkpoint_interval=None,
     )
     v1 = write_checkpoint(spark, path, format="v2")
     write_delta(
         spark.range(5, 8).selectExpr("id").coalesce(1), path, mode="append",
-        checkpoint_interval=None,
     )
     v2 = write_checkpoint(spark, path, format="v2")
     assert v2 == v1 + 1  # append only; no second upgrade commit

@@ -20,7 +20,6 @@ def _mk_table(spark, path):
         spark.range(5).withColumnRenamed("id", "k"),
         path,
         mode="error",
-        checkpoint_interval=None,
     )
 
 
@@ -71,7 +70,6 @@ def _make_collated_table(spark, path, collation):
         ),
         path,
         mode="error",
-        checkpoint_interval=None,
     )
     log_dir = os.path.join(path, "_delta_log")
     with open(os.path.join(log_dir, f"{0:020d}.json")) as f:
@@ -175,7 +173,7 @@ def test_collated_write_declares_feature_and_round_trips(spark, tmp_path):
     df = spark.createDataFrame(
         [Row(k=i, s=v) for i, v in enumerate(["abc", "ABC", "xyz"])]
     ).select("k", F.collate(F.col("s"), "UTF8_LCASE").alias("s"))
-    write_delta(df, path, mode="error", checkpoint_interval=None)
+    write_delta(df, path, mode="error")
 
     with open(os.path.join(path, "_delta_log", f"{0:020d}.json")) as f:
         actions = [json.loads(line) for line in f]
@@ -198,7 +196,6 @@ def test_collated_write_declares_feature_and_round_trips(spark, tmp_path):
         spark.createDataFrame([Row(k=1, s="a")]),
         path2,
         mode="error",
-        checkpoint_interval=None,
     )
     with open(os.path.join(path2, "_delta_log", f"{0:020d}.json")) as f:
         actions = [json.loads(line) for line in f]

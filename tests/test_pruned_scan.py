@@ -22,7 +22,7 @@ def range_table(spark, tmp_path):
     )
     write_delta(
         df.repartitionByRange(8, "id").sortWithinPartitions("id"),
-        p, mode="error", checkpoint_interval=None,
+        p, mode="error",
     )
     return p
 
@@ -56,7 +56,7 @@ def test_partition_pruning_is_exact(spark, tmp_path):
     df = spark.range(900).select(
         F.col("id"), (F.col("id") % 3).cast("string").alias("part")
     )
-    write_delta(df, p, mode="error", partition_by=["part"], checkpoint_interval=None)
+    write_delta(df, p, mode="error", partition_by=["part"])
     snap = DeltaLog(spark, p).snapshot()
     n_all = _n_input_files(snap.to_df())
     pruned = pruned_scan(snap, [("part", "=", "1")])
@@ -79,7 +79,7 @@ def test_missing_stats_files_are_kept(spark, fixtures_dir):
 
 
 def test_dv_rows_stay_deleted_through_pruned_scan(spark, range_table):
-    soft_delete(spark, range_table, "id = 4242", checkpoint_interval=None)
+    soft_delete(spark, range_table, "id = 4242")
     snap = DeltaLog(spark, range_table).snapshot()
     pruned = pruned_scan(snap, [("id", ">=", 4240), ("id", "<=", 4244)])
     assert sorted(r.id for r in pruned.collect()) == [4240, 4241, 4243, 4244]

@@ -66,7 +66,6 @@ def test_data_parquet_census_detects_orphans(spark, tmp_path):
     base = str(tmp_path / "t")
     write_delta(
         spark.range(10).select("id"), base, mode="error",
-        checkpoint_interval=None,
     )
     from levi_spark.delta.history import describe_detail
 

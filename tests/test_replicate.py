@@ -23,7 +23,7 @@ def _mk_src(spark, path):
     df = spark.createDataFrame(
         [(i, f"n{i}", float(i)) for i in range(20)], "k LONG, name STRING, v DOUBLE"
     )
-    write_delta(df.repartition(3), path, mode="error", checkpoint_interval=None)
+    write_delta(df.repartition(3), path, mode="error")
 
 
 def test_bootstrap_and_incremental_sync(spark, tmp_path):
@@ -35,10 +35,9 @@ def test_bootstrap_and_incremental_sync(spark, tmp_path):
     # mutate: append + DV delete + MERGE update, then ONE sync
     write_delta(
         spark.createDataFrame([(100, "new", 1.0)], "k LONG, name STRING, v DOUBLE"),
-        src, mode="append", checkpoint_interval=None,
+        src, mode="append",
     )
-    soft_delete(spark, src, "k % 5 = 0 AND k < 100", emit_cdf=True,
-                checkpoint_interval=None)
+    soft_delete(spark, src, "k % 5 = 0 AND k < 100", emit_cdf=True)
     upd = spark.createDataFrame([(3, 33.0), (7, 77.0)], "uk LONG, uv DOUBLE")
     (
         merge(LeviTable(spark, src), upd, "t.k = s.uk")
@@ -61,10 +60,10 @@ def test_delete_then_reinsert_collapses_to_upsert(spark, tmp_path):
     _mk_src(spark, src)
     replicate_cdf(spark, src, dst, ["k"])
     # two source versions: delete k=4, then append a NEW row with k=4
-    soft_delete(spark, src, "k = 4", emit_cdf=True, checkpoint_interval=None)
+    soft_delete(spark, src, "k = 4", emit_cdf=True)
     write_delta(
         spark.createDataFrame([(4, "reborn", 44.0)], "k LONG, name STRING, v DOUBLE"),
-        src, mode="append", checkpoint_interval=None,
+        src, mode="append",
     )
     replicate_cdf(spark, src, dst, ["k"])
     assert _rows(spark, dst) == _rows(spark, src)
@@ -85,7 +84,7 @@ def test_bootstrap_is_file_level_clone(spark, tmp_path):
     src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
     _mk_src(spark, src)
     # DV on the source BEFORE bootstrap: the clone must carry it over
-    soft_delete(spark, src, "k = 11", emit_cdf=True, checkpoint_interval=None)
+    soft_delete(spark, src, "k = 11", emit_cdf=True)
     r = replicate_cdf(spark, src, dst, ["k"])
     assert r["bootstrapped"]
     assert _rows(spark, dst) == _rows(spark, src)
@@ -115,7 +114,7 @@ def test_bootstrap_is_file_level_clone(spark, tmp_path):
     # incremental sync still works on top of a cloned bootstrap
     write_delta(
         spark.createDataFrame([(200, "post", 2.0)], "k LONG, name STRING, v DOUBLE"),
-        src, mode="append", checkpoint_interval=None,
+        src, mode="append",
     )
     replicate_cdf(spark, src, dst, ["k"])
     assert _rows(spark, dst) == _rows(spark, src)
@@ -167,7 +166,7 @@ def test_replicate_window_with_overwrite_keeps_surviving_keys(spark, tmp_path):
         [(i, f"n{i}", float(i)) for i in range(20)],
         "k LONG, name STRING, v DOUBLE",
     )
-    write_delta(df.repartition(3), src, mode="error", checkpoint_interval=None)
+    write_delta(df.repartition(3), src, mode="error")
     replicate_cdf(spark, src, dst, ["k"])
 
     # keys 0-9 SURVIVE the overwrite (with new values), 10-19 vanish,
@@ -176,7 +175,7 @@ def test_replicate_window_with_overwrite_keeps_surviving_keys(spark, tmp_path):
         [(i, f"ow{i}", i * 2.0) for i in range(10)] + [(50, "ow", 50.0)],
         "k LONG, name STRING, v DOUBLE",
     )
-    write_delta(new.repartition(2), src, mode="overwrite", checkpoint_interval=None)
+    write_delta(new.repartition(2), src, mode="overwrite")
     r = replicate_cdf(spark, src, dst, ["k"])
     assert not r["bootstrapped"]
     assert _rows(spark, dst) == _rows(spark, src)

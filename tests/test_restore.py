@@ -22,12 +22,9 @@ from levi_spark.delta.writer import write_delta
 
 
 def _mk(spark, path):
-    write_delta(spark.range(10).select("id"), path, mode="error",
-                checkpoint_interval=None)                       # v0
-    write_delta(spark.range(10, 15).select("id"), path, mode="append",
-                checkpoint_interval=None)                       # v1
-    write_delta(spark.range(100, 103).select("id"), path, mode="overwrite",
-                checkpoint_interval=None)                       # v2
+    write_delta(spark.range(10).select("id"), path, mode="error")  # v0
+    write_delta(spark.range(10, 15).select("id"), path, mode="append")  # v1
+    write_delta(spark.range(100, 103).select("id"), path, mode="overwrite")  # v2
     return DeltaLog(spark, path)
 
 
@@ -56,9 +53,8 @@ def test_restore_detaches_dv_descriptors(spark, tmp_path):
     path = str(tmp_path / "t")
     write_delta(
         spark.range(20).select("id").coalesce(2), path, mode="error",
-        checkpoint_interval=None,
-    )                                                           # v0
-    soft_delete(spark, path, "id % 4 = 1", checkpoint_interval=None)  # v1
+    )  # v0
+    soft_delete(spark, path, "id % 4 = 1")  # v1
     assert DeltaLog(spark, path).snapshot().to_df().count() == 15
     r = restore(spark, path, 0)
     assert r["version"] == 2
@@ -76,17 +72,16 @@ def test_restore_across_purge_keeps_dvs(spark, tmp_path, mod, storage):
     read as vacuumed."""
     path = str(tmp_path / "t")
     write_delta(spark.range(1000).select("id").coalesce(1), path,
-                mode="error", checkpoint_interval=None)         # v0
+                mode="error")  # v0
     write_delta(spark.range(1000, 2000).select("id").coalesce(1), path,
-                mode="append", checkpoint_interval=None)        # v1
-    soft_delete(spark, path, f"id % {mod} = 0",
-                checkpoint_interval=None)                       # v2
+                mode="append")  # v1
+    soft_delete(spark, path, f"id % {mod} = 0")  # v2
     dvs = [
         r["add"]["deletionVector"]
         for r in DeltaLog(spark, path).snapshot().live_adds_collected()
     ]
     assert [d["storageType"] for d in dvs] == [storage, storage]
-    purge_deleted(spark, path)                                  # v3
+    purge_deleted(spark, path)  # v3
     r = restore(spark, path, 2)
     assert r["version"] == 4 and r["files_readded"] == 2
     got = sorted(row.id for row in DeltaLog(spark, path).snapshot().to_df().collect())
@@ -198,11 +193,9 @@ def test_restore_keeps_coordinator_and_protocol(spark, tmp_path):
 
     coord = "delta.coordinatedCommits.commitCoordinator-preview"
     path = str(tmp_path / "t")
-    write_delta(spark.range(3).select("id"), path, mode="error",
-                checkpoint_interval=None)                       # v0
-    set_table_properties(spark, path, {coord: "filesystem"})    # v1 staged
-    write_delta(spark.range(3, 5).select("id"), path, mode="append",
-                checkpoint_interval=None)                       # v2 staged
+    write_delta(spark.range(3).select("id"), path, mode="error")  # v0
+    set_table_properties(spark, path, {coord: "filesystem"})  # v1 staged
+    write_delta(spark.range(3, 5).select("id"), path, mode="append")  # v2 staged
     before = DeltaLog(spark, path).snapshot().protocol
     assert restore(spark, path, 0)["version"] == 3
     log_dir = os.path.join(path, "_delta_log")

@@ -31,7 +31,7 @@ def test_create_assigns_contiguous_ids_and_protocol(spark, tmp_path):
     p = str(tmp_path / "t")
     write_delta(
         _sorted_single(spark.range(20).selectExpr("id", "id * 3 AS v"), "id"),
-        p, mode="error", checkpoint_interval=None, row_tracking=True,
+        p, mode="error", row_tracking=True,
     )
     snap = DeltaLog(spark, p).snapshot()
     proto = snap.protocol
@@ -46,12 +46,12 @@ def test_append_continues_from_high_water_mark(spark, tmp_path):
     p = str(tmp_path / "t")
     write_delta(
         _sorted_single(spark.range(10).selectExpr("id", "id AS v"), "id"),
-        p, mode="error", checkpoint_interval=None, row_tracking=True,
+        p, mode="error", row_tracking=True,
     )
     # append inherits row tracking WITHOUT re-passing the flag
     write_delta(
         _sorted_single(spark.range(10, 14).selectExpr("id", "id AS v"), "id"),
-        p, mode="append", checkpoint_interval=None,
+        p, mode="append",
     )
     assert _ids(spark, p) == [(i, i, 0) for i in range(10)] + [
         (i, i, 1) for i in range(10, 14)
@@ -63,9 +63,9 @@ def test_dv_delete_keeps_survivor_ids_and_purge_preserves(spark, tmp_path):
     p = str(tmp_path / "t")
     write_delta(
         _sorted_single(spark.range(30).selectExpr("id", "id AS v"), "id"),
-        p, mode="error", checkpoint_interval=None, row_tracking=True,
+        p, mode="error", row_tracking=True,
     )
-    soft_delete(spark, p, "id % 4 = 0", checkpoint_interval=None)
+    soft_delete(spark, p, "id % 4 = 0")
     want = [(i, i, 0) for i in range(30) if i % 4 != 0]
     assert _ids(spark, p) == want
     # purge rewrites the files but does not logically modify survivors
@@ -80,11 +80,11 @@ def test_overwrite_mints_above_old_mark(spark, tmp_path):
     p = str(tmp_path / "t")
     write_delta(
         _sorted_single(spark.range(50).selectExpr("id", "id AS v"), "id"),
-        p, mode="error", checkpoint_interval=None, row_tracking=True,
+        p, mode="error", row_tracking=True,
     )
     write_delta(
         _sorted_single(spark.range(5).selectExpr("id", "id AS v"), "id"),
-        p, mode="overwrite", checkpoint_interval=None,
+        p, mode="overwrite",
     )
     got = _ids(spark, p)
     # high-water mark is monotonic: ids never reuse the removed range
@@ -96,7 +96,7 @@ def test_domain_metadata_action_in_log(spark, tmp_path):
     p = str(tmp_path / "t")
     write_delta(
         _sorted_single(spark.range(7).selectExpr("id"), "id"),
-        p, mode="error", checkpoint_interval=None, row_tracking=True,
+        p, mode="error", row_tracking=True,
     )
     with open(os.path.join(p, "_delta_log", f"{0:020d}.json")) as f:
         lines = [json.loads(ln) for ln in f if ln.strip()]
@@ -119,7 +119,7 @@ def test_checkpoint_preserves_base_row_ids(spark, tmp_path):
     p = str(tmp_path / "t")
     write_delta(
         _sorted_single(spark.range(12).selectExpr("id"), "id"),
-        p, mode="error", checkpoint_interval=None, row_tracking=True,
+        p, mode="error", row_tracking=True,
     )
     write_checkpoint(spark, p, 0)
     snap = DeltaLog(spark, p).snapshot()
@@ -128,7 +128,7 @@ def test_checkpoint_preserves_base_row_ids(spark, tmp_path):
     # and the NEXT append still continues past the mark
     write_delta(
         _sorted_single(spark.range(12, 15).selectExpr("id"), "id"),
-        p, mode="append", checkpoint_interval=None,
+        p, mode="append",
     )
     assert DeltaLog(spark, p).snapshot().row_id_high_water_mark() == 14
 
@@ -137,7 +137,6 @@ def test_untracked_table_yields_null_ids_and_append_flag_errors(spark, tmp_path)
     p = str(tmp_path / "t")
     write_delta(
         spark.range(5).selectExpr("id"), p, mode="error",
-        checkpoint_interval=None,
     )
     rows = (
         DeltaLog(spark, p).snapshot().to_df(with_row_ids=True).collect()
@@ -146,7 +145,7 @@ def test_untracked_table_yields_null_ids_and_append_flag_errors(spark, tmp_path)
     with pytest.raises(ValueError, match="enableRowTracking"):
         write_delta(
             spark.range(5, 6).selectExpr("id"), p, mode="append",
-            checkpoint_interval=None, row_tracking=True,
+            row_tracking=True,
         )
 
 
@@ -157,7 +156,7 @@ def test_partitioned_table_assigns_disjoint_ranges(spark, tmp_path):
     p = str(tmp_path / "t")
     write_delta(
         spark.range(40).selectExpr("id", "id % 4 AS part"),
-        p, mode="error", checkpoint_interval=None, row_tracking=True,
+        p, mode="error", row_tracking=True,
         partition_by=["part"],
     )
     snap = DeltaLog(spark, p).snapshot()
@@ -175,7 +174,7 @@ def test_clone_preserves_row_ids(spark, tmp_path):
     src = str(tmp_path / "src")
     write_delta(
         _sorted_single(spark.range(9).selectExpr("id"), "id"),
-        src, mode="error", checkpoint_interval=None, row_tracking=True,
+        src, mode="error", row_tracking=True,
     )
     for shallow, dst in [(True, str(tmp_path / "sh")), (False, str(tmp_path / "dp"))]:
         clone_table(spark, src, dst, shallow=shallow)
@@ -265,13 +264,13 @@ def test_optimize_compaction_preserves_row_ids(spark, tmp_path):
     p = str(tmp_path / "t")
     write_delta(
         _sorted_single(spark.range(40).selectExpr("id", "id AS v"), "id"),
-        p, mode="error", checkpoint_interval=None, row_tracking=True,
+        p, mode="error", row_tracking=True,
     )
     write_delta(
         _sorted_single(
             spark.range(40, 60).selectExpr("id", "id AS v"), "id"
         ),
-        p, mode="append", checkpoint_interval=None,
+        p, mode="append",
     )
     before = _full_ids(spark, p)
     res = compact_small_files(
@@ -284,7 +283,7 @@ def test_optimize_compaction_preserves_row_ids(spark, tmp_path):
     assert DeltaLog(spark, p).snapshot().row_id_high_water_mark() >= 119
     write_delta(
         _sorted_single(spark.range(60, 70).selectExpr("id", "id AS v"), "id"),
-        p, mode="append", checkpoint_interval=None,
+        p, mode="append",
     )
     got = _full_ids(spark, p)
     assert len({g[1] for g in got}) == len(got) == 70
@@ -298,7 +297,7 @@ def test_optimize_zorder_preserves_row_ids(spark, tmp_path):
         _sorted_single(
             spark.range(50).selectExpr("id", "(id * 7) % 50 AS v"), "id"
         ),
-        p, mode="error", checkpoint_interval=None, row_tracking=True,
+        p, mode="error", row_tracking=True,
     )
     before = _full_ids(spark, p)
     optimize_zorder(spark, p, ["id", "v"], n_files=4)
@@ -313,13 +312,13 @@ def test_dv_delete_then_compact_keeps_survivor_ids(spark, tmp_path):
     p = str(tmp_path / "t")
     write_delta(
         _sorted_single(spark.range(30).selectExpr("id", "id AS v"), "id"),
-        p, mode="error", checkpoint_interval=None, row_tracking=True,
+        p, mode="error", row_tracking=True,
     )
     write_delta(
         _sorted_single(spark.range(30, 45).selectExpr("id", "id AS v"), "id"),
-        p, mode="append", checkpoint_interval=None,
+        p, mode="append",
     )
-    soft_delete(spark, p, "id % 5 = 0", checkpoint_interval=None)
+    soft_delete(spark, p, "id % 5 = 0")
     want = [(i, i, 0 if i < 30 else 1) for i in range(45) if i % 5 != 0]
     assert _full_ids(spark, p) == want
     compact_small_files(spark, p, small_bytes=1 << 30, target_bytes=1 << 30)
@@ -335,11 +334,11 @@ def test_materialized_columns_stay_physical_only(spark, tmp_path):
     p = str(tmp_path / "t")
     write_delta(
         _sorted_single(spark.range(12).selectExpr("id", "id AS v"), "id"),
-        p, mode="error", checkpoint_interval=None, row_tracking=True,
+        p, mode="error", row_tracking=True,
     )
     write_delta(
         _sorted_single(spark.range(12, 20).selectExpr("id", "id AS v"), "id"),
-        p, mode="append", checkpoint_interval=None,
+        p, mode="append",
     )
     snap = DeltaLog(spark, p).snapshot()
     conf = snap.metadata.configuration
@@ -370,7 +369,7 @@ def test_merge_preserves_copied_and_updated_row_ids(spark, tmp_path):
     p = str(tmp_path / "t")
     write_delta(
         _sorted_single(spark.range(20).selectExpr("id", "id AS v"), "id"),
-        p, mode="error", checkpoint_interval=None, row_tracking=True,
+        p, mode="error", row_tracking=True,
     )
     src = spark.range(15, 25).selectExpr(
         "id", "id * 100 AS v", "id % 2 = 0 AS kill"
@@ -417,7 +416,7 @@ def test_dedup_rewrites_preserve_survivor_ids(spark, tmp_path):
     )
     write_delta(
         _sorted_single(df, "id"),
-        p, mode="error", checkpoint_interval=None, row_tracking=True,
+        p, mode="error", row_tracking=True,
     )
     drop_duplicates(LeviTable(spark, p), ["k"])
     got = _full_ids(spark, p)
@@ -428,7 +427,7 @@ def test_dedup_rewrites_preserve_survivor_ids(spark, tmp_path):
     p2 = str(tmp_path / "t2")
     write_delta(
         _sorted_single(df, "id"),
-        p2, mode="error", checkpoint_interval=None, row_tracking=True,
+        p2, mode="error", row_tracking=True,
     )
     kill_duplicates(LeviTable(spark, p2), ["k"])
     got = _full_ids(spark, p2)

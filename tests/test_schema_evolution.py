@@ -17,7 +17,6 @@ def table(spark, tmp_path):
         spark.range(0, 10).select("id", F.lit("x").alias("v")),
         p,
         mode="error",
-        checkpoint_interval=None,
     )
     return p
 
@@ -30,7 +29,6 @@ def test_new_column_appends_and_backfills_null(spark, table):
         table,
         mode="append",
         merge_schema=True,
-        checkpoint_interval=None,
     )
     snap = DeltaLog(spark, table).snapshot()
     assert snap.metadata.data_columns == ["id", "v", "extra"]
@@ -47,7 +45,6 @@ def test_subset_append_with_merge_schema(spark, table):
         table,
         mode="append",
         merge_schema=True,
-        checkpoint_interval=None,
     )
     snap = DeltaLog(spark, table).snapshot()
     assert snap.metadata.data_columns == ["id", "v"]
@@ -62,7 +59,6 @@ def test_type_conflict_rejected(spark, table):
             table,
             mode="append",
             merge_schema=True,
-            checkpoint_interval=None,
         )
 
 
@@ -72,7 +68,6 @@ def test_plain_append_still_strict(spark, table):
             spark.range(0, 1).select("id", F.lit("z").alias("v"), F.lit(1).alias("w")),
             table,
             mode="append",
-            checkpoint_interval=None,
         )
 
 
@@ -84,7 +79,6 @@ def test_stats_pruning_survives_evolution(spark, table):
         table,
         mode="append",
         merge_schema=True,
-        checkpoint_interval=None,
     )
     aa = DeltaLog(spark, table).snapshot().add_actions_flat()
     # old file has null min/max for 'extra'; new file carries real stats

@@ -280,9 +280,9 @@ def test_soft_delete_standard_format(spark, tmp_path):
     path = str(tmp_path / "t")
     write_delta(
         spark.range(300).selectExpr("id", "id * 2 AS v").coalesce(3),
-        path, mode="error", checkpoint_interval=None,
+        path, mode="error",
     )
-    res = soft_delete(spark, path, "id % 2 = 0", checkpoint_interval=None)
+    res = soft_delete(spark, path, "id % 2 = 0")
     assert res["rows_deleted"] == 150
     snap = DeltaLog(spark, path).snapshot()
     dv_adds = [
@@ -310,9 +310,9 @@ def test_soft_delete_standard_inlines_tiny_dvs(spark, tmp_path):
     path = str(tmp_path / "t")
     write_delta(
         spark.range(30).selectExpr("id", "id * 2 AS v").coalesce(3),
-        path, mode="error", checkpoint_interval=None,
+        path, mode="error",
     )
-    res = soft_delete(spark, path, "id % 4 = 0", checkpoint_interval=None)
+    res = soft_delete(spark, path, "id % 4 = 0")
     assert res["rows_deleted"] == 8
     snap = DeltaLog(spark, path).snapshot()
     dv_adds = [
@@ -335,10 +335,10 @@ def test_soft_delete_standard_cumulative_and_purge(spark, tmp_path):
     path = str(tmp_path / "t")
     write_delta(
         spark.range(40).selectExpr("id", "id * 3 AS v").coalesce(2),
-        path, mode="error", checkpoint_interval=None,
+        path, mode="error",
     )
-    soft_delete(spark, path, "id % 5 = 0", checkpoint_interval=None)
-    soft_delete(spark, path, "id % 7 = 0", checkpoint_interval=None)
+    soft_delete(spark, path, "id % 5 = 0")
+    soft_delete(spark, path, "id % 7 = 0")
     want = [i for i in range(40) if i % 5 != 0 and i % 7 != 0]
     snap = DeltaLog(spark, path).snapshot()
     assert sorted(r.id for r in snap.to_df().collect()) == want
@@ -363,9 +363,8 @@ def test_vacuum_reclaims_orphaned_standard_dvs(spark, tmp_path):
     path = str(tmp_path / "t")
     write_delta(
         spark.range(400).selectExpr("id").coalesce(2), path, mode="error",
-        checkpoint_interval=None,
     )
-    soft_delete(spark, path, "id % 3 = 0", checkpoint_interval=None)
+    soft_delete(spark, path, "id % 3 = 0")
     live_bins = set(_glob.glob(os.path.join(path, "deletion_vector_*.bin")))
     assert live_bins
     # live DVs survive a vacuum
@@ -386,8 +385,8 @@ def test_standard_delete_bumps_protocol(spark, tmp_path):
 
     path = str(tmp_path / "t")
     write_delta(spark.range(10).selectExpr("id").coalesce(1), path,
-                mode="error", checkpoint_interval=None)
-    soft_delete(spark, path, "id = 3", checkpoint_interval=None)
+                mode="error")
+    soft_delete(spark, path, "id = 3")
     last = sorted(_glob.glob(os.path.join(path, "_delta_log", "*.json")))[-1]
     protos = [
         _json.loads(ln)["protocol"]
@@ -409,16 +408,14 @@ def test_soft_delete_removed_files_keep_no_dv_file(spark, tmp_path, case):
     from levi_spark.delta.writer import write_delta
 
     path = str(tmp_path / "t")
-    write_delta(spark.range(200).coalesce(1), path, mode="error",
-                checkpoint_interval=None)
+    write_delta(spark.range(200).coalesce(1), path, mode="error")
     if case == "two_files":
-        write_delta(spark.range(200, 400).coalesce(1), path, mode="append",
-                    checkpoint_interval=None)
+        write_delta(spark.range(200, 400).coalesce(1), path, mode="append")
     parent = DeltaLog(spark, path).snapshot()
     # one_file: every row goes; two_files: the first file wholly, the
     # second loses 100 rows — past the inline cap, so it needs a .bin
     pred = "id >= 0" if case == "one_file" else "id < 200 OR id % 2 = 0"
-    res = soft_delete(spark, path, pred, checkpoint_interval=None)
+    res = soft_delete(spark, path, pred)
     assert res["files_removed"] == 1
     commit = os.path.join(path, "_delta_log", f"{res['version']:020d}.json")
     actions = [json.loads(ln) for ln in open(commit)]

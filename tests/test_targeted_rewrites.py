@@ -30,11 +30,11 @@ def _mk_two_file_table(spark, path):
     a = spark.createDataFrame(
         [(i, i % 5, float(i)) for i in range(10)], "pk long, k long, v double"
     ).coalesce(1)
-    write_delta(a, path, mode="error", checkpoint_interval=None)
+    write_delta(a, path, mode="error")
     b = spark.createDataFrame(
         [(100 + i, 50 + i, float(i)) for i in range(10)], "pk long, k long, v double"
     ).coalesce(1)
-    write_delta(b, path, mode="append", checkpoint_interval=None)
+    write_delta(b, path, mode="append")
     return LeviTable(spark, path)
 
 
@@ -58,7 +58,7 @@ def test_drop_duplicates_rewrites_only_hit_files(spark, tmp_path):
 def test_drop_duplicates_noop_commits_nothing(spark, tmp_path):
     path = str(tmp_path / "t")
     df = spark.createDataFrame([(1, 10), (2, 20)], "pk long, k long")
-    write_delta(df, path, mode="error", checkpoint_interval=None)
+    write_delta(df, path, mode="error")
     t = LeviTable(spark, path)
     v_before = t.version()
     r = drop_duplicates(t, ["k"])
@@ -92,13 +92,13 @@ def test_scd2_upsert_rewrites_only_changed_files(spark, tmp_path):
         "pkey long, attr string, is_current boolean, "
         "effective_time timestamp, end_time timestamp",
     ).coalesce(1)
-    write_delta(a, path, mode="error", checkpoint_interval=None)
+    write_delta(a, path, mode="error")
     b = spark.createDataFrame(
         [(10, "X", True, t0, None), (11, "Y", True, t0, None)],
         "pkey long, attr string, is_current boolean, "
         "effective_time timestamp, end_time timestamp",
     ).coalesce(1)
-    write_delta(b, path, mode="append", checkpoint_interval=None)
+    write_delta(b, path, mode="append")
     t = LeviTable(spark, path)
     before = _paths(t)
     assert len(before) == 2
@@ -138,7 +138,7 @@ def test_scd2_noop_update_burns_no_version(spark, tmp_path):
         "pkey long, attr string, is_current boolean, "
         "effective_time timestamp, end_time timestamp",
     )
-    write_delta(df, path, mode="error", checkpoint_interval=None)
+    write_delta(df, path, mode="error")
     t = LeviTable(spark, path)
     v0 = t.version()
     same = spark.createDataFrame(
@@ -162,7 +162,7 @@ def test_scd2_accepts_pandas_updates(spark, tmp_path):
         "pkey long, attr string, is_current boolean, "
         "effective_time timestamp, end_time timestamp",
     )
-    write_delta(base, path, mode="error", checkpoint_interval=None)
+    write_delta(base, path, mode="error")
     t = LeviTable(spark, path)
     t1 = dt.datetime(2025, 1, 1)
     ups = pd.DataFrame(

@@ -28,9 +28,9 @@ from levi_spark.streaming.delta_source import SyncState, incremental_sync
 def test_txn_round_trip_and_checkpoint_survival(spark, tmp_path):
     path = str(tmp_path / "t")
     df = spark.range(5).select(F.col("id"))
-    write_delta(df, path, mode="error", checkpoint_interval=None, txn=("app-a", 7))
-    write_delta(df, path, mode="append", checkpoint_interval=None, txn=("app-b", 1))
-    write_delta(df, path, mode="append", checkpoint_interval=None, txn=("app-a", 9))
+    write_delta(df, path, mode="error", txn=("app-a", 7))
+    write_delta(df, path, mode="append", txn=("app-b", 1))
+    write_delta(df, path, mode="append", txn=("app-a", 9))
     snap = DeltaLog(spark, path).snapshot()
     assert snap.txn_versions() == {"app-a": 9, "app-b": 1}
 
@@ -49,13 +49,11 @@ def test_incremental_sync_replay_after_lost_state_file(spark, tmp_path):
     action inside the destination commit is authoritative."""
     src = str(tmp_path / "src")
     dst = str(tmp_path / "dst")
-    write_delta(spark.range(10).select("id"), src, mode="error",
-                checkpoint_interval=None)
+    write_delta(spark.range(10).select("id"), src, mode="error")
     state = SyncState(str(tmp_path / "state.json"))
     r = incremental_sync(spark, src, dst, state)
     assert r["rows"] == 10
-    write_delta(spark.range(10, 14).select("id"), src, mode="append",
-                checkpoint_interval=None)
+    write_delta(spark.range(10, 14).select("id"), src, mode="append")
     r = incremental_sync(spark, src, dst, state)
     assert r["rows"] == 4
 
@@ -76,11 +74,11 @@ def test_refresh_aggregate_not_double_applied_on_stale_state(spark, tmp_path):
         [(i, ["x", "y"][i % 2], float(i)) for i in range(20)],
         "id long, g string, v double",
     )
-    write_delta(df, base, mode="error", checkpoint_interval=None)
+    write_delta(df, base, mode="error")
     init_aggregate(spark, base, agg, ["g"], ["v"], state)
     write_delta(
         spark.createDataFrame([(100, "x", 5.0)], "id long, g string, v double"),
-        base, mode="append", checkpoint_interval=None,
+        base, mode="append",
     )
     r = refresh_aggregate(spark, base, agg, ["g"], ["v"], state)
     assert r["groups_changed"] == 1
@@ -154,8 +152,7 @@ def test_overwrite_tombstones_external_literal_paths(spark, tmp_path):
     assert DeltaLog(spark, path).snapshot().to_df().count() == 1
 
     df = spark.createDataFrame([(2, "b"), (3, "b")], "id long, letter string")
-    write_delta(df, path, mode="overwrite", partition_by=["letter"],
-                checkpoint_interval=None)
+    write_delta(df, path, mode="overwrite", partition_by=["letter"])
     snap = DeltaLog(spark, path).snapshot()
     rows = {(r.id, r.letter) for r in snap.to_df().collect()}
     assert rows == {(2, "b"), (3, "b")}, "old external file must not stay live"
@@ -175,7 +172,7 @@ def test_table_identity_and_configuration_survive_commits(spark, tmp_path):
     _handwritten_partitioned_table(spark, path)
     write_delta(
         spark.createDataFrame([(5, "c")], "id long, letter string"),
-        path, mode="append", partition_by=["letter"], checkpoint_interval=None,
+        path, mode="append", partition_by=["letter"],
     )
     meta = DeltaLog(spark, path).snapshot().metadata
     assert meta.id == "fixed-id-123"
@@ -184,12 +181,11 @@ def test_table_identity_and_configuration_survive_commits(spark, tmp_path):
 
 def test_replace_paths_rejects_non_live_path(spark, tmp_path):
     path = str(tmp_path / "t")
-    write_delta(spark.range(4).select("id"), path, mode="error",
-                checkpoint_interval=None)
+    write_delta(spark.range(4).select("id"), path, mode="error")
     with pytest.raises(ValueError, match="not live"):
         write_delta(
             spark.range(4).select("id"), path, mode="append",
-            replace_paths=["no-such-file.parquet"], checkpoint_interval=None,
+            replace_paths=["no-such-file.parquet"],
         )
 
 
@@ -202,7 +198,7 @@ def test_write_delta_struct_column_round_trip(spark, tmp_path):
         [(1, {"a": 2, "b": "x"}), (2, {"a": 3, "b": "y"})],
         "id long, s struct<a:long,b:string>",
     )
-    write_delta(df, path, mode="error", checkpoint_interval=None)
+    write_delta(df, path, mode="error")
     back = DeltaLog(spark, path).snapshot().to_df()
     assert {(r.id, r.s.a, r.s.b) for r in back.collect()} == {
         (1, 2, "x"), (2, 3, "y")
@@ -229,7 +225,7 @@ def test_soft_delete_conflict_raises_value_error_no_orphan(
     # one file, 50 deleted rows: past the inline cap, so the delete
     # writes a deletion_vector_*.bin file before it tries to publish
     write_delta(spark.range(100).select("id").coalesce(1), path,
-                mode="error", checkpoint_interval=None)
+                mode="error")
     # pin soft_delete's snapshot at v0, then let a concurrent writer win
     # version 1 — the classic read-then-lose race
     orig = DeltaLog.snapshot
@@ -248,7 +244,7 @@ def test_soft_delete_conflict_raises_value_error_no_orphan(
 
     monkeypatch.setattr(dv_mod, "_write_standard_dvs", spy)
     with pytest.raises(ValueError, match="concurrent commit"):
-        soft_delete(spark, path, "id % 2 = 0", checkpoint_interval=None)
+        soft_delete(spark, path, "id % 2 = 0")
     assert [d["storageType"] for d in written] == ["u"]
     # the DV file written before the failed publish is cleaned up
     assert not [n for n in os.listdir(path) if n.startswith("deletion_vector_")]
@@ -279,16 +275,15 @@ def test_rebased_append_does_not_revert_concurrent_schema_union(
     commit must re-read the winner's metadata on rebase — committing
     its stale pre-read schema would silently drop the new column."""
     path = str(tmp_path / "t")
-    write_delta(spark.range(3).select("id"), path, mode="error",
-                checkpoint_interval=None)                       # v0: (id)
+    write_delta(spark.range(3).select("id"), path, mode="error")  # v0: (id)
     write_delta(
         spark.createDataFrame([(10, "x")], "id long, extra string"),
-        path, mode="append", merge_schema=True, checkpoint_interval=None,
-    )                                                           # v1: (id, extra)
+        path, mode="append", merge_schema=True,
+    )  # v1: (id, extra)
     _pin_first_snapshot(monkeypatch)
     write_delta(
         spark.createDataFrame([(20, "y")], "id long, extra string"),
-        path, mode="append", merge_schema=True, checkpoint_interval=None,
+        path, mode="append", merge_schema=True,
     )                                                           # raced append
     meta = DeltaLog(spark, path).snapshot().metadata
     assert [f.name for f in meta.schema.fields] == ["id", "extra"]
@@ -302,16 +297,14 @@ def test_rebased_plain_append_fails_when_schema_moved(
     """A plain (non-mergeSchema) append raced by a schema-widening
     commit must fail loudly instead of committing stale metadata."""
     path = str(tmp_path / "t")
-    write_delta(spark.range(3).select("id"), path, mode="error",
-                checkpoint_interval=None)                       # v0: (id)
+    write_delta(spark.range(3).select("id"), path, mode="error")  # v0: (id)
     write_delta(
         spark.createDataFrame([(10, "x")], "id long, extra string"),
-        path, mode="append", merge_schema=True, checkpoint_interval=None,
-    )                                                           # v1: (id, extra)
+        path, mode="append", merge_schema=True,
+    )  # v1: (id, extra)
     _pin_first_snapshot(monkeypatch)
     with pytest.raises(ValueError, match="invalidated by concurrent commit"):
-        write_delta(spark.range(20, 22).select("id"), path, mode="append",
-                    checkpoint_interval=None)
+        write_delta(spark.range(20, 22).select("id"), path, mode="append")
 
 
 def test_append_inherits_table_partitioning(spark, tmp_path):
@@ -329,13 +322,12 @@ def test_append_inherits_table_partitioning(spark, tmp_path):
     df = spark.range(0, 8).select(
         F.col("id").alias("k"), (F.col("id") % 2).cast("string").alias("part")
     )
-    write_delta(df, p, mode="error", partition_by=["part"],
-                checkpoint_interval=None)
+    write_delta(df, p, mode="error", partition_by=["part"])
     write_delta(
         spark.range(8, 10).select(
             F.col("id").alias("k"), F.lit("1").alias("part")
         ),
-        p, mode="append", checkpoint_interval=None,  # no partition_by
+        p, mode="append",  # no partition_by
     )
     snap = DeltaLog(spark, p).snapshot()
     assert snap.metadata.partition_columns == ["part"]
@@ -345,5 +337,5 @@ def test_append_inherits_table_partitioning(spark, tmp_path):
             spark.range(10, 11).select(
                 F.col("id").alias("k"), F.lit("1").alias("part")
             ),
-            p, mode="append", partition_by=["k"], checkpoint_interval=None,
+            p, mode="append", partition_by=["k"],
         )

@@ -241,13 +241,13 @@ def _mk_table(spark, path):
 
     write_delta(
         spark.range(12).selectExpr("id", "id * 2 AS v").coalesce(2),
-        path, mode="error", checkpoint_interval=None, txn=("app-x", 3),
+        path, mode="error", txn=("app-x", 3),
     )
     write_delta(
         spark.range(12, 18).selectExpr("id", "id * 2 AS v").coalesce(1),
-        path, mode="append", checkpoint_interval=None,
+        path, mode="append",
     )
-    soft_delete(spark, path, "id IN (1, 13)", checkpoint_interval=None)
+    soft_delete(spark, path, "id IN (1, 13)")
 
 
 def test_write_v2_checkpoint_and_expire(spark, tmp_path):
@@ -293,7 +293,7 @@ def test_commits_after_v2_checkpoint_replay(spark, tmp_path):
     write_checkpoint(spark, path, format="v2")
     write_delta(
         spark.range(100, 103).selectExpr("id", "id * 2 AS v").coalesce(1),
-        path, mode="append", checkpoint_interval=None,
+        path, mode="append",
     )
     got = {r.id for r in DeltaLog(spark, path).snapshot().to_df().collect()}
     assert {100, 101, 102} <= got and 1 not in got
@@ -304,8 +304,7 @@ def test_bad_checkpoint_format_refused(spark, tmp_path):
     from levi_spark.delta.writer import write_delta
 
     path = str(tmp_path / "t")
-    write_delta(spark.range(3).selectExpr("id"), path, mode="error",
-                checkpoint_interval=None)
+    write_delta(spark.range(3).selectExpr("id"), path, mode="error")
     with pytest.raises(ValueError, match="classic.*v2"):
         write_checkpoint(spark, path, format="v3")
 

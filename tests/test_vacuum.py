@@ -18,7 +18,7 @@ from levi_spark.delta.writer import write_delta
 def table(spark, tmp_path):
     p = str(tmp_path / "t")
     df = spark.range(0, 200).select(F.col("id"), (F.col("id") % 3).alias("k"))
-    write_delta(df.repartition(4), p, mode="error", checkpoint_interval=None)
+    write_delta(df.repartition(4), p, mode="error")
     return p
 
 
@@ -31,7 +31,6 @@ def test_vacuum_after_overwrite_reclaims_old_files(spark, table):
         spark.range(0, 50).select(F.col("id"), (F.col("id") % 3).alias("k")),
         table,
         mode="overwrite",
-        checkpoint_interval=None,
     )
     # retention window still open -> nothing deleted
     res = vacuum(spark, table, retention_hours=1.0)
@@ -53,7 +52,7 @@ def test_vacuum_after_overwrite_reclaims_old_files(spark, table):
 def test_vacuum_keeps_live_dv_sidecars(spark, table):
     # ~30 deleted rows per file: past the inline cap, so every DV is a
     # deletion_vector_*.bin file
-    soft_delete(spark, table, "id < 120", checkpoint_interval=None)
+    soft_delete(spark, table, "id < 120")
     live = _dv_files(table)
     assert live
     res = vacuum(spark, table, retention_hours=0.0)
@@ -64,7 +63,7 @@ def test_vacuum_keeps_live_dv_sidecars(spark, table):
 
 
 def test_vacuum_reclaims_orphaned_dv_after_purge(spark, table):
-    soft_delete(spark, table, "id < 120", checkpoint_interval=None)
+    soft_delete(spark, table, "id < 120")
     purged = _dv_files(table)
     assert purged
     purge_deleted(spark, table)
@@ -80,7 +79,6 @@ def test_dry_run_deletes_nothing(spark, table):
         spark.range(0, 10).select(F.col("id"), (F.col("id") % 3).alias("k")),
         table,
         mode="overwrite",
-        checkpoint_interval=None,
     )
     res = vacuum(spark, table, retention_hours=0.0, dry_run=True)
     assert len(res["files_deleted"]) == 4
@@ -121,7 +119,7 @@ def test_vacuum_keeps_change_files_of_staged_commits(spark, tmp_path):
     p = str(tmp_path / "t")
     write_delta(
         spark.range(0, 6).select(F.col("id"), (F.col("id") * 10).alias("v")),
-        p, mode="error", checkpoint_interval=None, coordinated=True,
+        p, mode="error", coordinated=True,
     )
     src = spark.createDataFrame([(2, -2)], "id long, v long")
     (

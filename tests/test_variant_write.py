@@ -42,7 +42,7 @@ def _extract(snap):
 
 def test_variant_write_read_and_protocol(spark, tmp_path):
     p = str(tmp_path / "t")
-    write_delta(_vdf(spark, 0, 25), p, mode="error", checkpoint_interval=None)
+    write_delta(_vdf(spark, 0, 25), p, mode="error")
     snap = DeltaLog(spark, p).snapshot()
     proto = snap.protocol
     assert proto["minReaderVersion"] == 3
@@ -55,7 +55,7 @@ def test_variant_write_read_and_protocol(spark, tmp_path):
     nr = [r[0] for r in snap.add_actions().select("num_records").collect()]
     assert all(n is not None for n in nr) and sum(nr) == 25
     # appends keep working and the schemaString round-trips 'variant'
-    write_delta(_vdf(spark, 25, 30), p, mode="append", checkpoint_interval=None)
+    write_delta(_vdf(spark, 25, 30), p, mode="append")
     snap = DeltaLog(spark, p).snapshot()
     assert _extract(snap) == [(i, 5 * i, f"v{i % 3}") for i in range(30)]
 
@@ -67,7 +67,6 @@ def test_variant_shredded_write_declares_feature(spark, tmp_path):
     try:
         write_delta(
             _vdf(spark, 0, 20).coalesce(2), p, mode="error",
-            checkpoint_interval=None,
         )
     finally:
         spark.conf.set("spark.sql.variant.writeShredding.enabled", "false")
